@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders over the driver-generated Parquet test data plus the
   * two logical views the reference workload runs on: the commercial
@@ -22,8 +26,62 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Read `dir/name.parquet`, inferring its schema at most once per
+    * unchanged input.
+    *
+    * Why the memo exists: `spark.read.parquet` without a schema runs
+    * one Spark job to read the footers (`mergeSchemasInParallel`),
+    * even with `mergeSchema` off. The fact view reads five tables, so
+    * every query built over it paid five jobs at construction before
+    * its cached plan was found. The first read of a path takes Spark's
+    * own inferred schema; later reads hand it back through
+    * `spark.read.schema`, which skips the job.
+    *
+    * Invalidation: an entry is reused only while its signature holds.
+    * The signature is the recursive file listing of the path (name,
+    * length, modification time) plus the session's explicitly set
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` entries,
+    * which change the inferred types ([[events]] flips `nanosAsLong`).
+    * A rewritten file or a changed conf re-infers, so a stale schema
+    * is never served. A path that does not exist goes straight to
+    * `spark.read.parquet`, which raises Spark's own error. The map
+    * holds one entry per distinct path and is safe for `Par` arms
+    * that build frames concurrently.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val sig = signature(spark, fs, p)
+      val schema = schemas.get(path) match {
+        case (`sig`, cached) => cached
+        case _ =>
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(path, (sig, inferred))
+          inferred
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private val schemas = new ConcurrentHashMap[String, (Signature, StructType)]()
+
+  private type Signature = (Seq[(String, Long, Long)], Seq[(String, String)])
+
+  private def signature(spark: SparkSession, fs: FileSystem, p: Path): Signature = {
+    val files = Seq.newBuilder[(String, Long, Long)]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    (files.result().sorted, conf.sorted)
+  }
 
   /** Conf-gated spread of a freshly-loaded frame across the cluster.
     *

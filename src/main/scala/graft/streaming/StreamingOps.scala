@@ -1801,8 +1801,13 @@ object StreamingOps {
     * them.
     *
     * Shape — the fixed-round beam loop becomes `rounds + 1` CHAINED
-    * window_time aggregations (the [[bm25TopKStream]] idiom, one per
-    * beam cut):
+    * aggregations, one per beam cut. Round 0 opens the tumbling window;
+    * later rounds group on that window column as it is carried along
+    * (it keeps its watermark). Re-deriving it per round with
+    * `window(window_time(...))`, the [[bm25TopKStream]] idiom, nests
+    * each round's window expression inside the next one's; at 7 rounds
+    * generating code for that expression ran the driver out of a 7 GB
+    * heap. Within each round:
     *   - the BEAM rides as an in-row ARRAY of (ns, n_id) structs,
     *     sorted ascending — `(-cos, n_id)`, the exact batch heap key —
     *     so expansion is a stateless explode and the final top-k is a
@@ -1887,7 +1892,7 @@ object StreamingOps {
         explode(col("__entries")).as("n_id"))
     val beam0 = cutBeam(cand0, window(col("__w"), windowDur))
     val beamN = (1 to rounds).foldLeft(beam0) { (b, _) =>
-      cutBeam(expand(b), window(window_time(col("__w")), windowDur))
+      cutBeam(expand(b), col("__w"))
     }
     beamN
       .select(col("q_id"), explode(slice(col("__beam"), 1, k)).as("t"))

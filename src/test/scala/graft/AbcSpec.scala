@@ -5,8 +5,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Abc
 
+/** The session every suite shares. A suite that kills the context
+  * (an OOM, an explicit stop) fails on its own; the next caller gets a
+  * fresh session instead of a stopped one, so one root cause stays one
+  * red suite rather than every suite that runs after it.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
+  private var live: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (live == null || live.sparkContext.isStopped) live = build()
+    live
+  }
+
+  private def build(): SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")

@@ -131,4 +131,81 @@ class PipelineTablesSchemaSpec extends org.scalatest.funsuite.AnyFunSuite {
       .collect().map(_.getInt(0)).toSet
     assert(dims == Set(64), s"embedding dims drifted: $dims")
   }
+
+  // Tables.table memoizes each path's inferred schema; these pin that
+  // the memo saves the inference job and never serves a stale schema.
+
+  private def tmpDir(tag: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft-memo-test/$tag"
+
+  test("a repeated lineitem read of an unchanged path starts no Spark job") {
+    val sc = spark.sparkContext
+    val dir = "/root/testdata/sf0.001"
+    graft.sources.Tables.lineitem(spark, dir) // first read: infers
+    val (hit, control) = ("graft-memo-hit", "graft-memo-control")
+    sc.setJobGroup(hit, "memoized lineitem read")
+    val again = try graft.sources.Tables.lineitem(spark, dir) finally sc.clearJobGroup()
+    // Control: plain inference in a second group. The listener bus is
+    // FIFO, so once its job is visible any job of the first group is too.
+    sc.setJobGroup(control, "plain parquet inference")
+    val inferred = try spark.read.parquet(s"$dir/lineitem.parquet").schema
+      finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(control).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup(control).nonEmpty,
+      "control inference must show up as a job")
+    assert(sc.statusTracker.getJobIdsForGroup(hit).isEmpty,
+      s"memoized read ran jobs ${sc.statusTracker.getJobIdsForGroup(hit).toSeq}")
+    assert(again.schema == inferred)
+  }
+
+  test("a table overwritten at the same path with a new schema is re-read") {
+    import spark.implicits._
+    val dir = tmpDir("overwrite")
+    Seq((1L, "a")).toDF("k", "s").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val before = graft.sources.Tables.table(spark, dir, "t")
+    assert(before.columns.toSeq == Seq("k", "s"))
+    Seq((2.5, 7)).toDF("x", "n").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val after = graft.sources.Tables.table(spark, dir, "t")
+    assert(after.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+    assert(after.as[(Double, Int)].collect().toSeq == Seq((2.5, 7)))
+  }
+
+  test("flipping spark.sql.parquet.binaryAsString re-infers a BINARY column") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    import spark.implicits._
+    val dir = tmpDir("binary")
+    // Written with plain parquet-hadoop: a Spark-written file carries its
+    // Spark schema in the footer, which inference prefers over the conf.
+    val schema = MessageTypeParser.parseMessageType("message t { required binary b; }")
+    val file = new org.apache.hadoop.fs.Path(s"$dir/t.parquet/part-0.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    file.getFileSystem(conf).delete(file.getParent, true)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+      .withType(schema).withConf(conf).withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "hi")) finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(graft.sources.Tables.table(spark, dir, "t").schema("b").dataType == BinaryType)
+      spark.conf.set(key, "true")
+      val asString = graft.sources.Tables.table(spark, dir, "t")
+      assert(asString.schema("b").dataType == StringType)
+      assert(asString.as[String].collect().toSeq == Seq("hi"))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a missing path still raises Spark's own AnalysisException") {
+    val dir = tmpDir("missing")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      graft.sources.Tables.table(spark, dir, "absent"))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
 }

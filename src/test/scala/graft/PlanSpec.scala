@@ -25,6 +25,19 @@ class PlanSpec extends AnyFunSuite {
   private lazy val builtQueries: Seq[(String, org.apache.spark.sql.DataFrame)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) => (n, fn(spark, dir)) }
 
+  test("a freshly built fact query reads the persisted fact view (InMemoryRelation)") {
+    // The warm server (Tables.spread) depends on this: every query
+    // rebuilds the fact view, and the CacheManager must still match it.
+    def optimized = SparkEntry.queries("f4_date_between")(spark, dir)
+      .queryExecution.optimizedPlan.toString
+    assert(!optimized.contains("InMemoryRelation"), "nothing is persisted yet")
+    val fact = graft.sources.Tables.analiseComercial(spark, dir).persist()
+    try {
+      val p = optimized
+      assert(p.contains("InMemoryRelation"), p.take(800))
+    } finally fact.unpersist(blocking = true)
+  }
+
   test("o4_paginate plans as TakeOrdered with offset, not a global window") {
     val p = plan("o4_paginate")
     assert(p.contains("TakeOrderedAndProject"), p.take(500))
