@@ -1806,7 +1806,7 @@ object StreamingOps {
     * (it keeps its watermark). Re-deriving it per round with
     * `window(window_time(...))`, the [[bm25TopKStream]] idiom, nests
     * each round's window expression inside the next one's; at 7 rounds
-    * generating code for that expression ran the driver out of a 7 GB
+    * generating code for that expression ran the JVM out of a 7 GB
     * heap. Within each round:
     *   - the BEAM rides as an in-row ARRAY of (ns, n_id) structs,
     *     sorted ascending — `(-cos, n_id)`, the exact batch heap key —

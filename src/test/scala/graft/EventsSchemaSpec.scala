@@ -139,8 +139,11 @@ class PipelineTablesSchemaSpec extends org.scalatest.funsuite.AnyFunSuite {
     s"${sys.props("java.io.tmpdir")}/graft-memo-test/$tag"
 
   test("a repeated lineitem read of an unchanged path starts no Spark job") {
+    import spark.implicits._
     val sc = spark.sparkContext
-    val dir = "/root/testdata/sf0.001"
+    val dir = tmpDir("hit")
+    Seq((1L, 1, 2.5)).toDF("l_orderkey", "l_linenumber", "l_extendedprice")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     graft.sources.Tables.lineitem(spark, dir) // first read: infers
     val (hit, control) = ("graft-memo-hit", "graft-memo-control")
     sc.setJobGroup(hit, "memoized lineitem read")
