@@ -61,7 +61,16 @@ object Dedup {
 
   // ---------------------------------------------------------- shingles
 
-  /** Distinct k-word shingles. Empty array when fewer than k tokens. */
+  /** Distinct k-word shingles. Empty array when fewer than k tokens.
+    * `toks` MUST be a materialized token column (an attribute projected
+    * beforehand), not an inline `split(...)` expression: the shingle
+    * slice references it inside a `transform` lambda, and
+    * `ArrayTransform` is interpreted, so an inline expression re-splits
+    * the whole document once per shingle — O(tokens²) per document.
+    * Explode the result rather than filter on it: predicate pushdown
+    * moves such a filter below the token projection and inlines the
+    * split into the lambda again.
+    */
   def wordShingles(toks: Column, k: Int): Column =
     when(size(toks) >= k,
       array_distinct(transform(
@@ -944,15 +953,37 @@ object Dedup {
       idCol: String,
       textCol: String,
       shingleK: Int = 3,
-      minShared: Long = 5): DataFrame = {
+      minShared: Long = 5): DataFrame =
+    decontaminate(corpus, evalSet, idCol, textCol, Seq(shingleK), minShared)
+      .select(col("doc_id"), col("eval_id"), col("n_shared"))
+
+  /** [[decontaminate]] at several shingle orders in ONE pass, as
+    * `(n_gram, doc_id, eval_id, n_shared)` pairs tagged with their
+    * order. Each document is tokenized once; one explode emits the
+    * distinct grams of every order, and the eval side, broadcast, join
+    * and pair aggregate all key on `(n_gram, gram)`, so a parameter
+    * curve over orders pays one corpus pass instead of one per order.
+    * Filtered to one `n_gram`, the rows equal the single-order call.
+    */
+  def decontaminate(
+      corpus: DataFrame,
+      evalSet: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleKs: Seq[Int],
+      minShared: Long): DataFrame = {
+    require(shingleKs.nonEmpty && shingleKs.distinct == shingleKs,
+      s"shingle orders must be non-empty and distinct: got $shingleKs")
     def grams(df: DataFrame, outId: String): DataFrame = df
       .select(col(idCol).as(outId),
-        explode(wordShingles(
-          TextAnalysis.tokens(lower(coalesce(col(textCol), lit("")))), shingleK)).as("gram"))
-    // The eval side is PRE-AGGREGATED to (gram, eval_id, multiplicity)
-    // before the broadcast (round 17, guide §2.3 "aggregate before you
-    // shuffle" / §3.3 "explode before a join multiplies"): joining raw
-    // occurrence rows multiplied the matched-pair frame by the eval
+        TextAnalysis.tokens(lower(coalesce(col(textCol), lit("")))).as("__toks"))
+      .select(col(outId), inline(flatten(array(shingleKs.map(k =>
+        transform(wordShingles(col("__toks"), k),
+          g => struct(lit(k).as("n_gram"), g.as("gram")))): _*))))
+    // The eval side is PRE-AGGREGATED to (n_gram, gram, eval_id,
+    // multiplicity) before the broadcast (round 17, guide §2.3
+    // "aggregate before you shuffle" / §3.3 "explode before a join
+    // multiplies"): joining raw occurrence rows multiplied the matched-pair frame by the eval
     // side's within-doc gram multiplicity and broadcast one relation
     // row per eval occurrence. n_shared is unchanged — the occurrence-
     // pair count equals Σ_gram (corpus occurrences × eval multiplicity),
@@ -960,11 +991,11 @@ object Dedup {
     // noop dropped 3.7 s → ~1 s warm at sf0.1 and every pretrain
     // composite carries this node).
     val evalGramCounts = grams(evalSet, "eval_id")
-      .groupBy(col("gram"), col("eval_id"))
+      .groupBy(col("n_gram"), col("gram"), col("eval_id"))
       .agg(count(lit(1)).as("__me"))
     grams(corpus, "doc_id")
-      .join(broadcast(evalGramCounts), Seq("gram"))
-      .groupBy(col("doc_id"), col("eval_id"))
+      .join(broadcast(evalGramCounts), Seq("n_gram", "gram"))
+      .groupBy(col("n_gram"), col("doc_id"), col("eval_id"))
       .agg(sum(col("__me")).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
@@ -1442,11 +1473,10 @@ object Dedup {
       tDen: Int): DataFrame = {
     require(tNum >= 1 && tDen > tNum,
       s"threshold must be a rational in (0,1): got $tNum/$tDen")
-    val toks = split(trim(lower(coalesce(col(textCol), lit("")))), "\\s+")
     val sets = docs
-      .select(col(idCol).as("id"), wordShingles(toks, shingleK).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), explode(col("sh")).as("s"))
+      .select(col(idCol).as("id"),
+        TextAnalysis.tokens(lower(coalesce(col(textCol), lit("")))).as("__toks"))
+      .select(col("id"), explode(wordShingles(col("__toks"), shingleK)).as("s"))
     val dfc = sets.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val ordered = CheckpointBlocks.cut(sets.join(dfc, Seq("s"))
       .groupBy(col("id"))

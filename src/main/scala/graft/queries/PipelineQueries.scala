@@ -2201,39 +2201,40 @@ object PipelineQueries {
     * chance in this vocabulary): the curve separates the
     * false-positive cliff (gone by n = 5 even at any-overlap: 7
     * docs) from the genuine planted leakage that survives every
-    * setting. No count-distinct beside sums anywhere: each arm
+    * setting. No count-distinct beside sums anywhere: each order
     * cascades doc-level maxima from the cut pair frame (the
     * sourceReport no-Expand idiom).
     *
-    * Scale: per arm one gram explode + the eval-set broadcast join
-    * (the `dedup_decontaminate` contract); arms share nothing but
-    * the scan, and the aggregates are pair-/doc-cardinality.
+    * Scale: ONE pass for all four orders — each document is tokenized
+    * once and the tagged multi-order [[Dedup.decontaminate]] runs one
+    * gram explode, one eval-set broadcast join and one pair aggregate
+    * keyed by `n_gram`; the pair frame is cut once and both aggregates
+    * are pair-/doc-cardinality. The curve is left-joined onto the
+    * literal order list, so an order with no flagged pair still
+    * reports a row of zeros (as the oracle's `COUNT(*)` does).
     */
   val dedupDecontamCurve = QueryDef(
     "dedup_decontam_curve",
     (s, dir) => {
       import org.apache.spark.sql.graft.CheckpointBlocks
+      import s.implicits._
+      val orders = Seq(2, 3, 5, 8)
       val docs = Tables.documents(s, dir)
-      val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-      val evalSet = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      def arm(n: Int): DataFrame = {
-        val pairs = CheckpointBlocks.cut(Dedup.decontaminate(
-          corpus, evalSet, "doc_id", "text", shingleK = n, minShared = 1))
-        val pairAgg = pairs.agg(
-          count(lit(1)).as("n_pairs_any"),
-          sum(when(col("n_shared") >= 5, 1L).otherwise(0L)).as("n_pairs_ge5"))
-        val docAgg = pairs.groupBy(col("doc_id"))
-          .agg(max(col("n_shared")).as("__mx"))
-          .agg(count(lit(1)).as("n_docs_any"),
-            sum(when(col("__mx") >= 5, 1L).otherwise(0L)).as("n_docs_ge5"))
-        pairAgg.crossJoin(docAgg)
-          .select(lit(n).as("n_gram"), col("n_pairs_any"), col("n_docs_any"),
-            col("n_pairs_ge5"), col("n_docs_ge5"))
-      }
-      // Each arm cuts its own pair frame (eager) — independent
-      // shingle orders, overlap them (Par, guide §2.6).
-      graft.operators.Par.seq(Seq(2, 3, 5, 8).map(n => () => arm(n)))
-        .reduce(_.unionByName(_))
+      val pairs = CheckpointBlocks.cut(Dedup.decontaminate(
+        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
+        docs.filter(pmod(col("doc_id"), lit(10)) === 0),
+        "doc_id", "text", orders, minShared = 1))
+      val curve = pairs.groupBy(col("n_gram"), col("doc_id"))
+        .agg(count(lit(1)).as("__np"),
+          sum(when(col("n_shared") >= 5, 1L).otherwise(0L)).as("__np5"),
+          max(col("n_shared")).as("__mx"))
+        .groupBy(col("n_gram"))
+        .agg(sum(col("__np")).as("n_pairs_any"), count(lit(1)).as("n_docs_any"),
+          sum(col("__np5")).as("n_pairs_ge5"),
+          sum(when(col("__mx") >= 5, 1L).otherwise(0L)).as("n_docs_ge5"))
+      orders.toDF("n_gram").join(curve, Seq("n_gram"), "left")
+        .select(col("n_gram") +: Seq("n_pairs_any", "n_docs_any", "n_pairs_ge5", "n_docs_ge5")
+          .map(c => coalesce(col(c), lit(0L)).as(c)): _*)
     },
     Some {
       def arm(n: Int) =

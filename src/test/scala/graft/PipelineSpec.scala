@@ -1022,6 +1022,60 @@ class DedupSpec extends AnyFunSuite {
     // doc 4's repeats count ONCE (distinct shingles, so n_shared = 2).
     assert(r == Set((1L, 100L, 4L), (4L, 100L, 2L)))
   }
+
+  test("multi-order decontaminate: each n_gram slice equals the single-order run") {
+    // Random word salad over a small vocabulary, plus planted copies so
+    // that even 8-grams match, and null / empty / padded texts.
+    val rnd = new scala.util.Random(7)
+    val vocab = "a b c d e f g h i j k l".split(" ")
+    val salad = (1L to 60L).map(i =>
+      (i, Seq.fill(10 + rnd.nextInt(20))(vocab(rnd.nextInt(vocab.length))).mkString(" ")))
+    val texts = salad.toMap
+    val docs = (salad ++ Seq(
+      (61L, texts(10L) + " z"),               // eval doc 10 plus one word
+      (62L, texts(30L).split(" ").drop(2).mkString(" ")), // tail of eval doc 30
+      (63L, null), (64L, ""), (65L, "  A  b\tc d e f g h ")))
+      .toDF("doc_id", "text")
+    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+    val evalSet = docs.filter(col("doc_id") % 10 === 0)
+    val multi = Dedup.decontaminate(corpus, evalSet, "doc_id", "text",
+      Seq(2, 3, 5, 8), minShared = 2)
+    assert(multi.columns.toSeq == Seq("n_gram", "doc_id", "eval_id", "n_shared"))
+    val tagged = multi.as[(Int, Long, Long, Long)].collect().toSeq
+    for (k <- Seq(2, 3, 5, 8)) {
+      val single = Dedup.decontaminate(corpus, evalSet, "doc_id", "text",
+        shingleK = k, minShared = 2).as[(Long, Long, Long)].collect().toSet
+      val slice = tagged.collect { case (`k`, d, e, n) => (d, e, n) }
+      assert(slice.size == slice.toSet.size, s"duplicate pairs at n=$k")
+      assert(slice.toSet == single, s"n=$k")
+      assert(single.nonEmpty, s"n=$k matched nothing; the check would be vacuous")
+    }
+    assert(tagged.map(_._1).toSet == Set(2, 3, 5, 8))
+  }
+
+  test("dedup_decontam_curve: an order with no flagged pair reports zeros, not NULLs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_decontam_curve").toString
+    Seq(
+      (10L, "a b c d e f g h i j"),  // eval
+      (20L, "b c d e f g"),          // eval
+      (11L, "a b c d e f g x y z"),  // shares the first 7 words of doc 10
+      (12L, "q c d e r s"),          // shares "c d e" with both eval docs
+      (13L, "nothing shared here at all"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("dedup_decontam_curve")(spark, dir)
+      .select("n_gram", "n_pairs_any", "n_docs_any", "n_pairs_ge5", "n_docs_ge5")
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Int]).toSeq
+    // Shared distinct grams per (doc, eval) pair:
+    //   n=2: (11,10)=6 (11,20)=5 (12,10)=2 (12,20)=2
+    //   n=3: (11,10)=5 (11,20)=4 (12,10)=1 (12,20)=1
+    //   n=5: (11,10)=3 (11,20)=2
+    //   n=8: none — no corpus 8-gram appears in an eval doc.
+    assert(got == Seq(
+      Seq(2, 4L, 2L, 2L, 1L),
+      Seq(3, 4L, 2L, 1L, 1L),
+      Seq(5, 2L, 1L, 0L, 0L),
+      Seq(8, 0L, 0L, 0L, 0L)))
+  }
 }
 
 class SimilaritySpec extends AnyFunSuite {

@@ -818,6 +818,77 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(400))
   }
 
+  /** Build a registered query and record what its construction ran:
+    * the eager actions' (name, optimized plan) — cuts included, whose
+    * plans the built frame no longer shows — plus the built frame's own
+    * optimized plan, and the number of jobs run as `Par` arms. A
+    * sentinel action flushes the async listener bus: its events queue
+    * behind every event of the build.
+    */
+  private def construction(name: String)
+      : (Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)], Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]()
+    val parJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val qel = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "__plan_sentinel")) sentinelSeen.countDown()
+        else actions.add((funcName, qe.optimizedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    val jobs = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+          js.properties.getProperty("spark.job.description") == "graft.Par arm") parJobs.incrementAndGet()
+    }
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val df = SparkEntry.queries(name)(spark, dir)
+      spark.range(1).toDF("__plan_sentinel").collect()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the sentinel")
+      import scala.jdk.CollectionConverters._
+      (actions.asScala.toSeq :+ (("built", df.queryExecution.optimizedPlan)), parJobs.get())
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      spark.listenerManager.unregister(qel)
+    }
+  }
+
+  test("word-gram builders tokenize once: no StringSplit inside a lambda body") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    // wordShingles slices its token array inside an (interpreted)
+    // transform lambda: an inline split there re-tokenizes the whole
+    // document once per gram.
+    for (q <- Seq("dedup_decontaminate", "dedup_decontam_curve", "dedup_prefix_join",
+        "pipeline_pretrain_prep")) {
+      val (plans, _) = construction(q)
+      if (q == "dedup_prefix_join") // it tokenizes inside its eager cut
+        assert(plans.exists(_._1 != "built"), "the prefix join's cut plan was not captured")
+      val resplits = plans.flatMap { case (action, p) =>
+        p.collectWithSubqueries { case node =>
+          node.expressions.flatMap(_.collect {
+            case l: LambdaFunction if l.function.exists(_.isInstanceOf[StringSplit]) =>
+              s"$action: ${l.toString.take(200)}"
+          })
+        }.flatten
+      }
+      assert(resplits.isEmpty, s"$q re-splits text per lambda call:\n${resplits.mkString("\n")}")
+    }
+  }
+
+  test("dedup_decontam_curve: one cut for all orders, no Par arms") {
+    val (plans, parJobs) = construction("dedup_decontam_curve")
+    val cuts = plans.count { case (action, _) => action.toLowerCase.contains("checkpoint") }
+    assert((cuts, parJobs) == ((1, 0)),
+      s"(cuts, Par arm jobs): expected one cut and no Par arm; actions ${plans.map(_._1)}")
+  }
+
   test("text_redact_pii is a pure codegen projection: no shuffle at all") {
     val exec = SparkEntry.queries("text_redact_pii")(spark, dir).queryExecution.executedPlan
     val p = exec.toString
