@@ -1,754 +1,215 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, sum}
-import org.apache.spark.storage.StorageLevel
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 
-import graft.sources.Tables
+import scala.collection.mutable
 
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR
-  * and prints ONE JSON line for the driver.
+import org.apache.spark.sql.graft.ListenerBus
+
+import graft.Trace.Tally
+
+/** Benchmark main: times every registered query on `SPARK_GRAFT_SF_DIR`
+  * and prints one JSON line for the driver.
   *
-  * == Protocol (round 13: budget-aware min-of-passes) ==
+  * == Protocol ==
+  *   - Set-up is [[GraftSession.harness]]: one partition per core and
+  *     the five shared views persisted once.
+  *   - A pass over a query builds it and consumes it with a `noop`
+  *     write. The builder is inside the timed region, because the eager
+  *     pipelines (dedup pairs, LSH, `Par` arms, cuts) do their work
+  *     there. `count()` is not used: Catalyst would prune the very
+  *     expressions some queries exist to compute.
+  *   - `SPARK_GRAFT_BENCH_PASSES` (default 2) passes. A query's value is
+  *     the minimum over its successful passes: pass 1 carries JIT and
+  *     codegen compile, and host noise only ever adds time.
+  *   - Pass 1 runs every query whatever the budget, so the budget can
+  *     cost precision but never coverage.
+  *   - Passes 2..P run the queries that hold fewer passes, in ascending
+  *     order of their best time so far. A query runs only if elapsed
+  *     time plus 1.2x its best time fits in `SPARK_GRAFT_BENCH_BUDGET_SEC`
+  *     (default 480); one that does not fit is skipped and the pass
+  *     goes on to cheaper ones.
+  *   - A query that fails on any pass is listed under `failed` and left
+  *     out of the total. Its value is its best successful pass, or -1.
+  *   - `budget_demoted` is derived from the pass counts after the run:
+  *     `ran_1_of_2_passes` (the only number includes cold compile) or
+  *     `no_pass`. Failed queries are not demoted.
   *
-  * `SPARK_GRAFT_BENCH_PASSES` (default 2) passes over the query tree.
-  * Per-query statistic: the MIN over its passes. Round 13 rework (the
-  * r12 verdict's one weak flag: the tree outgrew the 480 s budget at
-  * 2 strict alphabetical passes, demoting 107/159 queries to one cold
-  * pass):
-  *   - A fixed MACHINERY warm-up runs before the calibration floor:
-  *     one scan-free shuffle + broadcast-join + noop write. It warms
-  *     the Janino/whole-stage-codegen compiler, the shuffle system and
-  *     the noop sink once, so neither the floor probes nor the first
-  *     measured queries pay framework JIT (per-query generated-class
-  *     compilation still lands in each query's pass 1 — that is what
-  *     the second pass exists to shed).
-  *   - Pass 1 gives every query whose first measurement ran under
-  *     `CHEAP_SEC` (2.5 s) an immediate BACK-TO-BACK second timing.
-  *     The warm re-run costs ~its warm time (the codegen cache is
-  *     hot), and the sub-2.5 s band is where one cold pass is
-  *     proportionally worst (measured: 1.3-1.8x — the ~fixed codegen
-  *     compile against a small query) — exactly the queries the old
-  *     alphabetical pass 2 starved when the budget ran dry. Both
-  *     timings can share a stall window; the re-run loop below
-  *     already handles that case.
-  *   - Passes >= 2 cover the queries still holding fewer passes, in
-  *     ASCENDING pass-1 cost order. (The r12 verdict suggested
-  *     descending, on the theory that expensive queries carry the
-  *     worst cold inflation; the round-13 full-tree band measurement
-  *     showed the opposite — cold/warm is median 1.08x/max 1.28x for
-  *     the >= 5 s tail, whose many internal jobs warm the JIT inside
-  *     pass 1, and 1.3-1.8x below 2.5 s where the ~fixed codegen
-  *     compile dominates. Ascending maximizes warm-covered queries
-  *     per budget second, and whatever the budget strands is exactly
-  *     the band whose single cold pass is already within ~1.2x.)
-  *   - Passes >= 2 are ESTIMATE-GATED, not stop-on-budget: a query
-  *     runs iff elapsed + 1.2x its min-so-far fits inside the budget
-  *     minus a `RERUN_RESERVE_SEC` reserve (kept so the stall re-run
-  *     loop always has fuel). A too-expensive query is SKIPPED and the
-  *     pass continues to cheaper ones — under the old semantics one
-  *     9 s query at the boundary both overshot the wall budget and
-  *     starved every query behind it.
-  *   Net effect: when the tree fits, everything gets >= 2 passes; when
-  *   it does not, the demoted set is a handful of mid-cost queries
-  *   whose single (post-warm-up) pass is within the cold-compile
-  *   margin of the quiet number — never half the registry.
+  * == Stall flag ==
+  * Each pass runs under its own [[Trace]] tag, so the pass's tasks,
+  * including those of `Par` arms, are folded into one [[Trace.Tally]].
+  * Two shares are taken per pass:
+  *   - the tasks' share of their run time on CPU or in GC;
+  *   - the JVM's share of the host's CPU capacity (all its threads'
+  *     CPU over wall time x available processors).
+  * A task waits for a core either because the JVM's own threads (JIT
+  * compilers, driver, GC) fill the cores, which keeps the JVM share
+  * high, or because something outside the JVM took them. A pass is
+  * stalled when both shares are below [[MinCpuShare]]. Neither share
+  * works alone: scheduler-bound queries leave cores idle when nothing
+  * else runs, and on a few cores the JIT compilers alone keep the tasks
+  * off CPU half the time. A query is `suspect` when its best pass is
+  * stalled. The flag marks a value; it re-runs nothing.
   *
-  * Why min, and why no separate warmup tour (this replaced the
-  * round-2..10 "warmup tour + median" protocol in round 11):
-  *   - This VM's hypervisor intermittently stalls the guest in
-  *     all-core kernel-time reclaim storms reporting ZERO steal; a
-  *     1 s query then takes 6-90 s. The noise is strictly ONE-SIDED —
-  *     it inflates a pass, never deflates one — so under additive
-  *     one-sided noise the minimum is the least-biased estimator of
-  *     true cost (the round-10 judge adjudicated exactly this,
-  *     re-measuring four stall-inflated medians at 3-8x below the
-  *     official record).
-  *   - Pass 1 carries JIT + codegen compile (the old warmup's job);
-  *     min(cold pass, warm pass) IS the warm number. The old
-  *     dedicated warmup tour cost a third of the wall budget, stopped
-  *     at budget/3, and demoted 90/137 queries in round 10 — the
-  *     cliff this protocol retires. n_demoted now only counts queries
-  *     that lost passes to budget exhaustion.
-  *
-  * == Calibration probe (stall detection inside the run) ==
-  *
-  * A fixed trivial query (sum over `spark.range` — no scan, no
-  * shuffle; pure codegen loop, ~tens of ms) runs BEFORE the tree (3x)
-  * and then between every `CAL_EVERY` measured queries. The
-  * calibration FLOOR is the min over ALL probes — including later
-  * ones — and window suspicion is evaluated lazily against it, so a
-  * run that STARTS inside a stall storm (inflated early probes) still
-  * marks its early windows suspect once any later quiet probe reveals
-  * the true floor. A probe reading over `STALL_FACTOR` (2x) of the
-  * floor AND over floor + `STALL_ABS_GUARD_SEC` (the absolute guard —
-  * real storms inflate the probe by hundreds of ms to seconds, while
-  * scheduler jitter moves it tens of ms; round 13 measured the
-  * relative-only rule false-flagging half the tree off one lucky
-  * 57 ms floor) means the host was degraded for the queries measured
-  * since the previous probe: those passes are `stall_suspect`. After the
-  * final pass, queries whose EVERY pass was suspect are re-run — up
-  * to 3 attempts while budget remains, looping until none is left
-  * all-suspect — so the min includes at least one quiet-host pass,
-  * or the query is flagged `stall_suspect: true` in the artifact so
-  * no consumer mistakes an inflated number for an engine trend. The full probe series ships in the JSON
-  * (`calibration`), so a stall storm during the official window is
-  * visible FROM the artifact alone.
-  *
-  * == Quiet-reference plausibility check (round 14) ==
-  *
-  * The probe guard only catches storms that hit a probe: a stall
-  * landing BETWEEN probes inflates a query without tripping anything
-  * (round 13's official artifact carried six values 7-17x inflated
-  * with only 20 suspect flags — the judge had to re-measure them in
-  * isolation, two rounds running). The fix is an ANCHOR the artifact
-  * can be checked against in-process: the repo commits
-  * `bench_quiet_ref.json` — literally a certified-quiet run's
-  * `bench_result.json` (refreshed each round after the tree changes,
-  * so the ref needs no extra tooling to produce). After the scheduled
-  * passes and the stall re-run loop, any query whose min exceeds BOTH
-  * `PLAUS_FACTOR` (3x) its quiet reference AND ref +
-  * `PLAUS_ABS_GUARD_SEC` (0.3 s — sub-second queries can jitter past
-  * 3x on scheduler noise alone; real storms add seconds) is
-  * IMPLAUSIBLE: it gets best-effort re-runs, most-inflated-first (by
-  * ratio over its ref), up to 3 attempts while wall budget remains.
-  * A query still implausible after that is tagged `weather_suspect`
-  * in the JSON — a consumer (and the judge) sees, from the artifact
-  * alone, exactly which values a degraded host left untrustworthy,
-  * instead of adjudicating the whole record. Queries with no ref
-  * entry (registrations newer than the ref) are simply unchecked.
-  * The threshold is deliberately loose (3x, vs the ~1.3x
-  * cold-compile band): it exists to catch the 7-17x storms, not to
-  * re-litigate normal variance — a quiet-host run re-runs nothing.
-  *
-  * == Wait-out-the-storm (round 17) ==
-  * All loops above OUT-COMPUTE a storm; r16's official artifact
-  * showed the failure mode they can't fix: a storm that outlasts the
-  * budget leaves tagged rows whose re-runs re-measure the same storm
-  * (official total 2.4x the committed quiet ref). When tagged rows
-  * (stall- or weather-suspect) survive the loops, the bench now PARKS
-  * — sleeps on a doubling backoff (15 s → 120 s cap), re-probes, and
-  * re-runs the tagged set only once a probe reads quiet (below the
-  * same suspicion threshold the windows are judged by) — bounded by a
-  * hard wall cap of `SPARK_GRAFT_STORM_WALL_FACTOR` × budget (default
-  * 2×; 0 disables parking). Park probes append to the calibration
-  * series and the artifact records `storm.rounds`/`waited_sec`, so a
-  * record that still ships residual tags carries the probe evidence
-  * that the storm outlasted the cap.
-  *
-  * == Harness design (carried from rounds 1-10) ==
-  *   - The shared fact/dim views are persisted once up front. Spark's
-  *     CacheManager substitutes the cached relation into every query
-  *     whose canonicalized subplan matches, so the 5-way fact join is
-  *     built once, not once per query — the same thing a warm
-  *     production cluster would hold in storage memory.
-  *   - `graft.load.repartition` is set to the core count so the warm
-  *     views hold 32 real partitions. Without it the single-row-group
-  *     test files pin every scan-side stage to ONE task
-  *     ([[Tables]] `spread` scaladoc; this was round 4's bench
-  *     timeout: 160 CPU-seconds of map-side `collect_list` on one
-  *     core while 31 idled).
-  *   - The measured action is a `noop`-format write, which fully
-  *     consumes every output column. `count()` would let Catalyst
-  *     prune the very expressions some queries exist to compute.
-  *   - A query that throws on ANY pass is listed under "failed" and
-  *     EXCLUDED from the total (its value is the min of the passes
-  *     that succeeded, or -1 if none did — never its
-  *     elapsed-until-failure time), so a partially-broken run can't
-  *     masquerade as a plausible total.
-  *   - Wall budget `SPARK_GRAFT_BENCH_BUDGET_SEC` (default 480):
-  *     pass 1 ALWAYS completes (the budget can degrade precision,
-  *     never coverage); later passes and stall re-runs stop once the
-  *     budget is gone. Demotions are DERIVED from completed-pass
-  *     counts after the run ("ran_1_of_2_passes" = the only number
-  *     includes cold JIT cost) — never marked mid-run, so a budget
-  *     stop inside pass 3 cannot mislabel a query holding two good
-  *     passes, and a pass-1 failure is reported as a failure, not
-  *     blamed on the budget.
-  *
-  * Eager-operator note (round 4): the pair pipelines
-  * (`dedup_minhash/ngram/simhash`, `dedup_incr_near`,
-  * `ann_lsh_bucket`) are EAGER with call-scoped internal caches — each
-  * call computes its result into lineage-truncated block storage and
-  * releases every internal cache before returning. Every pass
-  * therefore measures the honest COLD cost of a full pipeline run.
-  * The noop write itself reads the already-materialized checkpoint
-  * blocks; the pipeline cost lands inside the timed region.
+  * == Output ==
+  * The full JSON goes to `SPARK_GRAFT_BENCH_OUT` (default
+  * `target/bench_result.json`) and to stdout: `metric`, `value`
+  * (total seconds), `unit`, `queries` (name -> seconds), `sf`,
+  * `passes`, `failed`, `budget_demoted`, `default_stat`, `suspect`,
+  * `task_cpu_share` and `jvm_cpu_share` (each query's best pass) and
+  * `wall_sec`. The driver keeps a bounded tail of stdout, so the last
+  * line is a summary of at most 1500 bytes: counts plus the slowest
+  * values that fit.
+  * `SPARK_GRAFT_BENCH_FILTER` (comma-separated names or name prefixes)
+  * runs a subset.
   */
 object Bench {
 
-  private val CAL_EVERY = 10 // probe between every 10 measured queries
-  private val STALL_FACTOR = 2.0 // probe > 2x floor => batch suspect
-  // Absolute companion to STALL_FACTOR: a window is suspect only when
-  // its probe exceeds BOTH 2x the floor AND floor + 250 ms. The
-  // hypervisor stalls this detector exists for inflate a ~0.1 s probe
-  // to 0.5-9 s (the 6-90x storms of rounds 10-12); plain scheduler
-  // jitter moves it by tens of ms. Without the absolute term one
-  // lucky 57 ms probe poisons the floor and flags every normal
-  // ~0.11 s window — measured live in round 13: 47 false suspects
-  // cascaded into a budget-eating re-run loop and 51 demotions on a
-  // host that was never actually stalled.
-  private val STALL_ABS_GUARD_SEC = 0.25
-  private val CHEAP_SEC = 2.5 // pass-1 back-to-back re-time threshold
-  private val RERUN_RESERVE_SEC = 25.0 // budget held back for stall re-runs
-  // Budget held back for the PLAUSIBILITY re-run loop (round-15
-  // verdict ask #5): r15's official artifact shipped 11 tagged
-  // weather_suspect rows because the scheduled passes + stall re-runs
-  // consumed the whole wall budget first, leaving the plausibility
-  // loop — the mechanism that exists to CONVERGE those rows to quiet
-  // values — no fuel. Repairing a tagged row costs only that query's
-  // quiet runtime (the suspect set is ~a dozen queries, tens of
-  // seconds), the cheapest artifact-quality purchase in the run, so
-  // it now holds a first-class reserve: scheduled passes 2..P stop at
-  // budget − stall-reserve − this, stall re-runs stop at budget −
-  // this, and the plausibility loop alone spends the remainder — plus
-  // a bounded OVERDRAFT below for the pass-1-overran case.
-  private val PLAUS_RESERVE_SEC = 50.0
-  // Pass 1 is uncapped by design (coverage beats precision), so on a
-  // slow host `elapsed` can exceed the whole budget before any re-run
-  // loop is reached — exactly r15's shape. The plausibility loop may
-  // overdraft past the budget by this bound: converting a
-  // tagged-but-inflated official artifact into a converged one is
-  // worth a bounded overrun (the driver already tolerates pass-1
-  // overruns far larger than this).
-  private val PLAUS_OVERDRAFT_SEC = 60.0
-  private val EST_FACTOR = 1.2 // pass >= 2 gate: elapsed + est*factor must fit
-  // Quiet-reference plausibility (see scaladoc): a min over PLAUS_FACTOR x
-  // its committed quiet value AND over ref + PLAUS_ABS_GUARD_SEC is a
-  // between-probes stall until re-runs prove otherwise.
-  private val PLAUS_FACTOR = 3.0
-  private val PLAUS_ABS_GUARD_SEC = 0.3
+  /** A pass whose task and JVM CPU shares are both below this is stalled. */
+  val MinCpuShare = 0.68
+  private val EstFactor = 1.2
+  private val LineBudget = 1500
 
-  /** Parse the committed quiet-reference artifact: the `"queries":{...}`
-    * map of a prior quiet run's `bench_result.json`. Regex-based on
-    * purpose — the map is flat name->number, the file is repo-committed
-    * (trusted shape), and a parse failure must degrade to "no ref"
-    * (empty map), never fail the bench.
-    *
-    * WHITESPACE-TOLERANT by hard lesson (round 14): the original
-    * parser matched only Bench's own compact one-line output
-    * (`"queries":{` + `"name":1.23`). A mid-round tooling refresh
-    * committed the ref PRETTY-PRINTED; `indexOf` returned −1, the
-    * loader silently degraded to `Map.empty`, and the plausibility
-    * check — the round's headline feature — certified nothing for the
-    * rest of the round (official BENCH_r14.json: `n_ref: 0`, ten
-    * storm-inflated values untagged). Both the map locator and the
-    * entry regex now tolerate arbitrary whitespace, and the map body
-    * ends at the first `}` AFTER the locator match (the map is flat —
-    * no nested objects — so that brace is its close in either format).
-    * `private[graft]` so BenchRefSpec can pin the parser against the
-    * ACTUAL committed file (the test that was missing in round 14).
-    */
-  private[graft] def loadQuietRef(path: String): Map[String, Double] =
-    try {
-      val text = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val locator = "\"queries\"\\s*:\\s*\\{".r
-      locator.findFirstMatchIn(text) match {
-        case None => Map.empty
-        case Some(m) =>
-          val body = text.substring(m.end, text.indexOf('}', m.end))
-          "\"([^\"]+)\"\\s*:\\s*(-?[0-9.]+)".r.findAllMatchIn(body)
-            .map(g => g.group(1) -> g.group(2).toDouble)
-            .filter(_._2 >= 0) // a failed ref entry (-1) anchors nothing
-            .toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+  /** A successful pass: wall seconds, its tasks' tally and the JVM's CPU share. */
+  final case class Pass(sec: Double, tasks: Tally, jvmShare: Double) {
+    def stalled: Boolean = math.max(tasks.cpuShare, jvmShare) < MinCpuShare
+  }
 
-  /** The `sf` the quiet ref was recorded at (basename, e.g. "sf0.1"),
-    * when the file carries one. Quiet values are only comparable to a
-    * run at the SAME scale — r17 measured an sf1 tour burning 225 s of
-    * storm-mode parking on a "weather" tag that was really the sf0.1
-    * ref disagreeing with sf1 data — so [[main]] DISARMS the
-    * plausibility check on mismatch instead of mis-tagging. Absent
-    * field (pre-r17 refs) = no check, full back-compat.
-    */
-  private[graft] def loadQuietRefSf(path: String): Option[String] =
-    try {
-      val text = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      "\"sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(text)
-        .map(m => new java.io.File(m.group(1)).getName)
-    } catch { case _: Throwable => None }
+  /** A query's successful passes, in run order, and whether any pass failed. */
+  final case class Record(passes: Seq[Pass] = Nil, failed: Boolean = false) {
+    def best: Option[Pass] = passes.minByOption(_.sec)
+  }
 
-  /** Min-merge several bench artifacts' `queries` maps into a fresh
-    * quiet-reference file, written in Bench's OWN compact format — the
-    * round-14 postmortem's structural fix: the ref is now produced by
-    * the same code that consumes it, so tooling format drift cannot
-    * disarm the plausibility check again. Invoked as
-    * `runMain graft.Bench merge-ref <out.json> <in1.json> [in2...]`;
-    * needs no Spark session. A query's merged value is the MIN over
-    * every input that carries it (a quiet measurement is a quiet
-    * measurement regardless of which tour produced it); inputs that
-    * fail to parse contribute nothing but are reported on stderr.
+  final case class Summary(
+      values: Seq[(String, Double)], total: Double, failed: Seq[String],
+      demoted: Seq[(String, String)], suspect: Seq[String], best: Seq[(String, Pass)])
+
+  def summarize(records: Seq[(String, Record)], passes: Int): Summary = {
+    Summary(
+      records.map { case (n, r) => n -> r.best.fold(-1.0)(_.sec) },
+      records.collect { case (_, r) if !r.failed => r.best.fold(0.0)(_.sec) }.sum,
+      records.collect { case (n, r) if r.failed => n },
+      records.collect { case (n, r) if !r.failed && r.passes.size < passes =>
+        val k = r.passes.size
+        n -> (if (k == 0) "no_pass" else s"ran_${k}_of_${passes}_passes")
+      },
+      records.collect { case (n, r) if r.best.exists(_.stalled) => n },
+      records.flatMap { case (n, r) => r.best.map(n -> _) })
+  }
+
+  private def q(s: String): String = "\"" + s + "\""
+  private def num(v: Double): String = f"$v%.3f"
+  private def obj(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
+  private def arr(xs: Seq[String]): String = xs.map(q).mkString("[", ",", "]")
+
+  /** The full result line. */
+  def artifact(s: Summary, sf: String, passes: Int, wallSec: Double): String =
+    obj(Seq(
+      "metric" -> q("total"), "value" -> num(s.total), "unit" -> q("sec"),
+      "queries" -> obj(s.values.map { case (n, v) => n -> num(v) }),
+      "sf" -> q(sf), "passes" -> passes.toString, "failed" -> arr(s.failed),
+      "budget_demoted" -> obj(s.demoted.map { case (n, l) => n -> q(l) }),
+      "default_stat" -> q("min"), "suspect" -> arr(s.suspect),
+      "task_cpu_share" -> obj(s.best.map { case (n, p) => n -> f"${p.tasks.cpuShare}%.2f" }),
+      "jvm_cpu_share" -> obj(s.best.map { case (n, p) => n -> f"${p.jvmShare}%.2f" }),
+      "wall_sec" -> f"$wallSec%.1f"))
+
+  /** The last stdout line: counts, then the slowest values that fit in
+    * [[LineBudget]] bytes. Failures are a count, so a mass failure
+    * cannot push the line past the budget.
     */
-  private[graft] def mergeRef(out: String, ins: Seq[String]): Unit = {
-    val maps = ins.map { p =>
-      val m = loadQuietRef(p)
-      System.err.println(s"[bench] merge-ref: $p -> ${m.size} entries")
-      m
+  def finalLine(s: Summary, sf: String, passes: Int, wallSec: Double): String = {
+    val head = obj(Seq(
+      "metric" -> q("total"), "value" -> num(s.total), "unit" -> q("sec"),
+      "sf" -> q(sf), "passes" -> passes.toString,
+      "n_queries" -> s.values.size.toString, "n_failed" -> s.failed.size.toString,
+      "n_demoted" -> s.demoted.size.toString, "n_suspect" -> s.suspect.size.toString,
+      "wall_sec" -> f"$wallSec%.1f")).dropRight(1) + ",\"queries\":{"
+    val entries = mutable.ArrayBuffer[String]()
+    var used = head.length + 30 // the tail: },"queries_omitted":NNN}
+    s.values.filter(_._2 >= 0).sortBy(-_._2).foreach { case (n, v) =>
+      val e = q(n) + ":" + num(v)
+      if (used + e.length + 1 <= LineBudget) { entries += e; used += e.length + 1 }
     }
-    val merged = maps.flatten
-      .groupMapReduce(_._1)(_._2)(math.min)
-    require(merged.nonEmpty, s"merge-ref: no entries parsed from $ins")
-    // Stamp the scale the values were measured at (first input that
-    // carries one): quiet values anchor only same-scale runs, and the
-    // consumer disarms on mismatch instead of mis-tagging (see
-    // loadQuietRefSf).
-    val sf = ins.flatMap(loadQuietRefSf).headOption
-    val sfField = sf.map(s => s""","sf":"$s"""").getOrElse("")
-    val total = merged.values.sum
-    val qs = merged.toSeq.sortBy(_._1)
-      .map { case (n, v) => f""""$n":$v%.3f""" }.mkString(",")
-    val json =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec"$sfField,"queries":{$qs}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // Closed loop: the file this just wrote must round-trip through the
-    // consumer. A ref that can't be re-read is a bug HERE, not at the
-    // next bench run.
-    val back = loadQuietRef(out)
-    require(back.size == merged.size,
-      s"merge-ref: wrote ${merged.size} entries but re-parsed ${back.size}")
-    System.err.println(
-      s"[bench] merge-ref: wrote ${merged.size} entries to $out (round-trip ok)")
+    head + entries.mkString(",") + "},\"queries_omitted\":" +
+      (s.values.size - entries.size) + "}"
   }
 
   def main(args: Array[String]): Unit = {
-    // All JSON below is formatted with f"" (= String.format with the
-    // DEFAULT locale): under a comma-decimal locale every number would
-    // render "1,234" and the emitted line would be invalid JSON. Pin
-    // ROOT once — this main owns the process.
+    // f"" formats with the default locale; a comma-decimal one would
+    // break the JSON.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    if (args.headOption.contains("merge-ref")) {
-      require(args.length >= 3, "usage: merge-ref <out.json> <in1.json> [in2...]")
-      mergeRef(args(1), args.drop(2).toSeq)
-      return
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "480").toDouble
-    // Optional subset for targeted runs (the sf1 scaling-slope tour):
-    // comma-separated tokens; a query runs when its name equals a token
-    // or starts with one. Unset/empty = every registered query (the
-    // driver's protocol run is unchanged).
     val filter = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILTER", "").split(',')
       .map(_.trim).filter(_.nonEmpty).toSeq
-    val quietRefPath =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_REF", "bench_quiet_ref.json")
-    val quietRefRaw = loadQuietRef(quietRefPath)
-    // Same-scale guard (see loadQuietRefSf): a ref measured at another
-    // sf anchors nothing — disarm rather than mis-tag.
-    val refSf = loadQuietRefSf(quietRefPath)
-    val sfMismatch = refSf.exists(_ != new java.io.File(sfDir).getName)
-    if (sfMismatch)
-      System.err.println(s"[bench] quiet ref $quietRefPath was recorded at " +
-        s"${refSf.get} but this run is at $sfDir — plausibility check DISARMED " +
-        "(values are not comparable across scales)")
-    val quietRef = if (sfMismatch) Map.empty[String, Double] else quietRefRaw
-    // A ref file that EXISTS but parses to zero entries is a broken
-    // parse or a broken file, never a quiet host — round 14 shipped an
-    // official artifact with the check silently disarmed exactly this
-    // way. Scream on stderr AND stamp the artifact (`"error":
-    // "unparsed"` below) so an empty ref can never be mistaken for a
-    // clean bill of health. Still degrade rather than abort: a bench
-    // number with a visibly-dead check beats no number.
-    val refUnparsed =
-      !sfMismatch && quietRefRaw.isEmpty && java.nio.file.Files.exists(
-        java.nio.file.Paths.get(quietRefPath))
-    if (refUnparsed)
-      System.err.println(
-        s"[bench] ERROR: quiet ref $quietRefPath EXISTS but parsed to 0 " +
-          "entries — the plausibility check is DISARMED for this run; " +
-          "the artifact carries quiet_ref.error=unparsed")
-    else
-      System.err.println(s"[bench] quiet reference: ${quietRef.size} entries " +
-        s"from $quietRefPath")
-    def selected(name: String): Boolean =
-      filter.isEmpty || filter.exists(t => name == t || name.startsWith(t))
-    val spark = GraftSession.local(appName = "graft-bench")
-    val cores = spark.sparkContext.defaultParallelism
-    spark.conf.set("graft.load.repartition", cores.toString)
-    val wallStart = System.nanoTime()
-    def elapsed: Double = (System.nanoTime() - wallStart) / 1e9
+    val start = System.nanoTime()
+    def elapsed: Double = (System.nanoTime() - start) / 1e9
+    val spark = GraftSession.harness("graft-bench", sfDir)
+    val sc = spark.sparkContext
+    val trace = new Trace
+    sc.addSparkListener(trace)
+    val hostCores = Runtime.getRuntime.availableProcessors
 
-    // Machinery warm-up (see scaladoc): scan-free shuffle + broadcast
-    // join + noop write, once, BEFORE the calibration floor — warms
-    // the codegen compiler, shuffle system and noop sink so neither
-    // the probes nor the first measured queries pay framework JIT.
-    {
-      val big = spark.range(0, 2000000L, 1, 8)
-        .groupBy((col("id") % 1000).as("k")).agg(sum(col("id")).as("s"))
-      val dim = spark.range(0, 1000).select(col("id").as("k"), (col("id") * 2).as("v"))
-      big.join(broadcast(dim), Seq("k")).orderBy(col("s").desc).limit(10)
-        .write.format("noop").mode("overwrite").save()
-      System.err.println(f"[bench] machinery warm-up done at $elapsed%.1f s")
-    }
+    val queries = SparkEntry.queries.filter { case (n, _) =>
+      filter.isEmpty || filter.exists(n.startsWith) }
+    val names = queries.keys.toSeq.sorted
+    val records = mutable.Map(names.map(_ -> Record()): _*)
+    def best(n: String): Option[Double] = records(n).best.map(_.sec)
 
-    // Warm the shared inputs once (plan-cache hit for all queries).
-    val shared = Seq(
-      Tables.analiseComercial(spark, sfDir),
-      Tables.classificacaoProdutos(spark, sfDir),
-      Tables.lineitem(spark, sfDir),
-      Tables.documents(spark, sfDir),
-      Tables.embeddings(spark, sfDir))
-    shared.foreach(_.persist(StorageLevel.MEMORY_AND_DISK).count())
-
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected(name) }
-
-    def timeOne(fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+    def run(pass: Int, name: String): Unit = {
+      val tag = s"$name#$pass"
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
-    }
-
-    // Calibration probe: scan-free, shuffle-free, allocation-light —
-    // a whole-stage-codegen sum loop whose quiet-host cost is a few
-    // tens of ms. Inflation here can ONLY come from the host (JIT is
-    // absorbed by the floor measurement's 3 warm-in runs).
-    def probe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 5000000L, 1, 4).selectExpr("sum(id) as s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calSeries = scala.collection.mutable.ArrayBuffer[Double]()
-    calSeries ++= (1 to 3).map(_ => probe())
-    System.err.println(f"[bench] calibration start ${calSeries.min}%.3f s " +
-      f"(samples ${calSeries.map(s => f"$s%.3f").mkString(",")})")
-
-    // Probe windows: window i covers the measurements taken since the
-    // previous probe; windowProbe(i) is the probe reading that closed
-    // it. Suspicion is evaluated LAZILY against the floor-so-far (the
-    // min of every probe INCLUDING later ones), so a run that STARTS
-    // inside a stall storm — inflated startup floor — still marks its
-    // early windows suspect once any later quiet probe reveals the
-    // true floor. (A fixed startup floor would silently disable
-    // detection for exactly the runs the mechanism exists to catch.)
-    val windowProbe = scala.collection.mutable.ArrayBuffer[Double]()
-    def floorNow: Double = calSeries.min
-    // Suspicion threshold: relative AND absolute (see STALL_ABS_GUARD_SEC).
-    def suspectAbove: Double =
-      math.max(STALL_FACTOR * floorNow, floorNow + STALL_ABS_GUARD_SEC)
-    def windowSuspect(w: Int): Boolean =
-      w >= 0 && w < windowProbe.length && windowProbe(w) > suspectAbove
-
-    // pass timings: name -> (seconds, probe-window id) per completed
-    // pass; window id -1 = window never closed (crash path only).
-    val runLog = scala.collection.mutable.LinkedHashMap[String,
-      scala.collection.mutable.ArrayBuffer[(Double, Int)]]()
-    queries.foreach { case (n, _) =>
-      runLog(n) = scala.collection.mutable.ArrayBuffer.empty }
-    val failed = scala.collection.mutable.LinkedHashSet[String]()
-
-    // Runs `batch` with a calibration probe every CAL_EVERY queries,
-    // tagging each measurement with the probe window it fell in.
-    //   - budgetCap: when set, a query runs only if elapsed plus
-    //     EST_FACTOR x its min-so-far (0.5 s when it has no pass yet)
-    //     still fits under the cap; over-estimate queries are SKIPPED
-    //     and the pass continues to cheaper ones (see scaladoc).
-    //   - backToBack: a successful measurement under CHEAP_SEC is
-    //     immediately re-timed once (warm, codegen cache hot) while
-    //     the query holds fewer than `passes` passes.
-    def runPass(passName: String,
-                batch: Seq[(String, (SparkSession, String) => DataFrame)],
-                budgetCap: Option[Double],
-                recordFailures: Boolean = true,
-                backToBack: Boolean = false): Unit = {
-      var sinceProbe = scala.collection.mutable.ArrayBuffer[String]()
-      def checkpointProbe(): Unit = {
-        val p = probe()
-        calSeries += p
-        windowProbe += p
-        val w = windowProbe.length - 1
-        sinceProbe.foreach { n =>
-          val log = runLog(n)
-          // back-to-back passes: re-tag every still-untagged (-1)
-          // measurement of the window, not just the last one.
-          log.indices.foreach { i =>
-            if (log(i)._2 == -1) log(i) = (log(i)._1, w)
-          }
+      val cpu0 = Trace.jvmCpuNs()
+      val error = try {
+        Trace.tagged(sc, tag) {
+          queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
-        if (p > suspectAbove)
-          System.err.println(f"[bench] $passName probe $p%.3f s > " +
-            f"threshold $suspectAbove%.3f (floor $floorNow%.3f) — " +
-            s"${sinceProbe.size} queries provisionally stall_suspect")
-        sinceProbe = scala.collection.mutable.ArrayBuffer[String]()
+        None
+      } catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
+      val sec = (System.nanoTime() - t0) / 1e9
+      val jvmShare = (Trace.jvmCpuNs() - cpu0) / 1e9 / (sec * hostCores)
+      ListenerBus.drain(sc)
+      val p = Pass(sec, Trace.sum(trace.take(tag)), jvmShare)
+      val r = records(name)
+      records(name) = error match {
+        case None =>
+          System.err.println(f"[bench] pass$pass $name $sec%.3f s tasks=${p.tasks.tasks} " +
+            f"task_cpu_share=${p.tasks.cpuShare}%.2f jvm_cpu_share=$jvmShare%.2f" +
+            (if (p.stalled) " STALLED" else ""))
+          r.copy(passes = r.passes :+ p)
+        case Some(m) =>
+          System.err.println(s"[bench] pass$pass $name failed: $m")
+          r.copy(failed = true)
       }
-      batch.foreach { case (name, fn) =>
-        val est = {
-          val log = runLog(name)
-          if (log.isEmpty) 0.5 else log.map(_._1).min
-        }
-        val fits = budgetCap.forall(cap => elapsed + EST_FACTOR * est <= cap)
-        if (fits) {
-          timeOne(fn) match {
-            case Right(sec) =>
-              runLog(name) += ((sec, -1))
-              sinceProbe += name
-              System.err.println(f"[bench] $passName $name $sec%.3f s")
-              if (backToBack && sec < CHEAP_SEC && runLog(name).size < passes) {
-                timeOne(fn) match {
-                  case Right(sec2) =>
-                    runLog(name) += ((sec2, -1))
-                    System.err.println(f"[bench] $passName $name $sec2%.3f s (back-to-back)")
-                  case Left(m) =>
-                    // First run succeeded, so the query is healthy; a
-                    // flake on the free re-time must not fail it.
-                    System.err.println(s"[bench] $passName $name back-to-back failed: $m")
-                }
-              }
-            case Left(m) =>
-              System.err.println(s"[bench] $passName $name failed: $m")
-              if (recordFailures) failed += name
-          }
-          if (sinceProbe.size >= CAL_EVERY) checkpointProbe()
-        }
-      }
-      if (sinceProbe.nonEmpty) checkpointProbe()
     }
 
-    // Pass 1 always completes (coverage guarantee) and gives cheap
-    // queries their second pass back-to-back; passes 2..P cover the
-    // queries still holding fewer passes, most-expensive-first, gated
-    // by the budget minus the stall-re-run reserve (precision degrades
-    // before coverage, and the re-run loop always keeps fuel).
-    runPass("pass1", queries, budgetCap = None, backToBack = passes >= 2)
+    names.foreach(run(1, _))
+    // A query that failed pass 1 has no best time: it sorts first and
+    // gets its retry while budget certainly remains.
     (2 to passes).foreach { i =>
-      // Failed queries stay in: a transient pass-1 failure can still
-      // recover a valid value in pass 2 (empty log sorts them first —
-      // the recovery attempt runs while budget certainly remains; they
-      // are the only queries with NO usable value at all, so they need
-      // the retry most). Order is ASCENDING pass-1
-      // cost — measured (round 13, full-tree run): cold/warm inflation
-      // is LARGEST for cheap queries (median 1.5x under 0.5 s, 1.3-1.8x
-      // to 2.5 s — per-query codegen compile is ~fixed, so it dominates
-      // small queries) and SMALLEST for the expensive tail (median
-      // 1.08x, max 1.28x at >= 5 s: their many internal jobs warm the
-      // JIT inside pass 1 itself). Cheapest-first therefore maximizes
-      // both the number of queries that get a warm pass per budget
-      // second AND the accuracy of whatever ends up demoted — the
-      // not-reached tail is exactly the band whose single cold pass is
-      // already within ~1.2x of quiet. (The r12 verdict suggested
-      // descending on the theory that expensive queries carry the worst
-      // cold inflation; the band measurement shows the opposite, and
-      // the official-artifact criterion — few demotions, each within
-      // ~1.2x — is what this order optimizes.)
-      val remaining = queries
-        .filter { case (name, _) => runLog(name).size < i }
-        .sortBy { case (name, _) =>
-          val log = runLog(name)
-          if (log.isEmpty) 0.0 else log.map(_._1).min
+      names.filter(records(_).passes.size < i).sortBy(best(_).getOrElse(0.0))
+        .foreach { n =>
+          if (elapsed + EstFactor * best(n).getOrElse(0.5) <= budgetSec) run(i, n)
         }
-      runPass(s"pass$i", remaining,
-        budgetCap = Some(budgetSec - RERUN_RESERVE_SEC - PLAUS_RESERVE_SEC))
     }
 
-    // Snapshot pass counts BEFORE any stall re-run: demotions derive
-    // from the SCHEDULED passes only, so a re-run that tops up an
-    // all-suspect single-pass query still leaves its
-    // "ran_1_of_2_passes" marker recording that one contributing pass
-    // carried cold JIT cost (round-11 advice — the previous derivation
-    // from post-rerun counts silently dropped exactly that marker).
-    val scheduledPassCount = queries.map { case (name, _) =>
-      name -> runLog(name).size }.toMap
-
-    // Stall re-run: a query whose EVERY pass ran inside a suspect
-    // window (judged against the post-passes floor) has no quiet-host
-    // number — give it more passes while budget remains (slowest
-    // recorded first: they carry the most inflation risk and the most
-    // total-seconds impact). LOOPED until no all-suspect query remains
-    // (round-11 verdict ask #5: drive n_stall_suspect to 0 in-process
-    // instead of hoping one top-up lands in a quiet window), bounded
-    // by 3 attempts + the wall budget so a permanently-degraded host
-    // cannot spin the bench forever. Re-runs add probes, which can
-    // LOWER the floor and widen suspicion — allSuspect is re-evaluated
-    // from scratch each attempt, so that widening is honored, not
-    // raced.
-    def allSuspect(name: String): Boolean = {
-      val log = runLog(name)
-      log.nonEmpty && log.forall { case (_, w) => windowSuspect(w) }
-    }
-    var rerunAttempt = 0
-    var rerunList = Seq.empty[(String, (SparkSession, String) => DataFrame, Double)]
-    while (rerunAttempt < 3 && elapsed < budgetSec - PLAUS_RESERVE_SEC && {
-      rerunList = queries.collect {
-        case (name, fn) if allSuspect(name) =>
-          (name, fn, runLog(name).map(_._1).min)
-      }.sortBy(-_._3)
-      rerunList.nonEmpty
-    }) {
-      rerunAttempt += 1
-      System.err.println(s"[bench] ${rerunList.size} queries have only " +
-        s"stall-suspect passes; re-run attempt $rerunAttempt while budget remains")
-      // recordFailures=false: the rerun is best-effort extra evidence —
-      // a flake here must not fail a query that already has valid passes.
-      // The rerun spends the FULL budget (its reserve included).
-      runPass(s"rerun$rerunAttempt", rerunList.map { case (n, f, _) => (n, f) },
-        budgetCap = Some(budgetSec - PLAUS_RESERVE_SEC), recordFailures = false)
-    }
-
-    // Quiet-reference plausibility loop (see scaladoc): re-run any
-    // query whose min is implausible against the committed quiet
-    // record — the between-probes-stall case the probe guard cannot
-    // see. Most-inflated-first (by ratio over ref: that ordering
-    // repairs the worst artifact damage per budget second), re-runs
-    // best-effort against the FULL budget, bounded by 3 attempts so a
-    // permanently degraded host cannot spin forever. Survivors are
-    // tagged `weather_suspect` in the artifact below.
-    def implausible(name: String): Boolean = {
-      val log = runLog(name)
-      log.nonEmpty && quietRef.get(name).exists { ref =>
-        val v = log.map(_._1).min
-        v > PLAUS_FACTOR * ref && v > ref + PLAUS_ABS_GUARD_SEC
-      }
-    }
-    var plausAttempt = 0
-    var plausList = Seq.empty[(String, (SparkSession, String) => DataFrame, Double)]
-    while (plausAttempt < 3 && elapsed < budgetSec + PLAUS_OVERDRAFT_SEC && {
-      plausList = queries.collect {
-        case (name, fn) if implausible(name) =>
-          (name, fn, runLog(name).map(_._1).min / quietRef(name))
-      }.sortBy(-_._3)
-      plausList.nonEmpty
-    }) {
-      plausAttempt += 1
-      System.err.println(s"[bench] ${plausList.size} queries implausible vs " +
-        s"quiet reference (>${PLAUS_FACTOR}x); re-run attempt $plausAttempt " +
-        "while budget (+ overdraft) remains")
-      runPass(s"plaus$plausAttempt", plausList.map { case (n, f, _) => (n, f) },
-        budgetCap = Some(budgetSec + PLAUS_OVERDRAFT_SEC), recordFailures = false)
-    }
-    // Wait-out-the-storm (round 17, r16 verdict ask #2): the two loops
-    // above spend COMPUTE to out-run a storm; when the host is still
-    // degraded after them (tagged rows remain, budget + overdraft
-    // gone), more compute only measures the same storm — r16's
-    // official artifact shipped 2.4x its committed quiet record that
-    // way. Park instead: sleep on a doubling backoff, re-probe, and
-    // only when a probe reads QUIET (below the same suspicion
-    // threshold the windows are judged by) re-run the surviving
-    // tagged rows once. Bounded by a hard WALL cap
-    // (SPARK_GRAFT_STORM_WALL_FACTOR x budget, default 2x; 0 disables
-    // parking) so a permanently degraded host still ends the run —
-    // and every park probe lands in the calibration series, so an
-    // artifact that ships residual tags carries the probe evidence
-    // that the storm outlasted the cap.
-    def taggedNow(): Seq[(String, (SparkSession, String) => DataFrame)] =
-      queries.collect {
-        case (name, fn) if allSuspect(name) || implausible(name) =>
-          (name, fn, runLog(name).map(_._1).min)
-      }.sortBy(-_._3).map { case (n, f, _) => (n, f) }
-    val stormWallCap =
-      sys.env.getOrElse("SPARK_GRAFT_STORM_WALL_FACTOR", "2.0").toDouble * budgetSec
-    var stormWaitedSec = 0.0
-    var stormRounds = 0
-    var parkSec = 15.0
-    while (taggedNow().nonEmpty && elapsed < stormWallCap) {
-      stormRounds += 1
-      System.err.println(f"[bench] storm mode: ${taggedNow().size} tagged rows " +
-        f"remain at elapsed $elapsed%.1f s — parking $parkSec%.0f s " +
-        f"(wall cap $stormWallCap%.0f)")
-      Thread.sleep((parkSec * 1000).toLong)
-      stormWaitedSec += parkSec
-      parkSec = math.min(parkSec * 2, 120.0)
-      val p = probe()
-      calSeries += p
-      if (p <= suspectAbove) {
-        System.err.println(f"[bench] storm probe $p%.3f s quiet " +
-          f"(threshold $suspectAbove%.3f) — re-running tagged rows")
-        runPass(s"storm$stormRounds", taggedNow(),
-          budgetCap = Some(stormWallCap), recordFailures = false)
-      } else
-        System.err.println(f"[bench] storm probe $p%.3f s still above " +
-          f"threshold $suspectAbove%.3f — parking again")
-    }
-
-    val weatherSuspect = queries.collect {
-      case (name, _) if implausible(name) => name }
-
-    // Demotions, derived from what the scheduled passes actually ran
-    // (never marked mid-run: a budget stop inside pass 3 must not
-    // mislabel a query that holds two good passes): a non-failed query
-    // that completed fewer than `passes` scheduled passes lost
-    // precision to the budget, whether or not a stall re-run later
-    // added evidence.
-    val demoted = scala.collection.mutable.LinkedHashMap[String, String]()
-    queries.foreach { case (name, _) =>
-      val n = scheduledPassCount(name)
-      if (!failed.contains(name) && n < passes)
-        demoted.put(name, if (n == 0) "no_pass" else s"ran_${n}_of_${passes}_passes")
-    }
-
-    // Per-query value: min over all passes (see scaladoc). A query is
-    // stall_suspect in the ARTIFACT only if every pass — including any
-    // re-run — fell in a window judged suspect against the FINAL floor.
-    val timings = queries.map { case (name, _) =>
-      val log = runLog(name)
-      val value = if (log.isEmpty) -1.0 else log.map(_._1).min
-      (name, value, allSuspect(name))
-    }
-    val calFloor = floorNow
-
-    val total = timings.collect {
-      case (n, v, _) if v >= 0 && !failed.contains(n) => v }.sum
-    val qs = timings.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val demotedJson = demoted.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val suspectJson = timings.collect { case (n, _, true) => "\"" + n + "\"" }
-      .mkString("[", ",", "]")
-    val weatherJson = weatherSuspect.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val calJson = calSeries.map(s => f"$s%.3f").mkString("[", ",", "]")
-    val resultJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"failed":$failedJson,"budget_demoted":$demotedJson,"default_stat":"min","stall_suspect":$suspectJson,"weather_suspect":$weatherJson,"quiet_ref":{"file":"$quietRefPath","n_ref":${quietRef.size}${if (refUnparsed) ",\"error\":\"unparsed\"" else ""}${if (sfMismatch) ",\"error\":\"sf_mismatch\"" else ""}},"calibration":{"floor":$calFloor%.3f,"series":$calJson},"storm":{"rounds":$stormRounds,"waited_sec":$stormWaitedSec%.1f,"wall_cap_sec":$stormWallCap%.0f},"wall_sec":$elapsed%.1f}"""
-    // The driver captures a BOUNDED tail of stdout; with 86+ queries the
-    // one-line JSON outgrew it and round 5's official artifact lost its
-    // first ~10 values to head-truncation (parsed: null). The file copy
-    // is the durable machine-readable record; stdout stays the protocol
-    // line. Written BEFORE the println so a broken pipe can't lose both.
-    val outFile = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_result.json"))
+    val summary = summarize(names.map(n => n -> records(n)), passes)
+    val full = artifact(summary, sfDir, passes, elapsed)
+    // Written before the stdout lines, so a broken pipe cannot lose both.
+    val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_result.json"))
     try {
-      Option(outFile.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(outFile,
-        (resultJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      System.err.println(s"[bench] result written to $outFile")
+      Option(out.getParent).foreach(Files.createDirectories(_))
+      Files.write(out, (full + "\n").getBytes(UTF_8))
+      System.err.println(s"[bench] result written to $out")
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
+      System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
-    println(resultJson)
-    // FINAL stdout line: a compact summary guaranteed to fit INSIDE the
-    // driver's bounded stdout tail. Rounds 5-7 proved the full line can
-    // never be the official record: the driver keeps the LAST 2000
-    // bytes of stdout (measured constant across BENCH_r05..r07), the
-    // 86-query line is ~3.3 KB, so every artifact had `parsed: null`
-    // with the line's head truncated. This line budgets 1500 bytes —
-    // totals, failure/demotion/suspect counts, calibration floor, and
-    // the slowest values greedily packed (slowest-first is the half the
-    // judge reads) — leaving ~500 bytes of slack for sbt's `[success]`
-    // epilogue and the tail of the full line above. The complete
-    // per-query map lives in the full line and `target/bench_result.json`.
-    val lineBudget = 1500
-    val slowest = timings.filter(_._2 >= 0).sortBy(-_._2)
-    // n_failed (a count), NOT the failed-name array: a mass-failure run
-    // would make the name list unbounded and push this line back past
-    // the stdout tail it exists to fit in. Names live in the full line
-    // and the file artifact.
-    val prefix = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","passes":$passes,"n_queries":${timings.length},"n_failed":${failed.size},"n_demoted":${demoted.size},"n_stall_suspect":${timings.count(_._3)},"n_weather_suspect":${weatherSuspect.size},"cal_floor":$calFloor%.3f,"wall_sec":$elapsed%.1f,"queries":{"""
-    val entries = scala.collection.mutable.ArrayBuffer[String]()
-    var used = prefix.length + 60 // room for "},"queries_omitted":NNN}"
-    slowest.foreach { case (k, v, _) =>
-      val e = "\"" + k + "\":" + f"$v%.3f"
-      if (used + e.length + 1 <= lineBudget) { entries += e; used += e.length + 1 }
-    }
-    val omitted = timings.length - entries.length
-    println(prefix + entries.mkString(",") + "},\"queries_omitted\":" + omitted + "}")
+    println(full)
+    println(finalLine(summary, sfDir, passes, elapsed))
     spark.stop()
   }
 }

@@ -1,91 +1,55 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.storage.StorageLevel
+import java.lang.management.ManagementFactory
 
-import graft.sources.Tables
+import scala.jdk.CollectionConverters._
 
-/** Bench diagnostics: reproduces the harness environment (same session,
-  * same shared-view persists) and reports, for each named query, the
-  * per-stage task counts and executor run time of a cold and a warm
-  * execution, plus the executed plan. Exists because round 4's bench
-  * timed out with a single-task aggregation funnel on the a9 family
-  * that only appears under the harness's cached views (VERDICT r4
-  * "What's wrong" #1/#2) — this main is the evidence-capture tool.
+import org.apache.spark.sql.graft.ListenerBus
+
+/** Per-stage diagnostics in the bench's set-up ([[GraftSession.harness]]):
+  * for each named query, a cold and a warm run's wall time, the
+  * JVM CPU seconds, the per-stage task counts, run time, CPU, GC, spill
+  * and shuffle write from [[Trace]], and the cold run's executed plan.
   *
   * Usage: sbt "runMain graft.Diag a9_historico a10_c10_collapse_uniform"
   * (SPARK_GRAFT_SF_DIR selects the scale, default sf0.1).
   */
 object Diag {
 
-  private final case class StageRow(
-      id: Int, tasks: Int, runMs: Long, cpuMs: Long, gcMs: Long,
-      spill: Long, shufWrite: Long, name: String)
-
-  private final class StageLog extends SparkListener {
-    val rows = new scala.collection.mutable.ArrayBuffer[StageRow]
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val si = sc.stageInfo
-      val m = si.taskMetrics
-      rows += StageRow(si.stageId, si.numTasks, m.executorRunTime,
-        m.executorCpuTime / 1000000, m.jvmGCTime,
-        m.memoryBytesSpilled, m.shuffleWriteMetrics.bytesWritten,
-        si.name.linesIterator.nextOption().getOrElse(""))
-    }
-    def drain(): Seq[StageRow] = { val r = rows.toSeq; rows.clear(); r }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args.toSeq else Seq("a9_historico")
-    val spark = GraftSession.local(appName = "graft-diag")
-    // Mirror Bench's warm-view spread unless explicitly disabled
-    // (SPARK_GRAFT_DIAG_SPREAD=0 reproduces the round-4 funnel).
-    if (sys.env.getOrElse("SPARK_GRAFT_DIAG_SPREAD", "1") != "0")
-      spark.conf.set("graft.load.repartition",
-        spark.sparkContext.defaultParallelism.toString)
-    sys.env.get("SPARK_GRAFT_DIAG_FALLBACK").foreach(v =>
-      spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v))
-    val log = new StageLog
-    spark.sparkContext.addSparkListener(log)
+    val spark = GraftSession.harness("graft-diag", sfDir)
+    val sc = spark.sparkContext
+    val trace = new Trace
+    sc.addSparkListener(trace)
 
-    val shared = Seq(
-      "fact" -> Tables.analiseComercial(spark, sfDir),
-      "dim" -> Tables.classificacaoProdutos(spark, sfDir),
-      "lineitem" -> Tables.lineitem(spark, sfDir),
-      "documents" -> Tables.documents(spark, sfDir),
-      "embeddings" -> Tables.embeddings(spark, sfDir))
-    shared.foreach { case (label, df) =>
-      df.persist(StorageLevel.MEMORY_AND_DISK).count()
-      println(f"[diag] cached view $label%-10s partitions=${df.rdd.getNumPartitions}")
-    }
-    log.drain()
-
-    def runOnce(name: String, tag: String, explain: Boolean): Unit = {
-      // The builder call is INSIDE the timed region, matching Bench's
-      // timeOne: the eager pipelines (dedup_*, ann_lsh_*) do their
-      // work in the builder and only hand the noop write their
-      // already-checkpointed result — timing from after the builder
-      // would report ~0 s for exactly the queries this tool exists
-      // to diagnose.
+    def runOnce(name: String, run: String, explain: Boolean): Unit = {
+      // The builder is timed too, as in Bench: eager pipelines do their
+      // work there and hand the write an already-cut result.
+      val tag = s"$name $run"
       val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
+      val cpu0 = Trace.jvmCpuNs()
+      val df = Trace.tagged(sc, tag) {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        df
+      }
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // let the async listener bus drain before reading stage rows
-      println(f"[diag] $name $tag wall=$sec%.2f s")
-      log.drain().foreach { r =>
-        println(f"[diag]   stage ${r.id}%3d tasks=${r.tasks}%4d run=${r.runMs / 1000.0}%8.2f s cpu=${r.cpuMs / 1000.0}%8.2f s gc=${r.gcMs / 1000.0}%7.2f s spill=${r.spill / 1048576}%6d MB shufW=${r.shufWrite / 1048576}%6d MB  ${r.name}")
+      val jvmCpu = (Trace.jvmCpuNs() - cpu0) / 1e9
+      ListenerBus.drain(sc)
+      val stages = trace.take(tag)
+      println(f"[diag] $name $run wall=$sec%.2f s jvm_cpu=$jvmCpu%.2f s " +
+        f"task_cpu_share=${Trace.sum(stages).cpuShare}%.2f")
+      stages.foreach { case (id, t) =>
+        println(f"[diag]   stage $id%3d tasks=${t.tasks}%4d run=${t.runMs / 1000.0}%8.2f s cpu=${t.cpuNs / 1e9}%8.2f s gc=${t.gcMs / 1000.0}%7.2f s spill=${t.spillBytes / 1048576}%6d MB shufW=${t.shuffleWriteBytes / 1048576}%6d MB  ${t.name}")
       }
       if (explain) println(df.queryExecution.executedPlan.toString.take(8000))
-      val mf = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-      import scala.jdk.CollectionConverters._
-      mf.asScala.filter(_.getName.toLowerCase.contains("code")).foreach { p =>
-        println(f"[diag]   pool ${p.getName}: used=${p.getUsage.getUsed / 1048576} MB max=${p.getUsage.getMax / 1048576} MB")
-      }
-      val comp = java.lang.management.ManagementFactory.getCompilationMXBean
-      println(s"[diag]   totalCompilationTime=${comp.getTotalCompilationTime} ms")
+      ManagementFactory.getMemoryPoolMXBeans.asScala
+        .filter(_.getName.toLowerCase.contains("code")).foreach { p =>
+          println(f"[diag]   pool ${p.getName}: used=${p.getUsage.getUsed / 1048576} MB max=${p.getUsage.getMax / 1048576} MB")
+        }
+      println(s"[diag]   totalCompilationTime=${ManagementFactory.getCompilationMXBean.getTotalCompilationTime} ms")
     }
 
     names.foreach { n => runOnce(n, "COLD", explain = true); runOnce(n, "WARM", explain = false) }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
+
+import graft.sources.Tables
 
 /** Session factory with the configuration this engine assumes.
   *
@@ -84,6 +87,28 @@ object GraftSession {
       .config("spark.sql.ui.explainMode", "simple")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The session the harness mains (Bench, Diag, PlanDump) run queries in.
+    *   - `graft.load.repartition` is the core count, so the warm views
+    *     hold one partition per core; single-row-group test files would
+    *     otherwise pin every scan-side stage to one task ([[Tables]]
+    *     `spread`).
+    *   - The five shared views are persisted up front. Spark's
+    *     CacheManager substitutes the cached relation into every query
+    *     whose subplan matches, so the 5-way fact join is built once,
+    *     as a warm server would hold it.
+    */
+  def harness(appName: String, sfDir: String): SparkSession = {
+    val spark = local(appName = appName)
+    spark.conf.set("graft.load.repartition", spark.sparkContext.defaultParallelism.toString)
+    Seq(Tables.analiseComercial(spark, sfDir),
+      Tables.classificacaoProdutos(spark, sfDir),
+      Tables.lineitem(spark, sfDir),
+      Tables.documents(spark, sfDir),
+      Tables.embeddings(spark, sfDir))
+      .foreach(_.persist(StorageLevel.MEMORY_AND_DISK).count())
     spark
   }
 }

@@ -14,9 +14,8 @@ object Verify {
     val outDir = args(1)
     val only = args.drop(2).toSet
     def selected(name: String): Boolean = only.isEmpty || only.contains(name)
-    // Same parallelism default as Bench/GraftSession: a correctness run
-    // under a different partition count than the bench could mask
-    // order-nondeterministic expressions.
+    // Bench's session settings (GraftSession.local), but without its
+    // `graft.load.repartition`: scans keep the files' own partitioning.
     val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Persist shared inputs once — every query's identical subplan hits

@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{GraftSession, SparkEntry}
-import graft.sources.Tables
-import org.apache.spark.storage.StorageLevel
 
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence artifact (`plans/r17/<query>_<tag>.txt`).
@@ -14,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   *   sbt "runMain graft.tools.PlanDump plans/r17 before dedup_minhash"
   *
   * `SPARK_GRAFT_SF_DIR` selects the data (default sf0.1). The session
-  * and shared-view persists mirror Bench so the dumped plan is the one
+  * is Bench's ([[GraftSession.harness]]), so the dumped plan is the one
   * the bench actually runs (the CacheManager substitutes InMemoryRelation
   * leaves exactly as in the timed run). The dump calls explain on the
   * UNEXECUTED frame (AQE initial plan): Exchange placement, join
@@ -33,15 +31,7 @@ object PlanDump {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local(appName = "graft-plandump")
-    spark.conf.set("graft.load.repartition",
-      spark.sparkContext.defaultParallelism.toString)
-    Seq(Tables.analiseComercial(spark, sfDir),
-      Tables.classificacaoProdutos(spark, sfDir),
-      Tables.lineitem(spark, sfDir),
-      Tables.documents(spark, sfDir),
-      Tables.embeddings(spark, sfDir))
-      .foreach(_.persist(StorageLevel.MEMORY_AND_DISK).count())
+    val spark = GraftSession.harness("graft-plandump", sfDir)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
