@@ -2731,13 +2731,140 @@ class XlsxSpec extends AnyFunSuite {
   // (sun.jnu.encoding=ASCII), so java.io cannot address the
   // reference's accented path AT ALL — stage the workbook (same
   // bytes) to an ASCII path with a shell glob once per suite.
+  // The reference snapshot is not mounted everywhere: where the glob
+  // matches nothing the test that needs the real file is canceled
+  // (naming the glob); where it matches, a failed copy still fails.
+  private val refGlob = "/root/reference/*/Classifica*.xlsx"
   private lazy val refBook: String = {
     val dst = "target/ref_dim.xlsx"
     import scala.sys.process._
+    assume(Seq("bash", "-c", s"compgen -G '$refGlob' > /dev/null").! == 0,
+      s"reference workbook not mounted: nothing matches $refGlob")
     val rc = Seq("bash", "-c",
-      s"cp /root/reference/*/Classifica*.xlsx $dst").!
+      s"cp $refGlob $dst").!
     assert(rc == 0, "staging the reference workbook failed")
     dst
+  }
+
+  // An Excel-shaped stand-in for the reference's dimension workbook
+  // (FIXTURES §2), in the shape Excel saves rather than the one
+  // Xlsx.write emits: sheet `Base`, the exact accented header, every
+  // text cell a shared string (one with rich-text runs, one key with a
+  // preserved trailing space), the duplicate key CAL-CO-INNOVA, a
+  // `Validação André` column of styled empty cells, a
+  // _xlnm._FilterDatabase defined name, styles and content types.
+  private val dimHeader = Seq(
+    "C\u00f3digo Produto", "Descri\u00e7\u00e3o", "Tipo de Mercadoria",
+    "Subgrupo", "Utiliza\u00e7\u00e3o", "Local", "Grupo",
+    "Neg\u00f3cio", "Fabricante", "Valida\u00e7\u00e3o Andr\u00e9")
+  private val richDesc = Seq("Bomba ", "submersa 12V")
+  private val dimRows: Seq[Seq[String]] = Seq(
+    Seq("CAL-CO-INNOVA", "Calibrador condutividade", "Reposi\u00e7\u00e3o",
+      "Acess\u00f3rio", "Campo", "Estoque", "Calibra\u00e7\u00e3o", "Hidrologia", "Innova", null),
+    Seq("CAL-CO-INNOVA", "Calibrador condutividade lote 2", "Reposi\u00e7\u00e3o",
+      "Acess\u00f3rio", "Campo", "Estoque", "Calibra\u00e7\u00e3o", "Hidrologia", "Innova", null),
+    Seq("YSI480075Y ", "Sonda multipar\u00e2metro", "Produto",
+      "Sonda", "Campo", "Importa\u00e7\u00e3o", "Sondas", "Hidrologia", "YSI", null),
+    Seq("CEBD01035-00", richDesc.mkString, "Produto",
+      "Bomba", "Campo", "Estoque", "Amostragem", "Remedia\u00e7\u00e3o", "Proactive", null),
+    // a numeric code, stored as an Excel number; l_partkey 17 is also
+    // a key of the sf0.001 fact
+    Seq("17", "Luva nitr\u00edlica", "Insumo",
+      "EPI", "Laborat\u00f3rio", "Estoque", "Consum\u00edveis", "SSO", null, null),
+    Seq("SRV-CAL-01", "Servi\u00e7o de calibra\u00e7\u00e3o", "Servi\u00e7o",
+      "Calibra\u00e7\u00e3o", "Laborat\u00f3rio", "Interno", "Servi\u00e7os", "Diversos", "Interno", null),
+    Seq("INATIVO-0001", null, "Inativo",
+      "Inativo", "Inativo", "Inativo", "Inativo", "Inativo", "Inativo", null))
+
+  private lazy val excelBook: String = {
+    val p = java.nio.file.Files.createTempDirectory("graft_xlsx_base").toString + "/base.xlsx"
+    val sheet = dimHeader +: dimRows
+    def isNumber(v: String) = v.nonEmpty && v.forall(_.isDigit)
+    val textCells = sheet.flatten.filter(v => v != null && !isNumber(v))
+    val strings = textCells.distinct
+    val sst = strings.zipWithIndex.toMap
+    def t(s: String) =
+      if (s != s.trim) s"""<t xml:space="preserve">$s</t>""" else s"<t>$s</t>"
+    def si(s: String) =
+      if (s == richDesc.mkString) richDesc.map(run =>
+        s"""<r><rPr><sz val="11"/><rFont val="Calibri"/></rPr>${t(run)}</r>""")
+        .mkString("<si>", "", "</si>")
+      else s"<si>${t(s)}</si>"
+    val last = s"J${sheet.length}"
+    val rowsXml = sheet.zipWithIndex.map { case (vals, i) =>
+      val r = i + 1
+      vals.zipWithIndex.map { case (v, c) =>
+        val ref = s"${('A' + c).toChar}$r"
+        if (v == null) { if (c == dimHeader.length - 1) s"""<c r="$ref" s="2"/>""" else "" }
+        else if (isNumber(v)) s"""<c r="$ref"><v>$v</v></c>"""
+        else if (r == 1) s"""<c r="$ref" s="1" t="s"><v>${sst(v)}</v></c>"""
+        else s"""<c r="$ref" t="s"><v>${sst(v)}</v></c>"""
+      }.mkString(s"""<row r="$r" spans="1:10">""", "", "</row>")
+    }.mkString
+    val decl = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
+    val ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    val rns = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    val ct = "application/vnd.openxmlformats-officedocument.spreadsheetml"
+    val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(p))
+    def put(name: String, body: String): Unit = {
+      zos.putNextEntry(new java.util.zip.ZipEntry(name))
+      zos.write((decl + body).getBytes("UTF-8")); zos.closeEntry()
+    }
+    try {
+      put("[Content_Types].xml",
+        """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
+          """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
+          """<Default Extension="xml" ContentType="application/xml"/>""" +
+          s"""<Override PartName="/xl/workbook.xml" ContentType="$ct.sheet.main+xml"/>""" +
+          s"""<Override PartName="/xl/worksheets/sheet1.xml" ContentType="$ct.worksheet+xml"/>""" +
+          s"""<Override PartName="/xl/styles.xml" ContentType="$ct.styles+xml"/>""" +
+          s"""<Override PartName="/xl/sharedStrings.xml" ContentType="$ct.sharedStrings+xml"/>""" +
+          "</Types>")
+      put("_rels/.rels",
+        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+          s"""<Relationship Id="rId1" Type="$rns/officeDocument" Target="xl/workbook.xml"/>""" +
+          "</Relationships>")
+      put("xl/workbook.xml",
+        s"""<workbook xmlns="$ns" xmlns:r="$rns">""" +
+          """<fileVersion appName="xl" lastEdited="7" lowestEdited="7" rupBuild="27328"/>""" +
+          """<workbookPr defaultThemeVersion="166925"/>""" +
+          """<bookViews><workbookView xWindow="-120" yWindow="-120" windowWidth="29040" windowHeight="15840"/></bookViews>""" +
+          """<sheets><sheet name="Base" sheetId="1" r:id="rId1"/></sheets>""" +
+          """<definedNames><definedName name="_xlnm._FilterDatabase" localSheetId="0" hidden="1">""" +
+          "Base!$A$1:$J$" + sheet.length + "</definedName></definedNames>" +
+          """<calcPr calcId="191029"/></workbook>""")
+      put("xl/_rels/workbook.xml.rels",
+        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+          s"""<Relationship Id="rId1" Type="$rns/worksheet" Target="worksheets/sheet1.xml"/>""" +
+          s"""<Relationship Id="rId2" Type="$rns/styles" Target="styles.xml"/>""" +
+          s"""<Relationship Id="rId3" Type="$rns/sharedStrings" Target="sharedStrings.xml"/>""" +
+          "</Relationships>")
+      put("xl/styles.xml",
+        s"""<styleSheet xmlns="$ns">""" +
+          """<fonts count="2"><font><sz val="11"/><name val="Calibri"/></font>""" +
+          """<font><b/><sz val="11"/><name val="Calibri"/></font></fonts>""" +
+          """<fills count="2"><fill><patternFill patternType="none"/></fill>""" +
+          """<fill><patternFill patternType="gray125"/></fill></fills>""" +
+          """<borders count="1"><border><left/><right/><top/><bottom/><diagonal/></border></borders>""" +
+          """<cellStyleXfs count="1"><xf numFmtId="0" fontId="0" fillId="0" borderId="0"/></cellStyleXfs>""" +
+          """<cellXfs count="3"><xf numFmtId="0" fontId="0" fillId="0" borderId="0" xfId="0"/>""" +
+          """<xf numFmtId="0" fontId="1" fillId="0" borderId="0" xfId="0" applyFont="1"/>""" +
+          """<xf numFmtId="49" fontId="0" fillId="0" borderId="0" xfId="0" applyNumberFormat="1"/></cellXfs>""" +
+          """<cellStyles count="1"><cellStyle name="Normal" xfId="0" builtinId="0"/></cellStyles></styleSheet>""")
+      put("xl/sharedStrings.xml",
+        s"""<sst xmlns="$ns" count="${textCells.length}" uniqueCount="${strings.length}">""" +
+          strings.map(si).mkString + "</sst>")
+      put("xl/worksheets/sheet1.xml",
+        s"""<worksheet xmlns="$ns" xmlns:r="$rns"><dimension ref="A1:$last"/>""" +
+          """<sheetViews><sheetView tabSelected="1" workbookViewId="0">""" +
+          """<pane ySplit="1" topLeftCell="A2" activePane="bottomLeft" state="frozen"/>""" +
+          """<selection pane="bottomLeft" activeCell="A2" sqref="A2"/></sheetView></sheetViews>""" +
+          """<sheetFormatPr defaultRowHeight="15"/><cols><col min="1" max="1" width="18.7" customWidth="1"/></cols>""" +
+          s"<sheetData>$rowsXml</sheetData>" +
+          s"""<autoFilter ref="A1:$last"/>""" +
+          """<pageMargins left="0.7" right="0.7" top="0.75" bottom="0.75" header="0.3" footer="0.3"/></worksheet>""")
+    } finally zos.close()
+    p
   }
 
   test("reads the reference's ACTUAL dimension workbook (the pd.read_excel parity proof)") {
@@ -2776,6 +2903,49 @@ class XlsxSpec extends AnyFunSuite {
     assert(byName.count() == n)
     // and the whole pipeline entry point accepts the raw file now
     assert(graft.sources.Load.load(spark, refBook).count() == n)
+  }
+
+  test("Excel-shaped Base workbook: sheet registry, accented header, shared strings, keys through the pipeline") {
+    assert(graft.sources.Xlsx.sheetNames(excelBook) == Seq("Base"))
+    val df = graft.sources.Xlsx.read(spark, excelBook)
+    assert(df.columns.toSeq == Seq(
+      "C\u00f3digo Produto", "Descri\u00e7\u00e3o", "Tipo de Mercadoria",
+      "Subgrupo", "Utiliza\u00e7\u00e3o", "Local", "Grupo",
+      "Neg\u00f3cio", "Fabricante", "Valida\u00e7\u00e3o Andr\u00e9"),
+      df.columns.toSeq.toString)
+    val n = df.count()
+    assert(n == dimRows.length)
+    assert(graft.sources.Xlsx.read(spark, excelBook, sheet = Some("Base")).count() == n)
+    assert(graft.sources.Load.load(spark, excelBook).count() == n)
+    val byKey = df.collect().map(r => r.getString(0) -> r).toMap
+    // rich-text runs concatenate; a number cell reads as its raw text
+    assert(byKey("CEBD01035-00").getString(1) == "Bomba submersa 12V")
+    assert(byKey("17").getString(1) == "Luva nitr\u00edlica")
+    assert(byKey("17").isNullAt(8) && byKey("INATIVO-0001").isNullAt(1))
+    assert(df.where(org.apache.spark.sql.functions.col(
+      "Valida\u00e7\u00e3o Andr\u00e9").isNotNull).isEmpty)
+    // the preserved trailing space survives the read...
+    assert(byKey.contains("YSI480075Y "), byKey.keys.toString)
+    // ...and normalizeKeys trims it, keeping the duplicate key
+    val dim = graft.operators.Cleaning.normalizeKeys(
+      df.select(
+        org.apache.spark.sql.functions.col("C\u00f3digo Produto").as("codigo_produto"),
+        org.apache.spark.sql.functions.col("Neg\u00f3cio").as("negocio"),
+        org.apache.spark.sql.functions.col("Grupo").as("grupo"),
+        org.apache.spark.sql.functions.col("Subgrupo").as("subgrupo")),
+      Seq("codigo_produto"))
+    val keys = dim.select("codigo_produto").as[String].collect().toSeq
+    assert(keys.contains("YSI480075Y") && keys.forall(k => k == k.trim), keys.toString)
+    assert(keys.count(_ == "CAL-CO-INNOVA") == 2 && keys.distinct.length == n - 1)
+    // the compatibility report runs against the synthetic fact, whose
+    // keys include 17 and none of the fixture's other codes
+    val fact = graft.sources.Tables.analiseComercial(spark, "/root/testdata/sf0.001")
+    val report = graft.operators.Enrich.compatibilityReport(fact, dim).collect()
+    assert(report.length == 1)
+    val r = report.head
+    assert(r.getAs[Boolean]("key_present_both"))
+    assert(r.getAs[Long]("n_dim_keys") == n - 1)
+    assert(r.getAs[Long]("n_missing") == r.getAs[Long]("n_fact_keys") - 1, r.toString)
   }
 
   test("hand-built workbook: numerics, shared/inline strings, gaps, booleans, header dedup") {
@@ -2840,8 +3010,20 @@ class XlsxSpec extends AnyFunSuite {
 
   test("oversized workbooks and missing sheets fail with guidance") {
     val e = intercept[IllegalArgumentException](
-      graft.sources.Xlsx.read(spark, refBook, sheet = Some("Nope")))
+      graft.sources.Xlsx.read(spark, excelBook, sheet = Some("Nope")))
     assert(e.getMessage.contains("Base"), e.getMessage)
+    // One byte past Xlsx's 100 MiB cap; the file is sparse, so nothing
+    // is written, and the size guard fires before the zip is opened.
+    val cap = 100L * 1024 * 1024
+    val big = java.io.File.createTempFile("graft_xlsx_big", ".xlsx")
+    try {
+      val raf = new java.io.RandomAccessFile(big, "rw")
+      try raf.setLength(cap + 1) finally raf.close()
+      val o = intercept[IllegalArgumentException](
+        graft.sources.Xlsx.read(spark, big.getPath))
+      assert(o.getMessage.contains(s"caps at $cap bytes") &&
+        o.getMessage.contains("parquet/csv"), o.getMessage)
+    } finally big.delete()
   }
 
   test("banner row above headerRow does not inject phantom columns (pd.read_excel(header=n) parity)") {
