@@ -249,10 +249,10 @@ object Bpe {
       struct(col("merge_rank"), col("lhs"), col("rhs")))).as("__merges"))
 
   /** Word occurrences of `textCol` with each word's BPE symbol count
-    * under the trained merge table — the shared encode stage of BOTH
-    * encode paths ([[encodeCounts]] and the streaming twin
-    * [[graft.streaming.StreamingOps.bpeEncodeStream]]). The semantic
-    * kernel is [[applyMerges]] in both; the plumbing differs by
+    * under the trained merge table — the encode stage of
+    * [[encodeCountsBy]], the body [[encodeCounts]] and its streaming
+    * entry [[graft.streaming.StreamingOps.bpeEncodeStream]] share. The
+    * semantic kernel is [[applyMerges]] in both; the plumbing differs by
     * execution model:
     *
     *   - batch (`perOccurrence = false`): segment each DISTINCT word
@@ -315,31 +315,73 @@ object Bpe {
       idCol: String,
       textCol: String,
       mergeTable: DataFrame,
-      vocab: DataFrame): DataFrame = {
-    val occ = docs.select(col(idCol).as("doc_id"), col(textCol))
-      .select(col("doc_id"),
-        posexplode(asciiTokens(col(textCol))).as(Seq("wpos", "w")))
-    val wordSyms = occ.select(col("w")).distinct()
-      .crossJoin(broadcast(mergesArray(mergeTable)))
-      .select(col("w"), applyMerges(col("w"), col("__merges")).as("syms"))
-    val ids = occ.join(wordSyms, Seq("w"))
-      .select(col("doc_id"), col("wpos"),
-        posexplode(col("syms")).as(Seq("spos", "token")))
-      .join(broadcast(vocab.select(col("token"), col("token_id"))), Seq("token"), "left")
-      .withColumn("tid", coalesce(col("token_id"), lit(0)))
-      .groupBy(col("doc_id"))
+      vocab: DataFrame): DataFrame =
+    padDocs(docs, idCol, encodeIdsBy(docs, idCol, textCol, mergeTable, vocab,
+      DocGrouping.ByDoc), "n_tokens" -> lit(0L), "token_ids" -> lit(""))
+
+  /** [[encodeIds]] under any [[DocGrouping]], before the zero rows of
+    * ascii-tokenless docs are re-attached: `(doc_id, n_tokens,
+    * token_ids)` plus the grouping keys.
+    */
+  private[graft] def encodeIdsBy(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      mergeTable: DataFrame,
+      vocab: DataFrame,
+      g: DocGrouping): DataFrame =
+    assembleIds(
+      symbolRows(docs, idCol, textCol, mergeTable, g)
+        .join(broadcast(vocab.select(col("token"), col("token_id"))), Seq("token"), "left")
+        .withColumn("tid", coalesce(col("token_id"), lit(0))),
+      Seq(col("wpos"), col("spos")), g)
+
+  /** The occurrence→symbol prefix of every token-id path: one
+    * `(doc_id, wpos, spos, token)` row per replayed symbol. Batch
+    * segments each DISTINCT word once and joins back (the
+    * [[symbolOccurrences]] batch shape); a stream replays the merges
+    * inline per occurrence, a stateless projection.
+    */
+  private def symbolRows(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      mergeTable: DataFrame,
+      g: DocGrouping): DataFrame = {
+    val occ = g.source(docs).select(g.keys(col(idCol).as("doc_id"), col(textCol)): _*)
+      .select(g.keys(col("doc_id"),
+        posexplode(asciiTokens(col(textCol))).as(Seq("wpos", "w"))): _*)
+    val ms = broadcast(mergesArray(mergeTable))
+    val withSyms =
+      if (g.streaming)
+        occ.crossJoin(ms).withColumn("syms", applyMerges(col("w"), col("__merges")))
+      else
+        occ.join(occ.select(col("w")).distinct().crossJoin(ms)
+          .select(col("w"), applyMerges(col("w"), col("__merges")).as("syms")), Seq("w"))
+    withSyms.select(g.keys(col("doc_id"), col("wpos"),
+      posexplode(col("syms")).as(Seq("spos", "token"))): _*)
+  }
+
+  /** Per-doc `(doc_id, n_tokens, token_ids)`: the `tid`s of `rows`
+    * comma-joined in `order`.
+    */
+  private def assembleIds(rows: DataFrame, order: Seq[Column], g: DocGrouping): DataFrame =
+    rows.groupBy(g.keys(col("doc_id")): _*)
       .agg(count(lit(1)).cast("long").as("n_tokens"),
         array_join(
           transform(
-            array_sort(collect_list(struct(col("wpos"), col("spos"), col("tid")))),
+            array_sort(collect_list(struct(order :+ col("tid"): _*))),
             s => s.getField("tid").cast("string")),
           ",").as("token_ids"))
+
+  /** Every input doc with its `perDoc` row, absent values filled by
+    * the `fills` defaults (docs with no ascii tokens have no rows).
+    */
+  private def padDocs(
+      docs: DataFrame, idCol: String, perDoc: DataFrame, fills: (String, Column)*): DataFrame =
     docs.select(col(idCol).as("doc_id"))
-      .join(ids, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("token_ids"), lit("")).as("token_ids"))
-  }
+      .join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id") +: fills.map { case (c, z) => coalesce(col(c), z).as(c) }: _*)
 
   /** The SERVING vocabulary with a BYTE-ALPHABET floor — the GPT-2
     * byte-level-BPE posture (every production tokenizer ships it): the
@@ -375,10 +417,10 @@ object Bpe {
     vocab.select(col("token"), col("token_id")).unionByName(missing)
   }
 
-  /** Byte-fallback id resolution shared by the batch
-    * ([[encodeIdsBytes]]) and stream
+  /** Byte-fallback id resolution of [[encodeIdsBytesBy]], the body the
+    * batch ([[encodeIdsBytes]]) and stream
     * ([[graft.streaming.StreamingOps.bpeEncodeIdsBytesStream]]) serving
-    * paths: `rows` carries a `token` column (one replayed symbol per
+    * paths share: `rows` carries a `token` column (one replayed symbol per
     * row); each symbol either resolves whole against the serving
     * vocabulary or — when the replay produced an intermediate merge
     * token the final vocabulary never shipped — decomposes to its
@@ -419,31 +461,23 @@ object Bpe {
       idCol: String,
       textCol: String,
       mergeTable: DataFrame,
-      vocab: DataFrame): DataFrame = {
+      vocab: DataFrame): DataFrame =
+    padDocs(docs, idCol, encodeIdsBytesBy(docs, idCol, textCol, mergeTable, vocab,
+      DocGrouping.ByDoc), "n_tokens" -> lit(0L), "token_ids" -> lit(""))
+
+  /** [[encodeIdsBytes]] under any [[DocGrouping]], before the zero
+    * rows are re-attached (the [[encodeIdsBy]] contract).
+    */
+  private[graft] def encodeIdsBytesBy(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      mergeTable: DataFrame,
+      vocab: DataFrame,
+      g: DocGrouping): DataFrame = {
     val svoc = servingVocabWithBytes(vocab)
-    val occ = docs.select(col(idCol).as("doc_id"), col(textCol))
-      .select(col("doc_id"),
-        posexplode(asciiTokens(col(textCol))).as(Seq("wpos", "w")))
-    val wordSyms = occ.select(col("w")).distinct()
-      .crossJoin(broadcast(mergesArray(mergeTable)))
-      .select(col("w"), applyMerges(col("w"), col("__merges")).as("syms"))
-    val sym = occ.join(wordSyms, Seq("w"))
-      .select(col("doc_id"), col("wpos"),
-        posexplode(col("syms")).as(Seq("spos", "token")))
-    val ids = byteFallbackIds(sym, svoc)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_tokens"),
-        array_join(
-          transform(
-            array_sort(collect_list(
-              struct(col("wpos"), col("spos"), col("cpos"), col("tid")))),
-            s => s.getField("tid").cast("string")),
-          ",").as("token_ids"))
-    docs.select(col(idCol).as("doc_id"))
-      .join(ids, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("token_ids"), lit("")).as("token_ids"))
+    assembleIds(byteFallbackIds(symbolRows(docs, idCol, textCol, mergeTable, g), svoc),
+      Seq(col("wpos"), col("spos"), col("cpos")), g)
   }
 
   /** Per-document BPE statistics after [[train]]: (doc_id, n_words,
@@ -457,15 +491,23 @@ object Bpe {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      mergeTable: DataFrame): DataFrame = {
-    val counted = symbolOccurrences(
-        docs.select(col(idCol).as("doc_id"), col(textCol)), textCol, mergeTable)
-      .groupBy(col("doc_id"))
+      mergeTable: DataFrame): DataFrame =
+    padDocs(docs, idCol, encodeCountsBy(docs, idCol, textCol, mergeTable, DocGrouping.ByDoc),
+      "n_words" -> lit(0L), "n_bpe_tokens" -> lit(0L))
+
+  /** [[encodeCounts]] under any [[DocGrouping]], before the zero rows
+    * are re-attached; a stream takes [[symbolOccurrences]]' inline
+    * per-occurrence shape.
+    */
+  private[graft] def encodeCountsBy(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      mergeTable: DataFrame,
+      g: DocGrouping): DataFrame =
+    symbolOccurrences(
+        g.source(docs).select(g.keys(col(idCol).as("doc_id"), col(textCol)): _*),
+        textCol, mergeTable, perOccurrence = g.streaming)
+      .groupBy(g.keys(col("doc_id")): _*)
       .agg(count(lit(1)).as("n_words"), sum(col("n_sym")).cast("long").as("n_bpe_tokens"))
-    docs.select(col(idCol).as("doc_id"))
-      .join(counted, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"))
-  }
 }

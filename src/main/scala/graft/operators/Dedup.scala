@@ -117,13 +117,6 @@ object Dedup {
       i => array_min(transform(hashes,
         h => pmod(h * (i * 2 + 1) + i * lit(1000003L) + lit(12345L), lit(2147483648L)))))
 
-  /** Convenience composition of [[shingleHashes]] + [[minhashFromHashes]].
-    * Prefer the split form with the hash column materialized when the
-    * signature feeds more than one consumer.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    minhashFromHashes(shingleHashes(shingles), numHashes)
-
   /** LSH band keys: the signature split into `bands` contiguous bands
     * of `rows` entries, each hashed to one key. Docs sharing ANY band
     * key become candidate pairs.
@@ -1344,8 +1337,9 @@ object Dedup {
     * broadcast argmax pass and candidates come from the cell
     * equi-join, batch-assignment-row × cell-occupancy work. Same
     * candidate discipline as the offline pass, so online and offline
-    * agree on where duplicates can hide; the streaming twin is
-    * [[graft.streaming.StreamingOps.semDedupStream]]. All-double
+    * agree on where duplicates can hide; the streaming twin
+    * [[graft.streaming.StreamingOps.semDedupStream]] runs the same
+    * [[semDedupCorpusPairs]] join. All-double
     * scoring (the trained-centroid exactDouble contract).
     */
   def semDedupAgainstCorpus(
@@ -1356,26 +1350,29 @@ object Dedup {
       members: DataFrame,
       minCosine: Double): DataFrame =
     semDedupCorpusPairs(
-      semDedupMembers(batch, idCol, vecCol, centroids), members, minCosine)
+      semDedupMembers(batch, idCol, vecCol, centroids), members, minCosine,
+      DocGrouping.ByDoc)
+      .select(col("id_b"), col("id_c"), col("cos"))
 
   /** The batch-assigned × standing-members scored cell join shared by
-    * [[semDedupAgainstCorpus]] and [[semDedupAdmit]]: `b` is an
-    * assigned batch frame ([[semDedupMembers]] output — already cut,
-    * both callers read it once here), `members` the standing corpus
-    * assignment; emits `(id_b, id_c, cos)` at rounded-6dp cosine ≥
-    * `minCosine`.
+    * [[semDedupAgainstCorpus]], [[semDedupAdmit]] and the streaming
+    * admission gate: `b` is an assigned (id, cell, vec) frame
+    * ([[semDedupMembers]] output — already cut, both batch callers read
+    * it once here), `members` the standing corpus assignment; emits
+    * `(id_b, cell, id_c, cos)` at rounded-6dp cosine ≥ `minCosine`.
     */
-  private def semDedupCorpusPairs(
+  private[graft] def semDedupCorpusPairs(
       b: DataFrame,
       members: DataFrame,
-      minCosine: Double): DataFrame = {
+      minCosine: Double,
+      g: DocGrouping): DataFrame = {
     import graft.functions.VectorFunctions
-    b.select(col("id").as("id_b"), col("cell"), col("vec").as("__vb"))
+    b.select(g.keys(col("id").as("id_b"), col("cell"), col("vec").as("__vb")): _*)
       .join(members.select(col("id").as("id_c"), col("cell").as("__cc"),
           col("vec").as("__vc")),
         col("cell") === col("__cc") && col("id_b") =!= col("id_c"))
-      .select(col("id_b"), col("id_c"),
-        round(VectorFunctions.cosineFastD(col("__vb"), col("__vc")), 6).as("cos"))
+      .select(g.keys(col("id_b"), col("cell"), col("id_c"),
+        round(VectorFunctions.cosineFastD(col("__vb"), col("__vc")), 6).as("cos")): _*)
       .filter(col("cos") >= minCosine)
   }
 
@@ -1406,7 +1403,7 @@ object Dedup {
       members: DataFrame,
       minCosine: Double): DataFrame = {
     val b = semDedupMembers(batch, idCol, vecCol, centroids)
-    val dupIds = semDedupCorpusPairs(b, members, minCosine)
+    val dupIds = semDedupCorpusPairs(b, members, minCosine, DocGrouping.ByDoc)
       .select(col("id_b").as("id")).distinct()
     b.join(dupIds, Seq("id"), "left_anti")
   }
@@ -1734,11 +1731,23 @@ object Dedup {
 
   /** [[exactSubstrDedup]]'s tokenizer: (doc_id, token array). */
   private[graft] def substrToks(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      g: DocGrouping = DocGrouping.ByDoc): DataFrame = {
     val t = filter(TextAnalysis.tokens(coalesce(col(textCol), lit(""))),
       x => x =!= "")
-    docs.select(col(idCol).cast("long").as("doc_id"), t.as("__t"))
+    g.source(docs).select(g.keys(col(idCol).cast("long").as("doc_id"), t.as("__t")): _*)
   }
+
+  /** The n-token windows of token array `t` as (pos, fp) structs —
+    * `fp` the md5 of the space-joined window; empty below n tokens.
+    */
+  private[graft] def substrGramArray(t: Column, n: Int): Column =
+    when(size(t) >= n,
+      transform(sequence(lit(1), size(t) - (n - 1)),
+        i => struct(i.as("pos"), md5(concat_ws(" ", slice(t, i, lit(n)))).as("fp"))))
+      .otherwise(expr("array()").cast("array<struct<pos:int,fp:string>>"))
 
   /** [[exactSubstrDedup]]'s gram windows: one (doc_id, pos, fp) row
     * per n-token window — in-row transform then ONE explode, the
@@ -1746,13 +1755,7 @@ object Dedup {
     */
   private[graft] def substrGrams(toks: DataFrame, n: Int): DataFrame =
     toks
-      .select(col("doc_id"),
-        when(size(col("__t")) >= n,
-          transform(sequence(lit(1), size(col("__t")) - (n - 1)),
-            i => struct(i.as("pos"),
-              md5(concat_ws(" ", slice(col("__t"), i, lit(n)))).as("fp"))))
-          .otherwise(expr("array()").cast("array<struct<pos:int,fp:string>>"))
-          .as("__g"))
+      .select(col("doc_id"), substrGramArray(col("__t"), n).as("__g"))
       .select(col("doc_id"), explode(col("__g")).as("__w"))
       .select(col("doc_id"), col("__w.pos").as("pos"), col("__w.fp").as("fp"))
 
@@ -1761,18 +1764,24 @@ object Dedup {
     */
   private[graft] def substrCut(
       toks: DataFrame, flagged: DataFrame, n: Int): DataFrame =
-    toks.join(flagged, Seq("doc_id"), "left")
+    substrKeep(toks.join(flagged, Seq("doc_id"), "left")
       .select(col("doc_id"), col("__t"),
         coalesce(col("__starts"), expr("array()").cast("array<int>"))
-          .as("__s"))
-      .withColumn("__kept",
+          .as("__s")), n, DocGrouping.ByDoc)
+
+  /** The cut itself, on rows holding a doc's tokens `__t` and its
+    * sorted flagged starts `__s`: `(doc_id, n_tokens, n_removed,
+    * clean_text)` plus the grouping keys.
+    */
+  private[graft] def substrKeep(df: DataFrame, n: Int, g: DocGrouping): DataFrame =
+    df.withColumn("__kept",
         filter(col("__t"), (tok, i0) => !exists(col("__s"),
           st => st <= i0 + 1 && i0 + 1 <= st + (n - 1))))
-      .select(
+      .select(g.keys(
         col("doc_id"),
         size(col("__t")).cast("long").as("n_tokens"),
         (size(col("__t")) - size(col("__kept"))).cast("long").as("n_removed"),
-        concat_ws(" ", col("__kept")).as("clean_text"))
+        concat_ws(" ", col("__kept")).as("clean_text")): _*)
 
   /** The standing corpus's distinct gram-fingerprint index — the
     * persistable artifact [[exactSubstrAgainstCorpus]] and the

@@ -408,13 +408,32 @@ object Sampling {
       textCol: String,
       buckets: Int): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    def hashed(df: DataFrame): DataFrame =
-      TextAnalysis.bigramStream(df, idCol, textCol)
-        .select(col("doc_id"),
-          pmod(graft.functions.Hashing.md5Bits60(
-            concat(col("w1"), lit(" "), col("w2"))), lit(buckets.toLong)).as("b"))
-    dsirScoreHashed(hashed(target), hashed(raw), buckets)
+    dsirScoreHashed(dsirBigrams(target, idCol, textCol, buckets),
+      dsirBigrams(raw, idCol, textCol, buckets), buckets)
   }
+
+  /** [[dsirScore]]'s featurize: one `(doc_id, b)` row per bigram
+    * occurrence, `b` the md5 pmod bucket of the space-joined pair.
+    */
+  private[graft] def dsirBigrams(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      buckets: Int,
+      g: DocGrouping = DocGrouping.ByDoc): DataFrame =
+    TextAnalysis.bigramStream(df, idCol, textCol, g)
+      .select(g.keys(col("doc_id"),
+        pmod(graft.functions.Hashing.md5Bits60(
+          concat(col("w1"), lit(" "), col("w2"))), lit(buckets.toLong)).as("b")): _*)
+
+  /** Per-doc `(doc_id, n_grams, logw_u)` from `(doc_id, b, m)` bucket
+    * counts against a per-bucket `(b, llr_u)` table.
+    */
+  private[graft] def dsirLogW(counts: DataFrame, llr: DataFrame, g: DocGrouping): DataFrame =
+    counts.join(broadcast(llr), Seq("b"))
+      .groupBy(g.keys(col("doc_id")): _*)
+      .agg(sum(col("m")).as("n_grams"),
+        sum(col("m") * col("llr_u")).as("logw_u"))
 
   /** DSIR scoring with the PAPER'S full featurization — hashed
     * UNIGRAMS ∪ BIGRAMS (Xie et al. 2023 use both n-gram orders in
@@ -486,10 +505,7 @@ object Sampling {
             .cast("bigint")).as("llr_u"))
     val u = (graft.functions.Hashing.md5Bits60(col("doc_id").cast("string")) + 1)
       .cast("double") / lit(1.152921504606846978e18)
-    rc.join(broadcast(llr), Seq("b"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("m")).as("n_grams"),
-        sum(col("m") * col("llr_u")).as("logw_u"))
+    dsirLogW(rc, llr, DocGrouping.ByDoc)
       .withColumn("key_u",
         round(log(-log(u)) * lit(1000000.0), 0).cast("bigint") - col("logw_u"))
   }
@@ -516,17 +532,12 @@ object Sampling {
       textCol: String,
       buckets: Int): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    def hashed(df: DataFrame): DataFrame =
-      TextAnalysis.bigramStream(df, idCol, textCol)
-        .select(col("doc_id"),
-          pmod(graft.functions.Hashing.md5Bits60(
-            concat(col("w1"), lit(" "), col("w2"))), lit(buckets.toLong)).as("b"))
     // Same double-read cut as dsirScore: each aggregate feeds the llr
     // join AND its totals agg; both are ≤ buckets rows once aggregated.
     val tg = org.apache.spark.sql.graft.CheckpointBlocks.cut(
-      hashed(target).groupBy(col("b")).agg(count(lit(1)).as("ct")))
+      dsirBigrams(target, idCol, textCol, buckets).groupBy(col("b")).agg(count(lit(1)).as("ct")))
     val rm = org.apache.spark.sql.graft.CheckpointBlocks.cut(
-      hashed(raw).groupBy(col("b")).agg(count(lit(1)).as("cr")))
+      dsirBigrams(raw, idCol, textCol, buckets).groupBy(col("b")).agg(count(lit(1)).as("cr")))
     val tt = tg.agg(sum(col("ct")).as("t_t"))
     val tr = rm.agg(sum(col("cr")).as("t_r"))
     target.sparkSession.range(buckets).select(col("id").as("b"))
@@ -542,6 +553,17 @@ object Sampling {
             (col("t_r") + lit(buckets.toLong)).cast("double")) * lit(1000000.0), 0)
             .cast("bigint")).as("llr_u"))
   }
+
+  /** One PSI bin's term in integer micro-nats from smoothed counts —
+    * reference `cp` of `np`, current `cq` of `nq`:
+    * round(10⁶ · (cp/np − cq/nq) · ln((cp·nq)/(cq·np))). Rounded per
+    * bin, so a per-cohort PSI is an exact bigint sum.
+    */
+  private[graft] def psiTermU(cp: Column, np: Column, cq: Column, nq: Column): Column =
+    round(lit(1000000.0) *
+      (cp.cast("double") / np.cast("double") - cq.cast("double") / nq.cast("double")) *
+      log((cp.cast("double") * nq.cast("double")) / (cq.cast("double") * np.cast("double"))), 0)
+      .cast("bigint")
 
   /** DSIR importance RESAMPLING: `k` docs from [[dsirScore]]'s raw
     * corpus, without replacement, P ∝ importance weight — the SA6

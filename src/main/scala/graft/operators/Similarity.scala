@@ -208,13 +208,56 @@ object Similarity {
       exactDouble: Boolean = false): DataFrame = {
     val ca = ivfAssign(corpus, centroids, idCol, vecCol, exactDouble)
     val qa = ivfAssignProbes(queries, centroids, idCol, vecCol, nprobe, exactDouble)
-    val scored = qa.select(col("id").as("q_id"), col("vec").as("q_vec"), col("cell"))
+    ivfSearch(qa.select(col("id").as("q_id"), col("vec").as("q_vec"), col("cell")),
+      ca, k, DocGrouping.ByDoc)
+  }
+
+  /** [[ivfTopKProbed]]'s search and rank under any [[DocGrouping]]:
+    * probed `(q_id, q_vec, cell)` rows equi-join the corpus assignment
+    * `ca` on the cell, score by rounded-6dp cosine, and keep each
+    * query's top-k.
+    */
+  private[graft] def ivfSearch(
+      qa: DataFrame, ca: DataFrame, k: Int, g: DocGrouping): DataFrame = {
+    val scored = qa
       .join(ca.select(col("id").as("n_id"), col("vec").as("n_vec"), col("cell")), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(VectorFunctions.cosineFast(col("q_vec"), col("n_vec")), 6).as("cos"))
+      .select(g.keys(col("q_id"), col("n_id"),
+        round(VectorFunctions.cosineFast(col("q_vec"), col("n_vec")), 6).as("cos")): _*)
       .filter(col("cos").isNotNull)
-    topKByCos(scored, k, carryCell = false)
+    topKByCos(scored, k, carryCell = false, g)
+  }
+
+  /** The stream's probe: each row's `nprobe` nearest centroids picked
+    * IN-ROW against a broadcast 1-row centroid array, by the same
+    * (rounded −cos, c_id) key as [[ivfAssignProbes]]' k-heap — a
+    * stateless projection where the batch aggregate would be a second
+    * stateful stage. Null cosines are filtered before the sort (a null
+    * struct field would sort first). Emits `df`'s rows once per probed
+    * centroid, with its id as `cell`; `vecCol` must already be in the
+    * scoring precision (double when `exactDouble`).
+    */
+  private[graft] def probeInRow(
+      df: DataFrame,
+      vecCol: String,
+      centroids: DataFrame,
+      nprobe: Int,
+      exactDouble: Boolean): DataFrame = {
+    val vt = if (exactDouble) "array<double>" else "array<float>"
+    val sim: (Column, Column) => Column =
+      if (exactDouble) VectorFunctions.cosineFastD else VectorFunctions.cosineFast
+    val cents = broadcast(centroids.agg(collect_list(
+      struct(col("c_id").cast("long").as("c_id"), col("c_vec").cast(vt).as("c_vec")))
+      .as("__cents")))
+    df.crossJoin(cents)
+      .withColumn("__probe", slice(array_sort(filter(
+        transform(col("__cents"), c => struct(
+          (-round(sim(col(vecCol), c.getField("c_vec")), 6)).as("ns"),
+          c.getField("c_id").as("c_id"))),
+        s => s.getField("ns").isNotNull)), 1, nprobe))
+      .drop("__cents")
+      .withColumn("cell", explode(col("__probe.c_id")))
+      .drop("__probe")
   }
 
   /** Shared ranking tail for the top-k searches: k best (cos desc,
@@ -224,14 +267,18 @@ object Similarity {
     * null-cosine-free (a heap on the negated key would rank nulls
     * FIRST where the window equivalent ranked them last).
     */
-  private def topKByCos(scored: DataFrame, k: Int, carryCell: Boolean): DataFrame = {
+  private def topKByCos(
+      scored: DataFrame,
+      k: Int,
+      carryCell: Boolean,
+      g: DocGrouping = DocGrouping.ByDoc): DataFrame = {
     val key =
       if (carryCell) struct((-col("cos")).as("nc"), col("n_id").as("n_id"), col("cell").as("cell"))
       else struct((-col("cos")).as("nc"), col("n_id").as("n_id"))
     val cellCols =
       if (carryCell) Seq(col("t.cell").as("cell")) else Seq.empty
     scored
-      .groupBy(col("q_id"))
+      .groupBy(g.keys(col("q_id")): _*)
       .agg(graft.functions.TopK.smallestK(key, k).as("top"))
       .select(col("q_id"), explode(col("top")).as("t"))
       .select(Seq(col("q_id"), col("t.n_id").as("n_id")) ++ cellCols :+

@@ -938,17 +938,28 @@ object TextAnalysis {
       queries: DataFrame,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    bm25Rank(index.select(col("term"), col("doc_id"), col("contrib_u"))
+      .join(broadcast(queries.select(col("query_id"), col("term")).distinct()),
+        Seq("term")), "query_id", k, DocGrouping.ByDoc)
+  }
+
+  /** The BM25 ranking tail shared by [[bm25TopKBatch]],
+    * [[bm25TopKFromIndex]] and the streaming server: sum `contrib_u`
+    * per (query, doc), then cut each query's top-k by
+    * (score_u DESC, doc_id ASC) with the bounded CollectTopK heap.
+    * Output: `(qCol, doc_id, n_terms, score)`.
+    */
+  private[graft] def bm25Rank(
+      scored: DataFrame, qCol: String, k: Int, g: DocGrouping): DataFrame = {
     val key = struct((-col("score_u")).as("ns"), col("doc_id").as("doc_id"),
       col("n_terms").as("n_terms"))
-    index.select(col("term"), col("doc_id"), col("contrib_u"))
-      .join(broadcast(queries.select(col("query_id"), col("term")).distinct()),
-        Seq("term"))
-      .groupBy(col("query_id"), col("doc_id"))
+    scored
+      .groupBy(g.keys(col(qCol), col("doc_id")): _*)
       .agg(count(lit(1)).as("n_terms"), sum(col("contrib_u")).as("score_u"))
-      .groupBy(col("query_id"))
+      .groupBy(g.keys(col(qCol)): _*)
       .agg(graft.functions.TopK.smallestK(key, k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.doc_id").as("doc_id"),
+      .select(col(qCol), explode(col("top")).as("t"))
+      .select(col(qCol), col("t.doc_id").as("doc_id"),
         col("t.n_terms").as("n_terms"),
         ((-col("t.ns")).cast("double") / lit(1000000.0)).as("score"))
   }
@@ -996,9 +1007,7 @@ object TextAnalysis {
       .join(broadcast(qterms), Seq("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val dfT = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val key = struct((-col("score_u")).as("ns"), col("doc_id").as("doc_id"),
-      col("n_terms").as("n_terms"))
-    tf.join(broadcast(dfT), Seq("term"))
+    bm25Rank(tf.join(broadcast(dfT), Seq("term"))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(totals))
       .withColumn("idf_u",
@@ -1017,15 +1026,7 @@ object TextAnalysis {
       // are term SETS (classic BM25 has no query-side tf term), so
       // dedupe the fan-out; the broadcast stays |Q|-bounded.
       .join(broadcast(queries.select(col("query_id"), col("term")).distinct()),
-        Seq("term"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"), sum(col("contrib_u")).as("score_u"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.smallestK(key, k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.doc_id").as("doc_id"),
-        col("t.n_terms").as("n_terms"),
-        ((-col("t.ns")).cast("double") / lit(1000000.0)).as("score"))
+        Seq("term")), "query_id", k, DocGrouping.ByDoc)
   }
 
   def repetitionStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -1335,10 +1336,19 @@ object TextAnalysis {
       textCol: String,
       minDocs: Int = 10): DataFrame = {
     val lines = explodeLines(docs, idCol, textCol)
-    val boiler = boilerplateLineIndex(docs, idCol, textCol, minDocs)
-      .select(col("line_fp"), lit(true).as("is_boiler"))
+    scrubLines(lines, boilerplateLineIndex(docs, idCol, textCol, minDocs),
+      DocGrouping.ByDoc)
+  }
+
+  /** [[removeBoilerplateLines]]' reassembly under any [[DocGrouping]]:
+    * `lines` are [[explodeLines]] rows, `boilerIndex` the `line_fp`
+    * set to drop (derived in-query in batch, frozen in a stream).
+    */
+  private[graft] def scrubLines(
+      lines: DataFrame, boilerIndex: DataFrame, g: DocGrouping): DataFrame = {
+    val boiler = boilerIndex.select(col("line_fp"), lit(true).as("is_boiler"))
     lines.join(boiler, Seq("line_fp"), "left")
-      .groupBy(col("doc_id"))
+      .groupBy(g.keys(col("doc_id")): _*)
       .agg(
         count(lit(1)).as("n_lines"),
         count(when(col("is_boiler").isNull, 1)).as("n_lines_kept"),
@@ -1362,13 +1372,14 @@ object TextAnalysis {
   private[graft] def explodeLines(
       docs: DataFrame,
       idCol: String,
-      textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        posexplode(split(coalesce(col(textCol), lit("")), "\n")))
-      .select(col("doc_id"), col("pos").as("line_no"), col("col").as("line"),
+      textCol: String,
+      g: DocGrouping = DocGrouping.ByDoc): DataFrame =
+    g.source(docs)
+      .select(g.keys(col(idCol).as("doc_id"),
+        posexplode(split(coalesce(col(textCol), lit("")), "\n"))): _*)
+      .select(g.keys(col("doc_id"), col("pos").as("line_no"), col("col").as("line"),
         when(trim(col("col")) =!= "", md5(trim(lower(col("col")))))
-          .as("line_fp"))
+          .as("line_fp")): _*)
 
   /** The boilerplate-line SET as a persistable serving artifact —
     * one `line_fp` row per normalized non-blank line appearing in ≥
@@ -1599,15 +1610,19 @@ object TextAnalysis {
     docs.select(col(idCol).as("doc_id"), explode(t).as("w"))
   }
 
-  private[graft] def bigramStream(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  private[graft] def bigramStream(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      g: DocGrouping = DocGrouping.ByDoc): DataFrame = {
     val t = filter(tokens(lower(coalesce(col(textCol), lit("")))), x => x =!= "")
-    docs.select(col(idCol).as("doc_id"), t.as("t"))
+    g.source(docs).select(g.keys(col(idCol).as("doc_id"), t.as("t")): _*)
       .filter(size(col("t")) >= 2)
-      .select(col("doc_id"),
+      .select(g.keys(col("doc_id"),
         explode(transform(sequence(lit(1), size(col("t")) - 1),
           i => struct(element_at(col("t"), i).as("w1"),
-            element_at(col("t"), i + 1).as("w2")))).as("g"))
-      .select(col("doc_id"), col("g.w1").as("w1"), col("g.w2").as("w2"))
+            element_at(col("t"), i + 1).as("w2")))).as("g")): _*)
+      .select(g.keys(col("doc_id"), col("g.w1").as("w1"), col("g.w2").as("w2")): _*)
   }
 
   /** HELD-OUT LM quality filter — the CCNet recipe proper, which
@@ -1666,23 +1681,7 @@ object TextAnalysis {
       score: DataFrame,
       idCol: String,
       textCol: String): DataFrame = {
-    val c2 = model
-    val c1 = c2.groupBy(col("w1")).agg(sum(col("c")).as("ctx"))
-    val totals = c2.agg(countDistinct(col("w2")).as("v"))
-    val scored = bigramStream(score, idCol, textCol)
-      .groupBy(col("doc_id"), col("w1"), col("w2")).agg(count(lit(1)).as("m"))
-      .join(c2, Seq("w1", "w2"), "left")
-      .join(c1, Seq("w1"), "left")
-      .crossJoin(broadcast(totals))
-      .withColumn("lp_u",
-        round(log((coalesce(col("c"), lit(0L)) + lit(1)).cast("double") /
-          (coalesce(col("ctx"), lit(0L)) + col("v")).cast("double")) * lit(1000000.0), 0)
-          .cast("bigint"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("m")).as("n_bigrams"),
-        sum(when(col("c").isNull, col("m")).otherwise(lit(0L))).as("n_unseen"),
-        ((sum(col("m") * col("lp_u")).cast("double") /
-          sum(col("m")).cast("double")) / lit(1000000.0)).as("avg_logprob"))
+    val scored = lmScored(model, score, idCol, textCol, DocGrouping.ByDoc)
     // Fence rank is ceil(n·p) (the cume_dist >= p contract), which
     // the oracle replays as CEIL(CAST(k·n AS DOUBLE)/3) — see
     // [[lmFences]] for the DOUBLE-percentage requirement.
@@ -1697,13 +1696,48 @@ object TextAnalysis {
     // which is what a production CCNet pass writes before taking
     // percentiles anyway.
     val scoredCut = org.apache.spark.sql.graft.CheckpointBlocks.cut(scored)
-    val fences = lmFences(scoredCut)
-    scoredCut.crossJoin(broadcast(fences))
+    lmBuckets(scoredCut, lmFences(scoredCut))
+  }
+
+  /** [[lmHeldOutFilterWith]]'s scoring half under any [[DocGrouping]]:
+    * `(doc_id, n_bigrams, n_unseen, avg_logprob)` per scored doc (plus
+    * the window key when streaming).
+    */
+  private[graft] def lmScored(
+      model: DataFrame,
+      score: DataFrame,
+      idCol: String,
+      textCol: String,
+      g: DocGrouping): DataFrame = {
+    val c2 = model
+    val c1 = c2.groupBy(col("w1")).agg(sum(col("c")).as("ctx"))
+    val totals = c2.agg(countDistinct(col("w2")).as("v"))
+    g.counts(bigramStream(score, idCol, textCol, g),
+        g.keys(col("doc_id"), col("w1"), col("w2")): _*)
+      .join(c2, Seq("w1", "w2"), "left")
+      .join(c1, Seq("w1"), "left")
+      .crossJoin(broadcast(totals))
+      .withColumn("lp_u",
+        round(log((coalesce(col("c"), lit(0L)) + lit(1)).cast("double") /
+          (coalesce(col("ctx"), lit(0L)) + col("v")).cast("double")) * lit(1000000.0), 0)
+          .cast("bigint"))
+      .groupBy(g.keys(col("doc_id")): _*)
+      .agg(sum(col("m")).as("n_bigrams"),
+        sum(when(col("c").isNull, col("m")).otherwise(lit(0L))).as("n_unseen"),
+        ((sum(col("m") * col("lp_u")).cast("double") /
+          sum(col("m")).cast("double")) / lit(1000000.0)).as("avg_logprob"))
+  }
+
+  /** Bucket scored docs head / middle / tail against the 1-row
+    * `(t_low, t_high)` [[lmFences]] frame — computed from the scored
+    * frame in batch, frozen from an offline calibration in a stream.
+    */
+  private[graft] def lmBuckets(scored: DataFrame, fences: DataFrame): DataFrame =
+    scored.crossJoin(broadcast(fences))
       .select(col("doc_id"), col("n_bigrams"), col("n_unseen"), col("avg_logprob"),
         when(col("avg_logprob") <= col("t_low"), lit("tail"))
           .when(col("avg_logprob") <= col("t_high"), lit("middle"))
           .otherwise(lit("head")).as("bucket"))
-  }
 
   /** The bigram LM's persistable artifact — the `(w1, w2, c)` count
     * table [[lmHeldOutFilter]] fits and the online scorer
@@ -2345,13 +2379,25 @@ object TextAnalysis {
       priors: DataFrame,
       docs: DataFrame,
       idCol: String,
-      textCol: String): DataFrame = {
+      textCol: String): DataFrame =
+    nbScoreBy(model, priors, docs, idCol, textCol, DocGrouping.ByDoc)
+
+  /** [[nbScore]] under any [[DocGrouping]] — the body the streaming
+    * serving entry calls with its window grouping.
+    */
+  private[graft] def nbScoreBy(
+      model: DataFrame,
+      priors: DataFrame,
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      g: DocGrouping): DataFrame = {
     val totals = model.agg(
       sum(col("c_pos")).as("t_pos"), sum(col("c_neg")).as("t_neg"),
       count(lit(1)).as("v"))
     val t = filter(tokens(lower(coalesce(col(textCol), lit("")))), x => x =!= "")
-    docs.select(col(idCol).as("doc_id"), explode(t).as("w"))
-      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("m"))
+    g.counts(g.source(docs).select(g.keys(col(idCol).as("doc_id"), explode(t).as("w")): _*),
+        g.keys(col("doc_id"), col("w")): _*)
       .join(model, Seq("w"), "left")
       .crossJoin(broadcast(totals))
       .withColumn("llr_u",
@@ -2359,7 +2405,7 @@ object TextAnalysis {
           (col("t_pos") + col("v")).cast("double")) * lit(1000000.0), 0).cast("bigint") -
           round(log((coalesce(col("c_neg"), lit(0L)) + lit(1)).cast("double") /
             (col("t_neg") + col("v")).cast("double")) * lit(1000000.0), 0).cast("bigint"))
-      .groupBy(col("doc_id"))
+      .groupBy(g.keys(col("doc_id")): _*)
       .agg(
         sum(col("m")).as("n_tok"),
         sum(when(col("c_pos").isNull, col("m")).otherwise(lit(0L))).as("n_oov"),
@@ -2545,13 +2591,22 @@ object TextAnalysis {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      buckets: Int): DataFrame = {
+      buckets: Int): DataFrame =
+    lrHashedFeaturesBy(docs, idCol, textCol, buckets, DocGrouping.ByDoc)
+
+  private def lrHashedFeaturesBy(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      buckets: Int,
+      g: DocGrouping): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     val t = filter(tokens(lower(coalesce(col(textCol), lit("")))), x => x =!= "")
-    docs.select(col(idCol).cast("long").as("doc_id"), explode(t).as("__w"))
-      .select(col("doc_id"),
-        graft.functions.Hashing.md5Bucket(col("__w"), buckets.toLong).as("b"))
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("m"))
+    g.counts(
+      g.source(docs).select(g.keys(col(idCol).cast("long").as("doc_id"), explode(t).as("__w")): _*)
+        .select(g.keys(col("doc_id"),
+          graft.functions.Hashing.md5Bucket(col("__w"), buckets.toLong).as("b")): _*),
+      g.keys(col("doc_id"), col("b")): _*)
   }
 
   /** LOGISTIC-REGRESSION quality classifier, trained in-engine by
@@ -2660,19 +2715,33 @@ object TextAnalysis {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      buckets: Int): DataFrame = {
-    val xs = lrHashedFeatures(docs, idCol, textCol, buckets)
-    val zs = xs.join(broadcast(model), Seq("b"), "left")
-      .groupBy(col("doc_id"))
+      buckets: Int): DataFrame =
+    lrOutput(docs.select(col(idCol).cast("long").as("doc_id"))
+      .join(lrLogits(model, docs, idCol, textCol, buckets, DocGrouping.ByDoc),
+        Seq("doc_id"), "left"))
+
+  /** [[lrScore]]'s per-doc exact logit `(doc_id, n_tok, z_u)` under any
+    * [[DocGrouping]]; only docs with tokens have a row.
+    */
+  private[graft] def lrLogits(
+      model: DataFrame,
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      buckets: Int,
+      g: DocGrouping): DataFrame =
+    lrHashedFeaturesBy(docs, idCol, textCol, buckets, g)
+      .join(broadcast(model), Seq("b"), "left")
+      .groupBy(g.keys(col("doc_id")): _*)
       .agg(sum(col("m")).cast("bigint").as("n_tok"),
         sum(col("m") * coalesce(col("w_u"), lit(0L))).as("z_u"))
-    docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(zs, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tok"), lit(0L)).as("n_tok"),
-        (coalesce(col("z_u"), lit(0L)).cast("double") / lit(1000000.0)).as("z"),
-        (coalesce(col("z_u"), lit(0L)) > 0L).as("pred"))
-  }
+
+  /** `(doc_id, n_tok, z, pred)` from [[lrLogits]] rows. */
+  private[graft] def lrOutput(zs: DataFrame): DataFrame =
+    zs.select(col("doc_id"),
+      coalesce(col("n_tok"), lit(0L)).as("n_tok"),
+      (coalesce(col("z_u"), lit(0L)).cast("double") / lit(1000000.0)).as("z"),
+      (coalesce(col("z_u"), lit(0L)) > 0L).as("pred"))
 
   /** TextRank corpus keyword salience (Mihalcea & Tarau 2004, the
     * PageRank family): rank every vocabulary term by a damped random
@@ -2764,6 +2833,35 @@ object TextAnalysis {
         Seq("src"))
       .select(col("src").as("term"), col("w_degree"), col("r").as("rank_u"))
   }
+
+  /** Per-document keywords: each doc's top-`k` terms by the exact
+    * bigint tf × corpus salience `m · rank_u` (term asc on ties), with
+    * `ranks` a `(term, rank_u)` [[textRank]] table. Unranked terms have
+    * no salience and cannot be keywords (inner join). The tf count is
+    * a real aggregate in both modes, so a stream chains two stateful
+    * aggregates here. Output: `(doc_id, term, score_u)`.
+    */
+  private[graft] def keywordsBy(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      ranks: DataFrame,
+      k: Int,
+      g: DocGrouping): DataFrame =
+    g.source(docs)
+      .select(g.keys(col(idCol).as("doc_id"), explode(filter(tokens(
+        lower(coalesce(col(textCol), lit("")))), x => x =!= "")).as("term")): _*)
+      .groupBy(g.keys(col("doc_id"), col("term")): _*).agg(count(lit(1)).as("m"))
+      .join(ranks, Seq("term"))
+      .select(g.keys(col("doc_id"), col("term"),
+        (col("m") * col("rank_u")).as("score_u")): _*)
+      .groupBy(g.keys(col("doc_id")): _*)
+      .agg(graft.functions.TopK.smallestK(
+        struct((-col("score_u")).as("ns"), col("term").as("t")), k)
+        .as("__top"))
+      .select(col("doc_id"), explode(col("__top")).as("__k"))
+      .select(col("doc_id"), col("__k.t").as("term"),
+        (-col("__k.ns")).as("score_u"))
 
   /** [[textRank]]'s CONVERGENCE curve — per-iteration L1 and max
     * rank movement Σ|r_k − r_{k−1}| / max|r_k − r_{k−1}| in

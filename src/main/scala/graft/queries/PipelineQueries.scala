@@ -3425,24 +3425,11 @@ object PipelineQueries {
   val textKeywords = QueryDef(
     "text_keywords",
     (s, dir) => {
-      import graft.functions.TopK
       val ranks = TextAnalysis.textRank(Tables.documents(s, dir),
         "doc_id", "text", window = 2, iters = 5)
         .select(col("term"), col("rank_u"))
-      val tf = Tables.documents(s, dir)
-        .select(col("doc_id"), explode(filter(TextAnalysis.tokens(
-          lower(coalesce(col("text"), lit("")))), x => x =!= "")).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("m"))
-      tf.join(ranks, Seq("term"))
-        .select(col("doc_id"), col("term"),
-          (col("m") * col("rank_u")).as("score_u"))
-        .groupBy(col("doc_id"))
-        .agg(TopK.smallestK(
-          struct((-col("score_u")).as("ns"), col("term").as("t")), 3)
-          .as("__top"))
-        .select(col("doc_id"), explode(col("__top")).as("__k"))
-        .select(col("doc_id"), col("__k.t").as("term"),
-          (-col("__k.ns")).as("score_u"))
+      TextAnalysis.keywordsBy(Tables.documents(s, dir), "doc_id", "text", ranks,
+        k = 3, DocGrouping.ByDoc)
     },
     Some(s"""WITH $textRankSql,
             |tf AS (
@@ -4303,12 +4290,8 @@ object PipelineQueries {
         sum(col("n_ref")).as("np"), sum(col("n_cur")).as("nq")))
       val scored = perBin.crossJoin(tot)
         .select(col("bin"), col("n_ref"), col("n_cur"),
-          round(lit(1000000.0) *
-            ((col("n_ref") + 1).cast("double") / (col("np") + 10).cast("double") -
-              (col("n_cur") + 1).cast("double") / (col("nq") + 10).cast("double")) *
-            log(((col("n_ref") + 1).cast("double") * (col("nq") + 10).cast("double")) /
-              ((col("n_cur") + 1).cast("double") * (col("np") + 10).cast("double"))), 0)
-            .cast("bigint").as("psi_u"))
+          Sampling.psiTermU(col("n_ref") + 1, col("np") + 10,
+            col("n_cur") + 1, col("nq") + 10).as("psi_u"))
       scored.unionByName(scored.agg(
         sum(col("n_ref")).as("n_ref"), sum(col("n_cur")).as("n_cur"),
         sum(col("psi_u")).as("psi_u"))

@@ -258,12 +258,16 @@ object Xlsx {
     withPart(zip, "xl/sharedStrings.xml") { r =>
       var inSi = false
       var inT = false
+      // `<rPh>` phonetic runs (furigana Excel writes for East Asian
+      // text) carry their own `<t>`; the cell's text excludes them.
+      var inRPh = false
       val sb = new StringBuilder
       while (r.hasNext) r.next() match {
         case XMLStreamConstants.START_ELEMENT =>
           r.getLocalName match {
             case "si" => inSi = true; sb.clear()
-            case "t" if inSi => inT = true
+            case "rPh" => inRPh = true
+            case "t" if inSi && !inRPh => inT = true
             case _ =>
           }
         case XMLStreamConstants.CHARACTERS if inT =>
@@ -271,6 +275,7 @@ object Xlsx {
         case XMLStreamConstants.END_ELEMENT =>
           r.getLocalName match {
             case "t" => inT = false
+            case "rPh" => inRPh = false
             case "si" => inSi = false; out += sb.toString
             case _ =>
           }
@@ -294,6 +299,7 @@ object Xlsx {
       var cellType = ""
       var inV = false
       var inIsT = false
+      var inRPh = false // phonetic run: not cell text (see readSharedStrings)
       val sb = new StringBuilder
       while (r.hasNext) r.next() match {
         case XMLStreamConstants.START_ELEMENT =>
@@ -304,7 +310,8 @@ object Xlsx {
               cellType = Option(r.getAttributeValue(null, "t")).getOrElse("")
               sb.clear()
             case "v" => inV = true
-            case "t" if cellType == "inlineStr" => inIsT = true
+            case "rPh" => inRPh = true
+            case "t" if cellType == "inlineStr" && !inRPh => inIsT = true
             case _ =>
           }
         case XMLStreamConstants.CHARACTERS if inV || inIsT =>
@@ -312,6 +319,7 @@ object Xlsx {
         case XMLStreamConstants.END_ELEMENT =>
           r.getLocalName match {
             case "v" => inV = false
+            case "rPh" => inRPh = false
             case "t" => inIsT = false
             case "c" if cells != null && cellCol >= 0 =>
               val raw = sb.toString

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.{Bpe, Dedup, Sampling, Similarity, TextAnalysis}
+import graft.operators.DocGrouping.ByWindow
+
 /** Structured Streaming surface (SURVEY §2.10 — optional in the
   * reference, which processes weekly snapshot FILES in a manual
   * micro-batch loop, `analise_pendentes.py:29-48`).
@@ -14,6 +17,15 @@ import org.apache.spark.sql.types.StructType
   * hash-partitioned across executors and bounded by watermark /
   * timeout eviction — the two knobs that keep 100 TB-scale streams
   * from accumulating unbounded state.
+  *
+  * Serving entries over a frozen offline artifact (the scorers, the
+  * scrubbers, the BPE encoders, BM25 / IVF search) are their batch
+  * operator's body under [[graft.operators.DocGrouping.ByWindow]]:
+  * the same featurize / join / integer-sum code, grouped by
+  * (event-time window, doc) under a watermark applied at the source.
+  * One document's rows must therefore arrive within one `windowDur`
+  * (trivially true for whole-document delivery), and state per
+  * in-flight window is evicted once the watermark passes it.
   */
 object StreamingOps {
 
@@ -151,7 +163,6 @@ object StreamingOps {
       windowLen: String = "10 minutes",
       bands: Int = 4,
       bitsPerBand: Int = 15): DataFrame = {
-    import graft.operators.{Dedup, TextAnalysis}
     val sig = Dedup.withSimhash(
       docs.select(col(idCol), col(tsCol), col(textCol))
         .withColumn("__toks", TextAnalysis.tokens(lower(col(textCol)))),
@@ -188,34 +199,11 @@ object StreamingOps {
   def enrichStream(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
     stream.join(broadcast(dim), Seq(key), "left")
 
-  /** BPE encoding over a DOCUMENT STREAM with a batch-trained MERGE
-    * TABLE ([[graft.operators.Bpe]]) — the train-offline/encode-online
-    * split every tokenizer deployment runs: the merge table (exactly
-    * |merges| rows — the one genuinely vocab-sized artifact) rides a
-    * static broadcast, and each arriving document explodes to word
-    * occurrences through the SAME
-    * [[graft.operators.Bpe.symbolOccurrences]] stage the batch encode
-    * uses (one helper around the [[graft.operators.Bpe.applyMerges]]
-    * kernel, so batch/stream parity is structural) in its
-    * per-occurrence shape — a stateless narrow projection, the only
-    * plumbing a stream supports (the batch path's distinct-word join
-    * would be a second stateful stage here). Out-of-vocabulary words
-    * ENCODE by merge replay instead of being dropped — round-11
-    * verdict ask #2. A streaming aggregate keyed by (event-time
-    * window, doc_id) then folds the counts.
-    *
-    * Bounded state, for real: the aggregate is WATERMARKED on the
-    * document's arrival timestamp — without it, Update-mode state
-    * would grow one row per doc_id ever seen (the normal serving
-    * shape is ever-new ids, so that is an unbounded leak, not a
-    * corner case). The window key is what lets the watermark EVICT a
-    * completed group; the contract is therefore that one document's
-    * rows arrive within one `windowDur` (trivially true for the
-    * whole-document delivery this encodes). Parity
-    * (StreamingSpec-pinned): per-doc counts equal
-    * [[graft.operators.Bpe.encodeCounts]] on the same batch — minus
-    * its zero rows (re-attaching no-vocab docs would be a
-    * stream-stream self-join against the stream's own aggregate).
+  /** BPE counts over a document stream with a batch-trained merge
+    * table: [[graft.operators.Bpe.encodeCounts]]' body, each occurrence
+    * segmented inline by merge replay (out-of-vocabulary words ENCODE).
+    * Per-doc counts equal batch minus its zero rows (docs with no ascii
+    * words have nothing to group).
     */
   def bpeEncodeStream(
       docs: DataFrame,
@@ -225,30 +213,12 @@ object StreamingOps {
       mergeTable: DataFrame,
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame =
-    graft.operators.Bpe.symbolOccurrences(
-        docs.select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), col(textCol)),
-        textCol, mergeTable, perOccurrence = true)
-      .withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_sym")).cast("long").as("n_bpe_tokens"))
+    Bpe.encodeCountsBy(docs, idCol, textCol, mergeTable, ByWindow(tsCol, watermark, windowDur))
       .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"))
 
-  /** TOKEN-ID SEQUENCES over a document stream — the online half of
-    * the tokenizer SERVING contract ([[graft.operators.Bpe.encodeIds]]
-    * is the batch half): the batch-trained merge table AND the
-    * vocabulary artifact ride static broadcasts (both genuinely
-    * vocab-sized), each arriving document explodes to positioned word
-    * occurrences, segments inline by merge replay (stateless narrow —
-    * the same [[graft.operators.Bpe.applyMerges]] kernel), maps each
-    * symbol to its token id (stream-static left join; unseen symbols
-    * → UNK 0, the batch posture), and a watermarked aggregate keyed
-    * by (event-time window, doc_id) assembles the (word, symbol)-
-    * ordered sequence string. State per in-flight document is the
-    * document's own token list — bounded by document length, evicted
-    * by the watermark like every aggregate here; the contract is that
-    * one document's rows arrive within one `windowDur` (trivially
-    * true for whole-document delivery).
+  /** Token-id sequences over a document stream — the online half of
+    * [[graft.operators.Bpe.encodeIds]], unseen symbols → UNK 0. Docs
+    * with no ascii words are absent (batch emits them as (0, "")).
     */
   def bpeEncodeIdsStream(
       docs: DataFrame,
@@ -258,40 +228,14 @@ object StreamingOps {
       mergeTable: DataFrame,
       vocab: DataFrame,
       watermark: String = "10 minutes",
-      windowDur: String = "10 minutes"): DataFrame = {
-    import graft.operators.Bpe
-    val occ = docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), col(textCol))
-      .select(col("doc_id"), col("__ts"),
-        posexplode(Bpe.asciiTokens(col(textCol))).as(Seq("wpos", "w")))
-      .crossJoin(broadcast(Bpe.mergesArray(mergeTable)))
-      .withColumn("syms", Bpe.applyMerges(col("w"), col("__merges")))
-      .select(col("doc_id"), col("__ts"), col("wpos"),
-        posexplode(col("syms")).as(Seq("spos", "token")))
-      .join(broadcast(vocab.select(col("token"), col("token_id"))), Seq("token"), "left")
-      .withColumn("tid", coalesce(col("token_id"), lit(0)))
-    occ.withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_tokens"),
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("wpos"), col("spos"), col("tid")))),
-            s => s.getField("tid").cast("string")),
-          ",").as("token_ids"))
+      windowDur: String = "10 minutes"): DataFrame =
+    Bpe.encodeIdsBy(docs, idCol, textCol, mergeTable, vocab,
+        ByWindow(tsCol, watermark, windowDur))
       .select(col("doc_id"), col("n_tokens"), col("token_ids"))
-  }
 
-  /** UNK-FREE token-id sequences over a document stream — the online
-    * twin of [[graft.operators.Bpe.encodeIdsBytes]] (the GPT-2
-    * byte-fallback serving contract): identical to
-    * [[bpeEncodeIdsStream]] up to the symbol rows, then the shared
-    * [[graft.operators.Bpe.byteFallbackIds]] kernel resolves each
-    * symbol whole or decomposes it to byte tokens against the
-    * byte-floored serving vocabulary (both joins stream-static
-    * broadcasts of genuinely vocab-sized tables; the decomposition is
-    * a stateless narrow projection). Sequences order by (word, symbol,
-    * piece); state per in-flight document stays bounded by document
-    * length and watermark-evicted, exactly as the UNK variant.
+  /** UNK-free token-id sequences over a document stream — the online
+    * half of [[graft.operators.Bpe.encodeIdsBytes]] (GPT-2 byte
+    * fallback), with [[bpeEncodeIdsStream]]'s absence contract.
     */
   def bpeEncodeIdsBytesStream(
       docs: DataFrame,
@@ -301,58 +245,18 @@ object StreamingOps {
       mergeTable: DataFrame,
       vocab: DataFrame,
       watermark: String = "10 minutes",
-      windowDur: String = "10 minutes"): DataFrame = {
-    import graft.operators.Bpe
-    val sym = docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), col(textCol))
-      .select(col("doc_id"), col("__ts"),
-        posexplode(Bpe.asciiTokens(col(textCol))).as(Seq("wpos", "w")))
-      .crossJoin(broadcast(Bpe.mergesArray(mergeTable)))
-      .withColumn("syms", Bpe.applyMerges(col("w"), col("__merges")))
-      .select(col("doc_id"), col("__ts"), col("wpos"),
-        posexplode(col("syms")).as(Seq("spos", "token")))
-    Bpe.byteFallbackIds(sym, Bpe.servingVocabWithBytes(vocab))
-      .withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_tokens"),
-        array_join(
-          transform(
-            array_sort(collect_list(
-              struct(col("wpos"), col("spos"), col("cpos"), col("tid")))),
-            s => s.getField("tid").cast("string")),
-          ",").as("token_ids"))
+      windowDur: String = "10 minutes"): DataFrame =
+    Bpe.encodeIdsBytesBy(docs, idCol, textCol, mergeTable, vocab,
+        ByWindow(tsCol, watermark, windowDur))
       .select(col("doc_id"), col("n_tokens"), col("token_ids"))
-  }
 
-  /** Multi-probe IVF ANN over a STREAM of queries against a STATIC
-    * indexed corpus — the online half of the search contract
-    * ([[graft.operators.Similarity.ivfTopKProbed]] is the batch half;
-    * this is how an embedding-search service actually consumes the
-    * index: corpus and centroids built offline, queries arrive as a
-    * stream). Three stages, each in the only shape a stream supports:
-    *
-    *   1. PROBE — per arriving query, score all k centroids INLINE
-    *      against a broadcast 1-row array of (c_id, c_vec) structs and
-    *      keep the `nprobe` best by an in-row `array_sort` + `slice`
-    *      (ascending (−cos, c_id) — the exact [[graft.functions.TopK]]
-    *      heap key, so probe selection is bit-identical to the batch
-    *      path's aggregate). The batch path's k-heap AGGREGATE would
-    *      be a second stateful stage here; the in-row sort is bounded
-    *      by the centroid count and stays a stateless narrow
-    *      projection. Null cosines (ragged vectors) are filtered
-    *      before the sort — a null struct field would sort FIRST.
-    *   2. SEARCH — stream-static equi-join on the cell id against the
-    *      corpus assignment (computed once from the static frames,
-    *      exactly [[graft.operators.Similarity.ivfAssign]]), then the
-    *      rounded-6dp cosine score. At scale only the tiny query side
-    *      fans out ×nprobe, the batch argument verbatim.
-    *   3. RANK — watermarked (event-time window, q_id) aggregate with
-    *      the bounded [[graft.functions.TopK]] k-heap; state per
-    *      in-flight query is its own k-row heap, watermark-evicted.
-    *
-    * Output: (`q_id`, `n_id`, `cos`) — the batch contract;
-    * StreamingSpec pins row-for-row parity against `ivfTopKProbed` on
-    * the same frames.
+  /** Multi-probe IVF ANN over a stream of queries against a static
+    * indexed corpus — the online half of
+    * [[graft.operators.Similarity.ivfTopKProbed]]. Each query picks its
+    * `nprobe` cells IN-ROW ([[graft.operators.Similarity.probeInRow]],
+    * the batch k-heap's key, where the batch aggregate would be a
+    * second stateful stage); search and rank are the batch stage.
+    * Output: (`q_id`, `n_id`, `cos`), row-for-row the batch result.
     */
   def ivfTopKStream(
       queries: DataFrame,
@@ -365,39 +269,11 @@ object StreamingOps {
       nprobe: Int,
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    import graft.operators.Similarity
-    import graft.functions.VectorFunctions
-    val centsArr = broadcast(centroids.agg(collect_list(
-      struct(col("c_id").cast("long").as("c_id"),
-        col("c_vec").cast("array<float>").as("c_vec"))).as("__cents")))
-    val probed = queries
-      .select(col(idCol).as("q_id"), col(tsCol).as("__ts"), col(vecCol).as("q_vec"))
-      .crossJoin(centsArr)
-      .withColumn("__sims",
-        slice(
-          array_sort(filter(
-            transform(col("__cents"), c => struct(
-              (-round(VectorFunctions.cosineFast(col("q_vec"), c.getField("c_vec")), 6))
-                .as("ns"),
-              c.getField("c_id").as("c_id"))),
-            s => s.getField("ns").isNotNull)),
-          1, nprobe))
-      .drop("__cents")
-      .select(col("q_id"), col("__ts"), col("q_vec"),
-        explode(col("__sims.c_id")).as("cell"))
-    val ca = Similarity.ivfAssign(corpus, centroids, idCol, vecCol)
-      .select(col("id").as("n_id"), col("vec").as("n_vec"), col("cell"))
-    val scored = probed.join(ca, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("__ts"), col("n_id"),
-        round(VectorFunctions.cosineFast(col("q_vec"), col("n_vec")), 6).as("cos"))
-      .filter(col("cos").isNotNull)
-    scored.withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("q_id"))
-      .agg(graft.functions.TopK.smallestK(
-        struct((-col("cos")).as("nc"), col("n_id").as("n_id")), k).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t.n_id").as("n_id"), (-col("t.nc")).as("cos"))
+    val g = ByWindow(tsCol, watermark, windowDur)
+    val probed = Similarity.probeInRow(
+      g.source(queries).select(g.keys(col(idCol).as("q_id"), col(vecCol).as("q_vec")): _*),
+      "q_vec", centroids, nprobe, exactDouble = false)
+    Similarity.ivfSearch(probed, Similarity.ivfAssign(corpus, centroids, idCol, vecCol), k, g)
   }
 
   /** Incremental embedding near-dup over a STREAM of vectors against a
@@ -436,7 +312,6 @@ object StreamingOps {
       maxBucket: Int = graft.operators.Dedup.LshMaxBucket,
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    import graft.operators.Similarity
     import graft.functions.VectorFunctions
     val (ck, hot, cvecs) = Similarity.embedBandIndex(
       corpus, idCol, vecCol, dim, nBands, bitsPerBand, maxBucket)
@@ -465,37 +340,16 @@ object StreamingOps {
 
   /** SEMANTIC-dup admission gate over a vector stream — the serving
     * twin of [[graft.operators.Dedup.semDedup]] (D25), the
-    * centroid-ROUTED sibling of [[embedNearDupStream]]'s LSH routing:
-    * each arriving embedding is checked against the standing corpus
-    * before admission, but candidates come from the trained cell
-    * structure (assign to nearest frozen centroid, compare only
-    * within that cell) instead of sign-LSH buckets — the same
-    * candidate discipline the offline pass used, so online and
-    * offline agree on WHERE duplicates can hide.
+    * centroid-routed sibling of [[embedNearDupStream]]. `centroids` are
+    * the FROZEN kmeans artifact and `members` the offline-assigned
+    * corpus ([[graft.operators.Dedup.semDedupMembers]] output). Each
+    * arrival assigns in-row ([[graft.operators.Similarity.probeInRow]],
+    * all-double) and runs the batch
+    * [[graft.operators.Dedup.semDedupCorpusPairs]] cell join.
     *
-    * `centroids` are the FROZEN kmeans artifact
-    * (`Sink.saveIndex`/`Load.loadIndex` — a stream cannot retrain);
-    * `members` is the offline-assigned corpus
-    * ([[graft.operators.Dedup.semDedupMembers]] output, or its
-    * parquet round-trip). The in-row argmax over the broadcast
-    * centroid ARRAY is stateless narrow (the ivfTopKStream idiom —
-    * a streaming groupBy argmax would be a second stateful stage);
-    * candidates ride one stream-static equi-join on `cell`; the
-    * cosine verify runs BEFORE the stateful stage so state holds
-    * only verified duplicates (the embedNearDupStream contract).
-    * All-double cosine end to end — trained centroids carry ~9
-    * significant digits (the exactDouble contract), and batch parity
-    * is exact (spec-pinned against
-    * [[graft.operators.Dedup.semDedupScoredPairs]]).
-    *
-    * Emits one row per (window, arrival) WITH at least one semantic
-    * dup: (`window_start`, `id_b`, `cell`, `n_dups`, `best_id`,
-    * `best_cos` — highest-cosine standing match, ties to the lower
-    * id). Absence = admit. `window_start` is emitted (the
-    * psiDriftStream posture) so the same arrival re-checked in two
-    * windows stays attributable downstream — without it the contract
-    * "one row per (window, arrival)" would not be representable in
-    * the output.
+    * Emits one row per (window, arrival) WITH a semantic dup:
+    * (`window_start`, `id_b`, `cell`, `n_dups`, `best_id`, `best_cos` —
+    * highest-cosine match, ties to the lower id). Absence = admit.
     */
   def semDedupStream(
       vecs: DataFrame,
@@ -507,69 +361,29 @@ object StreamingOps {
       minCosine: Double,
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    import graft.functions.VectorFunctions
-    val centsArr = broadcast(centroids.agg(collect_list(
-      struct(col("c_id").cast("long").as("c_id"),
-        col("c_vec").cast("array<double>").as("c_vec"))).as("__cents")))
-    val assigned = vecs
-      .select(col(idCol).as("id_b"), col(tsCol).as("__ts"),
-        col(vecCol).cast("array<double>").as("__vec"))
-      .filter(col("__vec").isNotNull)
-      .crossJoin(centsArr)
-      .withColumn("__best",
-        slice(array_sort(filter(
-          transform(col("__cents"), c => struct(
-            (-round(VectorFunctions.cosineFastD(col("__vec"), c.getField("c_vec")), 6))
-              .as("ns"),
-            c.getField("c_id").as("c_id"))),
-          s => s.getField("ns").isNotNull)), 1, 1))
-      .drop("__cents")
-      .select(col("id_b"), col("__ts"), col("__vec"),
-        explode(col("__best.c_id")).as("cell"))
-    val scored = assigned
-      .join(members.select(col("id").as("id_c"), col("cell"),
-        col("vec").as("__cv")), Seq("cell"))
-      .filter(col("id_b") =!= col("id_c"))
-      .select(col("id_b"), col("__ts"), col("cell"), col("id_c"),
-        round(VectorFunctions.cosineFastD(col("__vec"), col("__cv")), 6).as("cos"))
-      .filter(col("cos") >= minCosine)
-    scored.withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("id_b"), col("cell"))
+    val g = ByWindow(tsCol, watermark, windowDur)
+    val assigned = Similarity.probeInRow(
+      g.source(vecs)
+        .select(g.keys(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec")): _*)
+        .filter(col("vec").isNotNull),
+      "vec", centroids, nprobe = 1, exactDouble = true)
+    Dedup.semDedupCorpusPairs(assigned, members, minCosine, g)
+      .groupBy(g.keys(col("id_b"), col("cell")): _*)
       .agg(count(lit(1)).as("n_dups"),
         max(struct(col("cos"), (-col("id_c")).as("__ni"))).as("__b"))
-      .select(col("window.start").as("window_start"), col("id_b"),
+      .select(col("__window.start").as("window_start"), col("id_b"),
         col("cell"), col("n_dups"),
         (-col("__b.__ni")).as("best_id"), col("__b.cos").as("best_cos"))
   }
 
-  /** STREAMING line-boilerplate scrubber — the serving twin of
-    * [[graft.operators.TextAnalysis.removeBoilerplateLines]] (T22):
-    * a stream cannot count cross-document line frequencies (corpus
-    * statistics), so the boilerplate-line set arrives FROZEN —
-    * [[graft.operators.TextAnalysis.boilerplateLineIndex]] computed
-    * offline and `Sink.saveIndex`/`Load.loadIndex` round-tripped —
-    * the same offline-calibrate/online-serve split as the LM fences,
-    * PSI reference counts and BM25 postings. Arriving docs explode
-    * to lines (stateless narrow; watermark at the SOURCE so a
-    * fully-boilerplate doc still advances it), boilerplate lines
-    * drop via a stream-static LEFT ANTI on the 32-char hash (blank
-    * lines carry a NULL fp and always survive — the batch blank
-    * rule), and ONE stateful windowed aggregate re-assembles each
-    * doc in line order.
-    *
-    * Emits `(window_start, doc_id, n_lines_kept, clean_text)`.
-    * Divergence from the batch twin, stated: a doc whose EVERY line
-    * is boilerplate has no surviving rows and is ABSENT from the
-    * output (the batch operator emits it with empty text) — in an
-    * admission pipeline absence IS the verdict; spec-pinned.
-    *
-    * State is one in-flight (window, doc) row holding the kept
-    * lines — bounded by doc length × window arrivals,
-    * watermark-evicted; the anti-join is the planner's choice
-    * (broadcast while the index is small, shuffled when web-scale).
-    * Batch parity on (doc_id, n_lines_kept, clean_text) is exact
-    * (StreamingSpec, incl. the blank line and the absent all-boiler
-    * arrival).
+  /** Line-boilerplate scrubber over a document stream —
+    * [[graft.operators.TextAnalysis.removeBoilerplateLines]]' reassembly
+    * against a FROZEN line set
+    * ([[graft.operators.TextAnalysis.boilerplateLineIndex]]: a stream
+    * cannot count cross-document line frequencies). Emits
+    * `(window_start, doc_id, n_lines_kept, clean_text)`. Stated
+    * divergence: a doc whose EVERY line is boilerplate is ABSENT (batch
+    * emits it with empty text) — in admission, absence is the verdict.
     */
   def lineBoilerStream(
       docs: DataFrame,
@@ -579,49 +393,24 @@ object StreamingOps {
       boilerIndex: DataFrame,
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    val lines = docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"),
-        posexplode(split(coalesce(col(textCol), lit("")), "\n")))
-      .select(col("doc_id"), col("__ts"), col("pos").as("line_no"),
-        col("col").as("line"),
-        when(trim(col("col")) =!= "", md5(trim(lower(col("col")))))
-          .as("line_fp"))
-      .withWatermark("__ts", watermark)
-    lines.join(boilerIndex.select(col("line_fp")), Seq("line_fp"), "left_anti")
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_lines_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("line_no"), col("line")))),
-            x => x.getField("line")),
-          "\n").as("clean_text"))
-      .select(col("window.start").as("window_start"), col("doc_id"),
+    val g = ByWindow(tsCol, watermark, windowDur)
+    TextAnalysis.scrubLines(TextAnalysis.explodeLines(docs, idCol, textCol, g), boilerIndex, g)
+      .filter(col("n_lines_kept") > 0)
+      .select(col("__window.start").as("window_start"), col("doc_id"),
         col("n_lines_kept"), col("clean_text"))
   }
 
-  /** STREAMING exact-substring scrubber — the serving twin of
-    * [[graft.operators.Dedup.exactSubstrAgainstCorpus]] (D28): a
-    * stream cannot hold the corpus-wide gram statistics, so the
-    * standing corpus's distinct gram-fingerprint index arrives
-    * FROZEN ([[graft.operators.Dedup.substrGramIndex]], saveIndex /
-    * loadIndex round-tripped — the offline-calibrate/online-serve
-    * split of the LM fences, PSI reference and BM25 postings).
-    * Arriving docs explode to TOKEN rows (stateless narrow; O(L)
-    * bytes per doc ride the shuffle — each row carries one token
-    * plus the md5 of the n-gram STARTING at it, null past the last
-    * window), the frozen index marks flagged starts via one
-    * stream-static left join, and ONE stateful windowed aggregate
-    * collects the doc's rows so the interval union and re-assembly
-    * run as in-row HOFs on the aggregated array (the lineBoilerStream
-    * re-assembly idiom; per-doc state bounded by tokens-per-doc, the
-    * chunkDocs length-bound contract).
+  /** Exact-substring scrubber over a document stream — the serving twin
+    * of [[graft.operators.Dedup.exactSubstrAgainstCorpus]] (D28) against
+    * a FROZEN gram index ([[graft.operators.Dedup.substrGramIndex]]).
+    * Tokenizer, gram windows and interval-union cut are the batch ones;
+    * only the flag step differs (a stream cannot join its tokens back
+    * to its flagged starts): gram rows LEFT-join the index and one
+    * aggregate per (window, doc, tokens) collects the flagged starts.
     *
     * Emits `(window_start, doc_id, n_tokens, n_removed, clean_text)`.
-    * Divergences from the batch twin, stated: a doc with NO tokens
-    * has no rows and is ABSENT from the output (the batch operator
-    * emits it with empty text — the lineBoilerStream absence-is-the-
-    * verdict posture), while a fully-duplicated doc still emits with
-    * `clean_text` empty; spec-pinned.
+    * Stated divergence: a doc with NO tokens is ABSENT (batch emits it
+    * with empty text); a fully-duplicated doc emits with empty text.
     */
   def exactSubstrStream(
       docs: DataFrame,
@@ -633,46 +422,19 @@ object StreamingOps {
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
     require(n >= 2, s"n must be >= 2, got $n")
-    val t = filter(
-      graft.operators.TextAnalysis.tokens(coalesce(col(textCol), lit(""))),
-      x => x =!= "")
-    val tokRows = docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), t.as("__t"))
-      .select(col("doc_id"), col("__ts"),
-        // sequence(1, 0) DESCENDS (the documented Spark pitfall) —
-        // guard the tokenless doc to an empty series instead.
-        explode(transform(
-          when(size(col("__t")) >= 1, sequence(lit(1), size(col("__t"))))
-            .otherwise(expr("array()").cast("array<int>")),
-          p => struct(p.as("p"),
-            element_at(col("__t"), p).as("tok"),
-            when(p <= size(col("__t")) - (n - 1),
-              md5(concat_ws(" ", slice(col("__t"), p, lit(n))))).as("fp"))))
-          .as("__r"))
-      .select(col("doc_id"), col("__ts"), col("__r.p").as("p"),
-        col("__r.tok").as("tok"), col("__r.fp").as("fp"))
-      .withWatermark("__ts", watermark)
-    val marked = tokRows
-      .join(gramIndex.select(col("fp"), lit(1).as("__hit")), Seq("fp"), "left")
-      .select(col("doc_id"), col("__ts"), col("p"), col("tok"),
-        (col("fp").isNotNull && col("__hit").isNotNull).as("flag"))
-    marked
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(array_sort(collect_list(
-        struct(col("p"), col("tok"), col("flag")))).as("__rows"))
-      .select(col("window.start").as("window_start"), col("doc_id"),
-        col("__rows"),
-        filter(col("__rows"), r => r.getField("flag"))
-          .getField("p").as("__starts"))
-      .select(col("window_start"), col("doc_id"),
-        size(col("__rows")).cast("long").as("n_tokens"),
-        filter(col("__rows"), r => !exists(col("__starts"),
-          st => st <= r.getField("p") &&
-            r.getField("p") <= st + (n - 1))).as("__kept"))
-      .select(col("window_start"), col("doc_id"), col("n_tokens"),
-        (col("n_tokens") - size(col("__kept"))).cast("long").as("n_removed"),
-        array_join(transform(col("__kept"), r => r.getField("tok")), " ")
-          .as("clean_text"))
+    val g = ByWindow(tsCol, watermark, windowDur)
+    val starts = Dedup.substrToks(docs, idCol, textCol, g)
+      .filter(size(col("__t")) >= 1)
+      // explode_OUTER: a doc shorter than n keeps one gram-less row.
+      .select(g.keys(col("doc_id"), col("__t"),
+        explode_outer(Dedup.substrGramArray(col("__t"), n)).as("__g")): _*)
+      .join(gramIndex.select(col("fp").as("__fp"), lit(true).as("__hit")),
+        col("__g.fp") === col("__fp"), "left")
+      .groupBy(g.keys(col("doc_id"), col("__t")): _*)
+      .agg(sort_array(collect_list(when(col("__hit"), col("__g.pos")))).as("__s"))
+    Dedup.substrKeep(starts, n, g)
+      .select(col("__window.start").as("window_start"), col("doc_id"),
+        col("n_tokens"), col("n_removed"), col("clean_text"))
   }
 
   /** Per-user session state for [[sessionize]]. */
@@ -875,23 +637,28 @@ object StreamingOps {
         GroupStateTimeout.NoTimeout()) {
         case (userId, rows, state: GroupState[FunnelStateK]) =>
           val prev = state.getOption.getOrElse(FunnelStateK(Seq.fill(k)(-1L)))
-          val next = rows.toSeq.sortBy(e => (e.tsUs, e.eventType)).foldLeft(prev) {
-            (acc, e) =>
-              // Same transition as the batch fold: an event may fill the
-              // FIRST eligible slot of its type (unfilled, predecessor
-              // filled strictly earlier); the unfilled slots form a
-              // suffix, so at most one slot is ever eligible per event.
-              steps.zipWithIndex
-                .collectFirst { case (t, i) if t == e.eventType &&
-                  acc.stepUs(i) == -1L &&
-                  (i == 0 || (acc.stepUs(i - 1) != -1L && e.tsUs > acc.stepUs(i - 1))) => i }
-                .map(i => FunnelStateK(acc.stepUs.updated(i, e.tsUs)))
-                .getOrElse(acc)
-          }
+          val next = FunnelStateK(
+            funnelAdvance(steps, prev.stepUs, rows.map(e => (e.tsUs, e.eventType)).toSeq))
           state.update(next)
           FunnelProgress(userId, next.stepUs.takeWhile(_ != -1L).length, next.stepUs)
       }
   }
+
+  /** The strict min-cascade transition every funnel stream folds with,
+    * the batch fold's: events apply in (tsUs, type) order, and each may
+    * fill the FIRST eligible slot of its type (unfilled, predecessor
+    * filled strictly earlier). The unfilled slots form a suffix, so at
+    * most one slot is ever eligible per event. -1 = unfilled.
+    */
+  private def funnelAdvance(
+      steps: Seq[String], stepUs: Seq[Long], events: Seq[(Long, String)]): Seq[Long] =
+    events.sorted.foldLeft(stepUs) { case (acc, (tsUs, eventType)) =>
+      steps.zipWithIndex
+        .collectFirst { case (t, i) if t == eventType && acc(i) == -1L &&
+          (i == 0 || (acc(i - 1) != -1L && tsUs > acc(i - 1))) => i }
+        .map(i => acc.updated(i, tsUs))
+        .getOrElse(acc)
+    }
 
   /** Keyed state for [[funnelStream]]: the k stage times, -1 = unset. */
   final case class FunnelStateK(stepUs: Seq[Long])
@@ -944,15 +711,8 @@ object StreamingOps {
         rows: Iterator[FunnelEvent],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[FunnelProgress] = {
       val prev = if (state.exists()) state.get() else FunnelStateK(Seq.fill(steps.length)(-1L))
-      val next = rows.toSeq.sortBy(e => (e.tsUs, e.eventType)).foldLeft(prev) {
-        (acc, e) =>
-          steps.zipWithIndex
-            .collectFirst { case (t, i) if t == e.eventType &&
-              acc.stepUs(i) == -1L &&
-              (i == 0 || (acc.stepUs(i - 1) != -1L && e.tsUs > acc.stepUs(i - 1))) => i }
-            .map(i => FunnelStateK(acc.stepUs.updated(i, e.tsUs)))
-            .getOrElse(acc)
-      }
+      val next = FunnelStateK(
+        funnelAdvance(steps, prev.stepUs, rows.map(e => (e.tsUs, e.eventType)).toSeq))
       state.update(next)
       Iterator.single(
         FunnelProgress(userId, next.stepUs.takeWhile(_ != -1L).length, next.stepUs))
@@ -1017,21 +777,11 @@ object StreamingOps {
         userId: Long,
         rows: Iterator[TimedFunnelEvent],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[FunnelAbandoned] = {
-      val k = steps.length
       val prev = if (state.exists()) state.get()
-        else AbandonState(Seq.fill(k)(-1L), -1L, -1L)
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.eventType))
-      val next0 = sorted.foldLeft(prev) { (acc, e) =>
-        val tUs = e.ts.getTime * 1000L
-        steps.zipWithIndex
-          .collectFirst { case (t, i) if t == e.eventType &&
-            acc.stepUs(i) == -1L &&
-            (i == 0 || (acc.stepUs(i - 1) != -1L && tUs > acc.stepUs(i - 1))) => i }
-          .map(i => acc.copy(stepUs = acc.stepUs.updated(i, tUs)))
-          .getOrElse(acc)
-      }
-      val lastMs = math.max(prev.lastTsMs,
-        sorted.lastOption.map(_.ts.getTime).getOrElse(prev.lastTsMs))
+        else AbandonState(Seq.fill(steps.length)(-1L), -1L, -1L)
+      val evs = rows.map(e => (e.ts.getTime * 1000L, e.eventType)).toSeq
+      val next0 = prev.copy(stepUs = funnelAdvance(steps, prev.stepUs, evs))
+      val lastMs = (prev.lastTsMs +: evs.map(_._1 / 1000L)).max
       if (next0.stepUs.forall(_ != -1L)) {
         // funnel complete: nothing left to abandon
         if (prev.timerMs >= 0) getHandle.deleteTimer(prev.timerMs)
@@ -1076,34 +826,13 @@ object StreamingOps {
         sessionizeTransition(gapMillis))
   }
 
-  /** HELD-OUT LM scoring over a document STREAM — the online half of
-    * the CCNet filter ([[graft.operators.TextAnalysis.lmHeldOutFilter]]
-    * is the offline half): the bigram model is FIT OFFLINE and the
-    * tertile fences FROZEN from an offline calibration pass (a stream
-    * cannot take corpus percentiles — serving deployments apply
-    * thresholds, they don't derive them), then each arriving document
-    * is scored and bucketed head / middle / tail before admission.
-    *
-    * `bigramModel` is the one persistable artifact
-    * ([[graft.operators.TextAnalysis.lmBigramModel]] — save/load via
-    * `Sink.saveIndex`/`Load.loadIndex`); continuation counts and the
-    * vocabulary size are derived from it HERE by two static-side
-    * aggregates, so the server holds exactly what was shipped.
-    * `fences` is the 1-row `(t_low, t_high)` frame
-    * ([[graft.operators.TextAnalysis.lmFences]]).
-    *
-    * Shape: bigram explode is a stateless narrow projection; model
-    * lookups are stream-static LEFT joins (the smoothing floors —
-    * unseen bigram, unseen context — are exactly the batch backoffs);
-    * totals and fences ride 1-row broadcasts ATTACHED BEFORE the
-    * stateful stage (a join after a streaming aggregation is not
-    * supported, and the fence is a constant anyway); the single
-    * stateful stage is the watermarked per-(window, doc) aggregate,
-    * state bounded by in-flight documents and watermark-evicted. The
-    * micro-nat sum / raw-quotient mean reproduces the batch doubles
-    * bit-identically, so buckets match row-for-row
-    * (StreamingSpec-pinned against the batch filter on the same
-    * frames, fences frozen from the batch output).
+  /** Held-out LM scoring over a document stream — the online half of
+    * the CCNet filter, [[graft.operators.TextAnalysis.lmHeldOutFilter]]'s
+    * scoring half against the persisted
+    * [[graft.operators.TextAnalysis.lmBigramModel]] and tertile fences
+    * FROZEN offline ([[graft.operators.TextAnalysis.lmFences]], 1 row:
+    * a stream cannot take corpus percentiles). Buckets match batch
+    * row-for-row.
     */
   def lmScoreStream(
       docs: DataFrame,
@@ -1113,59 +842,16 @@ object StreamingOps {
       bigramModel: DataFrame,
       fences: DataFrame,
       watermark: String = "10 minutes",
-      windowDur: String = "10 minutes"): DataFrame = {
-    import graft.operators.TextAnalysis
-    val c1 = bigramModel.groupBy(col("w1")).agg(sum(col("c")).as("ctx"))
-    val totals = bigramModel.agg(countDistinct(col("w2")).as("v"))
-    val t = filter(TextAnalysis.tokens(lower(coalesce(col(textCol), lit("")))),
-      x => x =!= "")
-    val bi = docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), t.as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), col("__ts"),
-        explode(transform(sequence(lit(1), size(col("t")) - 1),
-          i => struct(element_at(col("t"), i).as("w1"),
-            element_at(col("t"), i + 1).as("w2")))).as("g"))
-      .select(col("doc_id"), col("__ts"),
-        col("g.w1").as("w1"), col("g.w2").as("w2"))
-    val lp = bi
-      .join(bigramModel, Seq("w1", "w2"), "left")
-      .join(c1, Seq("w1"), "left")
-      .crossJoin(broadcast(totals))
-      .crossJoin(broadcast(fences))
-      .withColumn("lp_u",
-        round(log((coalesce(col("c"), lit(0L)) + lit(1)).cast("double") /
-          (coalesce(col("ctx"), lit(0L)) + col("v")).cast("double")) * lit(1000000.0), 0)
-          .cast("bigint"))
-    lp.withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(when(col("c").isNull, lit(1L)).otherwise(lit(0L))).as("n_unseen"),
-        ((sum(col("lp_u")).cast("double") /
-          count(lit(1)).cast("double")) / lit(1000000.0)).as("avg_logprob"),
-        min(col("t_low")).as("t_low"), min(col("t_high")).as("t_high"))
-      .select(col("doc_id"), col("n_bigrams"), col("n_unseen"), col("avg_logprob"),
-        when(col("avg_logprob") <= col("t_low"), lit("tail"))
-          .when(col("avg_logprob") <= col("t_high"), lit("middle"))
-          .otherwise(lit("head")).as("bucket"))
-  }
+      windowDur: String = "10 minutes"): DataFrame =
+    TextAnalysis.lmBuckets(
+      TextAnalysis.lmScored(bigramModel, docs, idCol, textCol,
+        ByWindow(tsCol, watermark, windowDur)),
+      fences)
 
-  /** Naive-Bayes classifier serving over a document stream — the
-    * trained-classifier gate ([[graft.operators.TextAnalysis.nbScore]])
-    * as an online service, same offline-build/online-serve contract
-    * as [[lmScoreStream]]: the `(w, c_pos, c_neg)` model frame and
-    * the 1-row prior are FROZEN offline artifacts
-    * (`Sink.saveIndex`/`Load.loadIndex`), smoothing totals derived
-    * from the loaded model (one aggregate, 1-row broadcast).
-    *
-    * Plan shape: tokens explode stateless-narrow; the model join is
-    * stream-static on the word key (Spark re-plans the static side
-    * per micro-batch; the model is vocabulary-sized and UNBROADCAST
-    * unless AQE decides otherwise); the ONLY stateful operator is the
-    * per-(window, doc) aggregate summing integer micro-nat terms —
-    * state per in-flight doc is a handful of longs, watermark-evicted.
-    * `pred` is decided on the integer sum, identical to batch: the
-    * spec pins row-for-row parity including the OOV floors.
+  /** Naive-Bayes classifier serving over a document stream —
+    * [[graft.operators.TextAnalysis.nbScore]] against the FROZEN
+    * `(w, c_pos, c_neg)` model and 1-row prior. Row-for-row batch
+    * parity, OOV floors included.
     */
   def nbScoreStream(
       docs: DataFrame,
@@ -1175,51 +861,14 @@ object StreamingOps {
       model: DataFrame,
       priors: DataFrame,
       watermark: String = "10 minutes",
-      windowDur: String = "10 minutes"): DataFrame = {
-    import graft.operators.TextAnalysis
-    val totals = model.agg(
-      sum(col("c_pos")).as("t_pos"), sum(col("c_neg")).as("t_neg"),
-      count(lit(1)).as("v"))
-    val t = filter(TextAnalysis.tokens(lower(coalesce(col(textCol), lit("")))),
-      x => x =!= "")
-    val lp = docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), explode(t).as("w"))
-      .join(model, Seq("w"), "left")
-      .crossJoin(broadcast(totals))
-      .crossJoin(broadcast(priors))
-      .withColumn("llr_u",
-        round(log((coalesce(col("c_pos"), lit(0L)) + lit(1)).cast("double") /
-          (col("t_pos") + col("v")).cast("double")) * lit(1000000.0), 0).cast("bigint") -
-          round(log((coalesce(col("c_neg"), lit(0L)) + lit(1)).cast("double") /
-            (col("t_neg") + col("v")).cast("double")) * lit(1000000.0), 0).cast("bigint"))
-    lp.withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_tok"),
-        sum(when(col("c_pos").isNull, lit(1L)).otherwise(lit(0L))).as("n_oov"),
-        sum(col("llr_u")).as("s_u"),
-        min(col("prior_u")).as("prior_u"))
-      .select(col("doc_id"), col("n_tok"), col("n_oov"),
-        ((col("s_u") + col("prior_u")).cast("double") / lit(1000000.0)).as("log_odds"),
-        ((col("s_u") + col("prior_u")) > 0L).as("pred"))
-  }
+      windowDur: String = "10 minutes"): DataFrame =
+    TextAnalysis.nbScoreBy(model, priors, docs, idCol, textCol,
+      ByWindow(tsCol, watermark, windowDur))
 
-  /** LOGISTIC-REGRESSION scoring over a document stream — the
-    * discriminative member of the scorer-serving family (LM
-    * perplexity, NB, DSIR, and now LR): arriving docs score against
-    * the FROZEN trained weight vector
-    * ([[graft.operators.TextAnalysis.lrTrain]]'s (b, w_u) artifact —
-    * ≤ `buckets` rows by the pmod construction, saveIndex /
-    * loadIndex round-trippable), the offline-train/online-serve
-    * split every production quality gate runs. Plan shape: hashed
-    * featurize stateless-narrow (identical md5-bucket key to batch),
-    * weights ride a stream-static LEFT join (buckets unseen in
-    * training contribute 0 — the [[TextAnalysis.lrScore]] contract),
-    * and the ONLY stateful operator is the watermarked per-(window,
-    * doc) exact-bigint logit sum — two longs per in-flight doc.
-    * Emits `(doc_id, n_tok, z, pred)` matching the batch scorer
-    * row-for-row on tokened docs (spec-pinned); tokenless docs have
-    * no rows and are absent (the admission posture — batch emits
-    * them with z = 0).
+  /** Logistic-regression scoring over a document stream —
+    * [[graft.operators.TextAnalysis.lrScore]] against the FROZEN
+    * [[graft.operators.TextAnalysis.lrTrain]] weights. Tokenless docs
+    * are absent (batch emits them with z = 0).
     */
   def lrScoreStream(
       docs: DataFrame,
@@ -1229,42 +878,15 @@ object StreamingOps {
       model: DataFrame,
       buckets: Int,
       watermark: String = "10 minutes",
-      windowDur: String = "10 minutes"): DataFrame = {
-    import graft.operators.TextAnalysis
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val t = filter(TextAnalysis.tokens(lower(coalesce(col(textCol), lit("")))),
-      x => x =!= "")
-    docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), explode(t).as("__w"))
-      .select(col("doc_id"), col("__ts"),
-        graft.functions.Hashing.md5Bucket(col("__w"), buckets.toLong).as("b"))
-      .join(model.select(col("b"), col("w_u")), Seq("b"), "left")
-      .withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).cast("bigint").as("n_tok"),
-        sum(coalesce(col("w_u"), lit(0L))).as("z_u"))
-      .select(col("doc_id"), col("n_tok"),
-        (col("z_u").cast("double") / lit(1000000.0)).as("z"),
-        (col("z_u") > 0L).as("pred"))
-  }
+      windowDur: String = "10 minutes"): DataFrame =
+    TextAnalysis.lrOutput(TextAnalysis.lrLogits(model, docs, idCol, textCol, buckets,
+      ByWindow(tsCol, watermark, windowDur)))
 
-  /** DSIR importance scoring over a document stream — the third
-    * member of the scorer-serving family (LM perplexity, NB
-    * classifier, and now the importance weight): arriving docs score
-    * against the FROZEN per-bucket log-ratio artifact
-    * ([[graft.operators.Sampling.dsirLlrTable]] — exactly `buckets`
-    * rows over the full literal domain, so every arriving gram finds
-    * its row and the join can be a plain inner equi-join riding a
-    * broadcast). Use case: admission-time "how target-like is this
-    * doc" scoring feeding an ingest gate, the online half of the
-    * offline resampling pass.
-    *
-    * Plan shape: bigram explode stateless-narrow, bucket key =
-    * md5 pmod literal (identical to batch), the ONLY stateful
-    * operator is the watermarked per-(window, doc) integer micro-nat
-    * sum — a few longs per in-flight doc. Output
-    * `(doc_id, n_grams, log_w)` matches [[Sampling.dsirScore]]
-    * row-for-row on pool docs (spec-pinned).
+  /** DSIR importance scoring over a document stream —
+    * [[graft.operators.Sampling.dsirScore]]'s bigram featurize and
+    * per-doc sum against the FROZEN full-domain
+    * [[graft.operators.Sampling.dsirLlrTable]] (every arriving gram finds
+    * its bucket). Output `(doc_id, n_grams, log_w)`.
     */
   def dsirScoreStream(
       docs: DataFrame,
@@ -1275,56 +897,28 @@ object StreamingOps {
       buckets: Int,
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    import graft.operators.TextAnalysis
-    val t = filter(TextAnalysis.tokens(lower(coalesce(col(textCol), lit("")))),
-      x => x =!= "")
-    docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), t.as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), col("__ts"),
-        explode(transform(sequence(lit(1), size(col("t")) - 1),
-          i => struct(element_at(col("t"), i).as("w1"),
-            element_at(col("t"), i + 1).as("w2")))).as("g"))
-      .select(col("doc_id"), col("__ts"),
-        pmod(graft.functions.Hashing.md5Bits60(
-          concat(col("g.w1"), lit(" "), col("g.w2"))), lit(buckets.toLong)).as("b"))
-      .join(broadcast(llrTable), Seq("b"))
-      .withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"), sum(col("llr_u")).as("logw_u"))
+    val g = ByWindow(tsCol, watermark, windowDur)
+    Sampling.dsirLogW(
+        g.counts(Sampling.dsirBigrams(docs, idCol, textCol, buckets, g),
+          g.keys(col("doc_id"), col("b")): _*),
+        llrTable, g)
       .select(col("doc_id"), col("n_grams"),
         (col("logw_u").cast("double") / lit(1000000.0)).as("log_w"))
   }
 
-  /** STREAMING PSI drift monitor — the serving twin of the
-    * `pipeline_filter_psi` artifact, turned toward ARRIVALS: per
-    * event-time window, how far has the incoming feature
-    * distribution drifted from a FROZEN reference? (ingest-pipeline
-    * change detection — a new source, a scraper regression, a
-    * seasonal shift — caught as one number per window against the
-    * 0.25 "investigate" fence.) The reference — decile fences AND
-    * per-bin reference counts — is a 1-row offline artifact
-    * (`Sink.saveIndex`/`Load.loadIndex`), the lmScoreStream
-    * frozen-fences contract: a stream cannot take corpus
-    * percentiles.
-    *
-    * `ref` rows: (`bin` int, `n_ref` long) — one per reference bin;
-    * `fences`: 1 row holding the ordered `fences array<long>` (bin =
-    * count of fences strictly below the value, so |bins| = |fences|
-    * + 1). Smoothing is +1 per bin / +B per cohort, identical to the
-    * batch artifact.
-    *
-    * Shape: binning is a stateless HOF fold over the broadcast fence
-    * array; the ONLY stateful operator is the per-(window, bin)
-    * count; the per-window PSI then folds over the BOUNDED bin
-    * domain — fanned from the reference side, so a bin the window
-    * never saw still contributes its smoothed term (dropping it
-    * would understate drift exactly when drift is worst) — inside
-    * one `aggregate` HOF on a bin-count map, no second stateful
-    * stage and no stream-stream join. Integer micro-nat rounding
-    * per bin, summed — bit-identical to the batch formula per bin.
-    * Output per window: (`window_start`, `n_docs`, `psi_u`,
-    * `psi` double).
+  /** PSI drift monitor over a stream — the `pipeline_filter_psi`
+    * artifact turned toward ARRIVALS: per event-time window, the drift
+    * of the incoming feature from a FROZEN reference (`ref`: one
+    * (`bin` int, `n_ref` long) row per bin; `fences`: 1 row of ordered
+    * `fences array<long>`, bin = count of fences strictly below the
+    * value). Each bin's term is the batch artifact's
+    * [[graft.operators.Sampling.psiTermU]] (+1 per bin / +B per cohort
+    * smoothing), folded over the BOUNDED reference bin domain so a bin
+    * the window never saw still contributes (dropping it would
+    * understate drift exactly when drift is worst). Two chained
+    * stateful aggregates: per-(window, bin) counts, then the window's
+    * bin-count map. Output per window: (`window_start`, `n_docs`,
+    * `psi_u`, `psi` double).
     */
   def psiDriftStream(
       docs: DataFrame,
@@ -1334,67 +928,37 @@ object StreamingOps {
       ref: DataFrame,
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
+    val g = ByWindow(tsCol, watermark, windowDur)
     val refAgg = broadcast(ref.agg(
       array_sort(collect_list(struct(col("bin"), col("n_ref")))).as("__bins"),
       sum(col("n_ref")).as("__np"),
       count(lit(1)).as("__nb")))
-    val f = broadcast(fences.select(col("fences").as("__fences")))
-    val binned = docs
-      .select(col(featureCol).cast("long").as("__v"), col(tsCol).as("__ts"))
-      .crossJoin(f)
-      .select(col("__ts"), aggregate(col("__fences"), lit(0),
-        (acc, fe) => acc + when(col("__v") > fe, 1).otherwise(0)).as("bin"))
-    binned
-      .withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), windowDur), col("bin"))
+    g.source(docs)
+      .select(g.keys(col(featureCol).cast("long").as("__v")): _*)
+      .crossJoin(broadcast(fences.select(col("fences").as("__fences"))))
+      .select(g.keys(aggregate(col("__fences"), lit(0),
+        (acc, fe) => acc + when(col("__v") > fe, 1).otherwise(0)).as("bin")): _*)
+      .groupBy(g.keys(col("bin")): _*)
       .agg(count(lit(1)).as("n"))
-      .groupBy(window(window_time(col("window")), windowDur))
+      .groupBy(g.keys(): _*)
       .agg(sum(col("n")).as("n_docs"),
         map_from_entries(collect_list(struct(col("bin"), col("n")))).as("__m"))
-      .select(col("window.start").as("window_start"),
-        col("n_docs"), col("__m"))
       .crossJoin(refAgg)
-      .select(col("window_start"), col("n_docs"),
-        aggregate(col("__bins"), lit(0L), (acc, b) => {
-          val cp = b.getField("n_ref") + lit(1L)
-          val cq = coalesce(element_at(col("__m"), b.getField("bin")), lit(0L)) + lit(1L)
-          val np = col("__np") + col("__nb")
-          val nq = col("n_docs") + col("__nb")
-          acc + round(lit(1000000.0) *
-            (cp.cast("double") / np.cast("double") -
-              cq.cast("double") / nq.cast("double")) *
-            log((cp.cast("double") * nq.cast("double")) /
-              (cq.cast("double") * np.cast("double"))), 0).cast("bigint")
-        }).as("psi_u"))
+      .select(col("__window.start").as("window_start"), col("n_docs"),
+        aggregate(col("__bins"), lit(0L), (acc, b) =>
+          acc + Sampling.psiTermU(b.getField("n_ref") + lit(1L), col("__np") + col("__nb"),
+            coalesce(element_at(col("__m"), b.getField("bin")), lit(0L)) + lit(1L),
+            col("n_docs") + col("__nb"))).as("psi_u"))
       .select(col("window_start"), col("n_docs"), col("psi_u"),
         (col("psi_u").cast("double") / lit(1000000.0)).as("psi"))
   }
 
-  /** STREAMING BM25 retrieval serving — the online half of the T20
-    * contract (how a search service actually runs: the scored
-    * postings index [[graft.operators.TextAnalysis.bm25Index]] is
-    * built offline — per-(term, doc) contributions are
-    * query-independent — `Sink.saveIndex`'d, and arriving queries
-    * `(query_id, ts, terms array)` are answered by summing LOADED
-    * contributions over their terms). Batch-parity with
-    * [[graft.operators.TextAnalysis.bm25TopKBatch]] is exact: both
-    * sum the same integer micro-unit contributions.
-    *
-    * Shape — the first CHAINED-stateful-aggregation op in this file
-    * (Spark's multiple-stateful-operator support, append mode):
-    * queries explode to terms (stateless narrow, watermark applied
-    * at the SOURCE so a query matching nothing still advances it),
-    * candidates come from a stream-static equi-join on `term`
-    * (postings stay a static frame — at web scale the join is the
-    * planner's choice, broadcast only if the index fits), stateful
-    * stage 1 sums per-(window, query, doc) scores, stateful stage 2
-    * — windowed on `window_time`, the documented chained-agg idiom —
-    * cuts the per-query top-k with the bounded CollectTopK heap.
-    * State is candidate-doc cardinality per in-flight window for
-    * stage 1 and k rows per query for stage 2, both
-    * watermark-evicted. Append mode means results emit when the
-    * watermark passes the window — the contract a retrieval batch
-    * API has anyway.
+  /** BM25 retrieval over a stream of queries `(query_id, ts, terms
+    * array)` against the offline scored postings index
+    * ([[graft.operators.TextAnalysis.bm25Index]]), ranked by
+    * [[graft.operators.TextAnalysis.bm25TopKBatch]]'s tail: two CHAINED
+    * stateful aggregates (per-(query, doc) sums, then the k-heap).
+    * Exact batch parity; append mode emits once the watermark passes.
     */
   def bm25TopKStream(
       queries: DataFrame,
@@ -1406,43 +970,22 @@ object StreamingOps {
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val key = struct((-col("score_u")).as("ns"), col("doc_id").as("doc_id"),
-      col("n_terms").as("n_terms"))
-    queries
-      // SET semantics on the term array (ADVICE r14, mirrors the
-      // bm25TopKBatch distinct): a term repeated in one query's array
-      // would double-count its contrib_u and inflate n_terms.
-      // array_distinct is stateless narrow — dedup BEFORE the explode.
-      .select(col(qidCol).as("q_id"), col(tsCol).as("__ts"),
-        explode(array_distinct(col(termsCol))).as("term"))
-      .withWatermark("__ts", watermark)
-      .join(index.select(col("term"), col("doc_id"), col("contrib_u")), Seq("term"))
-      .groupBy(window(col("__ts"), windowDur), col("q_id"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"), sum(col("contrib_u")).as("score_u"))
-      .groupBy(window(window_time(col("window")), windowDur), col("q_id"))
-      .agg(graft.functions.TopK.smallestK(key, k).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t.doc_id").as("doc_id"),
-        col("t.n_terms").as("n_terms"),
-        ((-col("t.ns")).cast("double") / lit(1000000.0)).as("score"))
+    val g = ByWindow(tsCol, watermark, windowDur)
+    // SET semantics on the term array (mirrors the bm25TopKBatch
+    // distinct): a repeated term would double-count its contrib_u.
+    TextAnalysis.bm25Rank(
+      g.source(queries)
+        .select(g.keys(col(qidCol).as("q_id"),
+          explode(array_distinct(col(termsCol))).as("term")): _*)
+        .join(index.select(col("term"), col("doc_id"), col("contrib_u")), Seq("term")),
+      "q_id", k, g)
   }
 
-  /** Per-document KEYWORD extraction over a document stream — the
-    * serving twin of the `text_keywords` composition (tf × corpus
-    * TextRank salience): the corpus rank table arrives FROZEN
-    * ([[graft.operators.TextAnalysis.textRank]] output, vocabulary-
-    * sized, saveIndex round-trippable — a stream cannot run the
-    * corpus walk), and each arriving doc's top-`k` terms emerge from
-    * the [[bm25TopKStream]] chained-stateful shape: tokens explode
-    * stateless-narrow, the rank table rides a stream-static inner
-    * join (unranked terms have no corpus salience and cannot be
-    * keywords — the batch composition's inner-join contract), the
-    * FIRST stateful aggregate counts per (window, doc, term) and
-    * carries the term's rank via min (constant within a term), the
-    * SECOND cuts the per-(window, doc) top-k on the exact bigint
-    * score m·rank_u with the bounded k-heap, append-mode-chained on
-    * `window_time`. Emits (doc_id, term, score_u) — batch-parity
-    * with the registered composition on arriving docs, spec-pinned.
+  /** Per-document keywords over a document stream — the registered
+    * `text_keywords` composition against a FROZEN
+    * [[graft.operators.TextAnalysis.textRank]] table: two CHAINED
+    * stateful aggregates (tf per term, then the top-k on m·rank_u).
+    * Unranked terms cannot be keywords. Emits (doc_id, term, score_u).
     */
   def keywordsStream(
       docs: DataFrame,
@@ -1454,21 +997,8 @@ object StreamingOps {
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    import graft.operators.TextAnalysis
-    val t = filter(TextAnalysis.tokens(lower(coalesce(col(textCol), lit("")))),
-      x => x =!= "")
-    val key = struct((-(col("m") * col("rank_u"))).as("ns"), col("term").as("term"))
-    docs
-      .select(col(idCol).as("doc_id"), col(tsCol).as("__ts"), explode(t).as("term"))
-      .withWatermark("__ts", watermark)
-      .join(ranks.select(col("term"), col("rank_u")), Seq("term"))
-      .groupBy(window(col("__ts"), windowDur), col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("m"), min(col("rank_u")).as("rank_u"))
-      .groupBy(window(window_time(col("window")), windowDur), col("doc_id"))
-      .agg(graft.functions.TopK.smallestK(key, k).as("top"))
-      .select(col("doc_id"), explode(col("top")).as("t"))
-      .select(col("doc_id"), col("t.term").as("term"),
-        (-col("t.ns")).as("score_u"))
+    TextAnalysis.keywordsBy(docs, idCol, textCol, ranks.select(col("term"), col("rank_u")),
+      k, ByWindow(tsCol, watermark, windowDur))
   }
 
   /** Per-period count for [[cusumShiftStream]]: `key` names the
@@ -1630,7 +1160,6 @@ object StreamingOps {
       watermark: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    import graft.operators.TextAnalysis
     docs
       .select(col(tsCol).as("__ts"),
         explode(TextAnalysis.tokens(lower(coalesce(col(textCol), lit(""))))).as("word"))

@@ -461,7 +461,7 @@ class NegativesSpec extends AnyFunSuite {
   }
 }
 
-class ZOrderSpec extends AnyFunSuite {
+class ZOrderSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -472,7 +472,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("saveZOrdered: every file covers a compact box on BOTH axes (stripes fail this)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val dir = tempDir("graft_zorder")
     // uniform 64x64 grid
     val grid = (for { x <- 0 until 64; y <- 0 until 64 } yield (x, y))
       .toDF("x", "y")

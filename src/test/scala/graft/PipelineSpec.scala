@@ -498,7 +498,7 @@ class SentencesSpec extends AnyFunSuite {
   }
 }
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -902,8 +902,7 @@ class DedupSpec extends AnyFunSuite {
     // admitted rows via the write-then-swap upsert, re-load — and a
     // replayed batch (foreachBatch at-least-once) changes nothing.
     import graft.streaming.StreamingOps
-    val dir = java.nio.file.Files.createTempDirectory("graft_semdedup_fold")
-      .toString + "/members"
+    val dir = tempDir("graft_semdedup_fold") + "/members"
     StreamingOps.upsertBatch(members, dir, Seq("id"), "sim_c")
     StreamingOps.upsertBatch(admitted, dir, Seq("id"), "sim_c")
     assert(rows(spark.read.parquet(dir)) == rows(rebuilt))
@@ -958,7 +957,7 @@ class DedupSpec extends AnyFunSuite {
     // standing assignment on disk -> load -> assign a new batch
     // against it -> union the result back -> persist. Round-trips
     // through parquet so the loop crosses session boundaries.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val dir = tempDir("graft_ingest")
     val standing0 = (1L to 6L).toDF("id")
       .join(Dedup.dedupClusters(Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")),
         Seq("id"), "left")
@@ -1054,7 +1053,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("dedup_decontam_curve: an order with no flagged pair reports zeros, not NULLs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_decontam_curve").toString
+    val dir = tempDir("graft_decontam_curve")
     Seq(
       (10L, "a b c d e f g h i j"),  // eval
       (20L, "b c d e f g"),          // eval
@@ -1628,12 +1627,12 @@ class IncrEmbedSpec extends AnyFunSuite {
   }
 }
 
-class LoadSkewSpec extends AnyFunSuite {
+class LoadSkewSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("load infers format from extension; csv honors the header flag (S1)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_load").toString
+    val dir = tempDir("graft_load")
     Seq((1, "a"), (2, "b")).toDF("id", "v").write.csv(s"$dir/t.csv")
     Seq((3, "c")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
     assert(sources.Load.load(spark, s"$dir/t.parquet").count() == 1)
@@ -1655,7 +1654,7 @@ class LoadSkewSpec extends AnyFunSuite {
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
     val fitted = Similarity.kmeansFit(emb.filter(col("embedding").isNotNull),
       init, "vec_id", "embedding", iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_index").toString + "/ivf"
+    val dir = tempDir("graft_index") + "/ivf"
     val params = Map("metric" -> "cosine", "trained_iters" -> "2",
       "note" -> "escape \"check\" \\ here")
     graft.sources.Sink.saveIndex(fitted, dir, params)
@@ -1673,7 +1672,7 @@ class LoadSkewSpec extends AnyFunSuite {
   }
 
   test("loadEvolved reconciles drifted part-file schemas; plain read drops the late column") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString + "/t"
+    val dir = tempDir("graft_evolve") + "/t"
     Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
     Seq((2L, "b", 9.5)).toDF("id", "v", "score")
       .write.mode("append").parquet(dir)
@@ -1688,7 +1687,7 @@ class LoadSkewSpec extends AnyFunSuite {
   test("explicit-schema load runs NO inference job and types the columns (S1 at scale)") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_load_schema").toString
+    val dir = tempDir("graft_load_schema")
     Seq((1, "a", 2.5), (2, "b", 3.5)).toDF("id", "v", "x")
       .write.option("header", "true").csv(s"$dir/t.csv")
     Seq((1, "a")).toDF("id", "v").write.json(s"$dir/t.json")
@@ -2043,12 +2042,12 @@ class MultimodalSpec extends AnyFunSuite {
   }
 }
 
-class SinkSpec extends AnyFunSuite {
+class SinkSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("saveFactByYear writes year partitions and round-trips (S6)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir("graft_sink")
     val fact = Seq(("1995-03-01", 10.0), ("1996-07-01", 20.0), ("1996-08-01", 30.0))
       .toDF("dt_entrada", "valor").withColumn("dt_entrada", to_date(col("dt_entrada")))
     sources.Sink.saveFactByYear(fact, s"$dir/fact")
@@ -2060,7 +2059,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("saveTimestamped uses the injected clock in the path (S6)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink2").toString
+    val dir = tempDir("graft_sink2")
     val p = sources.Sink.saveTimestamped(Seq(1, 2).toDF("x"), dir, "export",
       clock = () => "20260101_000000")
     assert(p == s"$dir/export_20260101_000000")
@@ -2068,7 +2067,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("shardAssign + saveSharded: deterministic shards, physically ordered files (round-trip)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard").toString
+    val dir = tempDir("graft_shard")
     val df = (0L until 200L).map(i => (i, s"payload_$i")).toDF("id", "payload")
     val sharded = operators.Sampling.shardAssign(df, "id", nShards = 4)
     // Partitioning-invariance: the assignment is a pure function of id.
@@ -2244,7 +2243,7 @@ class RetentionSpec extends AnyFunSuite {
   * wide (UTF-16) strings, LABELSST/NUMBER/RK/MULRK/BOOLERR, and
   * FORMULA with a cached STRING result.
   */
-class XlsSpec extends AnyFunSuite {
+class XlsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def le16(v: Int): Array[Byte] = Array((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte)
@@ -2403,7 +2402,7 @@ class XlsSpec extends AnyFunSuite {
   }
 
   private def writeXlsBytes(wb: Array[Byte]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xls").toString
+    val dir = tempDir("graft_xls")
     val p = s"$dir/legacy.xls"
     java.nio.file.Files.write(java.nio.file.Paths.get(p), cfb(wb))
     p
@@ -2520,7 +2519,7 @@ class XlsSpec extends AnyFunSuite {
   }
 }
 
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -2623,7 +2622,7 @@ class BpeSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val (mergeTable, wordMap) = graft.operators.Bpe.train(train, "text", merges = 3)
     val vocab = graft.operators.Bpe.vocab(wordMap)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tok").toString
+    val dir = tempDir("graft_tok")
     graft.sources.Sink.saveIndex(mergeTable, s"$dir/merges", Map("merges" -> "3"))
     graft.sources.Sink.saveIndex(vocab, s"$dir/vocab", Map("merges" -> "3"))
     val (m2, mp) = graft.sources.Load.loadIndex(spark, s"$dir/merges")
@@ -2723,7 +2722,7 @@ class BpeSpec extends AnyFunSuite {
   }
 }
 
-class XlsxSpec extends AnyFunSuite {
+class XlsxSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -2758,6 +2757,8 @@ class XlsxSpec extends AnyFunSuite {
     "Subgrupo", "Utiliza\u00e7\u00e3o", "Local", "Grupo",
     "Neg\u00f3cio", "Fabricante", "Valida\u00e7\u00e3o Andr\u00e9")
   private val richDesc = Seq("Bomba ", "submersa 12V")
+  private val phoneticKey = "FURI-0001"
+  private val phonetic = """<t>ABC</t><rPh sb="0" eb="3"><t>xyz</t></rPh><phoneticPr fontId="1"/>"""
   private val dimRows: Seq[Seq[String]] = Seq(
     Seq("CAL-CO-INNOVA", "Calibrador condutividade", "Reposi\u00e7\u00e3o",
       "Acess\u00f3rio", "Campo", "Estoque", "Calibra\u00e7\u00e3o", "Hidrologia", "Innova", null),
@@ -2774,10 +2775,14 @@ class XlsxSpec extends AnyFunSuite {
     Seq("SRV-CAL-01", "Servi\u00e7o de calibra\u00e7\u00e3o", "Servi\u00e7o",
       "Calibra\u00e7\u00e3o", "Laborat\u00f3rio", "Interno", "Servi\u00e7os", "Diversos", "Interno", null),
     Seq("INATIVO-0001", null, "Inativo",
-      "Inativo", "Inativo", "Inativo", "Inativo", "Inativo", "Inativo", null))
+      "Inativo", "Inativo", "Inativo", "Inativo", "Inativo", "Inativo", null),
+    // description: a shared string; type: an inline string — each with
+    // an `<rPh>` phonetic run (East Asian furigana), read as "ABC" alone
+    Seq(phoneticKey, "ABC", "ABC",
+      "Sonda", "Campo", "Estoque", "Sondas", "Hidrologia", "YSI", null))
 
   private lazy val excelBook: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_xlsx_base").toString + "/base.xlsx"
+    val p = tempDir("graft_xlsx_base") + "/base.xlsx"
     val sheet = dimHeader +: dimRows
     def isNumber(v: String) = v.nonEmpty && v.forall(_.isDigit)
     val textCells = sheet.flatten.filter(v => v != null && !isNumber(v))
@@ -2789,6 +2794,7 @@ class XlsxSpec extends AnyFunSuite {
       if (s == richDesc.mkString) richDesc.map(run =>
         s"""<r><rPr><sz val="11"/><rFont val="Calibri"/></rPr>${t(run)}</r>""")
         .mkString("<si>", "", "</si>")
+      else if (s == "ABC") s"<si>$phonetic</si>"
       else s"<si>${t(s)}</si>"
     val last = s"J${sheet.length}"
     val rowsXml = sheet.zipWithIndex.map { case (vals, i) =>
@@ -2797,6 +2803,8 @@ class XlsxSpec extends AnyFunSuite {
         val ref = s"${('A' + c).toChar}$r"
         if (v == null) { if (c == dimHeader.length - 1) s"""<c r="$ref" s="2"/>""" else "" }
         else if (isNumber(v)) s"""<c r="$ref"><v>$v</v></c>"""
+        else if (vals.head == phoneticKey && c == 2)
+          s"""<c r="$ref" t="inlineStr"><is>$phonetic</is></c>"""
         else if (r == 1) s"""<c r="$ref" s="1" t="s"><v>${sst(v)}</v></c>"""
         else s"""<c r="$ref" t="s"><v>${sst(v)}</v></c>"""
       }.mkString(s"""<row r="$r" spans="1:10">""", "", "</row>")
@@ -2922,6 +2930,9 @@ class XlsxSpec extends AnyFunSuite {
     assert(byKey("CEBD01035-00").getString(1) == "Bomba submersa 12V")
     assert(byKey("17").getString(1) == "Luva nitr\u00edlica")
     assert(byKey("17").isNullAt(8) && byKey("INATIVO-0001").isNullAt(1))
+    // phonetic runs are not cell text: shared and inline alike
+    assert(byKey(phoneticKey).getString(1) == "ABC" && byKey(phoneticKey).getString(2) == "ABC",
+      byKey(phoneticKey).toString)
     assert(df.where(org.apache.spark.sql.functions.col(
       "Valida\u00e7\u00e3o Andr\u00e9").isNotNull).isEmpty)
     // the preserved trailing space survives the read...
@@ -2949,7 +2960,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("hand-built workbook: numerics, shared/inline strings, gaps, booleans, header dedup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx").toString
+    val dir = tempDir("graft_xlsx")
     val p = s"$dir/mini.xlsx"
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(p))
     def put(name: String, body: String): Unit = {
@@ -2986,7 +2997,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("xlsx write -> read round-trips values, nulls, accents, and markup chars") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_w").toString
+    val dir = tempDir("graft_xlsx_w")
     val p = s"$dir/out.xlsx"
     val df = Seq(
       ("CEBD01035-00", "A\u00e7\u00e3o & <Teste>", Some(12.5)),
@@ -3029,7 +3040,7 @@ class XlsxSpec extends AnyFunSuite {
   test("banner row above headerRow does not inject phantom columns (pd.read_excel(header=n) parity)") {
     // A 5-cell title/banner row over a 2-column table: the schema must
     // come from the header+data rows only (round-10 ADVICE fix).
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_banner").toString
+    val dir = tempDir("graft_xlsx_banner")
     val p = s"$dir/banner.xlsx"
     val wide = Seq(
       ("Relatório", "Comercial", "Q1", "2024", "interno"),
@@ -3047,7 +3058,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("write escapes quotes in sheet names and strips XML-invalid control chars") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_esc").toString
+    val dir = tempDir("graft_xlsx_esc")
     val p = s"$dir/esc.xlsx"
     val df = Seq(("a\u0000b\u0007c", "keep\ttab and \"quotes\"")).toDF("k", "v")
     graft.sources.Xlsx.write(df, p, sheetName = "Aba \"Base\" & <1>")

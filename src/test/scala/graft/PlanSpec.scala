@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * silently regress. These assert on the executed plan of the real
   * registered queries over sf0.001.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -373,7 +373,7 @@ class PlanSpec extends AnyFunSuite {
     // "join to the current period" query reads one partition without
     // anyone spelling the year out. This is free from Catalyst once the
     // layout partitions by the join key — the point of saveFactByYear.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp")
     graft.sources.Sink.saveFactByYear(
       graft.sources.Tables.analiseComercial(spark, "/root/testdata/sf0.001"), s"$dir/fact")
     val fact = spark.read.parquet(s"$dir/fact")
@@ -1126,5 +1126,93 @@ class PlanSpec extends AnyFunSuite {
     // dimension side: explicit broadcast is intended
     assert(operators.Enrich.joinCategorias(fact, dim)
       .queryExecution.logical.toString.toLowerCase.contains("hint"))
+  }
+
+  test("folded stream entries: one source watermark, 1-2 streaming aggregates; batch bodies none") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, EventTimeWatermark, Join}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.{Bpe, Dedup, DocGrouping, Sampling, Similarity, TextAnalysis}
+    import graft.streaming.StreamingOps
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val text = MemoryStream[(Long, java.sql.Timestamp, String)].toDF.toDF("doc_id", "ts", "text")
+    val vecs = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])].toDF.toDF("vec_id", "ts", "embedding")
+    val qs = MemoryStream[(Long, java.sql.Timestamp, Seq[String])].toDF.toDF("query_id", "ts", "terms")
+    val feats = MemoryStream[(Long, java.sql.Timestamp)].toDF.toDF("n_chars", "ts")
+    // Static artifacts: hand-built frames with the served schemas.
+    val docs = Seq((1L, "a b c"), (2L, "b c d")).toDF("doc_id", "text")
+    val lm = Seq(("a", "b", 1L)).toDF("w1", "w2", "c")
+    val fences = Seq((-1.0, -0.5)).toDF("t_low", "t_high")
+    val nb = Seq(("a", 1L, 0L)).toDF("w", "c_pos", "c_neg")
+    val priors = Seq(Tuple1(0L)).toDF("prior_u")
+    val lr = Seq((0L, 1L)).toDF("b", "w_u")
+    val llr = Seq((0L, 1L)).toDF("b", "llr_u")
+    val bm25 = Seq(("a", 1L, 1L, 5L)).toDF("term", "doc_id", "tf", "contrib_u")
+    val ranks = Seq(("a", 1L)).toDF("term", "rank_u")
+    val merges = Seq((1, "a", "b")).toDF("merge_rank", "lhs", "rhs")
+    val vocab = Seq(("ab", 1)).toDF("token", "token_id")
+    val emb = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("vec_id", "embedding")
+    val cents = Seq((0L, Seq(1.0, 0.0))).toDF("c_id", "c_vec")
+    val members = Seq((1L, 0L, Seq(1.0, 0.0))).toDF("id", "cell", "vec")
+    val lineIdx = Seq("x").toDF("line_fp")
+    val gramIdx = Seq("x").toDF("fp")
+    val psiFences = Seq(Tuple1(Seq(100L))).toDF("fences")
+    val psiRef = Seq((0, 1L), (1, 1L)).toDF("bin", "n_ref")
+    val S = StreamingOps
+    // (entry, frame, streaming aggregates): 1 for the scorers, 2 for
+    // the chained top-k entries and the PSI monitor.
+    val folded: Seq[(String, DataFrame, Int)] = Seq(
+      ("lmScoreStream", S.lmScoreStream(text, "doc_id", "text", "ts", lm, fences), 1),
+      ("nbScoreStream", S.nbScoreStream(text, "doc_id", "text", "ts", nb, priors), 1),
+      ("lrScoreStream", S.lrScoreStream(text, "doc_id", "text", "ts", lr, 4), 1),
+      ("dsirScoreStream", S.dsirScoreStream(text, "doc_id", "text", "ts", llr, 4), 1),
+      ("bpeEncodeStream", S.bpeEncodeStream(text, "doc_id", "text", "ts", merges), 1),
+      ("bpeEncodeIdsStream",
+        S.bpeEncodeIdsStream(text, "doc_id", "text", "ts", merges, vocab), 1),
+      ("bpeEncodeIdsBytesStream",
+        S.bpeEncodeIdsBytesStream(text, "doc_id", "text", "ts", merges, vocab), 1),
+      ("ivfTopKStream",
+        S.ivfTopKStream(vecs, emb, cents, "vec_id", "embedding", "ts", 2, 1), 1),
+      ("semDedupStream",
+        S.semDedupStream(vecs, "vec_id", "embedding", "ts", cents, members, 0.9), 1),
+      ("lineBoilerStream", S.lineBoilerStream(text, "doc_id", "text", "ts", lineIdx), 1),
+      ("exactSubstrStream", S.exactSubstrStream(text, "doc_id", "text", "ts", gramIdx, 2), 1),
+      ("bm25TopKStream", S.bm25TopKStream(qs, "query_id", "terms", "ts", bm25, 3), 2),
+      ("keywordsStream", S.keywordsStream(text, "doc_id", "text", "ts", ranks), 2),
+      ("psiDriftStream", S.psiDriftStream(feats, "n_chars", "ts", psiFences, psiRef), 2))
+    folded.foreach { case (name, df, aggs) =>
+      val p = df.queryExecution.analyzed
+      val marks = p.collect { case w: EventTimeWatermark => w }.size
+      val stateful = p.collect { case a: Aggregate if a.isStreaming => a }.size
+      val ssJoins = p.collect { case j: Join if j.left.isStreaming && j.right.isStreaming => j }.size
+      assert(df.isStreaming && marks == 1 && stateful == aggs && ssJoins == 0,
+        s"$name: $marks watermarks, $stateful streaming aggregates (want 1, $aggs), " +
+          s"$ssJoins stream-stream joins\n$p")
+    }
+    // The same bodies grouped by document stay plain batch plans.
+    val byDoc = DocGrouping.ByDoc
+    val batch: Seq[(String, DataFrame)] = Seq(
+      ("lmScored", TextAnalysis.lmScored(lm, docs, "doc_id", "text", byDoc)),
+      ("nbScore", TextAnalysis.nbScore(nb, priors, docs, "doc_id", "text")),
+      ("lrScore", TextAnalysis.lrScore(lr, docs, "doc_id", "text", 4)),
+      ("dsirLogW", Sampling.dsirLogW(byDoc.counts(Sampling.dsirBigrams(docs, "doc_id", "text", 4),
+        $"doc_id", $"b"), llr, byDoc)),
+      ("encodeCounts", Bpe.encodeCounts(docs, "doc_id", "text", merges)),
+      ("encodeIds", Bpe.encodeIds(docs, "doc_id", "text", merges, vocab)),
+      ("encodeIdsBytes", Bpe.encodeIdsBytes(docs, "doc_id", "text", merges, vocab)),
+      ("ivfTopKProbed", Similarity.ivfTopKProbed(emb, emb, cents, "vec_id", "embedding", 2, 1)),
+      ("semDedupCorpusPairs", Dedup.semDedupCorpusPairs(members, members, 0.9, byDoc)),
+      ("removeBoilerplateLines", TextAnalysis.removeBoilerplateLines(docs, "doc_id", "text", 2)),
+      ("exactSubstrAgainstCorpus",
+        Dedup.exactSubstrAgainstCorpus(docs, docs, "doc_id", "text", 2)),
+      ("bm25TopKFromIndex", TextAnalysis.bm25TopKFromIndex(bm25,
+        Seq((1L, "a")).toDF("query_id", "term"), 3)),
+      ("keywordsBy", TextAnalysis.keywordsBy(docs, "doc_id", "text", ranks, 3, byDoc)))
+    batch.foreach { case (name, df) =>
+      val p = df.queryExecution.analyzed
+      assert(!df.isStreaming && p.collect { case w: EventTimeWatermark => w }.isEmpty,
+        s"$name grouped by document carries a watermark:\n$p")
+    }
   }
 }

@@ -1,19 +1,17 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingOps
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("pendentesStream unions weekly snapshot files with provenance tag (S5/U1 streaming)") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     val week1 = Seq(("PENDENTE", 10.0), ("GANHO", 99.0), ("PENDENTE", 20.0))
       .toDF("status_processo", "valor_proposta")
     val week2 = Seq(("PENDENTE", 30.0), ("PERDIDO", 1.0))
@@ -38,7 +36,7 @@ class StreamingSpec extends AnyFunSuite {
   test("eventCounts: watermarked window aggregation over a memory stream") {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val dir = Files.createTempDirectory("graft_stream2").toString
+    val dir = tempDir("graft_stream2")
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
     ms.addData((ts(5), "click", 1.0), (ts(10), "click", 2.0), (ts(20), "view", 5.0))
 
@@ -58,7 +56,7 @@ class StreamingSpec extends AnyFunSuite {
   test("trendingTerms counts tokens per window with batch-parity tokenization") {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[(java.sql.Timestamp, String)]
-    val dir = Files.createTempDirectory("graft_stream_tt").toString
+    val dir = tempDir("graft_stream_tt")
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
     ms.addData(
       (ts(5), "Spark spark  runs"),   // double space + case: one 'spark' x2
@@ -85,7 +83,7 @@ class StreamingSpec extends AnyFunSuite {
   test("trendingTopK batch finisher ranks the stream's completed windows (D13 loop closed)") {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[(java.sql.Timestamp, String)]
-    val dir = Files.createTempDirectory("graft_stream_ttk").toString
+    val dir = tempDir("graft_stream_ttk")
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
     val data = Seq(
       (ts(5), "spark spark runs"),
@@ -136,7 +134,7 @@ class StreamingSpec extends AnyFunSuite {
     // that makes the chunking stage reusable in an ingest stream.
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[(Long, String)]
-    val dir = Files.createTempDirectory("graft_stream_chunk").toString
+    val dir = tempDir("graft_stream_chunk")
     val docs = Seq((1L, (1 to 45).map(i => s"t$i").mkString(" ")), (2L, "a b c"))
     ms.addData(docs: _*)
     val chunked = graft.operators.TextAnalysis.chunkDocs(
@@ -164,7 +162,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = Seq((1L, "low low newest"), (2L, "widest lowest"), (3L, "??? !!!"))
     val ms = MemoryStream[(Long, java.sql.Timestamp, String)]
     ms.addData(docs.map { case (id, t) => (id, t0, t) }: _*)
-    val dir = Files.createTempDirectory("graft_stream_bpe").toString
+    val dir = tempDir("graft_stream_bpe")
     val enc = StreamingOps.bpeEncodeStream(
       ms.toDF.toDF("doc_id", "ts", "text"), "doc_id", "text", "ts", mergeTable)
     val q = enc.writeStream.format("memory").queryName("bpe_stream_test")
@@ -198,7 +196,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = Seq((1L, "cc aa bb"), (2L, "aa aa"), (3L, "???"))
     val ms = MemoryStream[(Long, java.sql.Timestamp, String)]
     ms.addData(docs.map { case (id, t) => (id, t0, t) }: _*)
-    val dir = Files.createTempDirectory("graft_stream_bpe_ids").toString
+    val dir = tempDir("graft_stream_bpe_ids")
     val enc = StreamingOps.bpeEncodeIdsStream(
       ms.toDF.toDF("doc_id", "ts", "text"), "doc_id", "text", "ts", mergeTable, vocab)
     val q = enc.writeStream.format("memory").queryName("bpe_ids_stream_test")
@@ -230,7 +228,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = Seq((1L, "abc abz"), (2L, "zz"), (3L, "???"))
     val ms = MemoryStream[(Long, java.sql.Timestamp, String)]
     ms.addData(docs.map { case (id, t) => (id, t0, t) }: _*)
-    val dir = Files.createTempDirectory("graft_stream_bpe_bytes").toString
+    val dir = tempDir("graft_stream_bpe_bytes")
     val enc = StreamingOps.bpeEncodeIdsBytesStream(
       ms.toDF.toDF("doc_id", "ts", "text"), "doc_id", "text", "ts", mergeTable, vocab)
     val q = enc.writeStream.format("memory").queryName("bpe_bytes_stream_test")
@@ -262,7 +260,7 @@ class StreamingSpec extends AnyFunSuite {
     // The offline-build/online-serve loop: the model artifact and the
     // calibration fences round-trip through saveIndex/loadIndex and
     // the SERVER consumes the loaded frames, not the session's.
-    val dir = Files.createTempDirectory("graft_stream_lm").toString
+    val dir = tempDir("graft_stream_lm")
     graft.sources.Sink.saveIndex(
       TextAnalysis.lmBigramModel(train, "doc_id", "text"),
       s"$dir/model", Map("order" -> "2", "smoothing" -> "add-1"))
@@ -310,7 +308,7 @@ class StreamingSpec extends AnyFunSuite {
     // The offline-build/online-serve loop: model + prior round-trip
     // through saveIndex/loadIndex; the server consumes the LOADED
     // frames.
-    val dir = Files.createTempDirectory("graft_stream_nb").toString
+    val dir = tempDir("graft_stream_nb")
     graft.sources.Sink.saveIndex(model, s"$dir/model",
       Map("family" -> "multinomial-nb", "smoothing" -> "add-1"))
     graft.sources.Sink.saveIndex(priors, s"$dir/priors", Map("kind" -> "log-odds-prior"))
@@ -352,7 +350,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(batchRows.map(_._1) == Set(1L, 2L))
     // Offline-build/online-serve: the scored postings round-trip
     // through saveIndex/loadIndex; the server consumes the LOADED frame.
-    val dir = Files.createTempDirectory("graft_stream_bm25").toString
+    val dir = tempDir("graft_stream_bm25")
     graft.sources.Sink.saveIndex(TextAnalysis.bm25Index(docs, "doc_id", "text"),
       s"$dir/idx", Map("family" -> "bm25", "k1" -> "6/5", "b" -> "3/4"))
     val (idx, params) = graft.sources.Load.loadIndex(spark, s"$dir/idx")
@@ -392,7 +390,7 @@ class StreamingSpec extends AnyFunSuite {
       (1L, "alpha beta gamma alpha beta"),
       (2L, "alpha beta delta gamma beta"),
       (3L, "gamma delta alpha beta gamma")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_stream_kw").toString
+    val dir = tempDir("graft_stream_kw")
     graft.sources.Sink.saveIndex(
       TextAnalysis.textRank(corpus, "doc_id", "text", window = 2, iters = 5)
         .select($"term", $"rank_u"),
@@ -486,7 +484,7 @@ class StreamingSpec extends AnyFunSuite {
     val out = StreamingOps.semDedupStream(
       ms.toDF.toDF("vec_id", "ts", "embedding"),
       "vec_id", "embedding", "ts", cents, members, minCosine = 0.9)
-    val dir = Files.createTempDirectory("graft_stream_semdedup").toString
+    val dir = tempDir("graft_stream_semdedup")
     val q = out.writeStream.format("memory").queryName("semdedup_stream_test")
       .outputMode("update").option("checkpointLocation", s"$dir/ckpt").start()
     try q.processAllAvailable() finally q.stop()
@@ -530,7 +528,7 @@ class StreamingSpec extends AnyFunSuite {
       model, buckets = 64)
     val q = out.writeStream.format("memory").queryName("lr_stream_test")
       .outputMode("update").option("checkpointLocation",
-        Files.createTempDirectory("graft_lr_stream").toString).start()
+        tempDir("graft_lr_stream")).start()
     try q.processAllAvailable() finally q.stop()
     val got = spark.table("lr_stream_test")
       .as[(Long, Long, Double, Boolean)].collect().toSet
@@ -551,7 +549,7 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = Seq(
       (1L, s"corpus body one $blurb trailing words"),
       (2L, "a completely different corpus document body here")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_stream_substr").toString
+    val dir = tempDir("graft_stream_substr")
     graft.sources.Sink.saveIndex(
       Dedup.substrGramIndex(corpus, "doc_id", "text", n = 8),
       s"$dir/idx", Map("family" -> "exact_substr", "n" -> "8"))
@@ -595,7 +593,7 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = (1L to 5L)
       .map(i => (i, s"NAV HOME\nunique corpus body $i\nALL RIGHTS"))
       .toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_stream_lineboiler").toString
+    val dir = tempDir("graft_stream_lineboiler")
     graft.sources.Sink.saveIndex(
       TextAnalysis.boilerplateLineIndex(corpus, "doc_id", "text", minDocs = 3),
       s"$dir/idx", Map("family" -> "line_boiler", "min_docs" -> "3"))
@@ -643,7 +641,7 @@ class StreamingSpec extends AnyFunSuite {
     // Frozen artifact: fences [100, 200] -> 3 bins; reference counts
     // (4, 4, 2), np = 10, B = 3 — round-tripped through
     // saveIndex/loadIndex like every serving twin.
-    val dir = Files.createTempDirectory("graft_stream_psi").toString
+    val dir = tempDir("graft_stream_psi")
     graft.sources.Sink.saveIndex(
       Seq((0, 4L), (1, 4L), (2, 2L)).toDF("bin", "n_ref"),
       s"$dir/ref", Map("family" -> "psi", "feature" -> "n_chars"))
@@ -710,7 +708,7 @@ class StreamingSpec extends AnyFunSuite {
     val batchRows = batch.as[(Long, Long, Double)].collect().toSet
     assert(batchRows.size == 3)
     // Offline artifact: full-bucket-domain llr table, frozen + reloaded.
-    val dir = Files.createTempDirectory("graft_stream_dsir").toString
+    val dir = tempDir("graft_stream_dsir")
     val llr = Sampling.dsirLlrTable(target, rawPool, "doc_id", "text", buckets)
     assert(llr.count() == buckets, "llr table must cover the FULL literal bucket domain")
     graft.sources.Sink.saveIndex(llr, s"$dir/llr",
@@ -752,7 +750,7 @@ class StreamingSpec extends AnyFunSuite {
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
     val ms = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
     ms.addData(qRows.toSeq.map { case (id, v) => (id, t0, v) }: _*)
-    val dir = Files.createTempDirectory("graft_stream_ann").toString
+    val dir = tempDir("graft_stream_ann")
     val served = StreamingOps.ivfTopKStream(
       ms.toDF.toDF("vec_id", "ts", "embedding"), emb, centroids,
       "vec_id", "embedding", "ts", k = 5, nprobe = 2)
@@ -787,7 +785,7 @@ class StreamingSpec extends AnyFunSuite {
       emb.filter($"embedding".isNotNull),
       graft.operators.Similarity.kmeansInit(emb, "vec_id", "embedding", 8),
       "vec_id", "embedding", iters = 2)
-    val idxDir = Files.createTempDirectory("graft_serve_idx").toString + "/ivf"
+    val idxDir = tempDir("graft_serve_idx") + "/ivf"
     graft.sources.Sink.saveIndex(fitted, idxDir, Map("metric" -> "cosine", "iters" -> "2"))
     val (loaded, params) = graft.sources.Load.loadIndex(spark, idxDir)
     assert(params("metric") == "cosine")
@@ -797,7 +795,7 @@ class StreamingSpec extends AnyFunSuite {
     def serve(cents: org.apache.spark.sql.DataFrame, name: String): Set[(Long, Long, Double)] = {
       val ms = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
       ms.addData(qRows.toSeq.map { case (id, v) => (id, t0, v) }: _*)
-      val dir = Files.createTempDirectory(s"graft_serve_$name").toString
+      val dir = tempDir(s"graft_serve_$name")
       val served = StreamingOps.ivfTopKStream(
         ms.toDF.toDF("vec_id", "ts", "embedding"), emb,
         cents.select($"c_id", $"c_vec"), "vec_id", "embedding", "ts",
@@ -823,7 +821,7 @@ class StreamingSpec extends AnyFunSuite {
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
     val ms = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
     ms.addData(batchRows.toSeq.map { case (id, v) => (id, t0, v) }: _*)
-    val dir = Files.createTempDirectory("graft_stream_embdd").toString
+    val dir = tempDir("graft_stream_embdd")
     val flagged = StreamingOps.embedNearDupStream(
       ms.toDF.toDF("vec_id", "ts", "embedding"), corpus,
       "vec_id", "embedding", "ts",
@@ -846,7 +844,7 @@ class StreamingSpec extends AnyFunSuite {
   test("dedupStream keeps first arrival per fingerprint within the watermark") {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[(java.sql.Timestamp, String)]
-    val dir = Files.createTempDirectory("graft_stream4").toString
+    val dir = tempDir("graft_stream4")
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
     // "A  b" and " a b " normalize to the same fingerprint
     ms.addData((ts(1), "A  b"), (ts(2), " a b "), (ts(3), "different text"))
@@ -893,7 +891,7 @@ class StreamingSpec extends AnyFunSuite {
       "t3 must be novel")
 
     val ms = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val dir = Files.createTempDirectory("graft_stream5").toString
+    val dir = tempDir("graft_stream5")
     def ts(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     val out = StreamingOps.nearDupStream(
       ms.toDF.toDF("ts", "doc_id", "text"),
@@ -921,7 +919,7 @@ class StreamingSpec extends AnyFunSuite {
   test("upsertSink maintains a latest-version parquet table across micro-batches") {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[(Long, String, Int)]
-    val dir = Files.createTempDirectory("graft_upsert").toString
+    val dir = tempDir("graft_upsert")
     val table = s"$dir/table"
     val q = StreamingOps.upsertSink(
       ms.toDF.toDF("k", "v", "version"),
@@ -938,7 +936,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsertBatch is idempotent: re-applying the same batch leaves the table identical") {
-    val dir = Files.createTempDirectory("graft_upsert_idem").toString
+    val dir = tempDir("graft_upsert_idem")
     val table = s"$dir/t"
     import spark.implicits._
     val b1 = Seq((1L, "a", 0), (2L, "b", 0)).toDF("k", "v", "version")
@@ -959,7 +957,7 @@ class StreamingSpec extends AnyFunSuite {
     // but before publish: the table path is missing, the full previous
     // table sits under __old. The next batch must restore it and merge
     // on top — the round-10 delete-then-rename would have lost it.
-    val dir = Files.createTempDirectory("graft_upsert_crash").toString
+    val dir = tempDir("graft_upsert_crash")
     val table = s"$dir/t"
     import spark.implicits._
     val b1 = Seq((1L, "a", 0), (2L, "b", 0)).toDF("k", "v", "version")
@@ -985,7 +983,7 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val ms = MemoryStream[FunnelEvent]
-      val dir = Files.createTempDirectory("graft_stream_funnel2").toString
+      val dir = tempDir("graft_stream_funnel2")
       val steps = Seq("view", "click", "purchase")
       val out = StreamingOps.funnelStreamV2(ms.toDS(), steps)
       val q = out.writeStream.format("memory").queryName("funnel2_test")
@@ -1030,7 +1028,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r._1.toLocalDate.getDayOfMonth.toLong, r._2, r._3, r._4, r._5, r._6))
       .toSet
     val ms = MemoryStream[CusumPoint]
-    val dir = Files.createTempDirectory("graft_stream_holt").toString
+    val dir = tempDir("graft_stream_holt")
     val out = StreamingOps.holtForecastStream(ms.toDS(), alphaDen = 5, betaDen = 10)
     val q = out.writeStream.format("memory").queryName("holt_test")
       .outputMode("update").option("checkpointLocation", s"$dir/ckpt").start()
@@ -1076,7 +1074,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[(java.sql.Date, Long, Long, Long, Boolean)].collect()
       .map(r => (r._1.toLocalDate.getDayOfMonth.toLong, r._2, r._3, r._4, r._5)).toSet
     val ms = MemoryStream[CusumPoint]
-    val dir = Files.createTempDirectory("graft_stream_cusum").toString
+    val dir = tempDir("graft_stream_cusum")
     val out = StreamingOps.cusumShiftStream(ms.toDS(), med = 102L, mad = 4L, hMads = 5)
     val q = out.writeStream.format("memory").queryName("cusum_test")
       .outputMode("update").option("checkpointLocation", s"$dir/ckpt").start()
@@ -1107,7 +1105,7 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val ms = MemoryStream[TimedFunnelEvent]
-      val dir = Files.createTempDirectory("graft_abandon").toString
+      val dir = tempDir("graft_abandon")
       def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
       val out = StreamingOps.abandonedFunnelStream(
         ms.toDS(), Seq("view", "click", "purchase"), timeoutMs = 5 * 60 * 1000L)
@@ -1140,7 +1138,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     val imps = MemoryStream[(Long, Long, java.sql.Timestamp)]
     val clks = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val dir = Files.createTempDirectory("graft_stream_ss").toString
+    val dir = tempDir("graft_stream_ss")
     def ts(m: Int, s2: Int = 0) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:$s2%02d")
 
     val out = StreamingOps.attributeClicks(
@@ -1170,7 +1168,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     val imps = MemoryStream[(Long, Long, java.sql.Timestamp)]
     val clks = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val dir = Files.createTempDirectory("graft_stream_sso").toString
+    val dir = tempDir("graft_stream_sso")
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
 
     val out = StreamingOps.attributeClicksOuter(
@@ -1210,7 +1208,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     import StreamingOps.{FunnelEvent, FunnelProgress}
     val ms = MemoryStream[FunnelEvent]
-    val dir = Files.createTempDirectory("graft_stream_funnel").toString
+    val dir = tempDir("graft_stream_funnel")
     val steps = Seq("view", "click", "purchase")
 
     val out = StreamingOps.funnelStream(ms.toDS(), steps)
@@ -1257,7 +1255,7 @@ class StreamingSpec extends AnyFunSuite {
   test("enrichStream: stream-static left join enriches batches, keeps unmatched rows") {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[(String, Double)]
-    val dir = Files.createTempDirectory("graft_stream6").toString
+    val dir = tempDir("graft_stream6")
     val dim = Seq(("P1", "FERRAMENTAS"), ("P2", "QUIMICOS")).toDF("codigo_produto", "grupo")
     ms.addData(("P1", 10.0), ("P9", 5.0))
 
@@ -1317,7 +1315,7 @@ class StreamingSpec extends AnyFunSuite {
   test("sessionize: flatMapGroupsWithState accumulates per-user state") {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[StreamingOps.UserEvent]
-    val dir = Files.createTempDirectory("graft_stream3").toString
+    val dir = tempDir("graft_stream3")
     ms.addData(
       StreamingOps.UserEvent(1L, 1000L, 10.0),
       StreamingOps.UserEvent(1L, 2000L, 5.0),
@@ -1340,7 +1338,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 }
 
-class SketchStreamSpec extends AnyFunSuite {
+class SketchStreamSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -1351,7 +1349,7 @@ class SketchStreamSpec extends AnyFunSuite {
     // One window, two micro-batches (forces a state-store round-trip
     // through the aggregate's serialize/deserialize): vocabulary of 3
     // fits k=8, so the summary must be EXACT — the deterministic pin.
-    val dir = Files.createTempDirectory("graft_stream_mg").toString
+    val dir = tempDir("graft_stream_mg")
     val ms = MemoryStream[(java.sql.Timestamp, String)]
     ms.addData((t0, "a a b"), (t0, "a c"))
     val out = StreamingOps.topWordsSketchStream(
@@ -1378,7 +1376,7 @@ class SketchStreamSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     val t0 = java.sql.Timestamp.valueOf("2024-01-02 10:00:00")
     val late = java.sql.Timestamp.valueOf("2024-01-02 12:00:00")
-    val dir = Files.createTempDirectory("graft_stream_mg2").toString
+    val dir = tempDir("graft_stream_mg2")
     // 30 distinct noise words + one heavy word against k=4: the heavy
     // word's count (20) > N/(k+1) = 50/5 = 10, so it MUST survive.
     val noise = (1 to 30).map(i => s"w$i").grouped(5).map(_.mkString(" ")).toSeq
@@ -1413,7 +1411,7 @@ class SketchStreamSpec extends AnyFunSuite {
     val t0 = java.sql.Timestamp.valueOf("2024-01-03 10:00:00")
     val t1 = java.sql.Timestamp.valueOf("2024-01-03 10:10:00")
     val late = java.sql.Timestamp.valueOf("2024-01-03 12:00:00")
-    val dir = Files.createTempDirectory("graft_stream_qr").toString
+    val dir = tempDir("graft_stream_qr")
     // Frozen domain: lo=0, width=10, 8 bins ([0,80) + clamp). Window 1
     // (split across two micro-batches — a forced state round-trip):
     // sorted units 0,5,12,23,34,45,67,79,999,999 with the 999s
@@ -1452,7 +1450,7 @@ class SketchStreamSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     val t0 = java.sql.Timestamp.valueOf("2024-01-04 10:00:00")
     val late = java.sql.Timestamp.valueOf("2024-01-04 12:00:00")
-    val dir = Files.createTempDirectory("graft_stream_theta").toString
+    val dir = tempDir("graft_stream_theta")
     // Segments A: e1..e6, B: e4..e9 -> union 9, intersection 3. Every
     // row is sent TWICE across two micro-batches (a forced state
     // round-trip), plus extra e1 repeats — without the dedup stage the
@@ -1492,7 +1490,7 @@ class SketchStreamSpec extends AnyFunSuite {
     implicit val sql = spark.sqlContext
     val t0 = java.sql.Timestamp.valueOf("2024-01-05 10:00:00")
     val late = java.sql.Timestamp.valueOf("2024-01-05 12:00:00")
-    val dir = Files.createTempDirectory("graft_stream_theta2").toString
+    val dir = tempDir("graft_stream_theta2")
     // 20 elements per segment, 8 shared, k = 4 << union: the real
     // estimator path. Expectation = the BATCH chain on the same
     // distinct rows (PipelineQueries.thetaPairEst — the dsirScoreStream
@@ -1525,7 +1523,7 @@ class SketchStreamSpec extends AnyFunSuite {
   }
 }
 
-class NswStreamSpec extends AnyFunSuite {
+class NswStreamSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -1556,7 +1554,7 @@ class NswStreamSpec extends AnyFunSuite {
     assert(batchRows.exists { case (q, nid, _) => q == 100L && nid == 8L },
       "batch fixture lost its unreachable-without-walking property")
     // Offline-build/online-serve: the graph round-trips saveIndex.
-    val dir = Files.createTempDirectory("graft_stream_nsw").toString
+    val dir = tempDir("graft_stream_nsw")
     graft.sources.Sink.saveIndex(graphDf, s"$dir/idx",
       Map("family" -> "nsw", "degree" -> "2"))
     val (frozen, params) = graft.sources.Load.loadIndex(spark, s"$dir/idx")
