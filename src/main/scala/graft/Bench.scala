@@ -178,7 +178,8 @@ object Bench {
       records(name) = error match {
         case None =>
           System.err.println(f"[bench] pass$pass $name $sec%.3f s tasks=${p.tasks.tasks} " +
-            f"task_cpu_share=${p.tasks.cpuShare}%.2f jvm_cpu_share=$jvmShare%.2f" +
+            f"task_cpu_share=${p.tasks.cpuShare}%.2f jvm_cpu_share=$jvmShare%.2f " +
+            f"gc=${p.tasks.gcMs / 1e3}%.2f s spill=${p.tasks.spillBytes / 1048576.0}%.1f MB" +
             (if (p.stalled) " STALLED" else ""))
           r.copy(passes = r.passes :+ p)
         case Some(m) =>

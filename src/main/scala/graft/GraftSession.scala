@@ -7,6 +7,10 @@ import graft.sources.Tables
 
 /** Session factory with the configuration this engine assumes.
   *
+  * Its Tungsten page is a fixed 1 MB, sized for the sub-MB tasks of
+  * interactive queries; the `spark.buffer.pageSize` entry in [[local]]
+  * gives the measurements and the limit this sets.
+  *
   * Local mode is a single JVM; the same settings (AQE, sane shuffle
   * partition counts, UTC dates) are what we'd set cluster-side. At the
   * 100 TB tier the shuffle-partition count is sized by AQE coalescing
@@ -85,6 +89,25 @@ object GraftSession {
       // "simple" keeps the event contract and costs one cheap
       // treeString; nothing in this library reads the description.
       .config("spark.sql.ui.explainMode", "simple")
+      // Tungsten page: the unit in which every sort, hash aggregate and
+      // hash map allocates execution memory. Spark's default is the
+      // execution pool ÷ cores ÷ 16 rounded up to a power of two, capped
+      // at 64 MB, which a 7 GB heap on 4 cores reaches. Each sort or hash-aggregate
+      // task then allocates and zeroes at least one 64 MB page, and
+      // under G1 (4 MB regions at that heap) the page is a humongous
+      // object. On this engine's interactive queries a task's input is
+      // well under 1 MB. Measured at sf0.01 (4 cores, 7 GB heap), the
+      // final HashAggregate of `a1_groupby_sum` (a few groups) had
+      // peakMemory 64.2 MiB and `w_rolling_7d`'s window Sort 256.5 MiB
+      // over 4 tasks; with 1 MB pages they have 1.25 MiB and 4.5 MiB. A
+      // bigger task simply takes more pages, and a record larger than a
+      // page gets a page of its own. Limit: a task's page table holds
+      // 8192 pages, so one task can hold at most 8 GB of pages, and past
+      // that Spark fails the task rather than spilling. A 7 GB heap's
+      // whole execution pool is about 4 GB, so no task reaches it; above
+      // a heap of about 14 GB (build.sbt's 32g default) a lone task with
+      // more than 8 GB of sort or aggregate state could.
+      .config("spark.buffer.pageSize", "1m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -93,12 +116,19 @@ object GraftSession {
   /** The session the harness mains (Bench, Diag, PlanDump) run queries in.
     *   - `graft.load.repartition` is the core count, so the warm views
     *     hold one partition per core; single-row-group test files would
-    *     otherwise pin every scan-side stage to one task ([[Tables]]
-    *     `spread`).
+    *     otherwise pin every scan-side stage to one task
+    *     ([[graft.sources.Tables]] `spread`).
     *   - The five shared views are persisted up front. Spark's
     *     CacheManager substitutes the cached relation into every query
-    *     whose subplan matches, so the 5-way fact join is built once,
-    *     as a warm server would hold it.
+    *     whose subplan matches, so the 5-way fact join is executed
+    *     once, as a warm server would hold it.
+    *   - The fact and dimension views are also session handles:
+    *     [[graft.sources.Tables.analiseComercial]] and
+    *     [[graft.sources.Tables.classificacaoProdutos]]
+    *     hand every later query the same analyzed plan that was
+    *     persisted here, so a query neither re-reads the five tables
+    *     nor re-analyzes the join. The repartition conf is set before
+    *     they are built because it is part of their memo key.
     */
   def harness(appName: String, sfDir: String): SparkSession = {
     val spark = local(appName = appName)

@@ -13,7 +13,7 @@ import graft.sources.Tables
   *
   * The oracle SQL re-derives every hash/signature from first principles
   * (md5 + list comprehensions) rather than trusting the Spark output —
-  * which is exactly why all hashing in [[Dedup]]/[[TextAnalysis]] is
+  * which is exactly why all hashing in [[graft.operators.Dedup]]/[[graft.operators.TextAnalysis]] is
   * md5-based instead of Spark-internal murmur/xxhash.
   */
 object PipelineQueries {
@@ -30,9 +30,9 @@ object PipelineQueries {
            |FROM documents GROUP BY 1""".stripMargin))
 
   /** Shared DuckDB MinHash+LSH pipeline over a pluggable shingle
-    * expression (mirrors [[Dedup.minhashPairsKernel]]: 16 hashes from
+    * expression (mirrors [[graft.operators.Dedup.minhashPairsKernel]]: 16 hashes from
     * one md5 per shingle + the affine rehash family, 4 bands × 4 rows,
-    * hot buckets over [[Dedup.LshMaxBucket]] dropped, Jaccard verify
+    * hot buckets over [[graft.operators.Dedup.LshMaxBucket]] dropped, Jaccard verify
     * over the distinct md5 HASH sets — the same sets the engine
     * intersects, so agreement is by construction).
     */
@@ -101,7 +101,7 @@ object PipelineQueries {
     s"""WITH ${minhashPairsCtes(shinglesSql, threshold, cap)}
        |SELECT id_a, id_b, jac FROM mpairs""".stripMargin
 
-  /** The distinct k-word-shingle expression ([[Dedup.wordShingles]]'
+  /** The distinct k-word-shingle expression ([[graft.operators.Dedup.wordShingles]]'
     * DuckDB mirror) over `string_split_regex(trim(lower(text)))`.
     */
   /** The `dedup_minhash_capped` adversarial crowd text — long enough
@@ -161,7 +161,7 @@ object PipelineQueries {
       0.4, cap = 20)))
 
   /** EXACT near-dup join via prefix filtering
-    * ([[Dedup.prefixFilterPairs]] — AllPairs/PPJoin) at the
+    * ([[graft.operators.Dedup.prefixFilterPairs]] — AllPairs/PPJoin) at the
     * `dedup_minhash` operating point (3-word shingles, jac ≥ 2/5):
     * the recall-1.0 reference beside the probabilistic family. Same
     * similarity space as `dedup_minhash`'s verify stage (distinct
@@ -218,7 +218,7 @@ object PipelineQueries {
             |FROM ver WHERE i * 5 >= (ab - i) * 2 AND (ab - i) > 0""".stripMargin))
 
   /** Cross-document exact-substring removal
-    * ([[Dedup.exactSubstrDedup]], Lee et al. 2022 ExactSubstr): cut
+    * ([[graft.operators.Dedup.exactSubstrDedup]], Lee et al. 2022 ExactSubstr): cut
     * every verbatim 8-token span that also appears in an earlier
     * document, keeping the copy in the gram's minimum doc_id — the
     * span-granular dedup tier the whole-document fuzzy family cannot
@@ -269,7 +269,7 @@ object PipelineQueries {
            |FROM cut""".stripMargin))
 
   /** Incremental exact-substring scrub
-    * ([[Dedup.exactSubstrAgainstCorpus]] — the arrival-time member
+    * ([[graft.operators.Dedup.exactSubstrAgainstCorpus]] — the arrival-time member
     * of the D28 family, the D9/D21/D25d ingest posture at span
     * granularity): batch docs (doc_id < 20) lose every verbatim
     * 8-token span already present in the standing corpus
@@ -478,11 +478,11 @@ object PipelineQueries {
     * P(candidate | jac=s) = 1−(1−s^r)^b made measurable on the real
     * corpus). Ground truth is COMPLETE and never all-pairs: any pair
     * with jac > 0 shares a shingle, so the shingle-hash inverted
-    * index (hot postings capped, [[Dedup.LshMaxBucket]]) is a truth
+    * index (hot postings capped, [[graft.operators.Dedup.LshMaxBucket]]) is a truth
     * superset and exact Jaccard verifies — Σ|posting|² work, not
     * |corpus|². The oracle replays every md5, both cap rules, all
     * four band splits, and both ratio divisions; see
-    * [[Dedup.lshTuningCurve]] for the plan shape.
+    * [[graft.operators.Dedup.lshTuningCurve]] for the plan shape.
     */
   val dedupLshBandCurve = QueryDef(
     "dedup_lsh_band_curve",
@@ -656,7 +656,7 @@ object PipelineQueries {
          |FROM reach GROUP BY s""".stripMargin
     })
 
-  /** Incremental exact dedup ([[Dedup.newAgainstCorpus]]): a synthetic
+  /** Incremental exact dedup ([[graft.operators.Dedup.newAgainstCorpus]]): a synthetic
     * 80/20 corpus/batch split of `documents` by `doc_id % 10`, keeping
     * the batch rows whose fingerprint is NOT already in the corpus. The
     * oracle replays the anti-join as NOT EXISTS on the same md5
@@ -685,7 +685,7 @@ object PipelineQueries {
            |                    AND c.fingerprint = b.fingerprint)""".stripMargin))
 
   /** Bloom-prefiltered incremental dedup
-    * ([[Dedup.newAgainstCorpusBloom]]): the same 80/20 split and the
+    * ([[graft.operators.Dedup.newAgainstCorpusBloom]]): the same 80/20 split and the
     * same NOT-EXISTS oracle as `dedup_incremental` — the bloom
     * prefilter is a pure semi-join REDUCTION, so any drift from the
     * plain anti-join result (a false negative, an unverified false
@@ -716,7 +716,7 @@ object PipelineQueries {
            |                  WHERE c.doc_id % 10 < 8
            |                    AND c.fingerprint = b.fingerprint)""".stripMargin))
 
-  /** Incremental near-dup ([[Dedup.nearDupsAgainstCorpus]]): same
+  /** Incremental near-dup ([[graft.operators.Dedup.nearDupsAgainstCorpus]]): same
     * 80/20 split, SimHash band-key candidates between batch and corpus
     * only (never corpus × corpus), Hamming-verified. The oracle reuses
     * the [[dedupSimhash]] SimHash SQL with the split applied after
@@ -779,7 +779,7 @@ object PipelineQueries {
            |   AND b.sub = c.sub
            |) WHERE hamming <= 6""".stripMargin))
 
-  /** Incremental cluster assignment ([[Dedup.assignToClusters]]): the
+  /** Incremental cluster assignment ([[graft.operators.Dedup.assignToClusters]]): the
     * 80/20 corpus/batch split again — standing clusters from the
     * corpus's SimHash pairs (singleton corpus docs assigned to
     * themselves), batch docs folded in via within-batch pairs +
@@ -1325,7 +1325,7 @@ object PipelineQueries {
     * A22's daily HLL union, frequency = the `events_cms_reuse` daily
     * CMS sum, top-k = T5c's Misra-Gries merge, quantile = THIS):
     * per-day equi-width histograms over integer cents persist as a
-    * (day, bin, c) table — days × ≤ [[QrBins]] rows REGARDLESS of
+    * (day, bin, c) table — days × ≤ `QrBins` rows REGARDLESS of
     * event count — and any date range's p50/p90/p99 answers from a
     * groupBy-SUM merge of those daily rows with NO event rescan,
     * because equi-width bin counts ADD (the CMS-cell argument
@@ -1350,7 +1350,7 @@ object PipelineQueries {
     *
     * Scale: the daily build is one map-side-combinable aggregate over
     * the day's events; the range merge + cumulative walk run at
-    * ≤ [[QrBins]] rows (the partition-less window is whitelisted in
+    * ≤ `QrBins` rows (the partition-less window is whitelisted in
     * PlanSpec with that literal-bound argument); the 3-row estimate ×
     * 3-row exact join is AQE-trivial. At 100 TB the daily-sketch
     * table for a YEAR is 365 × 256 rows — the whole point.
@@ -1721,7 +1721,7 @@ object PipelineQueries {
     * estimates from a tiny persisted (day, segment, bottom-k) table
     * with NO event rescan). The merge is EXACT, not approximate-on-
     * approximate: bottom-k arrays are order-ideal under union (see
-    * [[thetaDaily]]), so the merged sketch is bit-identical to one
+    * `thetaDaily`), so the merged sketch is bit-identical to one
     * built from the range's raw elements — the estimates this query
     * registers are exactly what the direct A26 chain would produce
     * on the range, and PipelineSpec pins that identity (the D20
@@ -2025,7 +2025,7 @@ object PipelineQueries {
     * per-edge `rank·w div w_out` shares, dangling redistribution,
     * 85/100 damping — replays in the oracle as unrolled CTEs, bit-
     * exact (the Lloyd posture applied to graph iteration). Run over
-    * the derived 40-domain link graph ([[prEdges]]).
+    * the derived 40-domain link graph (`prEdges`).
     *
     * Scale: per iteration one src-keyed join + one dst-keyed
     * map-side-combinable sum + a 1-row dangling aggregate fanned by
@@ -2151,7 +2151,7 @@ object PipelineQueries {
          |ORDER BY arm""".stripMargin
     })
 
-  /** Benchmark decontamination ([[Dedup.decontaminate]]): corpus docs
+  /** Benchmark decontamination ([[graft.operators.Dedup.decontaminate]]): corpus docs
     * (`doc_id % 10 <> 0`) sharing ≥ 5 distinct word 3-grams with any
     * eval-set doc (`doc_id % 10 = 0`) — the pretraining hygiene join.
     * At sf0.01 the result is exactly the planted near-dup pairs that
@@ -2206,7 +2206,7 @@ object PipelineQueries {
     * sourceReport no-Expand idiom).
     *
     * Scale: ONE pass for all four orders — each document is tokenized
-    * once and the tagged multi-order [[Dedup.decontaminate]] runs one
+    * once and the tagged multi-order [[graft.operators.Dedup.decontaminate]] runs one
     * gram explode, one eval-set broadcast join and one pair aggregate
     * keyed by `n_gram`; the pair frame is cut once and both aggregates
     * are pair-/doc-cardinality. The curve is left-joined onto the
@@ -2267,7 +2267,7 @@ object PipelineQueries {
          |UNION ALL SELECT * FROM r5 UNION ALL SELECT * FROM r8""".stripMargin
     })
 
-  /** PII redaction ([[TextAnalysis.redactPii]]): deterministic PII is
+  /** PII redaction ([[graft.operators.TextAnalysis.redactPii]]): deterministic PII is
     * INJECTED (email when `doc_id % 3 = 0`, IPv4 when `% 5`, E.164
     * phone when `% 7` — values derived from the id), then the audit
     * counts and the redacted text are checked hash-exact. Injection is
@@ -2311,7 +2311,7 @@ object PipelineQueries {
            |         '\+\d{6,14}\b', '<PHONE>', 'g') AS redacted
            |FROM inj""".stripMargin))
 
-  /** Gopher-style repetition filters ([[TextAnalysis.repetitionStats]]):
+  /** Gopher-style repetition filters ([[graft.operators.TextAnalysis.repetitionStats]]):
     * duplicated-word character fraction and top-bigram character share
     * per document — the cheap repetition signals used to drop
     * boilerplate/spam docs before training.
@@ -2354,7 +2354,7 @@ object PipelineQueries {
            |LEFT JOIN wf ON toks.doc_id = wf.doc_id
            |LEFT JOIN bf ON toks.doc_id = bf.doc_id""".stripMargin))
 
-  /** Next-fit sequence packing ([[TextAnalysis.packSequences]]): docs
+  /** Next-fit sequence packing ([[graft.operators.TextAnalysis.packSequences]]): docs
     * packed into ≤ 256-token training sequences in id order within
     * 50-doc buckets. The oracle replays the identical fold as a
     * recursive CTE — packing is a sequential recurrence, which is
@@ -2459,8 +2459,8 @@ object PipelineQueries {
     * and the same 256-token windows, corpus-total density for each
     * (the [[pipelinePackEfficiency]] metric as the A/B/C a run
     * decides on): arrival-order next-fit, next-fit-DECREASING
-    * ([[TextAnalysis.packSequences]] both), and
-    * first-fit-decreasing ([[TextAnalysis.packSequencesFirstFit]]).
+    * ([[graft.operators.TextAnalysis.packSequences]] both), and
+    * first-fit-decreasing ([[graft.operators.TextAnalysis.packSequencesFirstFit]]).
     * The measured table IS the bin-packing lesson, both halves:
     * decreasing order LOSES under next-fit (127 vs 125 windows,
     * 0.836 vs 0.849 — one open window means big-first forfeits
@@ -2548,7 +2548,7 @@ object PipelineQueries {
          |${row("first_fit_decreasing", "f_")}""".stripMargin
     })
 
-  /** Deterministic shard export ([[Sampling.shardAssign]] over the
+  /** Deterministic shard export ([[graft.operators.Sampling.shardAssign]] over the
     * packed sequences — the pretraining pipeline's LAST hop, round-12
     * verdict ask #6): each packed training sequence (the
     * [[textPackSequences]] units, keyed `bucket#seq`) is assigned
@@ -2608,7 +2608,7 @@ object PipelineQueries {
            |         AS shard_pos
            |FROM keyed""".stripMargin))
 
-  /** Curriculum ordering export ([[Sampling.curriculumOrder]], SA12):
+  /** Curriculum ordering export ([[graft.operators.Sampling.curriculumOrder]], SA12):
     * the SA8 packed sequences get an easy-to-hard per-epoch READ
     * schedule — band = tot_tok DIV 64 (5 coarse length bands; token
     * length is the classic curriculum difficulty proxy), two epoch
@@ -2797,7 +2797,7 @@ object PipelineQueries {
     * tie-break anywhere in 20 rounds moves every later row). Round-10
     * verdict ask #5: merge selection is deterministic integer work
     * (BIGINT counts, ASCII lex tie-break), replayed by 20 unrolled
-    * rounds of [[bpeChainSql]].
+    * rounds of `bpeChainSql`.
     */
   val textBpeTrain = QueryDef(
     "text_bpe_train",
@@ -2853,7 +2853,7 @@ object PipelineQueries {
     * the OOV contract (round-11 verdict ask #2): train on the even
     * doc_ids, encode the odd ones. Words the trainer never saw still
     * segment, by replaying the trained merge table over their char
-    * split ([[graft.operators.Bpe.applyMerges]]); the round-11 shape
+    * split (`Bpe.applyMerges`); the round-11 shape
     * (inner join against the training word map) silently dropped
     * them. The oracle runs the training chain on the even half and a
     * SECOND word-state chain (est0..est20) that applies each round's
@@ -3133,7 +3133,7 @@ object PipelineQueries {
   /** Trending terms per completed window — the batch finisher closing
     * the loop [[graft.streaming.StreamingOps.trendingTerms]] opens:
     * the stream emits (window, term, n) counts and defers the top-k
-    * cut; [[TextAnalysis.trendingTopK]] IS that cut, here registered
+    * cut; [[graft.operators.TextAnalysis.trendingTopK]] IS that cut, here registered
     * over a batch replay of the same shape. Each document borrows its
     * event's timestamp (doc_id = event_id — the driver data's only
     * deterministic doc↔time link), windows are 1-day tumbling (= the
@@ -3175,7 +3175,7 @@ object PipelineQueries {
            |SELECT window_start, term, n FROM c
            |QUALIFY ROW_NUMBER() OVER (PARTITION BY window_start ORDER BY n DESC, term ASC) <= 5""".stripMargin))
 
-  /** Character-entropy quality signal ([[TextAnalysis.charEntropy]]):
+  /** Character-entropy quality signal ([[graft.operators.TextAnalysis.charEntropy]]):
     * the noise gate — base64/hex junk scores near the alphabet
     * ceiling, char floods near zero, prose in between. Oracle replays
     * the micro-nat integer arithmetic term-for-term.
@@ -3260,7 +3260,7 @@ object PipelineQueries {
     * word keys, AQE free to broadcast the smaller side; the 1-row
     * total rides a broadcast.
     */
-  /** TextRank corpus keyword salience ([[TextAnalysis.textRank]],
+  /** TextRank corpus keyword salience ([[graft.operators.TextAnalysis.textRank]],
     * Mihalcea & Tarau 2004): damped random walk over the word
     * co-occurrence graph (window 2), 5 iterations of the weighted
     * PageRank recurrence in mean-1 micro-unit PURE integers — every
@@ -3391,7 +3391,7 @@ object PipelineQueries {
            |FROM m""".stripMargin))
 
   /** TextRank convergence curve
-    * ([[TextAnalysis.textRankConvergence]]): per-iteration L1 and
+    * ([[graft.operators.TextAnalysis.textRankConvergence]]): per-iteration L1 and
     * max rank movement in micro-units — "how many damped-walk rounds
     * does THIS corpus need" measured (the damping factor bounds the
     * contraction at ~0.85/round; the curve shows the actual rate).
@@ -3597,7 +3597,7 @@ object PipelineQueries {
          |UNION ALL ${arm(100, Some(50))}""".stripMargin
     })
 
-  /** Sentence segmentation, oracle-checked ([[TextAnalysis.sentences]]):
+  /** Sentence segmentation, oracle-checked ([[graft.operators.TextAnalysis.sentences]]):
     * the fixture's word-salad text carries no punctuation, so the
     * query INJECTS it deterministically (the PII-oracle precedent) —
     * a terminator after every 5th token via one global regex both
@@ -3634,7 +3634,7 @@ object PipelineQueries {
            |       MIN(sentence) AS first_alpha
            |FROM segs WHERE sentence <> '' GROUP BY 1""".stripMargin))
 
-  /** Per-doc key terms by TF-IDF ([[TextAnalysis.tfidfTopTerms]]):
+  /** Per-doc key terms by TF-IDF ([[graft.operators.TextAnalysis.tfidfTopTerms]]):
     * top-3 `tf * ln(n_docs/df)` terms per document, rounded scores
     * ranked with term tie-break (see the operator scaladoc for why
     * ranking on ROUNDED scores is the cross-engine-safe choice).
@@ -3658,7 +3658,7 @@ object PipelineQueries {
   private def stopSql(lang: String): String =
     TextAnalysis.stopwords(lang).map(w => s"'$w'").mkString("(", ", ", ")")
 
-  /** Shared DuckDB fragments mirroring [[TextAnalysis]] — ONE copy of
+  /** Shared DuckDB fragments mirroring [[graft.operators.TextAnalysis]] — ONE copy of
     * the tokenizer, stopword scores, langid argmax, and quality
     * formula. The per-operator oracles and the corpus-prep composite
     * all build on these, so a future operator tweak has exactly one
@@ -3713,7 +3713,7 @@ object PipelineQueries {
             |) GROUP BY lang, lang_pred""".stripMargin))
 
   /** Per-document heuristic quality score. */
-  /** Gopher rules ([[TextAnalysis.gopherQualityFlags]], Rae 2021
+  /** Gopher rules ([[graft.operators.TextAnalysis.gopherQualityFlags]], Rae 2021
     * A1.1): the five doc-level published heuristics as integer flags
     * with CROSS-MULTIPLIED thresholds (no float division anywhere),
     * one narrow codegen pass. On this fixture the word-count floor
@@ -3756,7 +3756,7 @@ object PipelineQueries {
            |            AND n_stop >= 2 AS INT) AS pass
            |FROM stats""".stripMargin))
 
-  /** Line-tier quality rules ([[TextAnalysis.lineQualityStats]] —
+  /** Line-tier quality rules ([[graft.operators.TextAnalysis.lineQualityStats]] —
     * Gopher's bullet/ellipsis line fractions + C4's per-line census,
     * the rules `text_quality_gopher` explicitly deferred): line
     * structure is INJECTED deterministically (the T22 precedent) with
@@ -3820,7 +3820,7 @@ object PipelineQueries {
            |FROM stats""".stripMargin))
 
   /** Duplicate-n-gram char coverage
-    * ([[TextAnalysis.dupNgramCoverage]]) — Gopher A1.1's EXACT
+    * ([[graft.operators.TextAnalysis.dupNgramCoverage]]) — Gopher A1.1's EXACT
     * repetition metric at its n=5 (≤15%) and n=10 (≤10%) operating
     * points. The corpus has ZERO natural within-doc duplicate
     * 5-grams (measured before choosing the fixture), so repetition is
@@ -3908,7 +3908,7 @@ object PipelineQueries {
          |SELECT * FROM r5 UNION ALL SELECT * FROM r10""".stripMargin
     })
 
-  /** C4 line-level CLEANING applied ([[TextAnalysis.c4CleanLines]] —
+  /** C4 line-level CLEANING applied ([[graft.operators.TextAnalysis.c4CleanLines]] —
     * the rules `text_quality_lines` measures, now executing): body
     * reflowed to 7-token lines each TERMINATED with `.` (kept: ≥5
     * words + terminal punct), an unpunctuated short trailer (dropped
@@ -3961,7 +3961,7 @@ object PipelineQueries {
            |            AND NOT contains(txt, '{') AND len(kept) >= 3 AS INT) AS pass
            |FROM k""".stripMargin))
 
-  /** Within-doc duplicate-line stats ([[TextAnalysis.dupLineStats]] —
+  /** Within-doc duplicate-line stats ([[graft.operators.TextAnalysis.dupLineStats]] —
     * Gopher A1.1's dup-line fraction ≤0.30 / dup-line char fraction
     * ≤0.20): planted repetition (no natural line structure exists):
     * a newsletter banner 3× every 6th doc (2 duplicates — passes both
@@ -4072,7 +4072,7 @@ object PipelineQueries {
     * NOT distribution-neutral on length (by design — that is the
     * lesson the artifact exists to surface).
     */
-  /** k-ANONYMITY audit ([[Cleaning.kAnonymityAudit]], Sweeney 2002)
+  /** k-ANONYMITY audit ([[graft.operators.Cleaning.kAnonymityAudit]], Sweeney 2002)
     * over the documents table's quasi-identifiers (lang, source) at
     * the k = 10 disclosure-review floor — the release-readiness
     * check beside T15's PII redaction: redaction scrubs content,
@@ -4097,7 +4097,7 @@ object PipelineQueries {
            |       CAST(MIN(n) AS BIGINT) AS k_actual
            |FROM cls""".stripMargin))
 
-  /** The audit's FIX, proven by re-audit ([[Cleaning.kAnonymize]]):
+  /** The audit's FIX, proven by re-audit ([[graft.operators.Cleaning.kAnonymize]]):
     * suppress the quasi-identifier tuple of every under-k row, then
     * run the SAME audit on the result — the output row IS the proof
     * the pass worked (at sf0.01 the 328 at-risk rows collapse into
@@ -4729,7 +4729,7 @@ object PipelineQueries {
     Some(s"""WITH RECURSIVE $pretrainStagesSql${packTailSql("clean")}""".stripMargin))
 
   /** BPE-packed pretraining prep (round-11 verdict ask #6): identical
-    * stages 1-4 ([[pretrainCleanDocs]]), but the packing stage sizes
+    * stages 1-4 (`pretrainCleanDocs`), but the packing stage sizes
     * each document by its TRAINED-TOKENIZER token count
     * ([[graft.operators.Bpe.encodeCounts]], T18's 20-merge tokenizer
     * trained on the full corpus) instead of the whitespace proxy —
@@ -4780,7 +4780,7 @@ object PipelineQueries {
             |)${packTailSql("cleanb")}""".stripMargin))
 
   /** LM-gated pretraining prep — the CCNet/LLaMA chain: stages 1-4
-    * ([[pretrainCleanDocs]]: score → gate → exact dedup →
+    * (`pretrainCleanDocs`: score → gate → exact dedup →
     * decontaminate), then the T13c HELD-OUT LM TERTILE GATE (keep
     * head+middle, drop the worst-perplexity third) before packing.
     * The SAME held-out eval split (doc_id % 10 = 0) serves as both
@@ -4876,11 +4876,11 @@ object PipelineQueries {
             |)${packTailSql("cleanlm")}""".stripMargin))
 
   /** SEMANTICALLY-deduplicated pretraining prep — the modern
-    * (2023+) corpus chain: stages 1-4 ([[pretrainCleanDocs]]: score →
+    * (2023+) corpus chain: stages 1-4 (`pretrainCleanDocs`: score →
     * gate → exact dedup → decontaminate), then the D25 SemDeDup gate
     * — drop every clean candidate whose EMBEDDING sits in a semantic
     * duplicate group without being its keeper (`keep = 0` in
-    * [[Dedup.semDedup]]'s output; embeddings align to documents by
+    * [[graft.operators.Dedup.semDedup]]'s output; embeddings align to documents by
     * id) — then the whitespace pack. Lexical dedup (stage 3 + the
     * minhash family) cannot see paraphrase/template redundancy; this
     * arm removes it where an embedding exists and passes docs
@@ -4895,7 +4895,7 @@ object PipelineQueries {
     * the gate is a LEFT ANTI join on doc_id — at scale a
     * removal-list-sized frame the planner may broadcast. The oracle
     * composes the stage CTEs, the FULL SemDeDup replay
-    * ([[semDedupCtes]] — both Lloyd iterations, the recursive
+    * (`semDedupCtes` — both Lloyd iterations, the recursive
     * components, the keep window), the anti-join, and the recursive
     * packing fold: one flipped cell assignment anywhere moves a pack
     * boundary and hash-fails.
@@ -4936,14 +4936,14 @@ object PipelineQueries {
     * (`pipeline_pretrain_prep_lines`) — the cleaning cascade a CCNet/
     * C4-lineage pipeline actually runs, stages chained in production
     * order over ONE injected corpus: cross-doc line boilerplate out
-    * FIRST ([[TextAnalysis.removeBoilerplateLines]], minDocs=20 —
+    * FIRST ([[graft.operators.TextAnalysis.removeBoilerplateLines]], minDocs=20 —
     * removes the nav headers and the rights footer), then C4's
-    * line keep-rules + document drops ([[TextAnalysis.c4CleanLines]]
+    * line keep-rules + document drops ([[graft.operators.TextAnalysis.c4CleanLines]]
     * — the planted lorem/brace banners are DOC-UNIQUE here precisely
     * so stage A cannot eat them and stage B's content flags do real
     * work; a cross-doc lorem banner would be line-boilerplate, the
     * measured interplay), then the Gopher doc gate
-    * ([[TextAnalysis.gopherQualityFlags]]) with the 2-stopword rule
+    * ([[graft.operators.TextAnalysis.gopherQualityFlags]]) with the 2-stopword rule
     * ABLATED (measured corpus-inapplicable in `text_quality_gopher` —
     * the FineWeb-style per-corpus rule tuning, stated not hidden),
     * then next-fit packing. The oracle replays the injection, the
@@ -5067,7 +5067,7 @@ object PipelineQueries {
     * spans) — so one flipped window start anywhere moves a pack
     * boundary and hash-fails. The oracle prepends the full D28
     * replay as CTEs and re-points the stage chain at the rewritten
-    * corpus ([[pretrainStagesSqlFrom]]).
+    * corpus (`pretrainStagesSqlFrom`).
     */
   val pretrainPrepSubstr = QueryDef(
     "pipeline_pretrain_prep_substr",
@@ -5692,7 +5692,7 @@ object PipelineQueries {
     })
 
   /** Positional inverted index + exact phrase search
-    * ([[TextAnalysis.invertedIndex]] / [[phraseSearchBigram]]) — the
+    * ([[graft.operators.TextAnalysis.invertedIndex]] / `phraseSearchBigram`) — the
     * IR class: build postings, find the corpus's most frequent word
     * bigram (adjacency self-join on the SAME index, count, bounded
     * top-1 with (n desc, w1, w2) tie-break), then phrase-search that
@@ -5735,10 +5735,10 @@ object PipelineQueries {
            |GROUP BY 1""".stripMargin))
 
   /** END-TO-END RAG retrieval prep: chunk the corpus (T11) → embed
-    * every chunk ([[TextAnalysis.hashEmbedding]] — the documented
+    * every chunk ([[graft.operators.TextAnalysis.hashEmbedding]] — the documented
     * model STUB; the chunk/index/search plumbing is real) → exact
     * top-3 passage retrieval for the query docs' chunks against the
-    * disjoint rest of the chunk corpus ([[Similarity.bruteForceTopK]];
+    * disjoint rest of the chunk corpus ([[graft.operators.Similarity.bruteForceTopK]];
     * swap in `ivfTopKProbed`/`int8TopK` for the indexed tiers — same
     * frame contract). Flat chunk ids are `doc_id·1000 + chunk_id`
     * (chunk counts are bounded ≪ 1000 by the T11 window math). This
@@ -5802,7 +5802,7 @@ object PipelineQueries {
 
   /** Winnowed rolling-hash fingerprints (k=5 grams, window 8) per doc:
     * sketch size and extremes, via the O(n) JVM kernel
-    * ([[TextAnalysis.winnowKernel]] — one narrow pass, no caching; the
+    * ([[graft.operators.TextAnalysis.winnowKernel]] — one narrow pass, no caching; the
     * Column twins exist for composability and as the semantics spec).
     */
   val textWinnow = QueryDef(
@@ -5835,7 +5835,7 @@ object PipelineQueries {
            |       list_min(fps) AS fp_min, list_max(fps) AS fp_max
            |FROM fps""".stripMargin))
 
-  /** Duplicate token spans ([[TextAnalysis.duplicateSpans]]): 10-token
+  /** Duplicate token spans ([[graft.operators.TextAnalysis.duplicateSpans]]): 10-token
     * windows at stride 5 appearing in ≥ 2 distinct documents — the
     * substring-level boilerplate that document-level dedup can't see.
     * At sf0.01 the corpus yields ~200 such spans (the planted near-dup
@@ -5863,7 +5863,7 @@ object PipelineQueries {
            |FROM per_doc GROUP BY 1 HAVING COUNT(*) >= 2""".stripMargin))
 
   /** Per-document duplicated-span fraction
-    * ([[TextAnalysis.dupSpanFractions]]) — the score the cleaning step
+    * ([[graft.operators.TextAnalysis.dupSpanFractions]]) — the score the cleaning step
     * thresholds on. Only docs with ≥ 1 span appear (short docs have no
     * signal, not a 0.0 score).
     */
@@ -5895,7 +5895,7 @@ object PipelineQueries {
            |GROUP BY 1""".stripMargin))
 
   /** Line-level boilerplate removal
-    * ([[TextAnalysis.removeBoilerplateLines]]) — the CCNet line-dedup
+    * ([[graft.operators.TextAnalysis.removeBoilerplateLines]]) — the CCNet line-dedup
     * tier. The fixture's word-salad text has no line structure, so the
     * query INJECTS it deterministically (the PII/sentence-injection
     * precedent — one expression both engines apply identically): a
@@ -5952,7 +5952,7 @@ object PipelineQueries {
            |                  FILTER (WHERE NOT is_boiler), '') AS clean_text
            |FROM kept GROUP BY 1""".stripMargin))
 
-  /** Sliding-window chunking ([[TextAnalysis.chunkDocs]]): 40-token
+  /** Sliding-window chunking ([[graft.operators.TextAnalysis.chunkDocs]]): 40-token
     * windows advancing by 20 with a tail-aligned final window — the
     * pre-embedding segmenter. Pure narrow codegen'd array work; the
     * oracle replays the window placement with DuckDB list slicing.
@@ -5987,7 +5987,7 @@ object PipelineQueries {
            |             unnest(generate_series(1, len(starts))) AS i
            |      FROM st)""".stripMargin))
 
-  /** Corpus-unigram LM scoring ([[TextAnalysis.unigramLogProb]]):
+  /** Corpus-unigram LM scoring ([[graft.operators.TextAnalysis.unigramLogProb]]):
     * per-doc mean token log-probability under an add-one-smoothed
     * unigram model fit on the corpus — the cheap "how typical is this
     * doc" quality signal. Per-term ln rounded to integer micro-nats
@@ -6017,7 +6017,7 @@ object PipelineQueries {
            |FROM tf JOIN cf USING (term) CROSS JOIN tot
            |GROUP BY 1""".stripMargin))
 
-  /** Bigram conditional LM scoring ([[TextAnalysis.bigramLogProb]]):
+  /** Bigram conditional LM scoring ([[graft.operators.TextAnalysis.bigramLogProb]]):
     * word-order-aware quality signal beside `text_lm_score`'s
     * bag-of-words — same exact micro-nat / raw-quotient determinism
     * posture; oracle replays the continuation counts and smoothing.
@@ -6049,7 +6049,7 @@ object PipelineQueries {
            |FROM tf JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN tot
            |GROUP BY 1""".stripMargin))
 
-  /** HELD-OUT LM tertile filter ([[TextAnalysis.lmHeldOutFilter]]) —
+  /** HELD-OUT LM tertile filter ([[graft.operators.TextAnalysis.lmHeldOutFilter]]) —
     * the CCNet recipe proper: bigram LM fit on the even-doc_id half,
     * the odd half scored against it and bucketed head / middle / tail
     * by `percentile_disc` tertile fences (1-row broadcast fence join,
@@ -6113,7 +6113,7 @@ object PipelineQueries {
            |            ELSE 'head' END AS bucket
            |FROM scored CROSS JOIN fence""".stripMargin))
 
-  /** BM25 top-k retrieval ([[TextAnalysis.bm25TopK]]) — the IR
+  /** BM25 top-k retrieval ([[graft.operators.TextAnalysis.bm25TopK]]) — the IR
     * family's ranking rung (index → phrase membership → RANKED
     * retrieval, the Lucene default scoring): a 3-term query over the
     * documents corpus, k = 15, every idf and saturation term an exact
@@ -6160,7 +6160,7 @@ object PipelineQueries {
            |SELECT doc_id, n_terms, score_u::DOUBLE / 1000000.0 AS score FROM agg
            |QUALIFY ROW_NUMBER() OVER (ORDER BY score_u DESC, doc_id ASC) <= 15""".stripMargin))
 
-  /** Batch BM25 retrieval ([[TextAnalysis.bm25TopKBatch]]) — the
+  /** Batch BM25 retrieval ([[graft.operators.TextAnalysis.bm25TopKBatch]]) — the
     * production entry point the scalar `text_bm25_topk` models one
     * query of: a TABLE of three queries (8 terms, with `table`
     * deliberately SHARED between queries 1 and 2 — its per-doc
@@ -6226,9 +6226,9 @@ object PipelineQueries {
            |                           ORDER BY score_u DESC, doc_id ASC) <= 10""".stripMargin))
 
   /** Retrieval EVAL artifact — per-query recall@10 of impact-PRUNED
-    * BM25 serving ([[TextAnalysis.bm25IndexPruned]] +
-    * [[TextAnalysis.bm25TopKFromIndex]]) against exact
-    * [[TextAnalysis.bm25TopKBatch]] truth, the N4/N19 recall-ladder
+    * BM25 serving ([[graft.operators.TextAnalysis.bm25IndexPruned]] +
+    * [[graft.operators.TextAnalysis.bm25TopKFromIndex]]) against exact
+    * [[graft.operators.TextAnalysis.bm25TopKBatch]] truth, the N4/N19 recall-ladder
     * pattern applied to the IR family (r14 verdict ask #4): the T20
     * family had scoring and serving but no number saying what a
     * serving-cost optimization COSTS. Arms prune each term's posting
@@ -6406,8 +6406,8 @@ object PipelineQueries {
     * (modified KN's D₁/D₂/D₃₊ in micro-units, with the d = 3/4
     * fallback for empty bands), and the odd-half scored grams with
     * ALL THREE models' exact integer numerators — interpolated KN
-    * (d = 3/4, [[TextAnalysis.knBigramScore]]) and modified KN
-    * ([[TextAnalysis.mknBigramScore]]). Ends at a `g` CTE.
+    * (d = 3/4, [[graft.operators.TextAnalysis.knBigramScore]]) and modified KN
+    * ([[graft.operators.TextAnalysis.mknBigramScore]]). Ends at a `g` CTE.
     */
   private val knGramsSql =
     """toks AS (
@@ -6477,7 +6477,7 @@ object PipelineQueries {
     * family's other scorers are the add-one textbook baseline): fit
     * on even doc_ids, score the disjoint odd half, per-doc mean
     * log-prob. The d = 3/4 discount makes the whole probability ONE
-    * exact-integer rational (see [[TextAnalysis.knBigramScore]]), so
+    * exact-integer rational (see [[graft.operators.TextAnalysis.knBigramScore]]), so
     * the oracle replays every numerator bit-for-bit.
     */
   val textLmKn = QueryDef(
@@ -6505,7 +6505,7 @@ object PipelineQueries {
     * discounts round ONCE to micro-units and everything downstream is
     * exact bigint over the 10⁶ common denominator (overflow bound and
     * the resolution dial documented at
-    * [[TextAnalysis.mknBigramScore]]); the oracle replays n₁..n₄, all
+    * [[graft.operators.TextAnalysis.mknBigramScore]]); the oracle replays n₁..n₄, all
     * three clamped discounts, both backoff paths, and every rational.
     */
   val textLmMkn = QueryDef(
@@ -6526,7 +6526,7 @@ object PipelineQueries {
             |FROM g GROUP BY 1""".stripMargin))
 
   /** TRIGRAM interpolated Kneser-Ney
-    * ([[TextAnalysis.kn3TrigramScore]]) — the n-gram ladder's next
+    * ([[graft.operators.TextAnalysis.kn3TrigramScore]]) — the n-gram ladder's next
     * rung with the CONTINUATION-COUNT middle level the KN
     * construction prescribes (lower levels estimate from distinct
     * contexts, not raw counts): fit on even doc_ids, score the
@@ -6613,8 +6613,8 @@ object PipelineQueries {
     * 5-gram (trigram contexts are quadratically sparser; the
     * continuation-count backoff is what keeps the tax bounded).
     * Means are exact micro-nat integer sums over the gram frames the
-    * per-doc artifacts aggregate ([[TextAnalysis.knGramLp]] /
-    * [[TextAnalysis.kn3GramLp]]) — NEVER doc-level double sums (a
+    * per-doc artifacts aggregate (`TextAnalysis.knGramLp` /
+    * `TextAnalysis.kn3GramLp`) — NEVER doc-level double sums (a
     * double sum's value depends on partition order; the integer sums
     * are order-free).
     *
@@ -6969,8 +6969,8 @@ object PipelineQueries {
 
   /** The shared DuckDB replay of the naive-Bayes classifier: model
     * trained on doc_id % 10 ≠ 1 with label `lang = 'en'`, held-out
-    * % 10 = 1 docs scored — the full [[TextAnalysis.nbModel]] /
-    * [[TextAnalysis.nbScore]] chain (class-conditional counts,
+    * % 10 = 1 docs scored — the full [[graft.operators.TextAnalysis.nbModel]] /
+    * [[graft.operators.TextAnalysis.nbScore]] chain (class-conditional counts,
     * add-one smoothing at the `(T_class + V)` floors, per-class ln
     * rounded to integer micro-nats BEFORE subtraction, integer-sum
     * `pred`). Ends at a `perdoc` CTE; both NB queries append their
@@ -7057,7 +7057,7 @@ object PipelineQueries {
   }
 
   /** Hybrid sparse+dense retrieval via reciprocal-rank fusion
-    * ([[Similarity.rrfFuse]], Cormack et al. SIGIR'09): BM25 top-10
+    * ([[graft.operators.Similarity.rrfFuse]], Cormack et al. SIGIR'09): BM25 top-10
     * (the `text_bm25_batch` query workload) fused with dense cosine
     * top-10 (query-by-example on the matching vec_ids) at k0 = 60 —
     * the production hybrid-retrieval default, needing NO score
@@ -7173,7 +7173,7 @@ object PipelineQueries {
     * model (the CCNet/GPT-3 pipelines' third gate after heuristics
     * and LM perplexity; multinomial naive Bayes IS linear in log
     * space): trained IN-ENGINE on doc_id % 5 ≠ 0 over the
-    * [[nbMarkedDocs]] two-class fixture, scoring the DISJOINT
+    * `nbMarkedDocs` two-class fixture, scoring the DISJOINT
     * held-out fifth — so the smoothing floors fire on real unseen
     * words and accuracy measures generalization, not memorization.
     * Per-doc output joined back with the true label the oracle pins;
@@ -7227,7 +7227,7 @@ object PipelineQueries {
             |SELECT label, pred, n, ROUND(n::DOUBLE / tn::DOUBLE, 6) AS frac
             |FROM conf CROSS JOIN tt""".stripMargin))
 
-  /** The classifier's ROC AUC ([[TextAnalysis.binaryAuc]]) on the
+  /** The classifier's ROC AUC ([[graft.operators.TextAnalysis.binaryAuc]]) on the
     * held-out fifth — the threshold-free rank statistic reported
     * beside the confusion matrix, in two arms: EXACT (per-distinct-
     * score aggregate + Mann-Whitney mid-rank formula, bit-identical
@@ -7300,7 +7300,7 @@ object PipelineQueries {
             |FROM aggb""".stripMargin))
 
   /** The classifier's reliability curve
-    * ([[TextAnalysis.calibrationBins]]) on the held-out fifth — the
+    * ([[graft.operators.TextAnalysis.calibrationBins]]) on the held-out fifth — the
     * probability-quality artifact a deployment reads beside the
     * confusion matrix (`text_nb_confusion`) and AUC (`text_nb_auc`),
     * completing the evidence trio: 10 predicted-probability bins,
@@ -7344,7 +7344,7 @@ object PipelineQueries {
             |             / COUNT(*)::DOUBLE, 6) AS frac_pos
             |FROM binned GROUP BY 1""".stripMargin))
 
-  /** The calibration scalars ([[TextAnalysis.calibrationSummary]]) —
+  /** The calibration scalars ([[graft.operators.TextAnalysis.calibrationSummary]]) —
     * ECE and Brier score on the held-out fifth, the two numbers a
     * deployment TRACKS (with `text_nb_calibration` as the diagnostic
     * read when they move). Exact integers end-to-end: the ECE bin
@@ -7494,7 +7494,7 @@ object PipelineQueries {
       val train = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val heldOut = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
       // Each arm's 3-iteration GD chain is eager (per-iteration cuts,
-      // [[TextAnalysis.lrTrain]]) and the arms share nothing — the
+      // [[graft.operators.TextAnalysis.lrTrain]]) and the arms share nothing — the
       // featurization is the variable — so they overlap (Par, §2.6).
       graft.operators.Par.seq(Seq(16, 64, 256).map { b => () =>
         TextAnalysis.binaryAuc(
@@ -7532,7 +7532,7 @@ object PipelineQueries {
     }.mkString("\nUNION ALL\n")))
 
   /** Trained LOGISTIC-REGRESSION quality classifier
-    * ([[TextAnalysis.lrTrain]]/[[TextAnalysis.lrScore]]) — the
+    * ([[graft.operators.TextAnalysis.lrTrain]]/[[graft.operators.TextAnalysis.lrScore]]) — the
     * discriminative member of the classifier family beside naive
     * Bayes (`text_nb_classifier`), trained in-engine by 3 iterations
     * of full-batch gradient descent over hashed 64-bucket
@@ -7604,7 +7604,7 @@ object PipelineQueries {
   /** The LR classifier's reliability curve — completing its evidence
     * trio (per-doc scores → `text_lr_classifier`, AUC →
     * `text_lr_auc`, calibration here) with the SAME
-    * [[TextAnalysis.calibrationBins]] machinery as NB: one rounded
+    * [[graft.operators.TextAnalysis.calibrationBins]] machinery as NB: one rounded
     * sigmoid per held-out doc over the raw-quotient logit, then pure
     * integers. Directly comparable bin-for-bin with
     * `text_nb_calibration`.
@@ -7642,7 +7642,7 @@ object PipelineQueries {
             |FROM binned GROUP BY 1""".stripMargin))
 
   /** Chunk-granular exact dedup — the RAG/embedding prep composite:
-    * [[TextAnalysis.chunkDocs]] → md5 fingerprint per chunk → keep
+    * [[graft.operators.TextAnalysis.chunkDocs]] → md5 fingerprint per chunk → keep
     * the lexicographically-first (doc_id, chunk_id) per fingerprint —
     * all in ONE optimizer pass (a duplicated document's chunks are
     * duplicates too; deduping at chunk granularity is what keeps a
@@ -7705,7 +7705,7 @@ object PipelineQueries {
            |  ON f.doc_id = c.doc_id AND f.chunk_id = c.chunk_id
            |GROUP BY 1""".stripMargin))
 
-  /** Target-mixture resampling ([[Sampling.mixtureSample]]): cut the
+  /** Target-mixture resampling ([[graft.operators.Sampling.mixtureSample]]): cut the
     * language strata to a 5:2:1:1:1 en:zh:de:fr:es mixture at the
     * largest downsample-only size, registered as the per-lang counts
     * AFTER resampling so the oracle pins exact hash membership (the
@@ -7813,7 +7813,7 @@ object PipelineQueries {
            |FROM t""".stripMargin))
 
   /** Temperature-smoothed mixture at α = 1/2
-    * ([[Sampling.temperatureSample]] — the mT5 mixing rule, rate ∝
+    * ([[graft.operators.Sampling.temperatureSample]] — the mT5 mixing rule, rate ∝
     * √n_s, rarest stratum kept whole): per-language kept counts plus
     * a sum-of-ids MEMBERSHIP checksum (stronger than
     * `sample_mixture`'s counts-only pin — two engines keeping
@@ -7842,7 +7842,7 @@ object PipelineQueries {
            |GROUP BY 1""".stripMargin))
 
   /** Weighted sampling without replacement
-    * ([[Sampling.weightedSample]], Efraimidis–Spirakis): 100 documents
+    * ([[graft.operators.Sampling.weightedSample]], Efraimidis–Spirakis): 100 documents
     * drawn proportional to token count. Registered as the selected
     * (doc_id, n_tok) set so the oracle pins exact MEMBERSHIP — the
     * race key is derived from the library-wide md5 idiom, so both
@@ -7927,7 +7927,7 @@ object PipelineQueries {
     * extreme weights can't overflow). Target = the reserved
     * doc_id % 10 = 0 eval split; the other nine tenths are the raw
     * pool; k = 100 sampled without replacement, P ∝ importance
-    * weight. See [[Sampling.dsirScore]]/[[Sampling.dsirSample]].
+    * weight. See [[graft.operators.Sampling.dsirScore]]/[[graft.operators.Sampling.dsirSample]].
     */
   val sampleDsir = QueryDef(
     "sample_dsir",
@@ -8130,7 +8130,7 @@ object PipelineQueries {
     })
 
   /** DSIR featurization A/B — bigram-only vs the PAPER'S
-    * unigram∪bigram union ([[Sampling.dsirScoreUnion]]; Xie et al.
+    * unigram∪bigram union ([[graft.operators.Sampling.dsirScoreUnion]]; Xie et al.
     * 2023 hash both n-gram orders into one feature space), both at
     * the 1024-bucket operating point, each arm reporting the
     * measured shift exactly like `sample_dsir_shift`. What it
@@ -8244,7 +8244,7 @@ object PipelineQueries {
     * truncation the intended compression): exact brute-force top-10
     * on the first d ∈ {64, 48, 32, 16, 8} coordinates, each arm's
     * recall measured against the full-64-dim truth with the
-    * join-free [[Similarity.recallVsTruth]] (the 64 arm is the
+    * join-free [[graft.operators.Similarity.recallVsTruth]] (the 64 arm is the
     * harness anchor — recall 1.0 by construction). Truth is
     * checkpoint-cut ONCE and read by all five arms. On this
     * i.i.d.-random fixture the curve measures how fast recall decays
@@ -8525,7 +8525,7 @@ object PipelineQueries {
     * fences ride 1-row broadcasts. Oracle = a recursive CTE
     * replaying the fold row by row.
     */
-  /** Holt linear-trend forecast ([[Funnel.holtForecast]], α = 1/5,
+  /** Holt linear-trend forecast ([[graft.operators.Funnel.holtForecast]], α = 1/5,
     * β = 1/10) over daily event volume — the PREDICTIVE member
     * beside seasonal decomposition (describes) and CUSUM (detects):
     * one-step-ahead forecast + error per day in exact centi-unit
@@ -8733,7 +8733,7 @@ object PipelineQueries {
             |SELECT q_id, n_id, cos FROM scored
             |QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10""".stripMargin))
 
-  /** Metadata-filtered search ([[Similarity.filteredTopK]]): top-5
+  /** Metadata-filtered search ([[graft.operators.Similarity.filteredTopK]]): top-5
     * neighbors among ENGLISH documents only, for the first 10 query
     * vectors. Pre-filter semantics on purpose — each query gets its
     * true k nearest within the allowed subset, where post-filtering a
@@ -8821,7 +8821,7 @@ object PipelineQueries {
 
   /** Embedding-cosine near-dup DEDUP (builder brief §dedup, last
     * missing modality): the LSH pair generation of [[annBucketed]]
-    * composed with [[Dedup.dedupClusters]]'s connected components —
+    * composed with [[graft.operators.Dedup.dedupClusters]]'s connected components —
     * one row per vector that has at least one near neighbor, labeled
     * with its component's min id as `cluster_rep`. This is the
     * embedding analog of `dedup_clusters` (MinHash/Jaccard): candidate
@@ -8890,13 +8890,13 @@ object PipelineQueries {
             |SELECT s AS id, least(s, MIN(t)) AS cluster_rep
             |FROM reach GROUP BY s""".stripMargin))
 
-  /** Pair-level recall of the LSH bucketing ([[Similarity.bucketedPairs]])
+  /** Pair-level recall of the LSH bucketing ([[graft.operators.Similarity.bucketedPairs]])
     * against brute-force ground truth, on a deterministic 10% subset
     * (`vec_id % 10 = 0`) — the band/bit tuning number for the near-dup
     * path, completing what [[annRecall]] does for IVF. The subset keeps
     * the all-pairs truth cheap in BOTH engines; the truth self-join is
     * the documented ground-truth exception to the no-cross-join rule
-    * (sampled, bounded — same standing as [[Similarity.bruteForceTopK]]).
+    * (sampled, bounded — same standing as [[graft.operators.Similarity.bruteForceTopK]]).
     * COALESCE(-1) keeps the zero-true-pairs case deterministic across
     * engines (null division differs).
     *
@@ -9201,7 +9201,7 @@ object PipelineQueries {
             |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
             |) GROUP BY ROLLUP(q_id)""".stripMargin
 
-  /** ANN recall vs exact ground truth ([[Similarity.recallVsTruth]]):
+  /** ANN recall vs exact ground truth ([[graft.operators.Similarity.recallVsTruth]]):
     * multi-probe IVF (k=10, nprobe=2, same deterministic centroids as
     * `ann_ivf_*`) measured against brute-force top-10 — per-query
     * recall plus the corpus-wide mean in the `q_id = -1` row. This is
@@ -9214,7 +9214,7 @@ object PipelineQueries {
     (s, dir) => ivfRecallBody(Tables.embeddings(s, dir)),
     Some(ivfRecallOracle(embSrcSql)))
 
-  /** IVF recall on the MANIFOLD fixture ([[manifoldEmb]]): same
+  /** IVF recall on the MANIFOLD fixture (`manifoldEmb`): same
     * machinery, same centroids (vec_id < 8 — 8 cells over 16 true
     * clusters, a deliberately imperfect index), same nprobe=2. The
     * float fixture measures 0.40 here — cell pruning on structureless
@@ -9231,15 +9231,15 @@ object PipelineQueries {
   // The fourth index family beside IVF / PQ / int8 (round-15 verdict
   // "what's missing" #2): a degree-bounded k-NN graph built from the
   // SAME banded sign-LSH candidates the near-dup tier uses
-  // ([[Similarity.nswGraph]] — 8 bands, width AUTO-sized from the
-  // corpus count since round 17 ([[Similarity.nswAutoBits]]) so
+  // ([[graft.operators.Similarity.nswGraph]] — 8 bands, width AUTO-sized from the
+  // corpus count since round 17 ([[graft.operators.Similarity.nswAutoBits]]) so
   // buckets stay population-sized at every N), searched by FIXED-round
-  // beam expansion ([[Similarity.nswSearch]], re-scored each round).
+  // beam expansion ([[graft.operators.Similarity.nswSearch]], re-scored each round).
   // Registered on BOTH fixtures per
   // the recall-ladder contract so the float-vs-manifold gap is pinned
   // beside the IVF and PQ rows. The oracle replays the identical
   // plane set, graph cut, and every beam round as unrolled CTEs.
-  // MAX-bits plane set: [[VectorFunctions.planeIndices]] is
+  // MAX-bits plane set: [[graft.functions.VectorFunctions.planeIndices]] is
   // prefix-stable in bits (a LinkedHashSet scan — the first b distinct
   // indices are the same for every bits >= b), so the oracle carries
   // the widest set once and filters `j <= bits` against the
@@ -9249,7 +9249,7 @@ object PipelineQueries {
     lshPlanesValuesFor(8, Similarity.NswMaxBits)
   private val NswDegree = 12
 
-  /** The oracle's replay of [[Similarity.nswAutoBits]]: smallest bits
+  /** The oracle's replay of [[graft.operators.Similarity.nswAutoBits]]: smallest bits
     * in [min, max] with `COUNT(*) >> bits <= 3*degree` — integer
     * shift-and-compare on both engines, zero rounding-boundary risk.
     * `countFrom` names the CTE whose row count sizes the build (the
@@ -9267,7 +9267,7 @@ object PipelineQueries {
        |planes AS (SELECT p.band, p.j, p.idx FROM planes0 p, bb WHERE p.j <= bb.bits)""".stripMargin
 
   /** The oracle's replay of the near/far neighbor-list cut
-    * ([[Similarity.nswFarLinks]]): best `near` by (cos desc, dst asc)
+    * ([[graft.operators.Similarity.nswFarLinks]]): best `near` by (cos desc, dst asc)
     * plus the `far` weakest by (cos asc, dst asc) — one scan, two
     * row-number windows, OR'd (a row kept by both appears once, same
     * as the Spark side's in-row `array_distinct`).
@@ -9297,7 +9297,7 @@ object PipelineQueries {
   private def nswRecallBody(emb: DataFrame): DataFrame = {
     val queries = emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
     // bitsPerBand defaults to auto: sized from this corpus's valid
-    // count by [[Similarity.nswAutoBits]]; the oracle replays the
+    // count by [[graft.operators.Similarity.nswAutoBits]]; the oracle replays the
     // same count → same bits choice ([[nswBitsCtes]]).
     // The graph build (eager pair pipeline), the exact ground truth,
     // and the round-0 ENTRY beam (corpus + queries only — no graph
@@ -9410,7 +9410,7 @@ object PipelineQueries {
     (s, dir) => nswRecallBody(Tables.embeddings(s, dir)),
     Some(nswRecallOracle(embSrcSql)))
 
-  /** Graph-ANN recall on the MANIFOLD fixture ([[manifoldEmb]]): same
+  /** Graph-ANN recall on the MANIFOLD fixture (`manifoldEmb`): same
     * build and search parameters, clustered data — the regime where
     * neighbor lists concentrate within clusters and beam hops walk
     * between them. The gap vs [[annNswRecall]] is the fixture effect;
@@ -9423,10 +9423,10 @@ object PipelineQueries {
     Some(nswRecallOracle(manifoldSrcSql)))
 
   /** INCREMENTAL NSW graph maintenance (`ann_nsw_incr` —
-    * [[Similarity.nswInsert]], the arrival-time member of the graph
+    * [[graft.operators.Similarity.nswInsert]], the arrival-time member of the graph
     * index family beside D8/D9/D25c, and what HNSW `add()` does
     * sequentially): the standing corpus is vec_id ≥ 20 (graph built
-    * offline by [[Similarity.nswGraph]], as a deployment would), the
+    * offline by [[graft.operators.Similarity.nswGraph]], as a deployment would), the
     * batch is vec_id < 20, and the registered artifact is the FULL
     * updated (src, dst, cos) graph — batch nodes' new neighbor lists,
     * the re-ranked lists of every corpus node the batch collided
@@ -9594,7 +9594,7 @@ object PipelineQueries {
         () => Similarity.nswEntryBeam(queries, emb, "vec_id", "embedding",
           beamWidth = NswBeam, nEntries = NswEntries))
       // The three arms are PREFIXES of one beam chain — computed once
-      // ([[Similarity.nswSearchTrace]], round 17): max(rounds) + 1
+      // ([[graft.operators.Similarity.nswSearchTrace]], round 17): max(rounds) + 1
       // beam jobs instead of Σ(rounds) + |arms|, byte-identical arm
       // results by construction.
       val arms = Similarity.nswSearchTrace(queries, emb, graph, "vec_id", "embedding",
@@ -9692,8 +9692,8 @@ object PipelineQueries {
          |$tail""".stripMargin
     })
 
-  /** Int8-quantized search recall ([[Similarity.int8TopK]] vs exact
-    * [[Similarity.bruteForceTopK]]): what the 4× memory compression
+  /** Int8-quantized search recall ([[graft.operators.Similarity.int8TopK]] vs exact
+    * [[graft.operators.Similarity.bruteForceTopK]]): what the 4× memory compression
     * costs in top-10 recall for the same query set the other recall
     * probes use. The quantization (L2-normalize → symmetric per-vector
     * scale → floor(x+0.5)) and the exact-integer dot are replayed
@@ -9749,7 +9749,7 @@ object PipelineQueries {
     s"""ROUND(list_dot_product($a, $a) + list_dot_product($b, $b)
        |      - 2 * list_dot_product($a, $b), 6)""".stripMargin
 
-  /** Product-quantization ADC recall ([[Similarity.pqTopK]], m=4
+  /** Product-quantization ADC recall ([[graft.operators.Similarity.pqTopK]], m=4
     * subspaces × 16 seed codewords over the full 64-dim vectors =
     * 4 codes/vector, a 64× memory cut): measured against the same
     * exact truth as its siblings, so the recall column reads IVF
@@ -9760,7 +9760,7 @@ object PipelineQueries {
     * (unrefined) codebooks waste part of theirs — which is exactly
     * what the measured number should say; real embedding corpora
     * concentrate near manifolds, the regime PQ (especially
-    * Lloyd-refined via [[Similarity.kmeansFit]] per subspace)
+    * Lloyd-refined via [[graft.operators.Similarity.kmeansFit]] per subspace)
     * compresses well, and the production recipe at this code rate is
     * PQ-shortlist + exact rerank (`ann_int8_rerank`'s shape). The
     * oracle replays normalization, the md5-ordered seed pick, all
@@ -9841,7 +9841,7 @@ object PipelineQueries {
     (s, dir) => pqSeedBody(Tables.embeddings(s, dir)),
     Some(pqSeedOracle(embSrcSql)))
 
-  /** Seed-codebook PQ recall on the MANIFOLD fixture ([[manifoldEmb]]):
+  /** Seed-codebook PQ recall on the MANIFOLD fixture (`manifoldEmb`):
     * identical parameters to `ann_pq_recall` (m=4 × 16 seed codewords,
     * the 64× memory cut) — the pair isolates the fixture effect for
     * the component PQ is SOLD on: clustered data gives codewords
@@ -9853,10 +9853,10 @@ object PipelineQueries {
     (s, dir) => pqSeedBody(manifoldEmb(s, dir)),
     Some(pqSeedOracle(manifoldSrcSql)))
 
-  /** Lloyd-refined PQ recall ([[Similarity.pqTopK]] with
+  /** Lloyd-refined PQ recall ([[graft.operators.Similarity.pqTopK]] with
     * `lloydIters = 2`): identical fixture and machinery to
     * `ann_pq_recall`, except each subspace codebook is refined by two
-    * L2-metric Lloyd iterations ([[Similarity.kmeansFit]]) before
+    * L2-metric Lloyd iterations ([[graft.operators.Similarity.kmeansFit]]) before
     * encode — the FAISS `IndexPQ.train` step the seed-codebook query
     * deliberately omits, registered SEPARATELY so the refinement is a
     * measured recall delta in the correctness record rather than a
@@ -9998,7 +9998,7 @@ object PipelineQueries {
     (s, dir) => pqLloydBody(manifoldEmb(s, dir)),
     Some(pqLloydOracle(manifoldSrcSql)))
 
-  /** PQ-shortlist + exact rerank recall ([[Similarity.pqRerankTopK]],
+  /** PQ-shortlist + exact rerank recall ([[graft.operators.Similarity.pqRerankTopK]],
     * seed codebooks, shortlist 4×k): every PQ scaladoc in the repo
     * names this as "the production recipe at this code rate" — this
     * registration turns the recommendation into a measured number
@@ -10245,8 +10245,8 @@ object PipelineQueries {
 
   /** TRAINED coarse cells on the manifold fixture (round-12 verdict
     * ask #4 — the ncells curve's own lesson, "cell placement, not
-    * count", closed with a LEARNED point): [[Similarity.kmeansInit]]
-    * hash-picks 8 / 16 seeds, [[Similarity.kmeansFit]] refines them
+    * count", closed with a LEARNED point): [[graft.operators.Similarity.kmeansInit]]
+    * hash-picks 8 / 16 seeds, [[graft.operators.Similarity.kmeansFit]] refines them
     * with 2 Lloyd iterations (the `ann_kmeans` contract: rounded-6dp
     * cosine assignment, exact decimal means), and the same
     * nprobe=2 / k=10 search runs beside the arbitrary seed-8 baseline
@@ -10267,7 +10267,7 @@ object PipelineQueries {
     * replays all-double end to end and one flipped cell anywhere
     * hash-fails.
     *
-    * Scale: training is the [[Similarity.kmeansFit]] shape (per
+    * Scale: training is the [[graft.operators.Similarity.kmeansFit]] shape (per
     * iteration one broadcast argmax pass + a ≤ k × dim mean shuffle,
     * checkpoint-cut per round); search cost is the standard IVF
     * candidate restriction. The whole query adds two 2-iteration fits
@@ -10404,9 +10404,9 @@ object PipelineQueries {
     })
 
   /** SEMANTIC dedup over the clustered manifold fixture — the SemDeDup
-    * recipe end to end ([[Dedup.semDedup]]): [[Similarity.kmeansInit]]
+    * recipe end to end ([[graft.operators.Dedup.semDedup]]): [[graft.operators.Similarity.kmeansInit]]
     * hash-picks k = max(16, ⌊√N⌋) seeds (22 at sf0.01 — see the
-    * balance-point comment below), [[Similarity.kmeansFit]] refines
+    * balance-point comment below), [[graft.operators.Similarity.kmeansFit]] refines
     * them with 2 Lloyd iterations (the `ann_ivf_cells_trained`
     * training contract verbatim), then within-cell pairwise cosine at
     * θ = 0.6 → connected components → keep-the-outlier representative
@@ -10538,7 +10538,7 @@ object PipelineQueries {
     * pass at the loosest θ serve all three arms (pairs at 0.6/0.7
     * are filters of the 0.5 set over the SAME rounded cosine column,
     * bit-identical to running each arm alone — the
-    * [[Dedup.semDedupScoredPairs]] contract); each arm then runs its
+    * `Dedup.semDedupScoredPairs` contract); each arm then runs its
     * own connected components (tighter θ ⇒ sparser graph ⇒ groups
     * FRAGMENT — n_groups is not monotone even though pairs are).
     *
@@ -10552,7 +10552,7 @@ object PipelineQueries {
     * kept-fraction" procedure has the data it needs.
     *
     * The oracle replays training + assignment once
-    * ([[semDedupAssignCtes]]) and walks three recursive-CTE
+    * (`semDedupAssignCtes`) and walks three recursive-CTE
     * component passes, one per θ.
     */
   val dedupSemdedupCurve = QueryDef(
@@ -10579,7 +10579,7 @@ object PipelineQueries {
             col("n_groups"), (col("n_docs") - col("n_groups")).as("n_dropped"))
       }
       // Each arm runs its own eager connected-components chain
-      // ([[Dedup.dedupClusters]] label-propagation rounds) over its
+      // ([[graft.operators.Dedup.dedupClusters]] label-propagation rounds) over its
       // filter of the shared scored-pair cut — independent, overlap
       // them (Par, guide §2.6).
       graft.operators.Par.seq(Seq(5, 6, 7).map(t => () => arm(t)))
@@ -10622,7 +10622,7 @@ object PipelineQueries {
          |FROM row7""".stripMargin
     })
 
-  /** Incremental SEMANTIC dedup ([[Dedup.semDedupAgainstCorpus]]) —
+  /** Incremental SEMANTIC dedup ([[graft.operators.Dedup.semDedupAgainstCorpus]]) —
     * the arrival-time member of the D25 family beside the SimHash and
     * LSH incremental paths: the standing corpus is vec_id ≥ 20
     * (trained + assigned offline — √N cells fit on the CORPUS only,
@@ -11041,7 +11041,7 @@ object PipelineQueries {
   }
 
   /** RESIDUAL-encoded IVF×PQ on the manifold fixture
-    * ([[Similarity.ivfPqResidualTopK]] — the actual FAISS `IndexIVFPQ`
+    * ([[graft.operators.Similarity.ivfPqResidualTopK]] — the actual FAISS `IndexIVFPQ`
     * contract): codes describe `u − ĉ(cell)`, so the codebook budget
     * goes to LOCAL detail instead of re-describing the cluster means
     * the coarse quantizer already captured. "Already captured" is a
@@ -11105,7 +11105,7 @@ object PipelineQueries {
     * residual} × tail ∈ {ADC, exact rerank}), and the configuration a
     * trained-coarse-quantizer FAISS deployment actually ships:
     * residual codes build the 40-candidate shortlist
-    * ([[Similarity.ivfPqResidualRerankTopK]], shortlistFactor 4), the
+    * ([[graft.operators.Similarity.ivfPqResidualRerankTopK]], shortlistFactor 4), the
     * exact-cosine tail then erases code quantization error INSIDE the
     * shortlist, so the measured recall isolates shortlist MEMBERSHIP
     * as the only loss term. Read against its three siblings the matrix
@@ -11131,7 +11131,7 @@ object PipelineQueries {
     Some(ivfPqResidualOracle(manifoldSrcSql, rerank = true)))
 
   /** IVF×PQ composite recall on the manifold fixture
-    * ([[Similarity.ivfPqTopK]] — FAISS `IndexIVFPQ` without residuals,
+    * ([[graft.operators.Similarity.ivfPqTopK]] — FAISS `IndexIVFPQ` without residuals,
     * the billion-vector production index): coarse cells prune WHICH
     * rows are scored (nprobe=2 of 8 cells), PQ codes shrink WHAT each
     * row stores (m=4 × 16). Registered beside its parents so the
@@ -11154,7 +11154,7 @@ object PipelineQueries {
     (s, dir) => ivfPqBody(manifoldEmb(s, dir), rerank = true),
     Some(ivfPqOracle(manifoldSrcSql, rerank = true)))
 
-  /** Retrieve-then-rerank recall ([[Similarity.int8RerankTopK]]):
+  /** Retrieve-then-rerank recall ([[graft.operators.Similarity.int8RerankTopK]]):
     * int8 shortlist at 4×k, exact-cosine rerank of the shortlist,
     * measured against the same exact truth as its siblings — so the
     * recall column now reads one-stage-quantized (`ann_int8_recall`)
@@ -11219,7 +11219,7 @@ object PipelineQueries {
             |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
             |) GROUP BY ROLLUP(q_id)""".stripMargin))
 
-  /** IVF × int8 stacked recall ([[Similarity.ivfInt8TopK]]): the
+  /** IVF × int8 stacked recall ([[graft.operators.Similarity.ivfInt8TopK]]): the
     * composed production path — nprobe=2 IVF pruning times int8
     * scoring — measured against exact truth with the same fixture as
     * `ann_recall`/`ann_int8_recall`, so the three numbers read as a
@@ -11290,7 +11290,7 @@ object PipelineQueries {
             |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
             |) GROUP BY ROLLUP(q_id)""".stripMargin))
 
-  /** k-means centroid training ([[Similarity.kmeansFit]]): 2 Lloyd
+  /** k-means centroid training ([[graft.operators.Similarity.kmeansFit]]): 2 Lloyd
     * iterations from the same deterministic seeds the `ann_ivf_*`
     * queries use (vec_id < 8), emitted one row per (cell, coordinate)
     * so the driver compares scalar columns (arrays are projected out,
@@ -11523,7 +11523,7 @@ object PipelineQueries {
            |       lang, COUNT(*) AS n_rows
            |FROM documents GROUP BY 1, 2""".stripMargin))
 
-  /** K-fold assignment ([[Sampling.kfoldAssign]], k=5): per-(fold,
+  /** K-fold assignment ([[graft.operators.Sampling.kfoldAssign]], k=5): per-(fold,
     * lang) counts — pins exact hash membership of every row's fold
     * (the oracle recomputes each fold id), fold disjointness/
     * exhaustiveness being structural (`mod k`). Folds are hash-
@@ -11554,9 +11554,9 @@ object PipelineQueries {
     *
     * Composition is entirely proven parts: the `dedup_minhash`
     * operating point generates pairs (cut: the fold joins and the CC
-    * both read them), [[Dedup.dedupClusters]] labels components,
+    * both read them), [[graft.operators.Dedup.dedupClusters]] labels components,
     * singletons fall back to their own id (LEFT join + coalesce), and
-    * both fold assignments are the [[Sampling.hashBucket]] idiom —
+    * both fold assignments are the [[graft.operators.Sampling.hashBucket]] idiom —
     * deterministic, engine-portable, no shuffle beyond the pair join.
     * The leak counts come from ONE pair-cardinality join of the pair
     * frame against the folded frame (both schemes' verdicts in the
@@ -11569,7 +11569,7 @@ object PipelineQueries {
     * table exists because at web scale giant components make the
     * balance column the binding constraint.
     *
-    * The oracle replays the full minhash chain ([[minhashPairsCtes]]),
+    * The oracle replays the full minhash chain (`minhashPairsCtes`),
     * the recursive-CTE components, both md5 fold assignments, and
     * both counts.
     */
@@ -11651,7 +11651,7 @@ object PipelineQueries {
          |FROM bal_g CROSS JOIN lk""".stripMargin
     })
 
-  /** In-batch negative sampling ([[Sampling.inBatchNegatives]],
+  /** In-batch negative sampling ([[graft.operators.Sampling.inBatchNegatives]],
     * 16 hash-batches, k=2): the deterministic contrastive-pairs prep.
     * The oracle replays bucket assignment, the (md5, id) ring order,
     * and the modular partner pick row-for-row.
@@ -11678,7 +11678,7 @@ object PipelineQueries {
            |  ON n.bucket = a.bucket AND n.r = (a.r + a.j) % a.sz
            |WHERE n.id <> a.anchor_id""".stripMargin))
 
-  /** Class-balanced downsample ([[Sampling.balancedDownsample]]): every
+  /** Class-balanced downsample ([[graft.operators.Sampling.balancedDownsample]]): every
     * language stratum cut to ~the smallest stratum's size before
     * training — the standard rebalance for skewed label/language
     * distributions. Registered as the per-lang counts AFTER balancing
@@ -11699,14 +11699,14 @@ object PipelineQueries {
            |      < m.n_min * 1000000
            |GROUP BY 1""".stripMargin))
 
-  /** As-of join ([[Asof.asofJoin]]): each purchase event picks up the
+  /** As-of join ([[graft.operators.Asof.asofJoin]]): each purchase event picks up the
     * most recent at-or-before `view` event's value for the same user —
     * the point-in-time lookup shape (price as of trade, profile as of
     * click). The right side is pre-aggregated to one row per
     * (user, ts) per the operator's uniqueness precondition. The join
-    * runs on the canonical TIMESTAMP_NTZ `ts` ([[Tables.events]]'
+    * runs on the canonical TIMESTAMP_NTZ `ts` ([[graft.sources.Tables.events]]'
     * contract); the matched ts is EMITTED as epoch-micros bigint
-    * ([[Tables.tsMicros]]) because the driver comparator routes
+    * ([[graft.sources.Tables.tsMicros]]) because the oracle comparison routes
     * nullable int64 through float64 (pandas) and micros ≈ 1.7e15 stay
     * within double's 2^53 exact range. The oracle is DuckDB's native
     * ASOF LEFT JOIN — an independent implementation of the same
@@ -11737,11 +11737,11 @@ object PipelineQueries {
            |       epoch_us(v.ts) AS view_ts_us, v.view_value
            |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin))
 
-  /** Range join ([[RangeJoin.pointInInterval]]): every click within
+  /** Range join ([[graft.operators.RangeJoin.pointInInterval]]): every click within
     * ±5 minutes of any error event — no equi key, pure interval
     * containment, bucketized to a 10-minute-bucket equi-join (PlanSpec
     * pins the no-BNLJ plan). The whole query runs at MICROSECOND grain
-    * ([[Tables.tsMicros]] on the Spark side, `epoch_us` in DuckDB) —
+    * ([[graft.sources.Tables.tsMicros]] on the Spark side, `epoch_us` in DuckDB) —
     * the canonical `ts` is already micros-precision, so membership and
     * deltas are bit-identical across both engines. The oracle is
     * DuckDB's native range join (IEJoin) over timestamp intervals —
@@ -11768,12 +11768,12 @@ object PipelineQueries {
            |FROM c JOIN e
            |  ON c.ts BETWEEN e.ts - INTERVAL 5 MINUTE AND e.ts + INTERVAL 5 MINUTE""".stripMargin))
 
-  /** Interval-overlap join ([[RangeJoin.intervalOverlap]]): per-user
+  /** Interval-overlap join ([[graft.operators.RangeJoin.intervalOverlap]]): per-user
     * hourly view-activity intervals × error-incident windows (±5 min)
     * — "whose browsing hour overlapped an incident". Exactly-once via
     * the canonical overlap-start bucket; oracle is DuckDB's native
     * IEJoin on the raw inequality — an independent implementation of
-    * the same semantics. µs grain throughout ([[Tables.tsMicros]] /
+    * the same semantics. µs grain throughout ([[graft.sources.Tables.tsMicros]] /
     * DuckDB `epoch_us` over the canonical micros-precision `ts`).
     */
   val overlapEvents = QueryDef(
@@ -11819,7 +11819,7 @@ object PipelineQueries {
     * streaming operator's constant-size per-key state. Ordering is
     * (ts_us, event_id) so same-microsecond events split sessions
     * identically in both engines. µs grain as everywhere in the
-    * events family: [[Tables.tsMicros]] / DuckDB `epoch_us`.
+    * events family: [[graft.sources.Tables.tsMicros]] / DuckDB `epoch_us`.
     */
   val eventsSessionize = QueryDef(
     "events_sessionize",
@@ -11957,7 +11957,7 @@ object PipelineQueries {
            |       CAST(MAX(gap_us) AS BIGINT) AS max_gap_us
            |FROM g GROUP BY 1""".stripMargin))
 
-  /** DuckDB twin of [[Multimodal.dHash]]'s 56-term bit sum: byte i of
+  /** DuckDB twin of [[graft.operators.Multimodal.dHash]]'s 56-term bit sum: byte i of
     * the payload is the two hex chars of the md5 chain at 2i, parsed
     * through a strpos lookup; bit (r,c) compares row-adjacent bytes.
     * Generated from the same (rows=8, cols=8) loop as the Spark
@@ -11970,7 +11970,7 @@ object PipelineQueries {
       s"CASE WHEN by[${a + 2}] > by[${a + 1}] THEN ${1L << idx} ELSE 0 END"
     }).mkString(" + ")
 
-  /** Perceptual-hash media near-dup pairs ([[Multimodal.phashPairs]]):
+  /** Perceptual-hash media near-dup pairs ([[graft.operators.Multimodal.phashPairs]]):
     * dHash over the synthetic payload "pixels" → the same bit-slice
     * band → cap → equi-join → Hamming machinery as text SimHash, on
     * the media table PLUS a deterministic "re-encode" of every 10th
@@ -12034,7 +12034,7 @@ object PipelineQueries {
             |WHERE bit_count(xor(a.sim, b.sim)) <= 6""".stripMargin))
 
   /** Perceptual-hash media CLUSTERS — [[mmPhashPairs]]'s pair graph
-    * folded through [[Dedup.dedupClusters]]'s connected components:
+    * folded through [[graft.operators.Dedup.dedupClusters]]'s connected components:
     * the media-space completion of the clusters family (text D2b,
     * embeddings D15, media here), same iterative min-label CC with
     * the recursive-CTE oracle replaying the transitive closure. On
@@ -12103,7 +12103,7 @@ object PipelineQueries {
             |FROM reach GROUP BY s""".stripMargin))
 
   /** Ordered-step conversion funnel view → click → purchase per user
-    * (the [[Funnel]] operator): stage k reached at the first `steps(k)`
+    * (the [[graft.operators.Funnel]] operator): stage k reached at the first `steps(k)`
     * event strictly after stage k-1's time, anchored at the minimum
     * 'view' time. One shuffle on user_id (sorted-list fold — see the
     * operator scaladoc for the equivalence proof and the k-cascade
@@ -12147,7 +12147,7 @@ object PipelineQueries {
            |       LEFT JOIN p ON u.user_id = p.user_id""".stripMargin))
 
   /** Incremental embedding near-dup
-    * ([[Similarity.nearDupsAgainstCorpusEmbed]]): the 80/20 vec_id
+    * ([[graft.operators.Similarity.nearDupsAgainstCorpusEmbed]]): the 80/20 vec_id
     * split of `embeddings`, batch-banded × corpus-banded sign-LSH
     * candidates (corpus never self-joins, corpus side capped),
     * cosine-verified at the `ann_lsh_bucket` threshold — the
@@ -12282,7 +12282,7 @@ object PipelineQueries {
             |       MAX(cos) AS max_cos
             |FROM hits GROUP BY 1""".stripMargin))
 
-  /** The funnel's at-least-stage summary ([[Funnel.summary]]): users
+  /** The funnel's at-least-stage summary ([[graft.operators.Funnel.summary]]): users
     * reaching stage >= s, a suffix sum over the k+1-row stage
     * histogram (the partition-less window is free at that
     * cardinality). Registered beside the per-user `events_funnel` so
@@ -12447,7 +12447,7 @@ object PipelineQueries {
            |       CAST(SUM(dt_us) AS BIGINT) AS span_us
            |FROM d GROUP BY 1""".stripMargin))
 
-  /** SCD1 upsert merge ([[Pendentes.upsertMerge]]): the standing
+  /** SCD1 upsert merge ([[graft.operators.Pendentes.upsertMerge]]): the standing
     * events table merged with an update batch (every 5th event
     * re-delivered at version 1 with a corrected value) — latest
     * version wins, updates beat base on ties. The union + one-max_by
@@ -12479,7 +12479,7 @@ object PipelineQueries {
            |) QUALIFY ROW_NUMBER() OVER (
            |    PARTITION BY event_id ORDER BY version DESC, prio DESC) = 1""".stripMargin))
 
-  /** SCD2 history-preserving merge ([[Pendentes.scd2Merge]] — U3's
+  /** SCD2 history-preserving merge ([[graft.operators.Pendentes.scd2Merge]] — U3's
     * interval-closing other half, the r16 verdict's Missing #2): a
     * synthetic dimension (one open row per user, valid_from = 0,
     * sentinel payload) absorbs every 7th event as a new version at its
@@ -12582,7 +12582,7 @@ object PipelineQueries {
             |WHERE valid_from <= $Scd2AsOfMicros
             |  AND (valid_to IS NULL OR valid_to > $Scd2AsOfMicros)""".stripMargin))
 
-  /** Row-level snapshot diff ([[Pendentes.snapshotDiff]]): the events
+  /** Row-level snapshot diff ([[graft.operators.Pendentes.snapshotDiff]]): the events
     * table against a deterministically perturbed re-extract — every
     * 13th row dropped (removed), every 5th surviving value corrected
     * (changed), a re-keyed tail appended (added) — classifying each
@@ -12787,9 +12787,9 @@ object PipelineQueries {
 
   /** Unigram-LM (SentencePiece-family) tokenizer TRAINING
     * ([[graft.operators.Unigram.train]]) — seed from frequent
-    * substrings, [[UnigramEmIters]] hard-EM rounds in the
+    * substrings, `UnigramEmIters` hard-EM rounds in the
     * exact-integer micro-nat posture, prune to the
-    * [[UnigramVocabSize]] budget. The oracle replays every round as
+    * `UnigramVocabSize` budget. The oracle replays every round as
     * unrolled CTEs (the T18 20-round-BPE precedent), so a wrong seed
     * count, DP tie-break, EM count, score rounding, or prune rank
     * anywhere hash-fails. Round-15 verdict ask #2.
@@ -12855,7 +12855,7 @@ object PipelineQueries {
 
   /** Fertility (tokens emitted per corpus word) of the two trained
     * tokenizer families at the SAME nominal vocabulary budget
-    * ([[UnigramVocabSize]] = alphabet + [[BpeMerges]]) — the
+    * (`UnigramVocabSize` = alphabet + `BpeMerges`) — the
     * comparison row the round-15 verdict asked for beside
     * `text_bpe_merge_curve`. One row per tokenizer with its MEASURED
     * shipped vocabulary size (BPE's is data-dependent: symbols still
@@ -13047,7 +13047,7 @@ object PipelineQueries {
       .mkString(" ") + " ELSE '' END"
 
   /** TRAINED language-ID vs the T2 stopword heuristic
-    * ([[TextAnalysis.langIdModel]]/[[TextAnalysis.langIdScore]] — the
+    * ([[graft.operators.TextAnalysis.langIdModel]]/[[graft.operators.TextAnalysis.langIdScore]] — the
     * round-15 verdict ask #3): a 5-class naive-Bayes over hashed
     * char-trigrams (256 buckets) trained on the 4/5 split of the
     * marker fixture, confusion-matrixed on the held-out fifth BESIDE

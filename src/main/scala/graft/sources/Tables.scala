@@ -1,10 +1,13 @@
 package graft.sources
 
+import java.lang.ref.SoftReference
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.types.StructType
 
 /** Table loaders over the driver-generated Parquet test data plus the
@@ -23,6 +26,16 @@ import org.apache.spark.sql.types.StructType
   * on their keys so the joins co-locate — on unbucketed data AQE picks
   * shuffle-hash/sort-merge. Column pruning + filter pushdown reach the
   * parquet scans because everything below is pure `select`/`filter`.
+  *
+  * Session handle: [[analiseComercial]] and [[classificacaoProdutos]]
+  * build their analyzed plan once per session and unchanged input
+  * (`view` below gives the invalidation rules). Self-join hazard: two
+  * calls in one session therefore return frames with the same
+  * attribute ids, i.e. one DataFrame to Spark. Joining them is a
+  * self-join, and a condition such as `a("cliente") === b("cliente")`
+  * fails as ambiguous. No registry query combines two separate calls
+  * of the same view in one plan; a query that needs a view twice takes
+  * both sides from one call and aliases them.
   */
 object Tables {
 
@@ -39,8 +52,9 @@ object Tables {
     *
     * Invalidation: an entry is reused only while its signature holds.
     * The signature is the recursive file listing of the path (name,
-    * length, modification time) plus the session's explicitly set
-    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` entries,
+    * length, modification time; see `files`) plus the session's
+    * explicitly set `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` entries,
     * which change the inferred types ([[events]] flips `nanosAsLong`).
     * A rewritten file or a changed conf re-infers, so a stale schema
     * is never served. A path that does not exist goes straight to
@@ -68,20 +82,85 @@ object Tables {
 
   private val schemas = new ConcurrentHashMap[String, (Signature, StructType)]()
 
-  private type Signature = (Seq[(String, Long, Long)], Seq[(String, String)])
+  private type Files = Seq[(String, Long, Long)]
+  private type Signature = (Files, Seq[(String, String)])
 
-  private def signature(spark: SparkSession, fs: FileSystem, p: Path): Signature = {
-    val files = Seq.newBuilder[(String, Long, Long)]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
-      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
-    }
-    (files.result().sorted, conf.sorted)
+  private def signature(spark: SparkSession, fs: FileSystem, p: Path): Signature =
+    (files(fs, p), parquetConf(spark))
+
+  /** Every file under `p` (or `p` itself): name, length, modification
+    * time. A plain `listStatus` walk, not `fs.listFiles`: that builds a
+    * `LocatedFileStatus` per file, which on the local file system reads
+    * the file's owner and permissions, by starting a `stat` process
+    * when Hadoop's native library is absent (about 4 ms a file on a
+    * 4-core host, against 0.02 ms for this walk).
+    */
+  private def files(fs: FileSystem, p: Path): Files = {
+    def walk(s: FileStatus): Seq[(String, Long, Long)] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    fs.listStatus(p).toSeq.flatMap(walk).sorted
   }
+
+  private def parquetConf(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+
+  /** The analyzed plan of a view over `dir`'s `tables`, built at most
+    * once per session and unchanged input.
+    *
+    * Why the memo exists: a dashboard refresh runs several small
+    * queries over the same fact and dimension views. Without it every
+    * [[analiseComercial]] call reads five tables (a file index each),
+    * analyzes the 5-way join afresh, and Spark's CacheManager then
+    * canonicalizes that new join to find the persisted copy. With it,
+    * a repeated call hands back a DataFrame over the same analyzed
+    * plan, whose persisted copy is found without that work.
+    *
+    * Invalidation is as strict as [[table]]'s schema memo. An entry is
+    * reused only while its key holds: the recursive file listing of
+    * every table the view reads, the session's explicitly set
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` entries,
+    * and `graft.load.repartition` ([[spread]] bakes it into the plan).
+    * The key is taken before the view is built, so a table rewritten
+    * during the build can only cause a rebuild, never a stale hit. If
+    * any table is missing, the view is built as it always was and
+    * [[table]] raises Spark's own error.
+    *
+    * Entries are keyed weakly by session, so a session's plans never
+    * serve another session. The analyzed plan refers to its session
+    * (through its file relations), so it is held softly: a strongly
+    * held plan would keep its own weak key alive and the session with
+    * it. A plan the collector clears is simply built again.
+    */
+  private def view(spark: SparkSession, dir: String, name: String, tables: Seq[String])(
+      build: => DataFrame): DataFrame = {
+    val paths = tables.map { t =>
+      val p = new Path(s"$dir/$t.parquet")
+      (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+    }
+    if (paths.exists { case (p, fs) => !fs.exists(p) }) build
+    else {
+      val key = (paths.map { case (p, fs) => files(fs, p) }, parquetConf(spark),
+        spark.conf.get("graft.load.repartition", "0"))
+      val memo = views.synchronized {
+        views.computeIfAbsent(spark, _ => new ConcurrentHashMap[(String, String), ViewEntry]())
+      }
+      Option(memo.get((name, dir))).filter(_._1 == key).flatMap(e => Option(e._2.get)) match {
+        case Some(plan) => Frames.ofPlan(spark, plan)
+        case None =>
+          val df = build
+          memo.put((name, dir), (key, new SoftReference(df.queryExecution.analyzed)))
+          df
+      }
+    }
+  }
+
+  private type ViewEntry = ((Seq[Files], Seq[(String, String)], String), SoftReference[LogicalPlan])
+
+  private val views =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[(String, String), ViewEntry]]()
 
   /** Conf-gated spread of a freshly-loaded frame across the cluster.
     *
@@ -205,7 +284,11 @@ object Tables {
     * tie-break for order-sensitive operators (SURVEY §7 hard-part 1);
     * the reference relies on pandas frame order instead.
     */
-  def analiseComercial(spark: SparkSession, dir: String): DataFrame = {
+  def analiseComercial(spark: SparkSession, dir: String): DataFrame =
+    view(spark, dir, "analise_comercial",
+      Seq("lineitem", "orders", "customer", "nation", "part"))(buildAnaliseComercial(spark, dir))
+
+  private def buildAnaliseComercial(spark: SparkSession, dir: String): DataFrame = {
     val l = lineitem(spark, dir).select(
       "l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_discount", "l_returnflag")
     val o = orders(spark, dir).select(
@@ -266,13 +349,13 @@ object Tables {
     * negocio ⊃ grupo ⊃ subgrupo synthesized from `part` columns.
     */
   def classificacaoProdutos(spark: SparkSession, dir: String): DataFrame =
-    part(spark, dir).select(
+    view(spark, dir, "classificacao_produtos", Seq("part"))(part(spark, dir).select(
       col("p_partkey").cast("string").as("codigo_produto"),
       col("p_name").as("descricao"),
       col("p_type").as("negocio"),
       concat(col("p_type"), lit(" "), col("p_brand")).as("grupo"),
       concat(col("p_brand"), lit("#"), (col("p_size") % 5).cast("string")).as("subgrupo"),
-      col("p_brand").as("fabricante"))
+      col("p_brand").as("fabricante")))
 
   val classificacaoProdutosSql: String =
     """SELECT CAST(p_partkey AS VARCHAR) AS codigo_produto,

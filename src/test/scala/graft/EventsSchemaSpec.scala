@@ -107,7 +107,7 @@ class EventsSchemaSpec extends AnyFunSuite {
   * regeneration surfaces as ONE failing test naming the drift, not as
   * dozens of downstream analysis errors.
   */
-class PipelineTablesSchemaSpec extends org.scalatest.funsuite.AnyFunSuite {
+class PipelineTablesSchemaSpec extends org.scalatest.funsuite.AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("documents schema contract") {
@@ -138,28 +138,36 @@ class PipelineTablesSchemaSpec extends org.scalatest.funsuite.AnyFunSuite {
   private def tmpDir(tag: String): String =
     s"${sys.props("java.io.tmpdir")}/graft-memo-test/$tag"
 
-  test("a repeated lineitem read of an unchanged path starts no Spark job") {
-    import spark.implicits._
+  /** Runs `body` in job group `tag`, then plain parquet inference of
+    * `controlPath` in a second group, and returns the body's result, the
+    * ids of the jobs the body started, and the inferred schema. The
+    * listener bus is FIFO, so once the control job is visible any job
+    * of the first group is too.
+    */
+  private def jobsOf[T](tag: String, controlPath: String)(body: => T): (T, Seq[Int], StructType) = {
     val sc = spark.sparkContext
-    val dir = tmpDir("hit")
-    Seq((1L, 1, 2.5)).toDF("l_orderkey", "l_linenumber", "l_extendedprice")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    graft.sources.Tables.lineitem(spark, dir) // first read: infers
-    val (hit, control) = ("graft-memo-hit", "graft-memo-control")
-    sc.setJobGroup(hit, "memoized lineitem read")
-    val again = try graft.sources.Tables.lineitem(spark, dir) finally sc.clearJobGroup()
-    // Control: plain inference in a second group. The listener bus is
-    // FIFO, so once its job is visible any job of the first group is too.
+    val control = s"$tag-control"
+    sc.setJobGroup(tag, tag)
+    val out = try body finally sc.clearJobGroup()
     sc.setJobGroup(control, "plain parquet inference")
-    val inferred = try spark.read.parquet(s"$dir/lineitem.parquet").schema
-      finally sc.clearJobGroup()
+    val inferred = try spark.read.parquet(controlPath).schema finally sc.clearJobGroup()
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (sc.statusTracker.getJobIdsForGroup(control).isEmpty && System.nanoTime() < deadline)
       Thread.sleep(20)
     assert(sc.statusTracker.getJobIdsForGroup(control).nonEmpty,
       "control inference must show up as a job")
-    assert(sc.statusTracker.getJobIdsForGroup(hit).isEmpty,
-      s"memoized read ran jobs ${sc.statusTracker.getJobIdsForGroup(hit).toSeq}")
+    (out, sc.statusTracker.getJobIdsForGroup(tag).toSeq, inferred)
+  }
+
+  test("a repeated lineitem read of an unchanged path starts no Spark job") {
+    import spark.implicits._
+    val dir = tmpDir("hit")
+    Seq((1L, 1, 2.5)).toDF("l_orderkey", "l_linenumber", "l_extendedprice")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    graft.sources.Tables.lineitem(spark, dir) // first read: infers
+    val (again, jobs, inferred) = jobsOf("graft-memo-hit", s"$dir/lineitem.parquet")(
+      graft.sources.Tables.lineitem(spark, dir))
+    assert(jobs.isEmpty, s"memoized read ran jobs $jobs")
     assert(again.schema == inferred)
   }
 
@@ -210,5 +218,95 @@ class PipelineTablesSchemaSpec extends org.scalatest.funsuite.AnyFunSuite {
     val e = intercept[org.apache.spark.sql.AnalysisException](
       graft.sources.Tables.table(spark, dir, "absent"))
     assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
+
+  // Tables.analiseComercial / classificacaoProdutos memoize their
+  // analyzed plan per session; these pin that a repeat is free and that
+  // every input of the view invalidates it.
+
+  private val factTables = Seq("lineitem", "orders", "customer", "nation", "part")
+
+  /** A private copy of the sf0.001 fact/dim tables, safe to rewrite. */
+  private def viewTables(tables: Seq[String] = factTables): String = {
+    val dir = tempDir("graft_views")
+    tables.foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"/root/testdata/sf0.001/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    }
+    dir
+  }
+
+  private def fact(s: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.sources.Tables.analiseComercial(s, dir).queryExecution.analyzed
+  private def dim(s: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.sources.Tables.classificacaoProdutos(s, dir).queryExecution.analyzed
+
+  test("a repeated fact/dim view call returns the same analyzed plan and starts no Spark job") {
+    val dir = viewTables()
+    val (f0, d0) = (fact(spark, dir), dim(spark, dir))
+    val ((f1, d1), jobs, _) = jobsOf("graft-view-hit", s"$dir/part.parquet")(
+      (fact(spark, dir), dim(spark, dir)))
+    assert(jobs.isEmpty, s"memoized views ran jobs $jobs")
+    assert(f1 eq f0, "fact view was rebuilt")
+    assert(d1 eq d0, "dim view was rebuilt")
+  }
+
+  test("rewriting any one of the fact view's five tables rebuilds it") {
+    import spark.implicits._
+    val dir = viewTables()
+    factTables.foreach { t =>
+      val before = fact(spark, dir)
+      val f = new java.io.File(s"$dir/$t.parquet")
+      assert(f.setLastModified(f.lastModified() + 2000))
+      assert(!(fact(spark, dir) eq before), s"a rewritten $t served the old plan")
+    }
+    // A real rewrite reaches the rows, not only the plan.
+    val nation = spark.read.parquet(s"$dir/nation.parquet")
+      .withColumn("n_name", lower(col("n_name"))).collect()
+    new java.io.File(s"$dir/nation.parquet").delete()
+    spark.createDataFrame(java.util.Arrays.asList(nation: _*), nation.head.schema)
+      .write.parquet(s"$dir/nation.parquet")
+    val ufs = graft.sources.Tables.analiseComercial(spark, dir)
+      .select("uf").distinct().as[String].collect()
+    assert(ufs.nonEmpty && ufs.forall(u => u == u.toLowerCase), ufs.toSeq.toString)
+  }
+
+  test("flipping graft.load.repartition or a spark.sql.parquet conf rebuilds the views") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val dir = viewTables()
+    val keys = Seq("graft.load.repartition", "spark.sql.parquet.binaryAsString")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      keys.foreach(spark.conf.unset)
+      val (f0, d0) = (fact(spark, dir), dim(spark, dir))
+      assert(f0.collectFirst { case r: Repartition => r }.isEmpty)
+      spark.conf.set("graft.load.repartition", "3")
+      val f1 = fact(spark, dir)
+      assert(!(f1 eq f0), "a new repartition served the old fact plan")
+      assert(f1.collectFirst { case r: Repartition => r.numPartitions } == Some(3))
+      spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+      assert(!(fact(spark, dir) eq f1), "a new parquet conf served the old fact plan")
+      assert(!(dim(spark, dir) eq d0), "a new parquet conf served the old dim plan")
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("a new session builds its own fact/dim plans") {
+    val dir = viewTables()
+    val (f0, d0) = (fact(spark, dir), dim(spark, dir))
+    val other = spark.newSession()
+    val (f1, d1) = (fact(other, dir), dim(other, dir))
+    assert(!(f1 eq f0) && !(d1 eq d0), "a second session was served the first one's plans")
+    assert(fact(other, dir) eq f1, "the second session's fact view was not memoized")
+    assert(fact(spark, dir) eq f0, "the first session lost its fact view")
+  }
+
+  test("a fact view over a missing table still raises PATH_NOT_FOUND") {
+    val dir = viewTables(factTables.filterNot(_ == "part"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      graft.sources.Tables.analiseComercial(spark, dir))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+    val d = intercept[org.apache.spark.sql.AnalysisException](
+      graft.sources.Tables.classificacaoProdutos(spark, dir))
+    assert(d.getCondition == "PATH_NOT_FOUND", d.getMessage)
   }
 }
