@@ -69,10 +69,7 @@ object PipelineQueries {
        |),
        |capped AS (
        |  SELECT id, band, key,
-       |         CASE WHEN n > $cap
-       |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY id) - 1)
-       |                   // $cap
-       |              ELSE 0 END AS sub
+       |         ${capSubSql("band, key", "id", cap)}
        |  FROM banded JOIN bsz USING (band, key)
        |),
        |cand AS (
@@ -545,10 +542,7 @@ object PipelineQueries {
             |        GROUP BY 1, 2, 3),
             |cband AS (
             |  SELECT bands, rows_per_band, id, band, key,
-            |         CASE WHEN n > ${Dedup.LshMaxBucket}
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY bands, band, key ORDER BY id) - 1)
-            |                   // ${Dedup.LshMaxBucket}
-            |              ELSE 0 END AS sub
+            |         ${capSubSql("bands, band, key", "id")}
             |  FROM banded JOIN bsz USING (bands, band, key)
             |),
             |cand AS (
@@ -608,10 +602,7 @@ object PipelineQueries {
            |),
            |capped AS (
            |  SELECT id, sim, band, key,
-           |         CASE WHEN n > ${Dedup.LshMaxBucket}
-           |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY id) - 1)
-           |                   // ${Dedup.LshMaxBucket}
-           |              ELSE 0 END AS sub
+           |         ${capSubSql("band, key", "id")}
            |  FROM banded JOIN bsz USING (band, key)
            |)
            |SELECT id_a, id_b, hamming FROM (
@@ -757,10 +748,7 @@ object PipelineQueries {
            |),
            |capped_c AS (
            |  SELECT id, sim, band, key,
-           |         CASE WHEN n > ${Dedup.LshMaxBucket}
-           |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY id) - 1)
-           |                   // ${Dedup.LshMaxBucket}
-           |              ELSE 0 END AS sub
+           |         ${capSubSql("band, key", "id")}
            |  FROM corpus_banded JOIN bsz USING (band, key)
            |),
            |routed_b AS (
@@ -839,10 +827,7 @@ object PipelineQueries {
            |),
            |capped AS (
            |  SELECT id, sim, band, key,
-           |         CASE WHEN n > ${Dedup.LshMaxBucket}
-           |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY id) - 1)
-           |                   // ${Dedup.LshMaxBucket}
-           |              ELSE 0 END AS sub
+           |         ${capSubSql("band, key", "id")}
            |  FROM banded JOIN bsz USING (band, key)
            |),
            |pair AS (
@@ -5516,38 +5501,10 @@ object PipelineQueries {
          |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
          |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
          |),
-         |sd_keys AS (
-         |  SELECT sd_e.vec_id, p.band,
-         |         CAST(SUM(CASE WHEN sd_e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
-         |              AS BIGINT) AS key
-         |  FROM sd_e CROSS JOIN planes p GROUP BY sd_e.vec_id, p.band
-         |),
+         |${signKeysCte("sd_keys", "sd_e")},
          |sd_ck AS (SELECT * FROM sd_keys WHERE vec_id % 10 = 0),
          |sd_bk AS (SELECT * FROM sd_keys WHERE vec_id % 10 <> 0),
-         |sd_bsz AS (
-         |  SELECT band, key, COUNT(*) AS n FROM sd_ck GROUP BY 1, 2
-         |),
-         |sd_capped AS (
-         |  SELECT vec_id, band, key,
-         |         CASE WHEN n > ${Dedup.LshMaxBucket}
-         |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-         |                   // ${Dedup.LshMaxBucket}
-         |              ELSE 0 END AS sub
-         |  FROM sd_ck JOIN sd_bsz USING (band, key)
-         |),
-         |sd_routed AS (
-         |  SELECT sd_bk.vec_id, sd_bk.band, sd_bk.key,
-         |         CASE WHEN z.n > ${Dedup.LshMaxBucket}
-         |              THEN ('0x' || substr(md5(CAST(sd_bk.vec_id AS VARCHAR)), 1, 15))::BIGINT
-         |                   % ((z.n - 1) // ${Dedup.LshMaxBucket} + 1)
-         |              ELSE 0 END AS sub
-         |  FROM sd_bk JOIN sd_bsz z USING (band, key)
-         |),
-         |sd_cand AS (
-         |  SELECT DISTINCT b.vec_id AS id_b, c.vec_id AS id_c
-         |  FROM sd_routed b JOIN sd_capped c ON b.band = c.band AND b.key = c.key
-         |   AND b.sub = c.sub
-         |),
+         |${routedCandCtes("sd_")},
          |sd_drops AS (
          |  SELECT DISTINCT id_b AS doc_id FROM (
          |    SELECT id_b, ROUND(${cosSql("eb.v", "ec.v")}, 6) AS cos
@@ -8716,6 +8673,72 @@ object PipelineQueries {
        |     ELSE list_dot_product($a, $b)
        |          / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))) END""".stripMargin
 
+  /** The exact truth of every `ann_*` recall oracle: brute-force
+    * top-10 of the queries `vec_id` 10..19 over `e` by 6-dp cosine.
+    */
+  private def annGtCte: String =
+    s"""gt AS (
+       |  SELECT q_id, n_id FROM (
+       |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
+       |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
+       |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
+       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
+       |)""".stripMargin
+
+  /** Recall of `approx` against `gt` per query, plus the corpus-wide
+    * mean in the `q_id = -1` ROLLUP row.
+    */
+  private val recallByQuerySql: String =
+    """SELECT COALESCE(q_id, -1) AS q_id,
+      |       CAST(SUM(hit) AS BIGINT) AS n_hits,
+      |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
+      |FROM (
+      |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
+      |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
+      |) GROUP BY ROLLUP(q_id)""".stripMargin
+
+  /** IVF cell choice over `e` against the centroids `cells` (aliased
+    * `c`, columns `c_id`, `cv`) by 6-dp cosine, ties to the lower
+    * `c_id`: with `nprobe` 0 every vector's one cell (the corpus
+    * assignment), else the `nprobe` nearest cells of each query
+    * `vec_id` 10..19.
+    */
+  private def cellsCte(name: String, cells: String, nprobe: Int = 0): String = {
+    val (where, rank) =
+      if (nprobe == 0) ("", "= 1")
+      else (" WHERE e.vec_id >= 10 AND e.vec_id < 20", s"<= $nprobe")
+    s"""$name AS (
+       |  SELECT vec_id, v, c_id AS cell FROM (
+       |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
+       |    FROM e CROSS JOIN $cells$where
+       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) $rank
+       |)""".stripMargin
+  }
+
+  /** IVF top-10 of each query in `probes` among the corpus vectors
+    * `assign` puts in its probed cells.
+    */
+  private def probedApproxCte(name: String, probes: String, assign: String): String =
+    s"""$name AS (
+       |  SELECT q_id, n_id FROM (
+       |    SELECT q.vec_id AS q_id, n.vec_id AS n_id, ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
+       |    FROM $probes q JOIN $assign n ON q.cell = n.cell AND n.vec_id <> q.vec_id
+       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
+       |)""".stripMargin
+
+  /** One curve arm's corpus-wide recall of `approx` against `gt`,
+    * labeled by the select expression `key`.
+    */
+  private def armRecallCte(name: String, key: String, approx: String): String =
+    s"""$name AS (
+       |  SELECT $key, CAST(SUM(hit) AS BIGINT) AS n_hits,
+       |         ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
+       |  FROM (
+       |    SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
+       |    FROM gt LEFT JOIN $approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
+       |  )
+       |)""".stripMargin
+
   /** Brute-force exact cosine top-10 for the first 10 vectors. */
   val annTopK = QueryDef(
     "ann_cosine_topk",
@@ -8781,6 +8804,66 @@ object PipelineQueries {
 
   private val lshPlanesValues: String = lshPlanesValuesFor(6, 12)
 
+  /** Sign-LSH band keys of the vectors in `e` against `planes`: bit
+    * `j - 1` of a band's key is set when coordinate `idx` is
+    * non-negative.
+    */
+  private def signKeysCte(name: String, e: String): String =
+    s"""$name AS (
+       |  SELECT $e.vec_id, p.band,
+       |         CAST(SUM(CASE WHEN $e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
+       |              AS BIGINT) AS key
+       |  FROM $e CROSS JOIN planes p GROUP BY $e.vec_id, p.band
+       |)""".stripMargin
+
+  /** The LSH bucket cap as a `sub` column: a bucket of `n` rows over
+    * `cap` splits into sub-buckets of `cap` rows in `id` order
+    * ([[graft.operators.Dedup.LshMaxBucket]]).
+    */
+  private def capSubSql(part: String, id: String, cap: Int = Dedup.LshMaxBucket): String =
+    s"CASE WHEN n > $cap THEN (ROW_NUMBER() OVER (PARTITION BY $part ORDER BY $id) - 1) // $cap ELSE 0 END AS sub"
+
+  /** Candidate pairs `id_a < id_b` of the vectors in `keys` that share
+    * a capped band bucket; `bsz` holds the bucket sizes.
+    */
+  private def vecCandCtes: String =
+    s"""capped AS (
+       |  SELECT vec_id, band, key, ${capSubSql("band, key", "vec_id")}
+       |  FROM keys JOIN bsz USING (band, key)
+       |),
+       |cand AS (
+       |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+       |  FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
+       |   AND a.sub = b.sub AND a.vec_id < b.vec_id
+       |)""".stripMargin
+
+  /** Batch-against-corpus candidates `(id_b, id_c)`: the corpus keys
+    * `${p}ck` are capped as in a self-join, and each batch key in
+    * `${p}bk` is routed to one sub-bucket of its band bucket by a hash
+    * of its id, so a batch row meets at most the cap of corpus rows.
+    */
+  private def routedCandCtes(p: String): String =
+    s"""${p}bsz AS (
+       |  SELECT band, key, COUNT(*) AS n FROM ${p}ck GROUP BY 1, 2
+       |),
+       |${p}capped AS (
+       |  SELECT vec_id, band, key, ${capSubSql("band, key", "vec_id")}
+       |  FROM ${p}ck JOIN ${p}bsz USING (band, key)
+       |),
+       |${p}routed AS (
+       |  SELECT ${p}bk.vec_id, ${p}bk.band, ${p}bk.key,
+       |         CASE WHEN z.n > ${Dedup.LshMaxBucket}
+       |              THEN ('0x' || substr(md5(CAST(${p}bk.vec_id AS VARCHAR)), 1, 15))::BIGINT
+       |                   % ((z.n - 1) // ${Dedup.LshMaxBucket} + 1)
+       |              ELSE 0 END AS sub
+       |  FROM ${p}bk JOIN ${p}bsz z USING (band, key)
+       |),
+       |${p}cand AS (
+       |  SELECT DISTINCT b.vec_id AS id_b, c.vec_id AS id_c
+       |  FROM ${p}routed b JOIN ${p}capped c ON b.band = c.band AND b.key = c.key
+       |   AND b.sub = c.sub
+       |)""".stripMargin
+
   val annBucketed = QueryDef(
     "ann_lsh_bucket",
     (s, dir) =>
@@ -8792,28 +8875,11 @@ object PipelineQueries {
             |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
             |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
             |),
-            |keys AS (
-            |  SELECT e.vec_id, p.band,
-            |         CAST(SUM(CASE WHEN e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
-            |              AS BIGINT) AS key
-            |  FROM e CROSS JOIN planes p GROUP BY e.vec_id, p.band
-            |),
+            |${signKeysCte("keys", "e")},
             |bsz AS (
             |  SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2
             |),
-            |capped AS (
-            |  SELECT vec_id, band, key,
-            |         CASE WHEN n > ${Dedup.LshMaxBucket}
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-            |                   // ${Dedup.LshMaxBucket}
-            |              ELSE 0 END AS sub
-            |  FROM keys JOIN bsz USING (band, key)
-            |),
-            |cand AS (
-            |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-            |  FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
-            |   AND a.sub = b.sub AND a.vec_id < b.vec_id
-            |)
+            |${vecCandCtes}
             |SELECT id_a, id_b, cos FROM (
             |  SELECT id_a, id_b, ROUND(${cosSql("ea.v", "eb.v")}, 6) AS cos
             |  FROM cand JOIN e ea ON cand.id_a = ea.vec_id JOIN e eb ON cand.id_b = eb.vec_id
@@ -8849,28 +8915,11 @@ object PipelineQueries {
             |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
             |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
             |),
-            |keys AS (
-            |  SELECT e.vec_id, p.band,
-            |         CAST(SUM(CASE WHEN e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
-            |              AS BIGINT) AS key
-            |  FROM e CROSS JOIN planes p GROUP BY e.vec_id, p.band
-            |),
+            |${signKeysCte("keys", "e")},
             |bsz AS (
             |  SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2
             |),
-            |capped AS (
-            |  SELECT vec_id, band, key,
-            |         CASE WHEN n > ${Dedup.LshMaxBucket}
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-            |                   // ${Dedup.LshMaxBucket}
-            |              ELSE 0 END AS sub
-            |  FROM keys JOIN bsz USING (band, key)
-            |),
-            |cand AS (
-            |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-            |  FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
-            |   AND a.sub = b.sub AND a.vec_id < b.vec_id
-            |),
+            |${vecCandCtes},
             |pairs AS (
             |  SELECT id_a, id_b FROM (
             |    SELECT id_a, id_b, ROUND(${cosSql("ea.v", "eb.v")}, 6) AS cos
@@ -8937,28 +8986,11 @@ object PipelineQueries {
             |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
             |  WHERE embedding IS NOT NULL AND len(embedding) >= 64 AND vec_id % 10 = 0
             |),
-            |keys AS (
-            |  SELECT e.vec_id, p.band,
-            |         CAST(SUM(CASE WHEN e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
-            |              AS BIGINT) AS key
-            |  FROM e CROSS JOIN planes p GROUP BY e.vec_id, p.band
-            |),
+            |${signKeysCte("keys", "e")},
             |bsz AS (
             |  SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2
             |),
-            |capped AS (
-            |  SELECT vec_id, band, key,
-            |         CASE WHEN n > ${Dedup.LshMaxBucket}
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-            |                   // ${Dedup.LshMaxBucket}
-            |              ELSE 0 END AS sub
-            |  FROM keys JOIN bsz USING (band, key)
-            |),
-            |cand AS (
-            |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-            |  FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
-            |   AND a.sub = b.sub AND a.vec_id < b.vec_id
-            |),
+            |${vecCandCtes},
             |lsh AS (
             |  SELECT id_a, id_b FROM (
             |    SELECT id_a, id_b, ROUND(${cosSql("ea.v", "eb.v")}, 6) AS cos
@@ -8995,13 +9027,7 @@ object PipelineQueries {
     },
     Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
             |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
-            |assign AS (
-            |  SELECT vec_id, v, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.v, c.c_id,
-            |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-            |)
+            |${cellsCte("assign", "c")}
             |SELECT q_id, n_id, cell, cos FROM (
             |  SELECT q.vec_id AS q_id, n.vec_id AS n_id, q.cell,
             |         ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
@@ -9025,20 +9051,8 @@ object PipelineQueries {
     },
     Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
             |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
-            |assign AS (
-            |  SELECT vec_id, v, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.v, c.c_id,
-            |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-            |),
-            |probes AS (
-            |  SELECT vec_id, v, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.v, c.c_id,
-            |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c WHERE e.vec_id >= 10 AND e.vec_id < 20
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= 2
-            |)
+            |${cellsCte("assign", "c")},
+            |${cellsCte("probes", "c", 2)}
             |SELECT q_id, n_id, cos FROM (
             |  SELECT q.vec_id AS q_id, n.vec_id AS n_id,
             |         ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
@@ -9165,41 +9179,11 @@ object PipelineQueries {
   private def ivfRecallOracle(src: String): String =
     s"""WITH e AS ($src),
             |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
-            |gt AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-            |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-            |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |),
-            |assign AS (
-            |  SELECT vec_id, v, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.v, c.c_id,
-            |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-            |),
-            |probes AS (
-            |  SELECT vec_id, v, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.v, c.c_id,
-            |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c WHERE e.vec_id >= 10 AND e.vec_id < 20
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= 2
-            |),
-            |approx AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-            |           ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-            |    FROM probes q JOIN assign n ON q.cell = n.cell AND n.vec_id <> q.vec_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |)
-            |SELECT COALESCE(q_id, -1) AS q_id,
-            |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-            |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-            |FROM (
-            |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-            |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-            |) GROUP BY ROLLUP(q_id)""".stripMargin
+            |$annGtCte,
+            |${cellsCte("assign", "c")},
+            |${cellsCte("probes", "c", 2)},
+            |${probedApproxCte("approx", "probes", "assign")}
+            |$recallByQuerySql""".stripMargin
 
   /** ANN recall vs exact ground truth ([[graft.operators.Similarity.recallVsTruth]]):
     * multi-probe IVF (k=10, nprobe=2, same deterministic centroids as
@@ -9342,26 +9326,9 @@ object PipelineQueries {
        |e0 AS ($src),
        |e AS MATERIALIZED (SELECT vec_id, v FROM e0 WHERE v IS NOT NULL AND len(v) >= 64),
        |${nswBitsCtes("e")},
-       |keys AS (
-       |  SELECT e.vec_id, p.band,
-       |         CAST(SUM(CASE WHEN e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
-       |              AS BIGINT) AS key
-       |  FROM e CROSS JOIN planes p GROUP BY e.vec_id, p.band
-       |),
+       |${signKeysCte("keys", "e")},
        |bsz AS (SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2),
-       |capped AS (
-       |  SELECT vec_id, band, key,
-       |         CASE WHEN n > ${Dedup.LshMaxBucket}
-       |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-       |                   // ${Dedup.LshMaxBucket}
-       |              ELSE 0 END AS sub
-       |  FROM keys JOIN bsz USING (band, key)
-       |),
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-       |  FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
-       |   AND a.sub = b.sub AND a.vec_id < b.vec_id
-       |),
+       |${vecCandCtes},
        |pairs AS (
        |  SELECT id_a, id_b, ROUND(${cosSql("ea.v", "eb.v")}, 6) AS cos
        |  FROM cand JOIN e ea ON cand.id_a = ea.vec_id JOIN e eb ON cand.id_b = eb.vec_id
@@ -9389,13 +9356,7 @@ object PipelineQueries {
        |    FROM q CROSS JOIN e WHERE e.vec_id <> q.q_id
        |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
        |)
-       |SELECT COALESCE(q_id, -1) AS q_id,
-       |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-       |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-       |FROM (
-       |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-       |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-       |) GROUP BY ROLLUP(q_id)""".stripMargin
+       |$recallByQuerySql""".stripMargin
   }
 
   /** Graph-ANN (NSW-lite) recall on the float fixture: the number that
@@ -9469,10 +9430,7 @@ object PipelineQueries {
             |bszc AS (SELECT band, key, COUNT(*) AS n FROM kc GROUP BY 1, 2),
             |cappedc AS MATERIALIZED (
             |  SELECT vec_id, band, key,
-            |         CASE WHEN n > ${Dedup.LshMaxBucket}
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-            |                   // ${Dedup.LshMaxBucket}
-            |              ELSE 0 END AS sub
+            |         ${capSubSql("band, key", "vec_id")}
             |  FROM kc JOIN bszc USING (band, key)
             |),
             |candc AS (
@@ -9521,10 +9479,7 @@ object PipelineQueries {
             |bszb AS (SELECT band, key, COUNT(*) AS n FROM kb GROUP BY 1, 2),
             |cappedb AS (
             |  SELECT vec_id, band, key,
-            |         CASE WHEN n > ${Dedup.LshMaxBucket}
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-            |                   // ${Dedup.LshMaxBucket}
-            |              ELSE 0 END AS sub
+            |         ${capSubSql("band, key", "vec_id")}
             |  FROM kb JOIN bszb USING (band, key)
             |),
             |candb AS (
@@ -9645,26 +9600,9 @@ object PipelineQueries {
          |e0 AS ($manifoldSrcSql),
          |e AS MATERIALIZED (SELECT vec_id, v FROM e0 WHERE v IS NOT NULL AND len(v) >= 64),
          |${nswBitsCtes("e")},
-         |keys AS (
-         |  SELECT e.vec_id, p.band,
-         |         CAST(SUM(CASE WHEN e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
-         |              AS BIGINT) AS key
-         |  FROM e CROSS JOIN planes p GROUP BY e.vec_id, p.band
-         |),
+         |${signKeysCte("keys", "e")},
          |bsz AS (SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2),
-         |capped AS (
-         |  SELECT vec_id, band, key,
-         |         CASE WHEN n > ${Dedup.LshMaxBucket}
-         |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-         |                   // ${Dedup.LshMaxBucket}
-         |              ELSE 0 END AS sub
-         |  FROM keys JOIN bsz USING (band, key)
-         |),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
-         |   AND a.sub = b.sub AND a.vec_id < b.vec_id
-         |),
+         |${vecCandCtes},
          |pairs AS (
          |  SELECT id_a, id_b, ROUND(${cosSql("ea.v", "eb.v")}, 6) AS cos
          |  FROM cand JOIN e ea ON cand.id_a = ea.vec_id JOIN e eb ON cand.id_b = eb.vec_id
@@ -9710,13 +9648,7 @@ object PipelineQueries {
       Similarity.recallVsTruth(gt, approx)
     },
     Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            |gt AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-            |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-            |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |),
+            |$annGtCte,
             |qz AS (
             |  SELECT vec_id,
             |         list_transform(u, x -> CAST(floor(x / scale + 0.5) AS INT)) AS qv,
@@ -9737,13 +9669,7 @@ object PipelineQueries {
             |    CROSS JOIN qz n WHERE n.vec_id <> q.vec_id
             |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
             |)
-            |SELECT COALESCE(q_id, -1) AS q_id,
-            |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-            |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-            |FROM (
-            |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-            |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-            |) GROUP BY ROLLUP(q_id)""".stripMargin))
+            |$recallByQuerySql""".stripMargin))
 
   private def l2sqSql(a: String, b: String): String =
     s"""ROUND(list_dot_product($a, $a) + list_dot_product($b, $b)
@@ -9777,13 +9703,7 @@ object PipelineQueries {
 
   private def pqSeedOracle(src: String): String =
     s"""WITH e AS ($src),
-            |gt AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-            |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-            |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |),
+            |$annGtCte,
             |nz AS (
             |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
             |  FROM e WHERE list_dot_product(v, v) > 0
@@ -9828,13 +9748,7 @@ object PipelineQueries {
             |    WHERE c.vec_id <> t0.q_id
             |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist ASC, n_id ASC) <= 10
             |)
-            |SELECT COALESCE(q_id, -1) AS q_id,
-            |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-            |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-            |FROM (
-            |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-            |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-            |) GROUP BY ROLLUP(q_id)""".stripMargin
+            |$recallByQuerySql""".stripMargin
 
   val annPqRecall = QueryDef(
     "ann_pq_recall",
@@ -9884,13 +9798,7 @@ object PipelineQueries {
 
   private def pqLloydOracle(src: String): String =
     s"""WITH e AS ($src),
-            |gt AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-            |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-            |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |),
+            |$annGtCte,
             |nz AS (
             |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
             |  FROM e WHERE list_dot_product(v, v) > 0
@@ -9970,13 +9878,7 @@ object PipelineQueries {
             |    WHERE c.vec_id <> t0.q_id
             |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist ASC, n_id ASC) <= 10
             |)
-            |SELECT COALESCE(q_id, -1) AS q_id,
-            |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-            |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-            |FROM (
-            |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-            |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-            |) GROUP BY ROLLUP(q_id)""".stripMargin
+            |$recallByQuerySql""".stripMargin
 
   val annPqLloyd = QueryDef(
     "ann_pq_lloyd",
@@ -10020,13 +9922,7 @@ object PipelineQueries {
 
   private def pqRerankOracle(src: String): String =
     s"""WITH e AS ($src),
-            |gt AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-            |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-            |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |),
+            |$annGtCte,
             |nz AS (
             |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
             |  FROM e WHERE list_dot_product(v, v) > 0
@@ -10079,13 +9975,7 @@ object PipelineQueries {
             |    JOIN e n ON n.vec_id = s.n_id
             |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
             |)
-            |SELECT COALESCE(q_id, -1) AS q_id,
-            |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-            |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-            |FROM (
-            |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-            |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-            |) GROUP BY ROLLUP(q_id)""".stripMargin
+            |$recallByQuerySql""".stripMargin
 
   val annPqRerank = QueryDef(
     "ann_pq_rerank",
@@ -10132,45 +10022,14 @@ object PipelineQueries {
     Some {
       val per = Seq(1, 2, 4).map { np =>
         s""",
-           |probes$np AS (
-           |  SELECT vec_id, v, c_id AS cell FROM (
-           |    SELECT e.vec_id, e.v, c.c_id,
-           |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-           |    FROM e CROSS JOIN c WHERE e.vec_id >= 10 AND e.vec_id < 20
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= $np
-           |),
-           |approx$np AS (
-           |  SELECT q_id, n_id FROM (
-           |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-           |           ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-           |    FROM probes$np q JOIN assign n ON q.cell = n.cell AND n.vec_id <> q.vec_id
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-           |),
-           |rec$np AS (
-           |  SELECT $np AS nprobe, CAST(SUM(hit) AS BIGINT) AS n_hits,
-           |         ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-           |  FROM (
-           |    SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           |    FROM gt LEFT JOIN approx$np a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-           |  )
-           |)""".stripMargin
+           |${cellsCte(s"probes$np", "c", np)},
+           |${probedApproxCte(s"approx$np", s"probes$np", "assign")},
+           |${armRecallCte(s"rec$np", s"$np AS nprobe", s"approx$np")}""".stripMargin
       }.mkString
       s"""WITH e AS ($manifoldSrcSql),
-         |gt AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-         |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-         |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-         |),
+         |$annGtCte,
          |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
-         |assign AS (
-         |  SELECT vec_id, v, c_id AS cell FROM (
-         |    SELECT e.vec_id, e.v, c.c_id,
-         |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-         |    FROM e CROSS JOIN c
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-         |)$per
+         |${cellsCte("assign", "c")}$per
          |SELECT * FROM rec1 UNION ALL SELECT * FROM rec2 UNION ALL SELECT * FROM rec4""".stripMargin
     })
 
@@ -10202,44 +10061,13 @@ object PipelineQueries {
       val per = Seq(4, 8, 16).map { nc =>
         s""",
            |c$nc AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < $nc),
-           |assign$nc AS (
-           |  SELECT vec_id, v, c_id AS cell FROM (
-           |    SELECT e.vec_id, e.v, c.c_id,
-           |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-           |    FROM e CROSS JOIN c$nc c
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-           |),
-           |probes$nc AS (
-           |  SELECT vec_id, v, c_id AS cell FROM (
-           |    SELECT e.vec_id, e.v, c.c_id,
-           |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-           |    FROM e CROSS JOIN c$nc c WHERE e.vec_id >= 10 AND e.vec_id < 20
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= 2
-           |),
-           |approx$nc AS (
-           |  SELECT q_id, n_id FROM (
-           |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-           |           ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-           |    FROM probes$nc q JOIN assign$nc n ON q.cell = n.cell AND n.vec_id <> q.vec_id
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-           |),
-           |rec$nc AS (
-           |  SELECT $nc AS ncells, CAST(SUM(hit) AS BIGINT) AS n_hits,
-           |         ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-           |  FROM (
-           |    SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           |    FROM gt LEFT JOIN approx$nc a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-           |  )
-           |)""".stripMargin
+           |${cellsCte(s"assign$nc", s"c$nc c")},
+           |${cellsCte(s"probes$nc", s"c$nc c", 2)},
+           |${probedApproxCte(s"approx$nc", s"probes$nc", s"assign$nc")},
+           |${armRecallCte(s"rec$nc", s"$nc AS ncells", s"approx$nc")}""".stripMargin
       }.mkString
       s"""WITH e AS ($manifoldSrcSql),
-         |gt AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-         |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-         |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-         |)$per
+         |$annGtCte$per
          |SELECT * FROM rec4 UNION ALL SELECT * FROM rec8 UNION ALL SELECT * FROM rec16""".stripMargin
     })
 
@@ -10308,12 +10136,7 @@ object PipelineQueries {
            |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
            |  LIMIT $k
            |),
-           |ta1$k AS (
-           |  SELECT vec_id, v, c_id AS cell FROM (
-           |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-           |    FROM e CROSS JOIN tseed$k c
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-           |),
+           |${cellsCte(s"ta1$k", s"tseed$k c")},
            |tm1$k AS (
            |  SELECT cell, p,
            |         ROUND(CAST(SUM(CAST(ROUND(v[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -10321,12 +10144,7 @@ object PipelineQueries {
            |  FROM ta1$k CROSS JOIN tpos GROUP BY cell, p
            |),
            |tc1$k AS (SELECT cell AS c_id, LIST(m ORDER BY p) AS cv FROM tm1$k GROUP BY cell),
-           |ta2$k AS (
-           |  SELECT vec_id, v, c_id AS cell FROM (
-           |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-           |    FROM e CROSS JOIN tc1$k c
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-           |),
+           |${cellsCte(s"ta2$k", s"tc1$k c")},
            |tm2$k AS (
            |  SELECT cell, p,
            |         ROUND(CAST(SUM(CAST(ROUND(v[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -10334,70 +10152,18 @@ object PipelineQueries {
            |  FROM ta2$k CROSS JOIN tpos GROUP BY cell, p
            |),
            |tc2$k AS (SELECT cell AS c_id, LIST(m ORDER BY p) AS cv FROM tm2$k GROUP BY cell),
-           |tassign$k AS (
-           |  SELECT vec_id, v, c_id AS cell FROM (
-           |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-           |    FROM e CROSS JOIN tc2$k c
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-           |),
-           |tprobes$k AS (
-           |  SELECT vec_id, v, c_id AS cell FROM (
-           |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-           |    FROM e CROSS JOIN tc2$k c WHERE e.vec_id >= 10 AND e.vec_id < 20
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= 2
-           |),
-           |tapprox$k AS (
-           |  SELECT q_id, n_id FROM (
-           |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-           |           ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-           |    FROM tprobes$k q JOIN tassign$k n ON q.cell = n.cell AND n.vec_id <> q.vec_id
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-           |),
-           |trec$k AS (
-           |  SELECT 'trained_$k' AS cells, CAST(SUM(hit) AS BIGINT) AS n_hits,
-           |         ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-           |  FROM (
-           |    SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           |    FROM gt LEFT JOIN tapprox$k a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-           |  )
-           |)""".stripMargin
+           |${cellsCte(s"tassign$k", s"tc2$k c")},
+           |${cellsCte(s"tprobes$k", s"tc2$k c", 2)},
+           |${probedApproxCte(s"tapprox$k", s"tprobes$k", s"tassign$k")},
+           |${armRecallCte(s"trec$k", s"'trained_$k' AS cells", s"tapprox$k")}""".stripMargin
       s"""WITH e AS ($manifoldSrcSql),
          |tpos AS (SELECT CAST(unnest(generate_series(1, 64)) AS INT) AS p),
-         |gt AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-         |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-         |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-         |),
+         |$annGtCte,
          |sc AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
-         |sassign AS (
-         |  SELECT vec_id, v, c_id AS cell FROM (
-         |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-         |    FROM e CROSS JOIN sc c
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-         |),
-         |sprobes AS (
-         |  SELECT vec_id, v, c_id AS cell FROM (
-         |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-         |    FROM e CROSS JOIN sc c WHERE e.vec_id >= 10 AND e.vec_id < 20
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= 2
-         |),
-         |sapprox AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-         |           ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-         |    FROM sprobes q JOIN sassign n ON q.cell = n.cell AND n.vec_id <> q.vec_id
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-         |),
-         |srec AS (
-         |  SELECT 'seed_8' AS cells, CAST(SUM(hit) AS BIGINT) AS n_hits,
-         |         ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-         |  FROM (
-         |    SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |    FROM gt LEFT JOIN sapprox a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-         |  )
-         |)${lloyd(8)}${lloyd(16)}
+         |${cellsCte("sassign", "sc c")},
+         |${cellsCte("sprobes", "sc c", 2)},
+         |${probedApproxCte("sapprox", "sprobes", "sassign")},
+         |${armRecallCte("srec", "'seed_8' AS cells", "sapprox")}${lloyd(8)}${lloyd(16)}
          |SELECT * FROM srec
          |UNION ALL SELECT * FROM trec8
          |UNION ALL SELECT * FROM trec16""".stripMargin
@@ -10795,13 +10561,7 @@ object PipelineQueries {
               |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
               |)""".stripMargin
     s"""WITH e AS ($src),
-       |gt AS (
-       |  SELECT q_id, n_id FROM (
-       |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-       |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-       |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-       |),
+       |$annGtCte,
        |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
        |assign AS (
        |  SELECT vec_id, c_id AS cell FROM (
@@ -10861,13 +10621,7 @@ object PipelineQueries {
        |    WHERE cd.vec_id <> t0.q_id
        |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist ASC, n_id ASC) <= $cut
        |)$rerankTail
-       |SELECT COALESCE(q_id, -1) AS q_id,
-       |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-       |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-       |FROM (
-       |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-       |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-       |) GROUP BY ROLLUP(q_id)""".stripMargin
+       |$recallByQuerySql""".stripMargin
   }
 
   /** The residual variant's oracle: the [[ivfPqOracle]] skeleton with
@@ -10942,13 +10696,7 @@ object PipelineQueries {
            |),
            |cb AS (SELECT j, kc AS c_id, LIST(m ORDER BY p) AS cw FROM m2 GROUP BY j, kc)""".stripMargin
     s"""WITH e AS ($src),
-       |gt AS (
-       |  SELECT q_id, n_id FROM (
-       |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-       |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-       |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-       |),
+       |$annGtCte,
        |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16),
        |assign AS (
        |  SELECT vec_id, c_id AS cell FROM (
@@ -11031,13 +10779,7 @@ object PipelineQueries {
        |    WHERE cd.vec_id <> t0.q_id
        |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist ASC, n_id ASC) <= $adcCut
        |)$rerankTail
-       |SELECT COALESCE(q_id, -1) AS q_id,
-       |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-       |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-       |FROM (
-       |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-       |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-       |) GROUP BY ROLLUP(q_id)""".stripMargin
+       |$recallByQuerySql""".stripMargin
   }
 
   /** RESIDUAL-encoded IVF×PQ on the manifold fixture
@@ -11175,13 +10917,7 @@ object PipelineQueries {
       Similarity.recallVsTruth(gt, approx)
     },
     Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            |gt AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-            |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-            |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |),
+            |$annGtCte,
             |qz AS (
             |  SELECT vec_id,
             |         list_transform(u, x -> CAST(floor(x / scale + 0.5) AS INT)) AS qv,
@@ -11211,13 +10947,7 @@ object PipelineQueries {
             |    JOIN e n ON n.vec_id = s.n_id
             |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
             |)
-            |SELECT COALESCE(q_id, -1) AS q_id,
-            |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-            |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-            |FROM (
-            |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-            |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-            |) GROUP BY ROLLUP(q_id)""".stripMargin))
+            |$recallByQuerySql""".stripMargin))
 
   /** IVF × int8 stacked recall ([[graft.operators.Similarity.ivfInt8TopK]]): the
     * composed production path — nprobe=2 IVF pruning times int8
@@ -11239,13 +10969,7 @@ object PipelineQueries {
     },
     Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
             |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
-            |gt AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT q.vec_id AS q_id, e.vec_id AS n_id, ROUND(${cosSql("q.v", "e.v")}, 6) AS cos
-            |    FROM (SELECT * FROM e WHERE vec_id >= 10 AND vec_id < 20) q
-            |    CROSS JOIN e WHERE e.vec_id <> q.vec_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |),
+            |$annGtCte,
             |assign AS (
             |  SELECT vec_id, c_id AS cell FROM (
             |    SELECT e.vec_id, c.c_id,
@@ -11282,13 +11006,7 @@ object PipelineQueries {
             |    JOIN qz nq ON nq.vec_id = n.vec_id
             |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
             |)
-            |SELECT COALESCE(q_id, -1) AS q_id,
-            |       CAST(SUM(hit) AS BIGINT) AS n_hits,
-            |       ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS recall
-            |FROM (
-            |  SELECT gt.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-            |  FROM gt LEFT JOIN approx a ON gt.q_id = a.q_id AND gt.n_id = a.n_id
-            |) GROUP BY ROLLUP(q_id)""".stripMargin))
+            |$recallByQuerySql""".stripMargin))
 
   /** k-means centroid training ([[graft.operators.Similarity.kmeansFit]]): 2 Lloyd
     * iterations from the same deterministic seeds the `ann_ivf_*`
@@ -11318,12 +11036,7 @@ object PipelineQueries {
             |),
             |pos AS (SELECT CAST(unnest(generate_series(1, 64)) AS INT) AS p),
             |c0 AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
-            |a1 AS (
-            |  SELECT vec_id, v, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c0 c
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-            |),
+            |${cellsCte("a1", "c0 c")},
             |m1 AS (
             |  SELECT cell, p,
             |         ROUND(CAST(SUM(CAST(ROUND(v[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -11331,12 +11044,7 @@ object PipelineQueries {
             |  FROM a1 CROSS JOIN pos GROUP BY cell, p
             |),
             |c1 AS (SELECT cell AS c_id, LIST(m ORDER BY p) AS cv FROM m1 GROUP BY cell),
-            |a2 AS (
-            |  SELECT vec_id, v, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c1 c
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-            |)
+            |${cellsCte("a2", "c1 c")}
             |SELECT cell, p AS pos,
             |       ROUND(CAST(SUM(CAST(ROUND(v[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
             |             / COUNT(*), 6) AS m,
@@ -12170,38 +11878,10 @@ object PipelineQueries {
             |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
             |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
             |),
-            |keys AS (
-            |  SELECT e.vec_id, p.band,
-            |         CAST(SUM(CASE WHEN e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
-            |              AS BIGINT) AS key
-            |  FROM e CROSS JOIN planes p GROUP BY e.vec_id, p.band
-            |),
+            |${signKeysCte("keys", "e")},
             |ck AS (SELECT * FROM keys WHERE vec_id % 10 < 8),
             |bk AS (SELECT * FROM keys WHERE vec_id % 10 >= 8),
-            |bsz AS (
-            |  SELECT band, key, COUNT(*) AS n FROM ck GROUP BY 1, 2
-            |),
-            |capped AS (
-            |  SELECT vec_id, band, key,
-            |         CASE WHEN n > ${Dedup.LshMaxBucket}
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-            |                   // ${Dedup.LshMaxBucket}
-            |              ELSE 0 END AS sub
-            |  FROM ck JOIN bsz USING (band, key)
-            |),
-            |routed AS (
-            |  SELECT bk.vec_id, bk.band, bk.key,
-            |         CASE WHEN z.n > ${Dedup.LshMaxBucket}
-            |              THEN ('0x' || substr(md5(CAST(bk.vec_id AS VARCHAR)), 1, 15))::BIGINT
-            |                   % ((z.n - 1) // ${Dedup.LshMaxBucket} + 1)
-            |              ELSE 0 END AS sub
-            |  FROM bk JOIN bsz z USING (band, key)
-            |),
-            |cand AS (
-            |  SELECT DISTINCT b.vec_id AS id_b, c.vec_id AS id_c
-            |  FROM routed b JOIN capped c ON b.band = c.band AND b.key = c.key
-            |   AND b.sub = c.sub
-            |)
+            |${routedCandCtes("")}
             |SELECT id_b, id_c, cos FROM (
             |  SELECT id_b, id_c, ROUND(${cosSql("eb.v", "ec.v")}, 6) AS cos
             |  FROM cand JOIN e eb ON cand.id_b = eb.vec_id JOIN e ec ON cand.id_c = ec.vec_id
@@ -12239,38 +11919,10 @@ object PipelineQueries {
             |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
             |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
             |),
-            |keys AS (
-            |  SELECT e.vec_id, p.band,
-            |         CAST(SUM(CASE WHEN e.v[p.idx] >= 0 THEN (1::BIGINT << (p.j - 1)) ELSE 0::BIGINT END)
-            |              AS BIGINT) AS key
-            |  FROM e CROSS JOIN planes p GROUP BY e.vec_id, p.band
-            |),
+            |${signKeysCte("keys", "e")},
             |ck AS (SELECT * FROM keys WHERE vec_id % 10 = 0),
             |bk AS (SELECT * FROM keys WHERE vec_id % 10 <> 0),
-            |bsz AS (
-            |  SELECT band, key, COUNT(*) AS n FROM ck GROUP BY 1, 2
-            |),
-            |capped AS (
-            |  SELECT vec_id, band, key,
-            |         CASE WHEN n > ${Dedup.LshMaxBucket}
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY vec_id) - 1)
-            |                   // ${Dedup.LshMaxBucket}
-            |              ELSE 0 END AS sub
-            |  FROM ck JOIN bsz USING (band, key)
-            |),
-            |routed AS (
-            |  SELECT bk.vec_id, bk.band, bk.key,
-            |         CASE WHEN z.n > ${Dedup.LshMaxBucket}
-            |              THEN ('0x' || substr(md5(CAST(bk.vec_id AS VARCHAR)), 1, 15))::BIGINT
-            |                   % ((z.n - 1) // ${Dedup.LshMaxBucket} + 1)
-            |              ELSE 0 END AS sub
-            |  FROM bk JOIN bsz z USING (band, key)
-            |),
-            |cand AS (
-            |  SELECT DISTINCT b.vec_id AS id_b, c.vec_id AS id_c
-            |  FROM routed b JOIN capped c ON b.band = c.band AND b.key = c.key
-            |   AND b.sub = c.sub
-            |),
+            |${routedCandCtes("")},
             |hits AS (
             |  SELECT id_b, id_c, cos FROM (
             |    SELECT id_b, id_c, ROUND(${cosSql("eb.v", "ec.v")}, 6) AS cos
