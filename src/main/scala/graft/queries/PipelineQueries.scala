@@ -8701,15 +8701,17 @@ object PipelineQueries {
     * `c`, columns `c_id`, `cv`) by 6-dp cosine, ties to the lower
     * `c_id`: with `nprobe` 0 every vector's one cell (the corpus
     * assignment), else the `nprobe` nearest cells of each query
-    * `vec_id` 10..19.
+    * `vec_id` 10..19. `carryV` keeps the vector `v` beside the cell.
     */
-  private def cellsCte(name: String, cells: String, nprobe: Int = 0): String = {
+  private def cellsCte(
+      name: String, cells: String, nprobe: Int = 0, carryV: Boolean = true): String = {
     val (where, rank) =
       if (nprobe == 0) ("", "= 1")
       else (" WHERE e.vec_id >= 10 AND e.vec_id < 20", s"<= $nprobe")
+    val (v, ev) = if (carryV) (" v,", " e.v,") else ("", "")
     s"""$name AS (
-       |  SELECT vec_id, v, c_id AS cell FROM (
-       |    SELECT e.vec_id, e.v, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
+       |  SELECT vec_id,$v c_id AS cell FROM (
+       |    SELECT e.vec_id,$ev c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
        |    FROM e CROSS JOIN $cells$where
        |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) $rank
        |)""".stripMargin
@@ -9301,28 +9303,32 @@ object PipelineQueries {
     Similarity.recallVsTruth(gt, approx)
   }
 
-  private def nswRecallOracle(src: String): String = {
-    // One rescored-beam CTE per round: candidates = previous beam ∪
-    // its graph neighbors (UNION dedups, matching Spark's distinct),
-    // re-scored from e and cut to the beam width — the same unrolled
-    // fixed-iteration shape as the kmeans/BPE/GD oracles.
-    def beamCte(name: String, candCte: String, limit: Int): String =
-      s"""$name AS (
+  /** The NSW oracle's graph build over `src` (planes, keys, capped
+    * candidates, the near/far cut) and its beam search for the queries
+    * `q` (`vec_id` 10..19), unrolled into `beam0` .. `beam{rounds}`:
+    * each round's candidates are the previous beam and its graph
+    * neighbors (UNION dedups, as Spark's distinct), re-scored from `e`
+    * and cut to the beam width. `mat` is "" or " MATERIALIZED", for
+    * the graph, the queries and the beams.
+    */
+  private def nswSearchCtes(src: String, rounds: Int, mat: String): String = {
+    def beamCte(name: String, candCte: String): String =
+      s"""$name AS$mat (
          |  SELECT q_id, n_id, cos FROM (
          |    SELECT cd.q_id, cd.n_id, ROUND(${cosSql("q.qv", "e.v")}, 6) AS cos
          |    FROM $candCte cd JOIN e ON cd.n_id = e.vec_id JOIN q ON cd.q_id = q.q_id
          |    WHERE cd.n_id <> cd.q_id
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= $limit
+         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= $NswBeam
          |)""".stripMargin
-    val rounds = (1 to NswRounds).map { r =>
+    val unrolled = (1 to rounds).map { r =>
       s"""cand$r AS (
          |  SELECT q_id, n_id FROM beam${r - 1}
          |  UNION
          |  SELECT b.q_id, g.dst AS n_id FROM beam${r - 1} b JOIN graph g ON b.n_id = g.src
          |),
-         |${beamCte(s"beam$r", s"cand$r", NswBeam)}""".stripMargin
+         |${beamCte(s"beam$r", s"cand$r")}""".stripMargin
     }.mkString(",\n")
-    s"""WITH planes0(band, j, idx) AS (VALUES $nswPlanesValues),
+    s"""planes0(band, j, idx) AS (VALUES $nswPlanesValues),
        |e0 AS ($src),
        |e AS MATERIALIZED (SELECT vec_id, v FROM e0 WHERE v IS NOT NULL AND len(v) >= 64),
        |${nswBitsCtes("e")},
@@ -9338,26 +9344,33 @@ object PipelineQueries {
        |  UNION ALL
        |  SELECT id_b AS src, id_a AS dst, cos FROM pairs
        |),
-       |graph AS (
+       |graph AS$mat (
        |  ${nswCutSql("src, dst", "edges")}
        |),
        |ent AS (SELECT vec_id AS n_id FROM e ORDER BY vec_id ASC LIMIT $NswEntries),
-       |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id >= 10 AND vec_id < 20),
+       |q AS$mat (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id >= 10 AND vec_id < 20),
        |cand0 AS (SELECT q_id, n_id FROM q CROSS JOIN ent),
-       |${beamCte("beam0", "cand0", NswBeam)},
-       |$rounds,
-       |approx AS (
-       |  SELECT q_id, n_id FROM beam$NswRounds
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-       |),
-       |gt AS (
+       |${beamCte("beam0", "cand0")},
+       |$unrolled""".stripMargin
+  }
+
+  /** The exact top-10 of the NSW queries `q`, as `annGtCte` over `q`. */
+  private def nswGtCte(mat: String): String =
+    s"""gt AS$mat (
        |  SELECT q_id, n_id FROM (
        |    SELECT q.q_id, e.vec_id AS n_id, ROUND(${cosSql("q.qv", "e.v")}, 6) AS cos
        |    FROM q CROSS JOIN e WHERE e.vec_id <> q.q_id
        |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-       |)
+       |)""".stripMargin
+
+  private def nswRecallOracle(src: String): String =
+    s"""WITH ${nswSearchCtes(src, NswRounds, "")},
+       |approx AS (
+       |  SELECT q_id, n_id FROM beam$NswRounds
+       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
+       |),
+       |${nswGtCte("")}
        |$recallByQuerySql""".stripMargin
-  }
 
   /** Graph-ANN (NSW-lite) recall on the float fixture: the number that
     * places the graph family on the same ladder as `ann_recall` /
@@ -9562,23 +9575,6 @@ object PipelineQueries {
       }.reduce(_.unionByName(_))
     },
     Some {
-      val maxR = nswRoundsArms.max
-      def beamCte(name: String, candCte: String): String =
-        s"""$name AS MATERIALIZED (
-           |  SELECT q_id, n_id, cos FROM (
-           |    SELECT cd.q_id, cd.n_id, ROUND(${cosSql("q.qv", "e.v")}, 6) AS cos
-           |    FROM $candCte cd JOIN e ON cd.n_id = e.vec_id JOIN q ON cd.q_id = q.q_id
-           |    WHERE cd.n_id <> cd.q_id
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= $NswBeam
-           |)""".stripMargin
-      val rounds = (1 to maxR).map { r =>
-        s"""cand$r AS (
-           |  SELECT q_id, n_id FROM beam${r - 1}
-           |  UNION
-           |  SELECT b.q_id, g.dst AS n_id FROM beam${r - 1} b JOIN graph g ON b.n_id = g.src
-           |),
-           |${beamCte(s"beam$r", s"cand$r")}""".stripMargin
-      }.mkString(",\n")
       val arms = nswRoundsArms.map { r =>
         s"""aprx$r AS (
            |  SELECT q_id, n_id FROM beam$r
@@ -9596,36 +9592,8 @@ object PipelineQueries {
       val tail = nswRoundsArms.map(r =>
         s"SELECT $r AS rounds, n_hits, recall FROM rec$r")
         .mkString("\nUNION ALL ")
-      s"""WITH planes0(band, j, idx) AS (VALUES $nswPlanesValues),
-         |e0 AS ($manifoldSrcSql),
-         |e AS MATERIALIZED (SELECT vec_id, v FROM e0 WHERE v IS NOT NULL AND len(v) >= 64),
-         |${nswBitsCtes("e")},
-         |${signKeysCte("keys", "e")},
-         |bsz AS (SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2),
-         |${vecCandCtes},
-         |pairs AS (
-         |  SELECT id_a, id_b, ROUND(${cosSql("ea.v", "eb.v")}, 6) AS cos
-         |  FROM cand JOIN e ea ON cand.id_a = ea.vec_id JOIN e eb ON cand.id_b = eb.vec_id
-         |),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst, cos FROM pairs
-         |  UNION ALL
-         |  SELECT id_b AS src, id_a AS dst, cos FROM pairs
-         |),
-         |graph AS MATERIALIZED (
-         |  ${nswCutSql("src, dst", "edges")}
-         |),
-         |ent AS (SELECT vec_id AS n_id FROM e ORDER BY vec_id ASC LIMIT $NswEntries),
-         |q AS MATERIALIZED (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id >= 10 AND vec_id < 20),
-         |cand0 AS (SELECT q_id, n_id FROM q CROSS JOIN ent),
-         |${beamCte("beam0", "cand0")},
-         |$rounds,
-         |gt AS MATERIALIZED (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.q_id, e.vec_id AS n_id, ROUND(${cosSql("q.qv", "e.v")}, 6) AS cos
-         |    FROM q CROSS JOIN e WHERE e.vec_id <> q.q_id
-         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-         |),
+      s"""WITH ${nswSearchCtes(manifoldSrcSql, nswRoundsArms.max, " MATERIALIZED")},
+         |${nswGtCte(" MATERIALIZED")},
          |$arms
          |$tail""".stripMargin
     })
@@ -9649,17 +9617,7 @@ object PipelineQueries {
     },
     Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
             |$annGtCte,
-            |qz AS (
-            |  SELECT vec_id,
-            |         list_transform(u, x -> CAST(floor(x / scale + 0.5) AS INT)) AS qv,
-            |         scale
-            |  FROM (
-            |    SELECT vec_id, u, list_max(list_transform(u, x -> abs(x))) / 127.0 AS scale
-            |    FROM (SELECT vec_id,
-            |                 list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-            |          FROM e WHERE list_dot_product(v, v) > 0)
-            |  )
-            |),
+            |$int8QzCte,
             |approx AS (
             |  SELECT q_id, n_id FROM (
             |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
@@ -9674,6 +9632,93 @@ object PipelineQueries {
   private def l2sqSql(a: String, b: String): String =
     s"""ROUND(list_dot_product($a, $a) + list_dot_product($b, $b)
        |      - 2 * list_dot_product($a, $b), 6)""".stripMargin
+
+  /** The int8 quantization of `e`: L2-normalize, then a symmetric
+    * per-vector scale and `floor(x / scale + 0.5)`.
+    */
+  private def int8QzCte: String =
+    """qz AS (
+      |  SELECT vec_id,
+      |         list_transform(u, x -> CAST(floor(x / scale + 0.5) AS INT)) AS qv,
+      |         scale
+      |  FROM (
+      |    SELECT vec_id, u, list_max(list_transform(u, x -> abs(x))) / 127.0 AS scale
+      |    FROM (SELECT vec_id,
+      |                 list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
+      |          FROM e WHERE list_dot_product(v, v) > 0)
+      |  )
+      |)""".stripMargin
+
+  /** The exact-cosine rerank of a `shortlist` to the final top-10. */
+  private def pqRerankCte: String =
+    s"""approx AS (
+       |  SELECT q_id, n_id FROM (
+       |    SELECT s.q_id, s.n_id, ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
+       |    FROM shortlist s
+       |    JOIN e q ON q.vec_id = s.q_id
+       |    JOIN e n ON n.vec_id = s.n_id
+       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
+       |)""".stripMargin
+
+  /** The L2-normalized vectors `nz` of `e` and the 16 PQ seed
+    * codewords, picked by an md5 order of `vec_id`.
+    */
+  private def pqSeedsCtes: String =
+    """nz AS (
+      |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
+      |  FROM e WHERE list_dot_product(v, v) > 0
+      |),
+      |seeds AS (
+      |  SELECT vec_id AS c_id, u FROM nz
+      |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
+      |  LIMIT 16
+      |)""".stripMargin
+
+  /** Seed-codebook PQ over `nz` (m = 4 subspaces of 16 dims): the
+    * codebooks `cb`, each vector's nearest codeword per subspace
+    * (`codes`), and the queries' ADC distance tables `tbl`.
+    */
+  private def pqSeedCodesCtes: String =
+    s"""cb AS (
+       |  SELECT j, c_id, list_slice(u, j * 16 + 1, j * 16 + 16) AS cw
+       |  FROM seeds CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j)
+       |),
+       |enc AS (
+       |  SELECT vec_id, j, c_id AS code FROM (
+       |    SELECT nz.vec_id, cb.j, cb.c_id,
+       |           ${l2sqSql("list_slice(nz.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
+       |    FROM nz CROSS JOIN cb
+       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
+       |),
+       |codes AS (
+       |  SELECT vec_id,
+       |         MAX(CASE WHEN j = 0 THEN code END) AS code0,
+       |         MAX(CASE WHEN j = 1 THEN code END) AS code1,
+       |         MAX(CASE WHEN j = 2 THEN code END) AS code2,
+       |         MAX(CASE WHEN j = 3 THEN code END) AS code3
+       |  FROM enc GROUP BY 1
+       |),
+       |tbl AS (
+       |  SELECT q.vec_id AS q_id, cb.j, cb.c_id,
+       |         ${l2sqSql("list_slice(q.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
+       |  FROM (SELECT * FROM nz WHERE vec_id >= 10 AND vec_id < 20) q CROSS JOIN cb
+       |)""".stripMargin
+
+  /** The top `k` of each query by summed ADC table distance over all
+    * of `codes`.
+    */
+  private def adcApproxCte(name: String, k: Int): String =
+    s"""$name AS (
+       |  SELECT q_id, n_id FROM (
+       |    SELECT t0.q_id, c.vec_id AS n_id, t0.d + t1.d + t2.d + t3.d AS dist
+       |    FROM codes c
+       |    JOIN tbl t0 ON t0.j = 0 AND t0.c_id = c.code0
+       |    JOIN tbl t1 ON t1.j = 1 AND t1.c_id = c.code1 AND t1.q_id = t0.q_id
+       |    JOIN tbl t2 ON t2.j = 2 AND t2.c_id = c.code2 AND t2.q_id = t0.q_id
+       |    JOIN tbl t3 ON t3.j = 3 AND t3.c_id = c.code3 AND t3.q_id = t0.q_id
+       |    WHERE c.vec_id <> t0.q_id
+       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist ASC, n_id ASC) <= $k
+       |)""".stripMargin
 
   /** Product-quantization ADC recall ([[graft.operators.Similarity.pqTopK]], m=4
     * subspaces × 16 seed codewords over the full 64-dim vectors =
@@ -9704,50 +9749,9 @@ object PipelineQueries {
   private def pqSeedOracle(src: String): String =
     s"""WITH e AS ($src),
             |$annGtCte,
-            |nz AS (
-            |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-            |  FROM e WHERE list_dot_product(v, v) > 0
-            |),
-            |seeds AS (
-            |  SELECT vec_id AS c_id, u FROM nz
-            |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-            |  LIMIT 16
-            |),
-            |cb AS (
-            |  SELECT j, c_id, list_slice(u, j * 16 + 1, j * 16 + 16) AS cw
-            |  FROM seeds CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j)
-            |),
-            |enc AS (
-            |  SELECT vec_id, j, c_id AS code FROM (
-            |    SELECT nz.vec_id, cb.j, cb.c_id,
-            |           ${l2sqSql("list_slice(nz.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
-            |    FROM nz CROSS JOIN cb
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
-            |),
-            |codes AS (
-            |  SELECT vec_id,
-            |         MAX(CASE WHEN j = 0 THEN code END) AS code0,
-            |         MAX(CASE WHEN j = 1 THEN code END) AS code1,
-            |         MAX(CASE WHEN j = 2 THEN code END) AS code2,
-            |         MAX(CASE WHEN j = 3 THEN code END) AS code3
-            |  FROM enc GROUP BY 1
-            |),
-            |tbl AS (
-            |  SELECT q.vec_id AS q_id, cb.j, cb.c_id,
-            |         ${l2sqSql("list_slice(q.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
-            |  FROM (SELECT * FROM nz WHERE vec_id >= 10 AND vec_id < 20) q CROSS JOIN cb
-            |),
-            |approx AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT t0.q_id, c.vec_id AS n_id, t0.d + t1.d + t2.d + t3.d AS dist
-            |    FROM codes c
-            |    JOIN tbl t0 ON t0.j = 0 AND t0.c_id = c.code0
-            |    JOIN tbl t1 ON t1.j = 1 AND t1.c_id = c.code1 AND t1.q_id = t0.q_id
-            |    JOIN tbl t2 ON t2.j = 2 AND t2.c_id = c.code2 AND t2.q_id = t0.q_id
-            |    JOIN tbl t3 ON t3.j = 3 AND t3.c_id = c.code3 AND t3.q_id = t0.q_id
-            |    WHERE c.vec_id <> t0.q_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist ASC, n_id ASC) <= 10
-            |)
+            |$pqSeedsCtes,
+            |$pqSeedCodesCtes,
+            |${adcApproxCte("approx", 10)}
             |$recallByQuerySql""".stripMargin
 
   val annPqRecall = QueryDef(
@@ -9799,15 +9803,7 @@ object PipelineQueries {
   private def pqLloydOracle(src: String): String =
     s"""WITH e AS ($src),
             |$annGtCte,
-            |nz AS (
-            |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-            |  FROM e WHERE list_dot_product(v, v) > 0
-            |),
-            |seeds AS (
-            |  SELECT vec_id AS c_id, u FROM nz
-            |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-            |  LIMIT 16
-            |),
+            |$pqSeedsCtes,
             |jj AS (SELECT unnest(generate_series(0, 3)) AS j),
             |pp AS (SELECT CAST(unnest(generate_series(1, 16)) AS INT) AS p),
             |sub AS (
@@ -9867,17 +9863,7 @@ object PipelineQueries {
             |  FROM (SELECT * FROM sub WHERE vec_id >= 10 AND vec_id < 20) s
             |  JOIN cb ON cb.j = s.j
             |),
-            |approx AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT t0.q_id, c.vec_id AS n_id, t0.d + t1.d + t2.d + t3.d AS dist
-            |    FROM codes c
-            |    JOIN tbl t0 ON t0.j = 0 AND t0.c_id = c.code0
-            |    JOIN tbl t1 ON t1.j = 1 AND t1.c_id = c.code1 AND t1.q_id = t0.q_id
-            |    JOIN tbl t2 ON t2.j = 2 AND t2.c_id = c.code2 AND t2.q_id = t0.q_id
-            |    JOIN tbl t3 ON t3.j = 3 AND t3.c_id = c.code3 AND t3.q_id = t0.q_id
-            |    WHERE c.vec_id <> t0.q_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist ASC, n_id ASC) <= 10
-            |)
+            |${adcApproxCte("approx", 10)}
             |$recallByQuerySql""".stripMargin
 
   val annPqLloyd = QueryDef(
@@ -9923,58 +9909,10 @@ object PipelineQueries {
   private def pqRerankOracle(src: String): String =
     s"""WITH e AS ($src),
             |$annGtCte,
-            |nz AS (
-            |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-            |  FROM e WHERE list_dot_product(v, v) > 0
-            |),
-            |seeds AS (
-            |  SELECT vec_id AS c_id, u FROM nz
-            |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-            |  LIMIT 16
-            |),
-            |cb AS (
-            |  SELECT j, c_id, list_slice(u, j * 16 + 1, j * 16 + 16) AS cw
-            |  FROM seeds CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j)
-            |),
-            |enc AS (
-            |  SELECT vec_id, j, c_id AS code FROM (
-            |    SELECT nz.vec_id, cb.j, cb.c_id,
-            |           ${l2sqSql("list_slice(nz.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
-            |    FROM nz CROSS JOIN cb
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
-            |),
-            |codes AS (
-            |  SELECT vec_id,
-            |         MAX(CASE WHEN j = 0 THEN code END) AS code0,
-            |         MAX(CASE WHEN j = 1 THEN code END) AS code1,
-            |         MAX(CASE WHEN j = 2 THEN code END) AS code2,
-            |         MAX(CASE WHEN j = 3 THEN code END) AS code3
-            |  FROM enc GROUP BY 1
-            |),
-            |tbl AS (
-            |  SELECT q.vec_id AS q_id, cb.j, cb.c_id,
-            |         ${l2sqSql("list_slice(q.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
-            |  FROM (SELECT * FROM nz WHERE vec_id >= 10 AND vec_id < 20) q CROSS JOIN cb
-            |),
-            |shortlist AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT t0.q_id, c.vec_id AS n_id, t0.d + t1.d + t2.d + t3.d AS dist
-            |    FROM codes c
-            |    JOIN tbl t0 ON t0.j = 0 AND t0.c_id = c.code0
-            |    JOIN tbl t1 ON t1.j = 1 AND t1.c_id = c.code1 AND t1.q_id = t0.q_id
-            |    JOIN tbl t2 ON t2.j = 2 AND t2.c_id = c.code2 AND t2.q_id = t0.q_id
-            |    JOIN tbl t3 ON t3.j = 3 AND t3.c_id = c.code3 AND t3.q_id = t0.q_id
-            |    WHERE c.vec_id <> t0.q_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dist ASC, n_id ASC) <= 40
-            |),
-            |approx AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT s.q_id, s.n_id, ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-            |    FROM shortlist s
-            |    JOIN e q ON q.vec_id = s.q_id
-            |    JOIN e n ON n.vec_id = s.n_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |)
+            |$pqSeedsCtes,
+            |$pqSeedCodesCtes,
+            |${adcApproxCte("shortlist", 40)},
+            |$pqRerankCte
             |$recallByQuerySql""".stripMargin
 
   val annPqRerank = QueryDef(
@@ -10552,62 +10490,14 @@ object PipelineQueries {
     val rerankTail =
       if (!rerank) ""
       else s""",
-              |approx AS (
-              |  SELECT q_id, n_id FROM (
-              |    SELECT s.q_id, s.n_id, ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-              |    FROM shortlist s
-              |    JOIN e q ON q.vec_id = s.q_id
-              |    JOIN e n ON n.vec_id = s.n_id
-              |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-              |)""".stripMargin
+              |$pqRerankCte""".stripMargin
     s"""WITH e AS ($src),
        |$annGtCte,
        |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
-       |assign AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT e.vec_id, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-       |    FROM e CROSS JOIN c
-       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-       |),
-       |probes AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT e.vec_id, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-       |    FROM e CROSS JOIN c WHERE e.vec_id >= 10 AND e.vec_id < 20
-       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= 2
-       |),
-       |nz AS (
-       |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-       |  FROM e WHERE list_dot_product(v, v) > 0
-       |),
-       |seeds AS (
-       |  SELECT vec_id AS c_id, u FROM nz
-       |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-       |  LIMIT 16
-       |),
-       |cb AS (
-       |  SELECT j, c_id, list_slice(u, j * 16 + 1, j * 16 + 16) AS cw
-       |  FROM seeds CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j)
-       |),
-       |enc AS (
-       |  SELECT vec_id, j, c_id AS code FROM (
-       |    SELECT nz.vec_id, cb.j, cb.c_id,
-       |           ${l2sqSql("list_slice(nz.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
-       |    FROM nz CROSS JOIN cb
-       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
-       |),
-       |codes AS (
-       |  SELECT vec_id,
-       |         MAX(CASE WHEN j = 0 THEN code END) AS code0,
-       |         MAX(CASE WHEN j = 1 THEN code END) AS code1,
-       |         MAX(CASE WHEN j = 2 THEN code END) AS code2,
-       |         MAX(CASE WHEN j = 3 THEN code END) AS code3
-       |  FROM enc GROUP BY 1
-       |),
-       |tbl AS (
-       |  SELECT q.vec_id AS q_id, cb.j, cb.c_id,
-       |         ${l2sqSql("list_slice(q.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
-       |  FROM (SELECT * FROM nz WHERE vec_id >= 10 AND vec_id < 20) q CROSS JOIN cb
-       |),
+       |${cellsCte("assign", "c", carryV = false)},
+       |${cellsCte("probes", "c", 2, carryV = false)},
+       |$pqSeedsCtes,
+       |$pqSeedCodesCtes,
        |$adcName AS (
        |  SELECT q_id, n_id FROM (
        |    SELECT t0.q_id, cd.vec_id AS n_id, t0.d + t1.d + t2.d + t3.d AS dist
@@ -10641,14 +10531,7 @@ object PipelineQueries {
     val rerankTail =
       if (!rerank) ""
       else s""",
-              |approx AS (
-              |  SELECT q_id, n_id FROM (
-              |    SELECT s.q_id, s.n_id, ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-              |    FROM shortlist s
-              |    JOIN e q ON q.vec_id = s.q_id
-              |    JOIN e n ON n.vec_id = s.n_id
-              |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-              |)""".stripMargin
+              |$pqRerankCte""".stripMargin
     // Codebooks: seed residual slices, or two unrolled Lloyd
     // iterations over the residual subvectors (the pqLloydOracle
     // machinery verbatim — rounded-L2 assignment, lowest-codeword
@@ -10698,18 +10581,8 @@ object PipelineQueries {
     s"""WITH e AS ($src),
        |$annGtCte,
        |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16),
-       |assign AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT e.vec_id, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-       |    FROM e CROSS JOIN c
-       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-       |),
-       |probes AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT e.vec_id, c.c_id, ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-       |    FROM e CROSS JOIN c WHERE e.vec_id >= 10 AND e.vec_id < 20
-       |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= 2
-       |),
+       |${cellsCte("assign", "c", carryV = false)},
+       |${cellsCte("probes", "c", 2, carryV = false)},
        |cen AS (
        |  SELECT c_id AS cell,
        |         list_transform(cv, x -> x / sqrt(list_dot_product(cv, cv))) AS cu
@@ -10918,17 +10791,7 @@ object PipelineQueries {
     },
     Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
             |$annGtCte,
-            |qz AS (
-            |  SELECT vec_id,
-            |         list_transform(u, x -> CAST(floor(x / scale + 0.5) AS INT)) AS qv,
-            |         scale
-            |  FROM (
-            |    SELECT vec_id, u, list_max(list_transform(u, x -> abs(x))) / 127.0 AS scale
-            |    FROM (SELECT vec_id,
-            |                 list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-            |          FROM e WHERE list_dot_product(v, v) > 0)
-            |  )
-            |),
+            |$int8QzCte,
             |shortlist AS (
             |  SELECT q_id, n_id FROM (
             |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
@@ -10938,15 +10801,7 @@ object PipelineQueries {
             |    CROSS JOIN qz n WHERE n.vec_id <> q.vec_id
             |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 40
             |),
-            |approx AS (
-            |  SELECT q_id, n_id FROM (
-            |    SELECT s.q_id, s.n_id,
-            |           ROUND(${cosSql("q.v", "n.v")}, 6) AS cos
-            |    FROM shortlist s
-            |    JOIN e q ON q.vec_id = s.q_id
-            |    JOIN e n ON n.vec_id = s.n_id
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) <= 10
-            |)
+            |$pqRerankCte
             |$recallByQuerySql""".stripMargin))
 
   /** IVF × int8 stacked recall ([[graft.operators.Similarity.ivfInt8TopK]]): the
@@ -10970,31 +10825,9 @@ object PipelineQueries {
     Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
             |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
             |$annGtCte,
-            |assign AS (
-            |  SELECT vec_id, c_id AS cell FROM (
-            |    SELECT e.vec_id, c.c_id,
-            |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
-            |),
-            |probes AS (
-            |  SELECT vec_id, c_id AS cell FROM (
-            |    SELECT e.vec_id, c.c_id,
-            |           ROUND(${cosSql("e.v", "cv")}, 6) AS sim
-            |    FROM e CROSS JOIN c WHERE e.vec_id >= 10 AND e.vec_id < 20
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) <= 2
-            |),
-            |qz AS (
-            |  SELECT vec_id,
-            |         list_transform(u, x -> CAST(floor(x / scale + 0.5) AS INT)) AS qv,
-            |         scale
-            |  FROM (
-            |    SELECT vec_id, u, list_max(list_transform(u, x -> abs(x))) / 127.0 AS scale
-            |    FROM (SELECT vec_id,
-            |                 list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-            |          FROM e WHERE list_dot_product(v, v) > 0)
-            |  )
-            |),
+            |${cellsCte("assign", "c", carryV = false)},
+            |${cellsCte("probes", "c", 2, carryV = false)},
+            |$int8QzCte,
             |approx AS (
             |  SELECT q_id, n_id FROM (
             |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
