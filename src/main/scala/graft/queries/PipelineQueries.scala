@@ -5497,10 +5497,7 @@ object PipelineQueries {
          |    AND NOT EXISTS (SELECT 1 FROM dpairs p WHERE p.doc_id = s6.doc_id)
          |),
          |planes(band, j, idx) AS (VALUES ${lshPlanesValuesFor(16, 4)}),
-         |sd_e AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
-         |),
+         |${validEmbCte("sd_e")},
          |${signKeysCte("sd_keys", "sd_e")},
          |sd_ck AS (SELECT * FROM sd_keys WHERE vec_id % 10 = 0),
          |sd_bk AS (SELECT * FROM sd_keys WHERE vec_id % 10 <> 0),
@@ -7099,7 +7096,7 @@ object PipelineQueries {
             |  FROM agg
             |  QUALIFY rank <= 10
             |),
-            |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+            |e AS ($embSrcSql),
             |qv AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN (1, 2, 3)),
             |scored AS (
             |  SELECT q_id, e.vec_id AS n_id, ROUND(${cosSql("qv", "v")}, 6) AS cos
@@ -8254,7 +8251,7 @@ object PipelineQueries {
            |)""".stripMargin
       def row(d: Int, p: String) =
         s"SELECT $d AS n_dims, n_hits, recall FROM ${p}r"
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS ($embSrcSql),
          |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id >= 10 AND vec_id < 20),
          |trs AS (
          |  SELECT q_id, e.vec_id AS n_id, ROUND(${cosSql("qv", "v")}, 6) AS cos
@@ -8749,7 +8746,7 @@ object PipelineQueries {
       Similarity.bruteForceTopK(
         emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding", k = 10)
     },
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS ($embSrcSql),
             |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
             |scored AS (
             |  SELECT q_id, e.vec_id AS n_id, ROUND(${cosSql("qv", "v")}, 6) AS cos
@@ -8778,7 +8775,7 @@ object PipelineQueries {
         emb.filter(col("vec_id") < 10), corpus, col("lang") === "en",
         "vec_id", "embedding", k = 5)
     },
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS ($embSrcSql),
             |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
             |c AS (SELECT e.vec_id, e.v FROM e
             |      JOIN documents d ON e.vec_id = d.doc_id AND d.lang = 'en'),
@@ -8805,6 +8802,17 @@ object PipelineQueries {
     }.mkString(", ")
 
   private val lshPlanesValues: String = lshPlanesValuesFor(6, 12)
+
+  private lazy val embSrcSql = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+
+  /** The vectors of `embeddings` that LSH can band: non-null and at
+    * least 64 dims, filtered further by the predicate `and`.
+    */
+  private def validEmbCte(name: String, and: String = ""): String =
+    s"""$name AS (
+       |  $embSrcSql
+       |  WHERE embedding IS NOT NULL AND len(embedding) >= 64${if (and.isEmpty) "" else s" AND $and"}
+       |)""".stripMargin
 
   /** Sign-LSH band keys of the vectors in `e` against `planes`: bit
     * `j - 1` of a band's key is set when coordinate `idx` is
@@ -8873,10 +8881,7 @@ object PipelineQueries {
         Tables.embeddings(s, dir), "vec_id", "embedding",
         dim = 64, nBands = 6, bitsPerBand = 12, minCosine = 0.2),
     Some(s"""WITH planes(band, j, idx) AS (VALUES $lshPlanesValues),
-            |e AS (
-            |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
-            |),
+            |${validEmbCte("e")},
             |${signKeysCte("keys", "e")},
             |bsz AS (
             |  SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2
@@ -8913,10 +8918,7 @@ object PipelineQueries {
           Tables.embeddings(s, dir), "vec_id", "embedding",
           dim = 64, nBands = 6, bitsPerBand = 12, minCosine = 0.2)),
     Some(s"""WITH RECURSIVE planes(band, j, idx) AS (VALUES $lshPlanesValues),
-            |e AS (
-            |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
-            |),
+            |${validEmbCte("e")},
             |${signKeysCte("keys", "e")},
             |bsz AS (
             |  SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2
@@ -8984,10 +8986,7 @@ object PipelineQueries {
             lit(-1.0)).as("recall"))
     },
     Some(s"""WITH planes(band, j, idx) AS (VALUES $lshPlanesValues),
-            |e AS (
-            |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            |  WHERE embedding IS NOT NULL AND len(embedding) >= 64 AND vec_id % 10 = 0
-            |),
+            |${validEmbCte("e", "vec_id % 10 = 0")},
             |${signKeysCte("keys", "e")},
             |bsz AS (
             |  SELECT band, key, COUNT(*) AS n FROM keys GROUP BY 1, 2
@@ -9027,7 +9026,7 @@ object PipelineQueries {
         "vec_id", "embedding", k = 5)
         .select("q_id", "n_id", "cell", "cos")
     },
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS ($embSrcSql),
             |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
             |${cellsCte("assign", "c")}
             |SELECT q_id, n_id, cell, cos FROM (
@@ -9051,7 +9050,7 @@ object PipelineQueries {
         emb.filter(col("vec_id") >= 10 && col("vec_id") < 20), emb, centroids,
         "vec_id", "embedding", k = 5, nprobe = 2)
     },
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS ($embSrcSql),
             |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
             |${cellsCte("assign", "c")},
             |${cellsCte("probes", "c", 2)}
@@ -9161,7 +9160,6 @@ object PipelineQueries {
       "(('0x' || substr(md5('mn' || CAST(vec_id AS VARCHAR) || '_' || CAST(d AS VARCHAR)), 1, 15))::BIGINT % 2001 - 1000)) " +
       "AS DOUBLE) FOR d IN generate_series(0, 63)] AS v FROM embeddings"
 
-  private val embSrcSql = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
 
   /** IVF nprobe=2 recall body shared by `ann_recall` (float fixture)
     * and `ann_recall_manifold` — every parameter identical, ONLY the
@@ -9615,7 +9613,7 @@ object PipelineQueries {
       val approx = Similarity.int8TopK(queries, emb, "vec_id", "embedding", k = 10)
       Similarity.recallVsTruth(gt, approx)
     },
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS ($embSrcSql),
             |$annGtCte,
             |$int8QzCte,
             |approx AS (
@@ -9703,6 +9701,29 @@ object PipelineQueries {
        |         ${l2sqSql("list_slice(q.u, cb.j * 16 + 1, cb.j * 16 + 16)", "cb.cw")} AS d
        |  FROM (SELECT * FROM nz WHERE vec_id >= 10 AND vec_id < 20) q CROSS JOIN cb
        |)""".stripMargin
+
+  /** Two unrolled L2 Lloyd iterations of the PQ codebooks `cb0` over
+    * the subvectors `sub`, ending in `cb`: rounded-L2 assignment
+    * (lowest-codeword tie-break) and exact decimal-summed means, the
+    * `ann_kmeans` contract. `kc` names the assignment column.
+    */
+  private def pqLloydCtes(kc: String): String =
+    (1 to 2).map { i =>
+      s"""a$i AS (
+         |  SELECT vec_id, j, sv, c_id AS $kc FROM (
+         |    SELECT s.vec_id, s.j, s.sv, c.c_id, ${l2sqSql("s.sv", "c.cw")} AS d
+         |    FROM sub s JOIN cb${i - 1} c ON c.j = s.j
+         |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
+         |),
+         |m$i AS (
+         |  SELECT j, $kc, p,
+         |         ROUND(CAST(SUM(CAST(ROUND(sv[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
+         |               / COUNT(*), 6) AS m
+         |  FROM a$i CROSS JOIN pp GROUP BY j, $kc, p
+         |),
+         |${if (i == 2) "cb" else s"cb$i"} AS (SELECT j, $kc AS c_id, LIST(m ORDER BY p) AS cw
+         |  FROM m$i GROUP BY j, $kc)""".stripMargin
+    }.mkString(",\n")
 
   /** The top `k` of each query by summed ADC table distance over all
     * of `codes`.
@@ -9814,34 +9835,7 @@ object PipelineQueries {
             |  SELECT j, c_id, list_slice(u, j * 16 + 1, j * 16 + 16) AS cw
             |  FROM seeds CROSS JOIN jj
             |),
-            |a1 AS (
-            |  SELECT vec_id, j, sv, c_id AS cell FROM (
-            |    SELECT s.vec_id, s.j, s.sv, c.c_id,
-            |           ${l2sqSql("s.sv", "c.cw")} AS d
-            |    FROM sub s JOIN cb0 c ON c.j = s.j
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
-            |),
-            |m1 AS (
-            |  SELECT j, cell, p,
-            |         ROUND(CAST(SUM(CAST(ROUND(sv[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
-            |               / COUNT(*), 6) AS m
-            |  FROM a1 CROSS JOIN pp GROUP BY j, cell, p
-            |),
-            |cb1 AS (SELECT j, cell AS c_id, LIST(m ORDER BY p) AS cw FROM m1 GROUP BY j, cell),
-            |a2 AS (
-            |  SELECT vec_id, j, sv, c_id AS cell FROM (
-            |    SELECT s.vec_id, s.j, s.sv, c.c_id,
-            |           ${l2sqSql("s.sv", "c.cw")} AS d
-            |    FROM sub s JOIN cb1 c ON c.j = s.j
-            |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
-            |),
-            |m2 AS (
-            |  SELECT j, cell, p,
-            |         ROUND(CAST(SUM(CAST(ROUND(sv[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
-            |               / COUNT(*), 6) AS m
-            |  FROM a2 CROSS JOIN pp GROUP BY j, cell, p
-            |),
-            |cb AS (SELECT j, cell AS c_id, LIST(m ORDER BY p) AS cw FROM m2 GROUP BY j, cell),
+            |${pqLloydCtes("cell")},
             |enc AS (
             |  SELECT vec_id, j, c_id AS code FROM (
             |    SELECT s.vec_id, s.j, cb.c_id,
@@ -10550,34 +10544,7 @@ object PipelineQueries {
            |  SELECT j, c_id, list_slice(r, j * 16 + 1, j * 16 + 16) AS cw
            |  FROM seeds CROSS JOIN jj
            |),
-           |a1 AS (
-           |  SELECT vec_id, j, sv, c_id AS kc FROM (
-           |    SELECT s.vec_id, s.j, s.sv, c.c_id,
-           |           ${l2sqSql("s.sv", "c.cw")} AS d
-           |    FROM sub s JOIN cb0 c ON c.j = s.j
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
-           |),
-           |m1 AS (
-           |  SELECT j, kc, p,
-           |         ROUND(CAST(SUM(CAST(ROUND(sv[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
-           |               / COUNT(*), 6) AS m
-           |  FROM a1 CROSS JOIN pp GROUP BY j, kc, p
-           |),
-           |cb1 AS (SELECT j, kc AS c_id, LIST(m ORDER BY p) AS cw FROM m1 GROUP BY j, kc),
-           |a2 AS (
-           |  SELECT vec_id, j, sv, c_id AS kc FROM (
-           |    SELECT s.vec_id, s.j, s.sv, c.c_id,
-           |           ${l2sqSql("s.sv", "c.cw")} AS d
-           |    FROM sub s JOIN cb1 c ON c.j = s.j
-           |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c_id ASC) = 1
-           |),
-           |m2 AS (
-           |  SELECT j, kc, p,
-           |         ROUND(CAST(SUM(CAST(ROUND(sv[p], 6) AS DECIMAL(18,6))) AS DOUBLE)
-           |               / COUNT(*), 6) AS m
-           |  FROM a2 CROSS JOIN pp GROUP BY j, kc, p
-           |),
-           |cb AS (SELECT j, kc AS c_id, LIST(m ORDER BY p) AS cw FROM m2 GROUP BY j, kc)""".stripMargin
+           |${pqLloydCtes("kc")}""".stripMargin
     s"""WITH e AS ($src),
        |$annGtCte,
        |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16),
@@ -10789,7 +10756,7 @@ object PipelineQueries {
         queries, emb, "vec_id", "embedding", k = 10, shortlistFactor = 4)
       Similarity.recallVsTruth(gt, approx)
     },
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS ($embSrcSql),
             |$annGtCte,
             |$int8QzCte,
             |shortlist AS (
@@ -10822,7 +10789,7 @@ object PipelineQueries {
         queries, emb, centroids, "vec_id", "embedding", k = 10, nprobe = 2)
       Similarity.recallVsTruth(gt, approx)
     },
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS ($embSrcSql),
             |c AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
             |$annGtCte,
             |${cellsCte("assign", "c", carryV = false)},
@@ -10863,10 +10830,7 @@ object PipelineQueries {
         .select(col("cell"), (col("pos") + 1).as("pos"), col("col").as("m"),
           col("n_members"))
     },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
-            |),
+    Some(s"""WITH ${validEmbCte("e")},
             |pos AS (SELECT CAST(unnest(generate_series(1, 64)) AS INT) AS p),
             |c0 AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8),
             |${cellsCte("a1", "c0 c")},
@@ -11707,10 +11671,7 @@ object PipelineQueries {
         dim = 64, nBands = 6, bitsPerBand = 12, minCosine = 0.2)
     },
     Some(s"""WITH planes(band, j, idx) AS (VALUES $lshPlanesValues),
-            |e AS (
-            |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
-            |),
+            |${validEmbCte("e")},
             |${signKeysCte("keys", "e")},
             |ck AS (SELECT * FROM keys WHERE vec_id % 10 < 8),
             |bk AS (SELECT * FROM keys WHERE vec_id % 10 >= 8),
@@ -11748,10 +11709,7 @@ object PipelineQueries {
         .select(col("id_b").as("doc_id"), col("n_eval_matches"), col("max_cos"))
     },
     Some(s"""WITH planes(band, j, idx) AS (VALUES ${lshPlanesValuesFor(16, 4)}),
-            |e AS (
-            |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
-            |),
+            |${validEmbCte("e")},
             |${signKeysCte("keys", "e")},
             |ck AS (SELECT * FROM keys WHERE vec_id % 10 = 0),
             |bk AS (SELECT * FROM keys WHERE vec_id % 10 <> 0),
