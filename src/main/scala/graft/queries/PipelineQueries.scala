@@ -101,6 +101,19 @@ object PipelineQueries {
   /** The distinct k-word-shingle expression ([[graft.operators.Dedup.wordShingles]]'
     * DuckDB mirror) over `string_split_regex(trim(lower(text)))`.
     */
+  /** Each row's whitespace tokens `t` of `text`, trimmed and with empty
+    * tokens dropped; lower-cased unless `lower` is false.
+    */
+  private def toksCte(
+      name: String = "toks", lower: Boolean = true, src: String = "documents"): String = {
+    val text = if (lower) "lower(coalesce(text, ''))" else "coalesce(text, '')"
+    s"""$name AS (
+       |  SELECT doc_id,
+       |         list_filter(string_split_regex(trim($text), '\\s+'), x -> x <> '') AS t
+       |  FROM $src
+       |)""".stripMargin
+  }
+
   /** The `dedup_minhash_capped` adversarial crowd text — long enough
     * for full 3-word shingle diversity, constant so every crowd doc's
     * signature is identical (the worst-case hot bucket).
@@ -231,12 +244,7 @@ object PipelineQueries {
     (s, dir) =>
       Dedup.exactSubstrDedup(Tables.documents(s, dir), "doc_id", "text",
         n = 8),
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte(lower = false)},
            |g AS (
            |  SELECT doc_id, i AS pos, md5(array_to_string(t[i:i + 7], ' ')) AS fp
            |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i
@@ -286,12 +294,7 @@ object PipelineQueries {
         docs.filter(col("doc_id") >= 20),
         "doc_id", "text", n = 8)
     },
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte(lower = false)},
            |g AS (
            |  SELECT doc_id, i AS pos, md5(array_to_string(t[i:i + 7], ' ')) AS fp
            |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i
@@ -350,12 +353,7 @@ object PipelineQueries {
          |       CAST(SUM(rem) AS BIGINT) AS n_tokens_removed,
          |       CAST(SUM(tot) AS BIGINT) AS n_tokens_total
          |FROM (
-         |  WITH toks AS (
-         |    SELECT doc_id,
-         |           list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-         |                       x -> x <> '') AS t
-         |    FROM documents
-         |  ),
+         |  WITH ${toksCte(lower = false)},
          |  g AS (
          |    SELECT doc_id, i AS pos, md5(array_to_string(t[i:i + ${n - 1}], ' ')) AS fp
          |    FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - ${n - 1})) AS i
@@ -420,12 +418,7 @@ object PipelineQueries {
     Some(s"""WITH ${minhashPairsCtes(wordShingle3Sql, 0.4)},
             |mdocs AS (SELECT id_a AS doc_id FROM mpairs
             |          UNION SELECT id_b AS doc_id FROM mpairs),
-            |stoks AS (
-            |  SELECT doc_id,
-            |         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-            |                     x -> x <> '') AS t
-            |  FROM documents
-            |),
+            |${toksCte("stoks", lower = false)},
             |sgr AS (
             |  SELECT doc_id, md5(array_to_string(t[i:i + 7], ' ')) AS fp
             |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i
@@ -2305,12 +2298,7 @@ object PipelineQueries {
     "text_repetition",
     (s, dir) =>
       TextAnalysis.repetitionStats(Tables.documents(s, dir), "doc_id", "text"),
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |), wc AS (
+    Some(s"""WITH ${toksCte()}, wc AS (
            |  SELECT doc_id, w, COUNT(*) AS cnt
            |  FROM (SELECT doc_id, unnest(t) AS w FROM toks) GROUP BY 1, 2
            |), wf AS (
@@ -3263,12 +3251,7 @@ object PipelineQueries {
     * `r5` (term → rank_u) with `wo` (term → weighted degree) in scope.
     */
   private val textRankSql =
-    """toks AS (
-      |  SELECT doc_id,
-      |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-      |                     x -> x <> '') AS t
-      |  FROM documents
-      |),
+    s"""${toksCte()},
       |pr AS (SELECT t, unnest(generate_series(1, len(t) - 1)) AS i
       |       FROM toks WHERE len(t) >= 2),
       |p0 AS (
@@ -4815,12 +4798,7 @@ object PipelineQueries {
       packedSummary(clean.join(kept, Seq("doc_id")))
     },
     Some(s"""WITH RECURSIVE $pretrainStagesSql,
-            |lmtoks AS (
-            |  SELECT doc_id,
-            |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-            |                     x -> x <> '') AS t
-            |  FROM documents
-            |),
+            |${toksCte("lmtoks")},
             |lmbi AS (
             |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
             |  FROM lmtoks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
@@ -5069,12 +5047,7 @@ object PipelineQueries {
           .select(col("doc_id"), col("clean_text").as("text")))
       packedSummary(pretrainCleanDocs(cut))
     },
-    Some(s"""WITH RECURSIVE stoks AS (
-            |  SELECT doc_id,
-            |         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-            |                     x -> x <> '') AS t
-            |  FROM documents
-            |),
+    Some(s"""WITH RECURSIVE ${toksCte("stoks", lower = false)},
             |sgr AS MATERIALIZED (
             |  SELECT doc_id, i AS pos, md5(array_to_string(t[i:i + 7], ' ')) AS fp
             |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i
@@ -5513,12 +5486,7 @@ object PipelineQueries {
          |  SELECT s7.* FROM s7
          |  WHERE NOT EXISTS (SELECT 1 FROM sd_drops d WHERE d.doc_id = s7.doc_id)
          |),
-         |lmtr AS (
-         |  SELECT doc_id,
-         |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                     x -> x <> '') AS t
-         |  FROM inj WHERE doc_id % 10 = 0
-         |),
+         |${toksCte("lmtr", src = "inj WHERE doc_id % 10 = 0")},
          |lmbtr AS (
          |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
          |  FROM lmtr, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
@@ -5527,12 +5495,7 @@ object PipelineQueries {
          |lmc2 AS (SELECT w1, w2, COUNT(*) AS c FROM lmbtr GROUP BY 1, 2),
          |lmc1 AS (SELECT w1, SUM(c) AS ctx FROM lmc2 GROUP BY 1),
          |lmtot AS (SELECT COUNT(DISTINCT w2) AS v FROM lmc2),
-         |lmsc AS (
-         |  SELECT doc_id,
-         |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                     x -> x <> '') AS t
-         |  FROM s8
-         |),
+         |${toksCte("lmsc", src = "s8")},
          |lmbsc AS (
          |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
          |  FROM lmsc, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
@@ -5667,12 +5630,7 @@ object PipelineQueries {
         .select(col("w1"), col("w2"))
       TextAnalysis.phraseSearchBigram(postings, top)
     },
-    Some("""WITH tk AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |), post AS (
+    Some(s"""WITH ${toksCte("tk")}, post AS (
            |  SELECT doc_id, unnest(t) AS term,
            |         unnest(generate_series(0, len(t) - 1)) AS pos
            |  FROM tk
@@ -5714,12 +5672,7 @@ object PipelineQueries {
         .select(col("cid"), col("emb"))
       Similarity.bruteForceTopK(queries, corpus, "cid", "emb", k = 3)
     },
-    Some(s"""WITH toks AS (
-            |  SELECT doc_id,
-            |         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-            |                     x -> x <> '') AS t
-            |  FROM documents
-            |),
+    Some(s"""WITH ${toksCte(lower = false)},
             |spans AS (
             |  SELECT doc_id, t, len(t) AS n,
             |         generate_series(1, GREATEST(len(t) - 39, 1), 20) AS s0
@@ -5916,12 +5869,7 @@ object PipelineQueries {
     (s, dir) =>
       TextAnalysis.chunkDocs(Tables.documents(s, dir), "doc_id", "text",
         chunkTokens = 40, stride = 20),
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte(lower = false)},
            |spans AS (
            |  SELECT doc_id, t, len(t) AS n,
            |         generate_series(1, GREATEST(len(t) - 39, 1), 20) AS s0
@@ -5980,12 +5928,7 @@ object PipelineQueries {
     "text_lm2_score",
     (s, dir) =>
       TextAnalysis.bigramLogProb(Tables.documents(s, dir), "doc_id", "text"),
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte()},
            |bi AS (
            |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
            |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
@@ -6026,12 +5969,7 @@ object PipelineQueries {
         docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text")
     },
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte()},
            |bi AS (
            |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
            |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
@@ -6082,12 +6020,7 @@ object PipelineQueries {
     (s, dir) =>
       TextAnalysis.bm25TopK(Tables.documents(s, dir), "doc_id", "text",
         Seq("spark", "table", "vector"), k = 15),
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte()},
            |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
            |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
            |tf AS (
@@ -6138,18 +6071,13 @@ object PipelineQueries {
         .toDF("query_id", "term")
       TextAnalysis.bm25TopKBatch(Tables.documents(s, dir), "doc_id", "text", q, k = 10)
     },
-    Some("""WITH q AS (
+    Some(s"""WITH q AS (
            |  SELECT CAST(query_id AS BIGINT) AS query_id, term
            |  FROM (VALUES (1, 'spark'), (1, 'table'), (1, 'vector'),
            |               (2, 'table'), (2, 'join'),
            |               (3, 'merge'), (3, 'window'), (3, 'zzzunseen')) AS v(query_id, term)
            |),
-           |toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+           |${toksCte()},
            |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
            |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
            |tf AS (
@@ -6303,12 +6231,7 @@ object PipelineQueries {
          |               (2, 'dup'),
          |               (3, 'dup'), (3, 'merge')) AS v(query_id, term)
          |),
-         |toks AS (
-         |  SELECT doc_id,
-         |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                     x -> x <> '') AS t
-         |  FROM documents
-         |),
+         |${toksCte()},
          |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
          |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
          |tf AS (
@@ -6364,12 +6287,7 @@ object PipelineQueries {
     * ([[graft.operators.TextAnalysis.mknBigramScore]]). Ends at a `g` CTE.
     */
   private val knGramsSql =
-    """toks AS (
-      |  SELECT doc_id,
-      |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-      |                     x -> x <> '') AS t
-      |  FROM documents
-      |),
+    s"""${toksCte()},
       |bi AS (
       |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
       |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
@@ -6501,12 +6419,7 @@ object PipelineQueries {
         docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text")
     },
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte()},
            |tri AS (
            |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2, t[i + 2] AS w3
            |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i)
@@ -6618,12 +6531,7 @@ object PipelineQueries {
       arm(2, TextAnalysis.knGramLpFrom(c2, scoreBiG))
         .unionByName(arm(3, TextAnalysis.kn3GramLpFrom(c3, c2, scoreTriG)))
     },
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte()},
            |el AS (SELECT doc_id FROM toks WHERE len(t) >= 3 AND doc_id % 2 = 1),
            |bi AS (
            |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
@@ -6899,12 +6807,7 @@ object PipelineQueries {
            |                              * 1000000.0, 0) AS BIGINT)))::DOUBLE
            |        / SUM(m)::DOUBLE) / 1000000.0 AS mkn_minus_addone
            |FROM ${p}g""".stripMargin
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                     x -> x <> '') AS t
-         |  FROM documents
-         |),
+      s"""WITH ${toksCte()},
          |bi AS (
          |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
          |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
@@ -7059,12 +6962,7 @@ object PipelineQueries {
             |               (2, 'table'), (2, 'join'),
             |               (3, 'merge'), (3, 'window'), (3, 'zzzunseen')) AS v(query_id, term)
             |),
-            |toks AS (
-            |  SELECT doc_id,
-            |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-            |                     x -> x <> '') AS t
-            |  FROM documents
-            |),
+            |${toksCte()},
             |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
             |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
             |tf AS (
@@ -7624,12 +7522,7 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n_chunks"),
           sum(coalesce(col("__canon"), lit(0L))).cast("bigint").as("n_kept"))
     },
-    Some("""WITH toks AS (
-           |  SELECT doc_id,
-           |         list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
-           |                     x -> x <> '') AS t
-           |  FROM documents
-           |),
+    Some(s"""WITH ${toksCte(lower = false)},
            |spans AS (
            |  SELECT doc_id, t, len(t) AS n,
            |         generate_series(1, GREATEST(len(t) - 39, 1), 20) AS s0
@@ -7834,12 +7727,7 @@ object PipelineQueries {
     * at a `keyed` CTE; both DSIR queries append their own tail.
     */
   private val dsirKeyedSql =
-    """toks AS (
-      |  SELECT doc_id,
-      |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\s+'),
-      |                     x -> x <> '') AS t
-      |  FROM documents
-      |),
+    s"""${toksCte()},
       |bi AS (
       |  SELECT doc_id,
       |         ('0x' || substr(md5(t[i] || ' ' || t[i + 1]), 1, 15))::BIGINT % 1024 AS b
@@ -8061,12 +7949,7 @@ object PipelineQueries {
            |       n_pool, avg_logw_all, avg_logw_sampled,
            |       avg_logw_sampled - avg_logw_all AS shift
            |FROM ${p}coll CROSS JOIN ${p}allc CROSS JOIN ${p}selc""".stripMargin
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                     x -> x <> '') AS t
-         |  FROM documents
-         |),
+      s"""WITH ${toksCte()},
          |gr AS (
          |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
          |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
@@ -8171,12 +8054,7 @@ object PipelineQueries {
         s"""SELECT '$name' AS features, n_pool, avg_logw_all, avg_logw_sampled,
            |       avg_logw_sampled - avg_logw_all AS shift
            |FROM ${p}allc CROSS JOIN ${p}selc""".stripMargin
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                     x -> x <> '') AS t
-         |  FROM documents
-         |),
+      s"""WITH ${toksCte()},
          |uni AS (SELECT doc_id, unnest(t) AS f FROM toks),
          |big AS (
          |  SELECT doc_id, t[i] || ' ' || t[i + 1] AS f
