@@ -114,6 +114,41 @@ object PipelineQueries {
        |)""".stripMargin
   }
 
+  /** Each document's adjacent word pairs `(w1, w2)` from `toks`. */
+  private def bigramsCte(name: String = "bi", toks: String = "toks"): String =
+    s"""$name AS (
+       |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+       |  FROM $toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
+       |  WHERE len(t) >= 2
+       |)""".stripMargin
+
+  /** BM25 (k1 = 1.2, b = 0.75) in integer micro-units over `toks` for
+    * the terms `WHERE w IN $termsIn`: document lengths `dl`, corpus
+    * totals `tot`, term and document frequencies `tf` and `dft`, and
+    * each (document, term) contribution in `sc`, which keeps the
+    * `term` column when `perTerm`.
+    */
+  private def bm25ScoreCtes(termsIn: String, perTerm: Boolean): String =
+    s"""dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
+       |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
+       |tf AS (
+       |  SELECT doc_id, w AS term, COUNT(*) AS tf
+       |  FROM (SELECT doc_id, unnest(t) AS w FROM toks)
+       |  WHERE w IN $termsIn
+       |  GROUP BY 1, 2
+       |),
+       |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
+       |sc AS (
+       |  SELECT tf.doc_id,${if (perTerm) " tf.term," else ""}
+       |         CAST(ROUND(
+       |           CAST(ROUND(LN((2 * tot.n_docs - 2 * dft.df + 1)::DOUBLE
+       |                         / (2 * dft.df + 1)::DOUBLE) * 1000000.0, 0) AS BIGINT)::DOUBLE
+       |           * ((22 * tf.tf * tot.t_tokens)::DOUBLE
+       |              / (10 * tf.tf * tot.t_tokens + 3 * tot.t_tokens
+       |                 + 9 * dl.dl * tot.n_docs)::DOUBLE), 0) AS BIGINT) AS contrib_u
+       |  FROM tf JOIN dft USING (term) JOIN dl USING (doc_id) CROSS JOIN tot
+       |)""".stripMargin
+
   /** The `dedup_minhash_capped` adversarial crowd text — long enough
     * for full 3-word shingle diversity, constant so every crowd doc's
     * signature is identical (the worst-case hot bucket).
@@ -4799,11 +4834,7 @@ object PipelineQueries {
     },
     Some(s"""WITH RECURSIVE $pretrainStagesSql,
             |${toksCte("lmtoks")},
-            |lmbi AS (
-            |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-            |  FROM lmtoks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-            |  WHERE len(t) >= 2
-            |),
+            |${bigramsCte("lmbi", "lmtoks")},
             |lmc2 AS (SELECT w1, w2, COUNT(*) AS c FROM lmbi WHERE doc_id % 10 = 0 GROUP BY 1, 2),
             |lmc1 AS (SELECT w1, SUM(c) AS ctx FROM lmc2 GROUP BY 1),
             |lmtot AS (SELECT COUNT(DISTINCT w2) AS v FROM lmc2),
@@ -5487,20 +5518,12 @@ object PipelineQueries {
          |  WHERE NOT EXISTS (SELECT 1 FROM sd_drops d WHERE d.doc_id = s7.doc_id)
          |),
          |${toksCte("lmtr", src = "inj WHERE doc_id % 10 = 0")},
-         |lmbtr AS (
-         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-         |  FROM lmtr, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-         |  WHERE len(t) >= 2
-         |),
+         |${bigramsCte("lmbtr", "lmtr")},
          |lmc2 AS (SELECT w1, w2, COUNT(*) AS c FROM lmbtr GROUP BY 1, 2),
          |lmc1 AS (SELECT w1, SUM(c) AS ctx FROM lmc2 GROUP BY 1),
          |lmtot AS (SELECT COUNT(DISTINCT w2) AS v FROM lmc2),
          |${toksCte("lmsc", src = "s8")},
-         |lmbsc AS (
-         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-         |  FROM lmsc, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-         |  WHERE len(t) >= 2
-         |),
+         |${bigramsCte("lmbsc", "lmsc")},
          |lmtf AS (
          |  SELECT doc_id, w1, w2, COUNT(*) AS m FROM lmbsc GROUP BY 1, 2, 3
          |),
@@ -5929,11 +5952,7 @@ object PipelineQueries {
     (s, dir) =>
       TextAnalysis.bigramLogProb(Tables.documents(s, dir), "doc_id", "text"),
     Some(s"""WITH ${toksCte()},
-           |bi AS (
-           |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-           |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-           |  WHERE len(t) >= 2
-           |),
+           |${bigramsCte()},
            |tf AS (SELECT doc_id, w1, w2, COUNT(*) AS m FROM bi GROUP BY 1, 2, 3),
            |c2 AS (SELECT w1, w2, SUM(m) AS c FROM tf GROUP BY 1, 2),
            |c1 AS (SELECT w1, SUM(c) AS ctx FROM c2 GROUP BY 1),
@@ -5970,11 +5989,7 @@ object PipelineQueries {
         "doc_id", "text")
     },
     Some(s"""WITH ${toksCte()},
-           |bi AS (
-           |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-           |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-           |  WHERE len(t) >= 2
-           |),
+           |${bigramsCte()},
            |c2 AS (SELECT w1, w2, COUNT(*) AS c FROM bi WHERE doc_id % 2 = 0 GROUP BY 1, 2),
            |c1 AS (SELECT w1, SUM(c) AS ctx FROM c2 GROUP BY 1),
            |tot AS (SELECT COUNT(DISTINCT w2) AS v FROM c2),
@@ -6021,25 +6036,7 @@ object PipelineQueries {
       TextAnalysis.bm25TopK(Tables.documents(s, dir), "doc_id", "text",
         Seq("spark", "table", "vector"), k = 15),
     Some(s"""WITH ${toksCte()},
-           |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-           |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
-           |tf AS (
-           |  SELECT doc_id, w AS term, COUNT(*) AS tf
-           |  FROM (SELECT doc_id, unnest(t) AS w FROM toks)
-           |  WHERE w IN ('spark', 'table', 'vector')
-           |  GROUP BY 1, 2
-           |),
-           |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-           |sc AS (
-           |  SELECT tf.doc_id,
-           |         CAST(ROUND(
-           |           CAST(ROUND(LN((2 * tot.n_docs - 2 * dft.df + 1)::DOUBLE
-           |                         / (2 * dft.df + 1)::DOUBLE) * 1000000.0, 0) AS BIGINT)::DOUBLE
-           |           * ((22 * tf.tf * tot.t_tokens)::DOUBLE
-           |              / (10 * tf.tf * tot.t_tokens + 3 * tot.t_tokens
-           |                 + 9 * dl.dl * tot.n_docs)::DOUBLE), 0) AS BIGINT) AS contrib_u
-           |  FROM tf JOIN dft USING (term) JOIN dl USING (doc_id) CROSS JOIN tot
-           |),
+           |${bm25ScoreCtes("('spark', 'table', 'vector')", perTerm = false)},
            |agg AS (
            |  SELECT doc_id, COUNT(*) AS n_terms, CAST(SUM(contrib_u) AS BIGINT) AS score_u
            |  FROM sc GROUP BY 1
@@ -6078,25 +6075,7 @@ object PipelineQueries {
            |               (3, 'merge'), (3, 'window'), (3, 'zzzunseen')) AS v(query_id, term)
            |),
            |${toksCte()},
-           |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-           |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
-           |tf AS (
-           |  SELECT doc_id, w AS term, COUNT(*) AS tf
-           |  FROM (SELECT doc_id, unnest(t) AS w FROM toks)
-           |  WHERE w IN (SELECT DISTINCT term FROM q)
-           |  GROUP BY 1, 2
-           |),
-           |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-           |sc AS (
-           |  SELECT tf.doc_id, tf.term,
-           |         CAST(ROUND(
-           |           CAST(ROUND(LN((2 * tot.n_docs - 2 * dft.df + 1)::DOUBLE
-           |                         / (2 * dft.df + 1)::DOUBLE) * 1000000.0, 0) AS BIGINT)::DOUBLE
-           |           * ((22 * tf.tf * tot.t_tokens)::DOUBLE
-           |              / (10 * tf.tf * tot.t_tokens + 3 * tot.t_tokens
-           |                 + 9 * dl.dl * tot.n_docs)::DOUBLE), 0) AS BIGINT) AS contrib_u
-           |  FROM tf JOIN dft USING (term) JOIN dl USING (doc_id) CROSS JOIN tot
-           |),
+           |${bm25ScoreCtes("(SELECT DISTINCT term FROM q)", perTerm = true)},
            |agg AS (
            |  SELECT q.query_id, sc.doc_id, COUNT(*) AS n_terms,
            |         CAST(SUM(sc.contrib_u) AS BIGINT) AS score_u
@@ -6232,25 +6211,7 @@ object PipelineQueries {
          |               (3, 'dup'), (3, 'merge')) AS v(query_id, term)
          |),
          |${toksCte()},
-         |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-         |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
-         |tf AS (
-         |  SELECT doc_id, w AS term, COUNT(*) AS tf
-         |  FROM (SELECT doc_id, unnest(t) AS w FROM toks)
-         |  WHERE w IN (SELECT DISTINCT term FROM q)
-         |  GROUP BY 1, 2
-         |),
-         |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-         |sc AS (
-         |  SELECT tf.doc_id, tf.term,
-         |         CAST(ROUND(
-         |           CAST(ROUND(LN((2 * tot.n_docs - 2 * dft.df + 1)::DOUBLE
-         |                         / (2 * dft.df + 1)::DOUBLE) * 1000000.0, 0) AS BIGINT)::DOUBLE
-         |           * ((22 * tf.tf * tot.t_tokens)::DOUBLE
-         |              / (10 * tf.tf * tot.t_tokens + 3 * tot.t_tokens
-         |                 + 9 * dl.dl * tot.n_docs)::DOUBLE), 0) AS BIGINT) AS contrib_u
-         |  FROM tf JOIN dft USING (term) JOIN dl USING (doc_id) CROSS JOIN tot
-         |),
+         |${bm25ScoreCtes("(SELECT DISTINCT term FROM q)", perTerm = true)},
          |ranked AS (
          |  SELECT doc_id, term, contrib_u,
          |         ROW_NUMBER() OVER (PARTITION BY term
@@ -6288,11 +6249,7 @@ object PipelineQueries {
     */
   private val knGramsSql =
     s"""${toksCte()},
-      |bi AS (
-      |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-      |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-      |  WHERE len(t) >= 2
-      |),
+      |${bigramsCte()},
       |c2 AS (SELECT w1, w2, COUNT(*) AS c FROM bi WHERE doc_id % 2 = 0 GROUP BY 1, 2),
       |ctx1 AS (SELECT w1, CAST(SUM(c) AS BIGINT) AS ctx, COUNT(*) AS n1p,
       |                CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb1,
@@ -6425,11 +6382,7 @@ object PipelineQueries {
            |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i)
            |  WHERE len(t) >= 3
            |),
-           |bi AS (
-           |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-           |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-           |  WHERE len(t) >= 2
-           |),
+           |${bigramsCte()},
            |c3 AS (SELECT w1, w2, w3, COUNT(*) AS c FROM tri WHERE doc_id % 2 = 0 GROUP BY 1, 2, 3),
            |c12 AS (SELECT w1, w2, CAST(SUM(c) AS BIGINT) AS ctx12, COUNT(*) AS n1p12
            |        FROM c3 GROUP BY 1, 2),
@@ -6533,11 +6486,7 @@ object PipelineQueries {
     },
     Some(s"""WITH ${toksCte()},
            |el AS (SELECT doc_id FROM toks WHERE len(t) >= 3 AND doc_id % 2 = 1),
-           |bi AS (
-           |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-           |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-           |  WHERE len(t) >= 2
-           |),
+           |${bigramsCte()},
            |tri AS (
            |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2, t[i + 2] AS w3
            |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i)
@@ -6808,11 +6757,7 @@ object PipelineQueries {
            |        / SUM(m)::DOUBLE) / 1000000.0 AS mkn_minus_addone
            |FROM ${p}g""".stripMargin
       s"""WITH ${toksCte()},
-         |bi AS (
-         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-         |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-         |  WHERE len(t) >= 2
-         |),
+         |${bigramsCte()},
          |tf AS (SELECT doc_id, w1, w2, COUNT(*) AS m FROM bi WHERE doc_id % 2 = 1 GROUP BY 1, 2, 3),
          |${arm(2, "m2_")},
          |${arm(20, "m20_")},
@@ -6963,25 +6908,7 @@ object PipelineQueries {
             |               (3, 'merge'), (3, 'window'), (3, 'zzzunseen')) AS v(query_id, term)
             |),
             |${toksCte()},
-            |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-            |tot AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_tokens FROM dl),
-            |tf AS (
-            |  SELECT doc_id, w AS term, COUNT(*) AS tf
-            |  FROM (SELECT doc_id, unnest(t) AS w FROM toks)
-            |  WHERE w IN (SELECT DISTINCT term FROM q)
-            |  GROUP BY 1, 2
-            |),
-            |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-            |sc AS (
-            |  SELECT tf.doc_id, tf.term,
-            |         CAST(ROUND(
-            |           CAST(ROUND(LN((2 * tot.n_docs - 2 * dft.df + 1)::DOUBLE
-            |                         / (2 * dft.df + 1)::DOUBLE) * 1000000.0, 0) AS BIGINT)::DOUBLE
-            |           * ((22 * tf.tf * tot.t_tokens)::DOUBLE
-            |              / (10 * tf.tf * tot.t_tokens + 3 * tot.t_tokens
-            |                 + 9 * dl.dl * tot.n_docs)::DOUBLE), 0) AS BIGINT) AS contrib_u
-            |  FROM tf JOIN dft USING (term) JOIN dl USING (doc_id) CROSS JOIN tot
-            |),
+            |${bm25ScoreCtes("(SELECT DISTINCT term FROM q)", perTerm = true)},
             |agg AS (
             |  SELECT q.query_id, sc.doc_id, CAST(SUM(sc.contrib_u) AS BIGINT) AS score_u
             |  FROM sc JOIN q USING (term)
@@ -7950,11 +7877,7 @@ object PipelineQueries {
            |       avg_logw_sampled - avg_logw_all AS shift
            |FROM ${p}coll CROSS JOIN ${p}allc CROSS JOIN ${p}selc""".stripMargin
       s"""WITH ${toksCte()},
-         |gr AS (
-         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-         |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i)
-         |  WHERE len(t) >= 2
-         |),
+         |${bigramsCte("gr", "toks")},
          |gd AS (SELECT DISTINCT w1, w2 FROM gr WHERE doc_id % 10 <> 0),
          |${arm(256, "b256_")},
          |${arm(1024, "b1024_")},
