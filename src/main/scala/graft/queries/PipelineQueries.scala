@@ -2362,6 +2362,31 @@ object PipelineQueries {
            |LEFT JOIN wf ON toks.doc_id = wf.doc_id
            |LEFT JOIN bf ON toks.doc_id = bf.doc_id""".stripMargin))
 
+  /** Next-fit packing of the `${p}ord` rows `(bucket, doc_id, n_tok,
+    * rn)` into 256-token sequences `seq` within each bucket, in `rn`
+    * order, as a recursive CTE.
+    */
+  private def nextFitPackCte(p: String = ""): String =
+    s"""${p}pack AS (
+       |  SELECT bucket, doc_id, n_tok, rn, 0 AS seq, n_tok AS cur FROM ${p}ord WHERE rn = 1
+       |  UNION ALL
+       |  SELECT o.bucket, o.doc_id, o.n_tok, o.rn,
+       |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN p.seq + 1 ELSE p.seq END,
+       |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN o.n_tok ELSE p.cur + o.n_tok END
+       |  FROM ${p}pack p JOIN ${p}ord o ON o.bucket = p.bucket AND o.rn = p.rn + 1
+       |)""".stripMargin
+
+  /** The documents in 50-doc buckets with their whitespace token
+    * counts, ranked within a bucket by `order` and packed next-fit.
+    */
+  private def docPackCtes(p: String = "", order: String = "doc_id"): String =
+    s"""${p}ord AS (
+       |  SELECT doc_id, doc_id // 50 AS bucket,
+       |         len(string_split_regex(trim(coalesce(text, '')), '\\s+')) AS n_tok,
+       |         row_number() OVER (PARTITION BY doc_id // 50 ORDER BY $order) AS rn
+       |  FROM documents
+       |), ${nextFitPackCte(p)}""".stripMargin
+
   /** Next-fit sequence packing ([[graft.operators.TextAnalysis.packSequences]]): docs
     * packed into ≤ 256-token training sequences in id order within
     * 50-doc buckets. The oracle replays the identical fold as a
@@ -2377,19 +2402,7 @@ object PipelineQueries {
         TextAnalysis.tokenCountWs(coalesce(col("text"), lit(""))).cast("long").as("n_tok"))
       TextAnalysis.packSequences(sized, "doc_id", "n_tok", "bucket", maxTokens = 256L)
     },
-    Some("""WITH RECURSIVE ord AS (
-           |  SELECT doc_id, doc_id // 50 AS bucket,
-           |         len(string_split_regex(trim(coalesce(text, '')), '\s+')) AS n_tok,
-           |         row_number() OVER (PARTITION BY doc_id // 50 ORDER BY doc_id) AS rn
-           |  FROM documents
-           |), pack AS (
-           |  SELECT bucket, doc_id, n_tok, rn, 0 AS seq, n_tok AS cur FROM ord WHERE rn = 1
-           |  UNION ALL
-           |  SELECT o.bucket, o.doc_id, o.n_tok, o.rn,
-           |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN p.seq + 1 ELSE p.seq END,
-           |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN o.n_tok ELSE p.cur + o.n_tok END
-           |  FROM pack p JOIN ord o ON o.bucket = p.bucket AND o.rn = p.rn + 1
-           |)
+    Some(s"""WITH RECURSIVE ${docPackCtes()}
            |SELECT bucket, doc_id, n_tok, seq FROM pack""".stripMargin))
 
   /** Packing-efficiency report over the [[textPackSequences]] output —
@@ -2431,19 +2444,7 @@ object PipelineQueries {
         lit(-1L))
       per.unionByName(total)
     },
-    Some("""WITH RECURSIVE ord AS (
-           |  SELECT doc_id, doc_id // 50 AS bucket,
-           |         len(string_split_regex(trim(coalesce(text, '')), '\s+')) AS n_tok,
-           |         row_number() OVER (PARTITION BY doc_id // 50 ORDER BY doc_id) AS rn
-           |  FROM documents
-           |), pack AS (
-           |  SELECT bucket, doc_id, n_tok, rn, 0 AS seq, n_tok AS cur FROM ord WHERE rn = 1
-           |  UNION ALL
-           |  SELECT o.bucket, o.doc_id, o.n_tok, o.rn,
-           |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN p.seq + 1 ELSE p.seq END,
-           |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN o.n_tok ELSE p.cur + o.n_tok END
-           |  FROM pack p JOIN ord o ON o.bucket = p.bucket AND o.rn = p.rn + 1
-           |), seqs AS (
+    Some(s"""WITH RECURSIVE ${docPackCtes()}, seqs AS (
            |  SELECT bucket, seq, CAST(COUNT(*) AS BIGINT) AS n_docs,
            |         CAST(SUM(n_tok) AS BIGINT) AS tok
            |  FROM pack GROUP BY 1, 2
@@ -2506,19 +2507,7 @@ object PipelineQueries {
     },
     Some {
       def packArm(ordClause: String, p: String) =
-        s"""${p}ord AS (
-           |  SELECT doc_id, doc_id // 50 AS bucket,
-           |         len(string_split_regex(trim(coalesce(text, '')), '\\s+')) AS n_tok,
-           |         row_number() OVER (PARTITION BY doc_id // 50 ORDER BY $ordClause) AS rn
-           |  FROM documents
-           |), ${p}pack AS (
-           |  SELECT bucket, doc_id, n_tok, rn, 0 AS seq, n_tok AS cur FROM ${p}ord WHERE rn = 1
-           |  UNION ALL
-           |  SELECT o.bucket, o.doc_id, o.n_tok, o.rn,
-           |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN p.seq + 1 ELSE p.seq END,
-           |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN o.n_tok ELSE p.cur + o.n_tok END
-           |  FROM ${p}pack p JOIN ${p}ord o ON o.bucket = p.bucket AND o.rn = p.rn + 1
-           |), ${p}seqs AS (
+        s"""${docPackCtes(p, ordClause)}, ${p}seqs AS (
            |  SELECT bucket, seq, CAST(SUM(n_tok) AS BIGINT) AS tok
            |  FROM ${p}pack GROUP BY 1, 2
            |)""".stripMargin
@@ -2588,19 +2577,7 @@ object PipelineQueries {
         .select(col("bucket"), col("seq"), col("n_docs"), col("tot_tok"),
           col("shard"), col("shard_pos"))
     },
-    Some("""WITH RECURSIVE ord AS (
-           |  SELECT doc_id, doc_id // 50 AS bucket,
-           |         len(string_split_regex(trim(coalesce(text, '')), '\s+')) AS n_tok,
-           |         row_number() OVER (PARTITION BY doc_id // 50 ORDER BY doc_id) AS rn
-           |  FROM documents
-           |), pack AS (
-           |  SELECT bucket, doc_id, n_tok, rn, 0 AS seq, n_tok AS cur FROM ord WHERE rn = 1
-           |  UNION ALL
-           |  SELECT o.bucket, o.doc_id, o.n_tok, o.rn,
-           |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN p.seq + 1 ELSE p.seq END,
-           |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN o.n_tok ELSE p.cur + o.n_tok END
-           |  FROM pack p JOIN ord o ON o.bucket = p.bucket AND o.rn = p.rn + 1
-           |), seqs AS (
+    Some(s"""WITH RECURSIVE ${docPackCtes()}, seqs AS (
            |  SELECT bucket, seq, CAST(COUNT(*) AS BIGINT) AS n_docs,
            |         CAST(SUM(n_tok) AS BIGINT) AS tot_tok
            |  FROM pack GROUP BY 1, 2
@@ -2660,19 +2637,7 @@ object PipelineQueries {
            |                  ('0x' || substr(md5('$salt' || '#' || seq_key), 1, 15))::BIGINT,
            |                  seq_key) - 1 AS BIGINT) AS curriculum_pos
            |FROM base""".stripMargin
-      s"""WITH RECURSIVE ord AS (
-         |  SELECT doc_id, doc_id // 50 AS bucket,
-         |         len(string_split_regex(trim(coalesce(text, '')), '\\s+')) AS n_tok,
-         |         row_number() OVER (PARTITION BY doc_id // 50 ORDER BY doc_id) AS rn
-         |  FROM documents
-         |), pack AS (
-         |  SELECT bucket, doc_id, n_tok, rn, 0 AS seq, n_tok AS cur FROM ord WHERE rn = 1
-         |  UNION ALL
-         |  SELECT o.bucket, o.doc_id, o.n_tok, o.rn,
-         |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN p.seq + 1 ELSE p.seq END,
-         |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN o.n_tok ELSE p.cur + o.n_tok END
-         |  FROM pack p JOIN ord o ON o.bucket = p.bucket AND o.rn = p.rn + 1
-         |), seqs AS (
+      s"""WITH RECURSIVE ${docPackCtes()}, seqs AS (
          |  SELECT bucket, seq, CAST(SUM(n_tok) AS BIGINT) AS tot_tok
          |  FROM pack GROUP BY 1, 2
          |), keyed AS (
@@ -4670,14 +4635,7 @@ object PipelineQueries {
        |         ROW_NUMBER() OVER (PARTITION BY bucket ORDER BY doc_id) AS rn
        |  FROM $src
        |),
-       |pack AS (
-       |  SELECT bucket, doc_id, n_tok, rn, 0 AS seq, n_tok AS cur FROM ord WHERE rn = 1
-       |  UNION ALL
-       |  SELECT o.bucket, o.doc_id, o.n_tok, o.rn,
-       |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN p.seq + 1 ELSE p.seq END,
-       |         CASE WHEN p.cur + o.n_tok > 256 AND p.cur > 0 THEN o.n_tok ELSE p.cur + o.n_tok END
-       |  FROM pack p JOIN ord o ON o.bucket = p.bucket AND o.rn = p.rn + 1
-       |)
+       |${nextFitPackCte()}
        |SELECT bucket, seq, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS seq_tokens
        |FROM pack GROUP BY 1, 2""".stripMargin
 
