@@ -601,26 +601,46 @@ object PipelineQueries {
             |CROSS JOIN ntruth""".stripMargin
       .replace("toks", "string_split_regex(trim(lower(text)), '\\s+')")))
 
+  /** The connected components walk over the undirected `pairs`
+    * `(id_a, id_b)`: `${p}reach(s, t)` holds every node `t` reachable
+    * from `s`. `x` aliases the edge table in the recursive step.
+    */
+  private def reachCtes(pairs: String, x: String = "e", p: String = ""): String =
+    s"""${p}edges AS (
+       |  SELECT id_a AS s, id_b AS t FROM $pairs
+       |  UNION
+       |  SELECT id_b AS s, id_a AS t FROM $pairs
+       |),
+       |${p}reach(s, t) AS (
+       |  SELECT s, t FROM ${p}edges
+       |  UNION
+       |  SELECT r.s, $x.t FROM ${p}reach r JOIN ${p}edges $x ON r.t = $x.s
+       |)""".stripMargin
+
+  /** 60-bit SimHash `sim` of each document over md5 word hashes. */
+  private def simhashCtes: String =
+    s"""hs AS (
+       |  SELECT doc_id AS id,
+       |         [('0x' || substr(md5(t), 1, 15))::BIGINT
+       |          FOR t IN string_split_regex(trim(lower(text)), '\\s+')] AS hashes
+       |  FROM documents
+       |),
+       |sim AS (
+       |  SELECT id,
+       |         CAST(list_sum([CASE WHEN list_sum([CASE WHEN (h >> j) % 2 = 1 THEN 1 ELSE -1 END
+       |                                            FOR h IN hashes]) > 0
+       |                             THEN (1::BIGINT << j) ELSE 0::BIGINT END
+       |                        FOR j IN generate_series(0, 59)]) AS BIGINT) AS sim
+       |  FROM hs
+       |)""".stripMargin
+
   /** Near-dup via SimHash bit-slice banding + Hamming verify. */
   val dedupSimhash = QueryDef(
     "dedup_simhash",
     (s, dir) =>
       Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text",
         maxHamming = 6, bands = 4, bitsPerBand = 15),
-    Some(s"""WITH hs AS (
-           |  SELECT doc_id AS id,
-           |         [('0x' || substr(md5(t), 1, 15))::BIGINT
-           |          FOR t IN string_split_regex(trim(lower(text)), '\\s+')] AS hashes
-           |  FROM documents
-           |),
-           |sim AS (
-           |  SELECT id,
-           |         CAST(list_sum([CASE WHEN list_sum([CASE WHEN (h >> j) % 2 = 1 THEN 1 ELSE -1 END
-           |                                            FOR h IN hashes]) > 0
-           |                             THEN (1::BIGINT << j) ELSE 0::BIGINT END
-           |                        FOR j IN generate_series(0, 59)]) AS BIGINT) AS sim
-           |  FROM hs
-           |),
+    Some(s"""WITH $simhashCtes,
            |banded AS (
            |  SELECT id, sim, b AS band, (sim >> (b * 15)) % (1::BIGINT << 15) AS key
            |  FROM sim CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
@@ -661,16 +681,7 @@ object PipelineQueries {
       s"""WITH RECURSIVE pairs AS (
          |$pairsSql
          |),
-         |edges AS (
-         |  SELECT id_a AS s, id_b AS t FROM pairs
-         |  UNION
-         |  SELECT id_b AS s, id_a AS t FROM pairs
-         |),
-         |reach(s, t) AS (
-         |  SELECT s, t FROM edges
-         |  UNION
-         |  SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-         |)
+         |${reachCtes("pairs")}
          |SELECT s AS id, least(s, MIN(t)) AS cluster_rep
          |FROM reach GROUP BY s""".stripMargin
     })
@@ -750,20 +761,7 @@ object PipelineQueries {
         docs.filter(col("doc_id") % 10 >= 8),
         "doc_id", "text", maxHamming = 6, bands = 4, bitsPerBand = 15)
     },
-    Some(s"""WITH hs AS (
-           |  SELECT doc_id AS id,
-           |         [('0x' || substr(md5(t), 1, 15))::BIGINT
-           |          FOR t IN string_split_regex(trim(lower(text)), '\\s+')] AS hashes
-           |  FROM documents
-           |),
-           |sim AS (
-           |  SELECT id,
-           |         CAST(list_sum([CASE WHEN list_sum([CASE WHEN (h >> j) % 2 = 1 THEN 1 ELSE -1 END
-           |                                            FOR h IN hashes]) > 0
-           |                             THEN (1::BIGINT << j) ELSE 0::BIGINT END
-           |                        FOR j IN generate_series(0, 59)]) AS BIGINT) AS sim
-           |  FROM hs
-           |),
+    Some(s"""WITH $simhashCtes,
            |banded AS (
            |  SELECT id, sim, b AS band, (sim >> (b * 15)) % (1::BIGINT << 15) AS key
            |  FROM sim CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
@@ -832,20 +830,7 @@ object PipelineQueries {
       Dedup.assignToClusters(allPairs.filter(!aCorp || !bCorp), existing)
         .select(col("id").as("doc_id"), col("cluster_rep"))
     },
-    Some(s"""WITH RECURSIVE hs AS (
-           |  SELECT doc_id AS id,
-           |         [('0x' || substr(md5(t), 1, 15))::BIGINT
-           |          FOR t IN string_split_regex(trim(lower(text)), '\\s+')] AS hashes
-           |  FROM documents
-           |),
-           |sim AS (
-           |  SELECT id,
-           |         CAST(list_sum([CASE WHEN list_sum([CASE WHEN (h >> j) % 2 = 1 THEN 1 ELSE -1 END
-           |                                            FOR h IN hashes]) > 0
-           |                             THEN (1::BIGINT << j) ELSE 0::BIGINT END
-           |                        FOR j IN generate_series(0, 59)]) AS BIGINT) AS sim
-           |  FROM hs
-           |),
+    Some(s"""WITH RECURSIVE $simhashCtes,
            |banded AS (
            |  SELECT id, sim, b AS band, (sim >> (b * 15)) % (1::BIGINT << 15) AS key
            |  FROM sim CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
@@ -866,16 +851,7 @@ object PipelineQueries {
            |     AND a.sub = b.sub AND a.id < b.id
            |  ) WHERE hamming <= 6
            |),
-           |cedges AS (
-           |  SELECT id_a AS s, id_b AS t FROM pair WHERE id_a % 10 < 8 AND id_b % 10 < 8
-           |  UNION
-           |  SELECT id_b AS s, id_a AS t FROM pair WHERE id_a % 10 < 8 AND id_b % 10 < 8
-           |),
-           |creach(s, t) AS (
-           |  SELECT s, t FROM cedges
-           |  UNION
-           |  SELECT r.s, e.t FROM creach r JOIN cedges e ON r.t = e.s
-           |),
+           |${reachCtes("pair WHERE id_a % 10 < 8 AND id_b % 10 < 8", p = "c")},
            |clabel AS (
            |  SELECT s AS id, least(s, MIN(t)) AS rep FROM creach GROUP BY s
            |),
@@ -884,16 +860,7 @@ object PipelineQueries {
            |  FROM documents d LEFT JOIN clabel c ON d.doc_id = c.id
            |  WHERE d.doc_id % 10 < 8
            |),
-           |bedges AS (
-           |  SELECT id_a AS s, id_b AS t FROM pair WHERE id_a % 10 >= 8 AND id_b % 10 >= 8
-           |  UNION
-           |  SELECT id_b AS s, id_a AS t FROM pair WHERE id_a % 10 >= 8 AND id_b % 10 >= 8
-           |),
-           |breach(s, t) AS (
-           |  SELECT s, t FROM bedges
-           |  UNION
-           |  SELECT r.s, e.t FROM breach r JOIN bedges e ON r.t = e.s
-           |),
+           |${reachCtes("pair WHERE id_a % 10 >= 8 AND id_b % 10 >= 8", p = "b")},
            |blabel AS (
            |  SELECT s AS id, least(s, MIN(t)) AS comp FROM breach GROUP BY s
            |),
@@ -4429,16 +4396,7 @@ object PipelineQueries {
       s"""WITH RECURSIVE pairs AS (
          |$pairsSql
          |),
-         |edges AS (
-         |  SELECT id_a AS s, id_b AS t FROM pairs
-         |  UNION
-         |  SELECT id_b AS s, id_a AS t FROM pairs
-         |),
-         |reach(s, t) AS (
-         |  SELECT s, t FROM edges
-         |  UNION
-         |  SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-         |),
+         |${reachCtes("pairs")},
          |clusters AS (
          |  SELECT s AS id, least(s, MIN(t)) AS cluster_rep FROM reach GROUP BY s
          |),
@@ -5392,16 +5350,7 @@ object PipelineQueries {
          |  FROM stoks LEFT JOIN sfs ON stoks.doc_id = sfs.doc_id
          |),
          |${minhashPairsCtes(wordShingle3Sql, 0.4, src = "s4")},
-         |fz_edges AS (
-         |  SELECT id_a AS s, id_b AS t FROM mpairs
-         |  UNION
-         |  SELECT id_b AS s, id_a AS t FROM mpairs
-         |),
-         |fz_reach(s, t) AS (
-         |  SELECT s, t FROM fz_edges
-         |  UNION
-         |  SELECT r.s, e2.t FROM fz_reach r JOIN fz_edges e2 ON r.t = e2.s
-         |),
+         |${reachCtes("mpairs", "e2", "fz_")},
          |fz_clusters AS (
          |  SELECT s AS id, least(s, MIN(t)) AS cluster_rep FROM fz_reach GROUP BY s
          |),
@@ -8689,16 +8638,7 @@ object PipelineQueries {
             |    FROM cand JOIN e ea ON cand.id_a = ea.vec_id JOIN e eb ON cand.id_b = eb.vec_id
             |  ) WHERE cos >= 0.2
             |),
-            |edges AS (
-            |  SELECT id_a AS s, id_b AS t FROM pairs
-            |  UNION
-            |  SELECT id_b AS s, id_a AS t FROM pairs
-            |),
-            |reach(s, t) AS (
-            |  SELECT s, t FROM edges
-            |  UNION
-            |  SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s
-            |)
+            |${reachCtes("pairs", "e2")}
             |SELECT s AS id, least(s, MIN(t)) AS cluster_rep
             |FROM reach GROUP BY s""".stripMargin))
 
@@ -9948,16 +9888,7 @@ object PipelineQueries {
          |    ON a.cell = b.cell AND a.sub = b.sub AND a.vec_id < b.vec_id
          |  WHERE ROUND(${cosSql("a.v", "b.v")}, 6) >= 0.6
          |),
-         |edges AS (
-         |  SELECT id_a AS s, id_b AS t FROM dup
-         |  UNION
-         |  SELECT id_b AS s, id_a AS t FROM dup
-         |),
-         |reach(s, t) AS (
-         |  SELECT s, t FROM edges
-         |  UNION
-         |  SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s
-         |),
+         |${reachCtes("dup", "e2")},
          |groups AS (
          |  SELECT s AS id, least(s, MIN(t)) AS cluster_rep FROM reach GROUP BY s
          |),
@@ -10189,16 +10120,7 @@ object PipelineQueries {
          |  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
          |  WHERE ROUND(${cosSql("a.v", "b.v")}, 6) >= 0.6
          |),
-         |edges AS (
-         |  SELECT id_a AS s, id_b AS t FROM dup
-         |  UNION
-         |  SELECT id_b AS s, id_a AS t FROM dup
-         |),
-         |reach(s, t) AS (
-         |  SELECT s, t FROM edges
-         |  UNION
-         |  SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s
-         |),
+         |${reachCtes("dup", "e2")},
          |groups AS (
          |  SELECT s AS id, least(s, MIN(t)) AS cluster_rep FROM reach GROUP BY s
          |),
@@ -11354,15 +11276,7 @@ object PipelineQueries {
             |  FROM capped a JOIN capped b2
             |    ON a.band = b2.band AND a.key = b2.key AND a.sub = b2.sub AND a.id < b2.id
             |  WHERE bit_count(xor(a.sim, b2.sim)) <= 6
-            |), edges AS (
-            |  SELECT id_a AS s, id_b AS t FROM pairs
-            |  UNION
-            |  SELECT id_b AS s, id_a AS t FROM pairs
-            |), reach(s, t) AS (
-            |  SELECT s, t FROM edges
-            |  UNION
-            |  SELECT r.s, e2.t FROM reach r JOIN edges e2 ON r.t = e2.s
-            |)
+            |), ${reachCtes("pairs", "e2")}
             |SELECT s AS id, least(s, MIN(t)) AS cluster_rep
             |FROM reach GROUP BY s""".stripMargin))
 
