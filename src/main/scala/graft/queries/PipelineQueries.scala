@@ -11156,6 +11156,39 @@ object PipelineQueries {
       s"CASE WHEN by[${a + 2}] > by[${a + 1}] THEN ${1L << idx} ELSE 0 END"
     }).mkString(" + ")
 
+  /** The synthetic media of `mm_phash_pairs` (every document, plus a
+    * re-encoded copy of each tenth one), their dHash `sim`, and its
+    * four 14-bit band keys capped at 2000 rows per bucket.
+    */
+  private def phashCappedCtes: String =
+    s"""m AS (
+       |  SELECT doc_id AS id,
+       |         md5('0:' || text) || md5('1:' || text) ||
+       |         md5('2:' || text) || md5('3:' || text) AS chain
+       |  FROM documents
+       |  UNION ALL
+       |  SELECT doc_id + 1000000 AS id,
+       |         substr(md5('0:' || text) || md5('1:' || text) ||
+       |                md5('2:' || text) || md5('3:' || text), 1, 126) || '00' AS chain
+       |  FROM documents WHERE doc_id % 10 = 0
+       |), b AS (
+       |  SELECT id,
+       |         [ (strpos('0123456789abcdef', substr(chain, 2*i + 1, 1)) - 1) * 16
+       |           + (strpos('0123456789abcdef', substr(chain, 2*i + 2, 1)) - 1)
+       |           FOR i IN generate_series(0, 63) ] AS by
+       |  FROM m
+       |), h AS (
+       |  SELECT id, CAST($dhashTermsSql AS BIGINT) AS sim FROM b
+       |), banded AS (
+       |  SELECT id, sim, band, (sim >> (band * 14)) % 16384 AS key
+       |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band)
+       |), bsz AS (
+       |  SELECT band, key, COUNT(*) AS n FROM banded GROUP BY 1, 2
+       |), capped AS (
+       |  SELECT id, sim, band, key, ${capSubSql("band, key", "id", 2000)}
+       |  FROM banded JOIN bsz USING (band, key)
+       |)""".stripMargin
+
   /** Perceptual-hash media near-dup pairs ([[graft.operators.Multimodal.phashPairs]]):
     * dHash over the synthetic payload "pixels" → the same bit-slice
     * band → cap → equi-join → Hamming machinery as text SimHash, on
@@ -11183,36 +11216,7 @@ object PipelineQueries {
           concat(substring(col("payload"), 1, 63), unhex(lit("00"))))
       Multimodal.phashPairs(media.unionByName(reencoded), "media_id", "payload")
     },
-    Some(s"""WITH m AS (
-            |  SELECT doc_id AS id,
-            |         md5('0:' || text) || md5('1:' || text) ||
-            |         md5('2:' || text) || md5('3:' || text) AS chain
-            |  FROM documents
-            |  UNION ALL
-            |  SELECT doc_id + 1000000 AS id,
-            |         substr(md5('0:' || text) || md5('1:' || text) ||
-            |                md5('2:' || text) || md5('3:' || text), 1, 126) || '00' AS chain
-            |  FROM documents WHERE doc_id % 10 = 0
-            |), b AS (
-            |  SELECT id,
-            |         [ (strpos('0123456789abcdef', substr(chain, 2*i + 1, 1)) - 1) * 16
-            |           + (strpos('0123456789abcdef', substr(chain, 2*i + 2, 1)) - 1)
-            |           FOR i IN generate_series(0, 63) ] AS by
-            |  FROM m
-            |), h AS (
-            |  SELECT id, CAST($dhashTermsSql AS BIGINT) AS sim FROM b
-            |), banded AS (
-            |  SELECT id, sim, band, (sim >> (band * 14)) % 16384 AS key
-            |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band)
-            |), bsz AS (
-            |  SELECT band, key, COUNT(*) AS n FROM banded GROUP BY 1, 2
-            |), capped AS (
-            |  SELECT id, sim, band, key,
-            |         CASE WHEN n > 2000
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY id) - 1) // 2000
-            |              ELSE 0 END AS sub
-            |  FROM banded JOIN bsz USING (band, key)
-            |)
+    Some(s"""WITH $phashCappedCtes
             |SELECT DISTINCT a.id AS id_a, b.id AS id_b,
             |       CAST(bit_count(xor(a.sim, b.sim)) AS INT) AS hamming
             |FROM capped a JOIN capped b
@@ -11242,36 +11246,7 @@ object PipelineQueries {
       Dedup.dedupClusters(
         Multimodal.phashPairs(media.unionByName(reencoded), "media_id", "payload"))
     },
-    Some(s"""WITH RECURSIVE m AS (
-            |  SELECT doc_id AS id,
-            |         md5('0:' || text) || md5('1:' || text) ||
-            |         md5('2:' || text) || md5('3:' || text) AS chain
-            |  FROM documents
-            |  UNION ALL
-            |  SELECT doc_id + 1000000 AS id,
-            |         substr(md5('0:' || text) || md5('1:' || text) ||
-            |                md5('2:' || text) || md5('3:' || text), 1, 126) || '00' AS chain
-            |  FROM documents WHERE doc_id % 10 = 0
-            |), b AS (
-            |  SELECT id,
-            |         [ (strpos('0123456789abcdef', substr(chain, 2*i + 1, 1)) - 1) * 16
-            |           + (strpos('0123456789abcdef', substr(chain, 2*i + 2, 1)) - 1)
-            |           FOR i IN generate_series(0, 63) ] AS by
-            |  FROM m
-            |), h AS (
-            |  SELECT id, CAST($dhashTermsSql AS BIGINT) AS sim FROM b
-            |), banded AS (
-            |  SELECT id, sim, band, (sim >> (band * 14)) % 16384 AS key
-            |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band)
-            |), bsz AS (
-            |  SELECT band, key, COUNT(*) AS n FROM banded GROUP BY 1, 2
-            |), capped AS (
-            |  SELECT id, sim, band, key,
-            |         CASE WHEN n > 2000
-            |              THEN (ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY id) - 1) // 2000
-            |              ELSE 0 END AS sub
-            |  FROM banded JOIN bsz USING (band, key)
-            |), pairs AS (
+    Some(s"""WITH RECURSIVE $phashCappedCtes, pairs AS (
             |  SELECT DISTINCT a.id AS id_a, b2.id AS id_b
             |  FROM capped a JOIN capped b2
             |    ON a.band = b2.band AND a.key = b2.key AND a.sub = b2.sub AND a.id < b2.id
