@@ -2637,6 +2637,32 @@ object PipelineQueries {
     * can't re-aggregate, and BPE needs a fresh corpus-wide argmax per
     * round).
     */
+  /** The lower-cased `[a-z0-9]+` words `w` of each document the
+    * tokenizers encode (documents filtered by `where`), with their
+    * 1-based position `wpos` among those words when `positions`.
+    */
+  private def wordsCte(where: String = "", positions: Boolean = false): String = {
+    val from = if (where.isEmpty) "documents" else s"documents WHERE $where"
+    if (positions)
+      s"""dtok AS (
+         |  SELECT doc_id, unnest(toks) AS w,
+         |         unnest(generate_series(1, len(toks))) AS wpos
+         |  FROM (
+         |    SELECT doc_id,
+         |           list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
+         |                       t -> regexp_matches(t, '^[a-z0-9]+$$')) AS toks
+         |    FROM $from)
+         |)""".stripMargin
+    else
+      s"""dtok AS (
+         |  SELECT doc_id, t AS w FROM (
+         |    SELECT doc_id,
+         |           unnest(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+')) AS t
+         |    FROM $from)
+         |  WHERE regexp_matches(t, '^[a-z0-9]+$$')
+         |)""".stripMargin
+  }
+
   /** One greedy merge application (round `i`'s best pair `bp$i`) over
     * word-state table `prev`, emitting `out` — the islands-and-parity
     * formulation shared by the TRAINING chain (st tables) and the
@@ -2773,13 +2799,7 @@ object PipelineQueries {
     },
     Some(
       s"""WITH ${bpeChainSql(BpeMerges)},
-         |dtok AS (
-         |  SELECT doc_id, t AS w FROM (
-         |    SELECT doc_id,
-         |           unnest(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+')) AS t
-         |    FROM documents)
-         |  WHERE regexp_matches(t, '^[a-z0-9]+$$')
-         |),
+         |${wordsCte()},
          |enc AS (
          |  SELECT d.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
          |         CAST(SUM(len(m.s)) AS BIGINT) AS n_bpe_tokens
@@ -2812,13 +2832,7 @@ object PipelineQueries {
     },
     Some(
       s"""WITH ${bpeChainSql(BpeMerges, "doc_id % 2 = 0")}${bpeEncodeChainSql(BpeMerges, "doc_id % 2 = 1")},
-         |dtok AS (
-         |  SELECT doc_id, t AS w FROM (
-         |    SELECT doc_id,
-         |           unnest(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+')) AS t
-         |    FROM documents WHERE doc_id % 2 = 1)
-         |  WHERE regexp_matches(t, '^[a-z0-9]+$$')
-         |),
+         |${wordsCte("doc_id % 2 = 1")},
          |enc AS (
          |  SELECT d.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
          |         CAST(SUM(len(m.s)) AS BIGINT) AS n_bpe_tokens
@@ -2961,15 +2975,7 @@ object PipelineQueries {
          |    FROM (SELECT freq, unnest(s) AS t FROM st$BpeMerges) GROUP BY 1
          |  )
          |),
-         |dtok AS (
-         |  SELECT doc_id, unnest(toks) AS w,
-         |         unnest(generate_series(1, len(toks))) AS wpos
-         |  FROM (
-         |    SELECT doc_id,
-         |           list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                       t -> regexp_matches(t, '^[a-z0-9]+$$')) AS toks
-         |    FROM documents)
-         |),
+         |${wordsCte(positions = true)},
          |dsym AS (
          |  SELECT d.doc_id, d.wpos, unnest(m.s) AS token,
          |         unnest(generate_series(1, len(m.s))) AS spos
@@ -3034,15 +3040,7 @@ object PipelineQueries {
          |),
          |svoc AS (SELECT token, token_id FROM voc
          |         UNION ALL SELECT token, token_id FROM bytes),
-         |dtok AS (
-         |  SELECT doc_id, unnest(toks) AS w,
-         |         unnest(generate_series(1, len(toks))) AS wpos
-         |  FROM (
-         |    SELECT doc_id,
-         |           list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                       t -> regexp_matches(t, '^[a-z0-9]+$$')) AS toks
-         |    FROM documents WHERE doc_id % 2 = 1)
-         |),
+         |${wordsCte("doc_id % 2 = 1", positions = true)},
          |dsym AS (
          |  SELECT d.doc_id, d.wpos, unnest(m.s) AS token,
          |         unnest(generate_series(1, len(m.s))) AS spos
@@ -4682,13 +4680,7 @@ object PipelineQueries {
     },
     Some(s"""WITH RECURSIVE ${bpeChainSql(BpeMerges)},
             |$pretrainStagesSql,
-            |dtok AS (
-            |  SELECT doc_id, t AS w FROM (
-            |    SELECT doc_id,
-            |           unnest(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+')) AS t
-            |    FROM documents)
-            |  WHERE regexp_matches(t, '^[a-z0-9]+$$')
-            |),
+            |${wordsCte()},
             |enc AS (
             |  SELECT d.doc_id, CAST(SUM(len(m.s)) AS BIGINT) AS n_bpe_tokens
             |  FROM dtok d JOIN st$BpeMerges m USING (w) GROUP BY 1
@@ -11914,15 +11906,7 @@ object PipelineQueries {
     Some(
       s"""WITH ${unigramChainSql(UnigramEmIters, UnigramSeedMulti, UnigramVocabSize)},
          |ufm AS (SELECT map_from_entries(list({'k': token, 'v': score_u})) AS m FROM ufinal),
-         |dtok AS (
-         |  SELECT doc_id, unnest(toks) AS w,
-         |         unnest(generate_series(1, len(toks))) AS wpos
-         |  FROM (
-         |    SELECT doc_id,
-         |           list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'),
-         |                       t -> regexp_matches(t, '^[a-z0-9]+$$')) AS toks
-         |    FROM documents)
-         |),
+         |${wordsCte(positions = true)},
          |dseg AS (
          |  SELECT w,
          |    ${unigramDpSql("w", "m")} AS seg
