@@ -4834,6 +4834,37 @@ object PipelineQueries {
             |  WHERE NOT EXISTS (SELECT 1 FROM semdrop s WHERE s.id = c.doc_id)
             |)${packTailSql("cleans")}""".stripMargin))
 
+  /** The composite pipelines' stage-0 corpus `inj`: every document
+    * with injected navigation, boilerplate, code and footer lines
+    * (`mat` is "" or " MATERIALIZED"); its lines `llines` with their
+    * md5 fingerprints; and `lboiler`, the fingerprints of lines shared
+    * by at least 20 documents.
+    */
+  private def injLinesCtes(mat: String): String =
+    s"""inj AS$mat (
+       |  SELECT doc_id, replace(
+       |    'nav menu home about section ' || (doc_id % 4) || '@NL@@NL@' ||
+       |    CASE WHEN doc_id % 11 = 0
+       |         THEN 'lorem ipsum dolor sit amet case ' || doc_id || '.@NL@' ELSE '' END ||
+       |    CASE WHEN doc_id % 13 = 0
+       |         THEN 'function f' || doc_id || '() { return 1; }@NL@' ELSE '' END ||
+       |    regexp_replace(coalesce(text, ''), '((\\S+ ){6}\\S+) ', '\\1.@NL@', 'g') ||
+       |    '@NL@all rights reserved example corp', '@NL@', chr(10)) AS text
+       |  FROM documents
+       |),
+       |lls AS (SELECT doc_id, string_split(text, chr(10)) AS l FROM inj),
+       |llines AS MATERIALIZED (
+       |  SELECT doc_id, p - 1 AS line_no, l[p] AS line,
+       |         CASE WHEN trim(l[p]) <> '' THEN md5(trim(lower(l[p]))) END AS line_fp
+       |  FROM (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS p FROM lls)
+       |),
+       |lboiler AS (
+       |  SELECT line_fp FROM (
+       |    SELECT line_fp, COUNT(DISTINCT doc_id) AS n
+       |    FROM llines WHERE line_fp IS NOT NULL GROUP BY 1)
+       |  WHERE n >= 20
+       |)""".stripMargin
+
   /** E2E-9: LINE-TIER pretraining prep
     * (`pipeline_pretrain_prep_lines`) — the cleaning cascade a CCNet/
     * C4-lineage pipeline actually runs, stages chained in production
@@ -4888,29 +4919,7 @@ object PipelineQueries {
           TextAnalysis.tokenCountWs(col("text")).cast("long").as("n_tok"))
       packedSummary(sized)
     },
-    Some(s"""WITH RECURSIVE inj AS (
-            |  SELECT doc_id, replace(
-            |    'nav menu home about section ' || (doc_id % 4) || '@NL@@NL@' ||
-            |    CASE WHEN doc_id % 11 = 0
-            |         THEN 'lorem ipsum dolor sit amet case ' || doc_id || '.@NL@' ELSE '' END ||
-            |    CASE WHEN doc_id % 13 = 0
-            |         THEN 'function f' || doc_id || '() { return 1; }@NL@' ELSE '' END ||
-            |    regexp_replace(coalesce(text, ''), '((\\S+ ){6}\\S+) ', '\\1.@NL@', 'g') ||
-            |    '@NL@all rights reserved example corp', '@NL@', chr(10)) AS text
-            |  FROM documents
-            |),
-            |lls AS (SELECT doc_id, string_split(text, chr(10)) AS l FROM inj),
-            |llines AS MATERIALIZED (
-            |  SELECT doc_id, p - 1 AS line_no, l[p] AS line,
-            |         CASE WHEN trim(l[p]) <> '' THEN md5(trim(lower(l[p]))) END AS line_fp
-            |  FROM (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS p FROM lls)
-            |),
-            |lboiler AS (
-            |  SELECT line_fp FROM (
-            |    SELECT line_fp, COUNT(DISTINCT doc_id) AS n
-            |    FROM llines WHERE line_fp IS NOT NULL GROUP BY 1)
-            |  WHERE n >= 20
-            |),
+    Some(s"""WITH RECURSIVE ${injLinesCtes("")},
             |bdocs AS (
             |  SELECT k.doc_id,
             |         coalesce(string_agg(k.line, chr(10) ORDER BY k.line_no)
@@ -5247,29 +5256,7 @@ object PipelineQueries {
     Some {
       val ntokOf = (t: String) =>
         s"len(string_split_regex(trim($t), '\\s+'))"
-      s"""WITH RECURSIVE inj AS MATERIALIZED (
-         |  SELECT doc_id, replace(
-         |    'nav menu home about section ' || (doc_id % 4) || '@NL@@NL@' ||
-         |    CASE WHEN doc_id % 11 = 0
-         |         THEN 'lorem ipsum dolor sit amet case ' || doc_id || '.@NL@' ELSE '' END ||
-         |    CASE WHEN doc_id % 13 = 0
-         |         THEN 'function f' || doc_id || '() { return 1; }@NL@' ELSE '' END ||
-         |    regexp_replace(coalesce(text, ''), '((\\S+ ){6}\\S+) ', '\\1.@NL@', 'g') ||
-         |    '@NL@all rights reserved example corp', '@NL@', chr(10)) AS text
-         |  FROM documents
-         |),
-         |lls AS (SELECT doc_id, string_split(text, chr(10)) AS l FROM inj),
-         |llines AS MATERIALIZED (
-         |  SELECT doc_id, p - 1 AS line_no, l[p] AS line,
-         |         CASE WHEN trim(l[p]) <> '' THEN md5(trim(lower(l[p]))) END AS line_fp
-         |  FROM (SELECT doc_id, l, unnest(generate_series(1, len(l))) AS p FROM lls)
-         |),
-         |lboiler AS (
-         |  SELECT line_fp FROM (
-         |    SELECT line_fp, COUNT(DISTINCT doc_id) AS n
-         |    FROM llines WHERE line_fp IS NOT NULL GROUP BY 1)
-         |  WHERE n >= 20
-         |),
+      s"""WITH RECURSIVE ${injLinesCtes(" MATERIALIZED")},
          |s1 AS MATERIALIZED (
          |  SELECT k.doc_id,
          |         coalesce(string_agg(k.line, chr(10) ORDER BY k.line_no)
