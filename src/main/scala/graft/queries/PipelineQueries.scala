@@ -6124,51 +6124,49 @@ object PipelineQueries {
          |UNION ALL SELECT * FROM r500""".stripMargin
     })
 
-  /** Shared DuckDB CTE block for the Kneser-Ney queries: the bigram
-    * stream, the even-half model with context/continuation/type/
-    * count-band statistics, the count-of-counts discount table
-    * (modified KN's D₁/D₂/D₃₊ in micro-units, with the d = 3/4
-    * fallback for empty bands), and the odd-half scored grams with
-    * ALL THREE models' exact integer numerators — interpolated KN
-    * (d = 3/4, [[graft.operators.TextAnalysis.knBigramScore]]) and modified KN
-    * ([[graft.operators.TextAnalysis.mknBigramScore]]). Ends at a `g` CTE.
+  /** A Kneser-Ney bigram model fit on the `bi` grams of the documents
+    * with `doc_id % mod = 0`, as CTEs named with prefix `p`: counts
+    * `c2`, context statistics `ctx1`, continuation counts `cont`, type
+    * totals and count-of-counts `tot`, and modified KN's discounts
+    * `disc` (D1, D2, D3+ in micro-units, 3/4 for an empty band).
     */
-  private val knGramsSql =
-    s"""${toksCte()},
-      |${bigramsCte()},
-      |c2 AS (SELECT w1, w2, COUNT(*) AS c FROM bi WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-      |ctx1 AS (SELECT w1, CAST(SUM(c) AS BIGINT) AS ctx, COUNT(*) AS n1p,
-      |                CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb1,
-      |                CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nb2,
-      |                CAST(SUM(CASE WHEN c >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS nb3
-      |         FROM c2 GROUP BY 1),
-      |cont AS (SELECT w2, COUNT(*) AS nc FROM c2 GROUP BY 1),
-      |tot AS (SELECT COUNT(*) AS t_types, COUNT(DISTINCT w2) AS v,
-      |               CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nn1,
-      |               CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nn2,
-      |               CAST(SUM(CASE WHEN c = 3 THEN 1 ELSE 0 END) AS BIGINT) AS nn3,
-      |               CAST(SUM(CASE WHEN c = 4 THEN 1 ELSE 0 END) AS BIGINT) AS nn4
-      |        FROM c2),
-      |disc AS (
-      |  SELECT t_types, v,
-      |         CASE WHEN nn1 > 0 AND nn1 + 2 * nn2 > 0
-      |              THEN LEAST(GREATEST(CAST(ROUND((1 - (2 * nn1 * nn2)::DOUBLE
-      |                     / ((nn1 + 2 * nn2) * nn1)::DOUBLE) * 1000000.0, 0) AS BIGINT),
-      |                   1), 1000000) ELSE 750000 END AS d1u,
-      |         CASE WHEN nn2 > 0 AND nn1 + 2 * nn2 > 0
-      |              THEN LEAST(GREATEST(CAST(ROUND((2 - (3 * nn1 * nn3)::DOUBLE
-      |                     / ((nn1 + 2 * nn2) * nn2)::DOUBLE) * 1000000.0, 0) AS BIGINT),
-      |                   1), 2000000) ELSE 750000 END AS d2u,
-      |         CASE WHEN nn3 > 0 AND nn1 + 2 * nn2 > 0
-      |              THEN LEAST(GREATEST(CAST(ROUND((3 - (4 * nn1 * nn4)::DOUBLE
-      |                     / ((nn1 + 2 * nn2) * nn3)::DOUBLE) * 1000000.0, 0) AS BIGINT),
-      |                   1), 3000000) ELSE 750000 END AS d3u
-      |  FROM tot
-      |),
-      |tf AS (SELECT doc_id, w1, w2, COUNT(*) AS m FROM bi WHERE doc_id % 2 = 1 GROUP BY 1, 2, 3),
-      |g AS (
-      |  SELECT tf.doc_id, tf.m, c2.c, ctx1.ctx, ctx1.n1p, cont.nc, d.t_types, d.v,
-      |         CASE WHEN ctx1.ctx IS NULL THEN 4 * (COALESCE(cont.nc, 0) + 1)
+  private def knModelCtes(mod: Int, p: String = ""): String =
+    s"""${p}c2 AS (SELECT w1, w2, COUNT(*) AS c FROM bi WHERE doc_id % $mod = 0 GROUP BY 1, 2),
+       |${p}ctx1 AS (SELECT w1, CAST(SUM(c) AS BIGINT) AS ctx, COUNT(*) AS n1p,
+       |                    CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb1,
+       |                    CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nb2,
+       |                    CAST(SUM(CASE WHEN c >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS nb3
+       |             FROM ${p}c2 GROUP BY 1),
+       |${p}cont AS (SELECT w2, COUNT(*) AS nc FROM ${p}c2 GROUP BY 1),
+       |${p}tot AS (SELECT COUNT(*) AS t_types, COUNT(DISTINCT w2) AS v,
+       |                   CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nn1,
+       |                   CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nn2,
+       |                   CAST(SUM(CASE WHEN c = 3 THEN 1 ELSE 0 END) AS BIGINT) AS nn3,
+       |                   CAST(SUM(CASE WHEN c = 4 THEN 1 ELSE 0 END) AS BIGINT) AS nn4
+       |            FROM ${p}c2),
+       |${p}disc AS (
+       |  SELECT t_types, v,
+       |         CASE WHEN nn1 > 0 AND nn1 + 2 * nn2 > 0
+       |              THEN LEAST(GREATEST(CAST(ROUND((1 - (2 * nn1 * nn2)::DOUBLE
+       |                     / ((nn1 + 2 * nn2) * nn1)::DOUBLE) * 1000000.0, 0) AS BIGINT),
+       |                   1), 1000000) ELSE 750000 END AS d1u,
+       |         CASE WHEN nn2 > 0 AND nn1 + 2 * nn2 > 0
+       |              THEN LEAST(GREATEST(CAST(ROUND((2 - (3 * nn1 * nn3)::DOUBLE
+       |                     / ((nn1 + 2 * nn2) * nn2)::DOUBLE) * 1000000.0, 0) AS BIGINT),
+       |                   1), 2000000) ELSE 750000 END AS d2u,
+       |         CASE WHEN nn3 > 0 AND nn1 + 2 * nn2 > 0
+       |              THEN LEAST(GREATEST(CAST(ROUND((3 - (4 * nn1 * nn4)::DOUBLE
+       |                     / ((nn1 + 2 * nn2) * nn3)::DOUBLE) * 1000000.0, 0) AS BIGINT),
+       |                   1), 3000000) ELSE 750000 END AS d3u
+       |  FROM ${p}tot
+       |)""".stripMargin
+
+  /** A scored gram's exact-integer interpolated KN (d = 3/4) and
+    * modified KN numerators and denominators, from the joined `c2`,
+    * `ctx1`, `cont` and discounts `d`.
+    */
+  private def knNumeratorsSql: String =
+    """CASE WHEN ctx1.ctx IS NULL THEN 4 * (COALESCE(cont.nc, 0) + 1)
       |              ELSE GREATEST(4 * COALESCE(c2.c, 0) - 3, 0) * (d.t_types + d.v)
       |                   + 3 * ctx1.n1p * (COALESCE(cont.nc, 0) + 1) END AS kn_num,
       |         CASE WHEN ctx1.ctx IS NULL THEN 4 * (d.t_types + d.v)
@@ -6182,7 +6180,25 @@ object PipelineQueries {
       |                   + (d.d1u * ctx1.nb1 + d.d2u * ctx1.nb2 + d.d3u * ctx1.nb3)
       |                     * (COALESCE(cont.nc, 0) + 1) END AS mkn_num,
       |         CASE WHEN ctx1.ctx IS NULL THEN (d.t_types + d.v) * 1000000
-      |              ELSE 1000000 * ctx1.ctx * (d.t_types + d.v) END AS mkn_den
+      |              ELSE 1000000 * ctx1.ctx * (d.t_types + d.v) END AS mkn_den""".stripMargin
+
+  /** Shared DuckDB CTE block for the Kneser-Ney queries: the bigram
+    * stream, the even-half model with context/continuation/type/
+    * count-band statistics, the count-of-counts discount table
+    * (modified KN's D₁/D₂/D₃₊ in micro-units, with the d = 3/4
+    * fallback for empty bands), and the odd-half scored grams with
+    * ALL THREE models' exact integer numerators — interpolated KN
+    * (d = 3/4, [[graft.operators.TextAnalysis.knBigramScore]]) and modified KN
+    * ([[graft.operators.TextAnalysis.mknBigramScore]]). Ends at a `g` CTE.
+    */
+  private val knGramsSql =
+    s"""${toksCte()},
+      |${bigramsCte()},
+      |${knModelCtes(2)},
+      |tf AS (SELECT doc_id, w1, w2, COUNT(*) AS m FROM bi WHERE doc_id % 2 = 1 GROUP BY 1, 2, 3),
+      |g AS (
+      |  SELECT tf.doc_id, tf.m, c2.c, ctx1.ctx, ctx1.n1p, cont.nc, d.t_types, d.v,
+      |         $knNumeratorsSql
       |  FROM tf LEFT JOIN c2 USING (w1, w2) LEFT JOIN ctx1 USING (w1)
       |          LEFT JOIN cont USING (w2) CROSS JOIN disc d
       |)""".stripMargin
@@ -6567,52 +6583,10 @@ object PipelineQueries {
     },
     Some {
       def arm(mod: Int, p: String) =
-        s"""${p}c2 AS (SELECT w1, w2, COUNT(*) AS c FROM bi WHERE doc_id % $mod = 0 GROUP BY 1, 2),
-           |${p}ctx1 AS (SELECT w1, CAST(SUM(c) AS BIGINT) AS ctx, COUNT(*) AS n1p,
-           |                    CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb1,
-           |                    CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nb2,
-           |                    CAST(SUM(CASE WHEN c >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS nb3
-           |             FROM ${p}c2 GROUP BY 1),
-           |${p}cont AS (SELECT w2, COUNT(*) AS nc FROM ${p}c2 GROUP BY 1),
-           |${p}tot AS (SELECT COUNT(*) AS t_types, COUNT(DISTINCT w2) AS v,
-           |                   CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nn1,
-           |                   CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nn2,
-           |                   CAST(SUM(CASE WHEN c = 3 THEN 1 ELSE 0 END) AS BIGINT) AS nn3,
-           |                   CAST(SUM(CASE WHEN c = 4 THEN 1 ELSE 0 END) AS BIGINT) AS nn4
-           |            FROM ${p}c2),
-           |${p}disc AS (
-           |  SELECT t_types, v,
-           |         CASE WHEN nn1 > 0 AND nn1 + 2 * nn2 > 0
-           |              THEN LEAST(GREATEST(CAST(ROUND((1 - (2 * nn1 * nn2)::DOUBLE
-           |                     / ((nn1 + 2 * nn2) * nn1)::DOUBLE) * 1000000.0, 0) AS BIGINT),
-           |                   1), 1000000) ELSE 750000 END AS d1u,
-           |         CASE WHEN nn2 > 0 AND nn1 + 2 * nn2 > 0
-           |              THEN LEAST(GREATEST(CAST(ROUND((2 - (3 * nn1 * nn3)::DOUBLE
-           |                     / ((nn1 + 2 * nn2) * nn2)::DOUBLE) * 1000000.0, 0) AS BIGINT),
-           |                   1), 2000000) ELSE 750000 END AS d2u,
-           |         CASE WHEN nn3 > 0 AND nn1 + 2 * nn2 > 0
-           |              THEN LEAST(GREATEST(CAST(ROUND((3 - (4 * nn1 * nn4)::DOUBLE
-           |                     / ((nn1 + 2 * nn2) * nn3)::DOUBLE) * 1000000.0, 0) AS BIGINT),
-           |                   1), 3000000) ELSE 750000 END AS d3u
-           |  FROM ${p}tot
-           |),
+        s"""${knModelCtes(mod, p)},
            |${p}g AS (
            |  SELECT tf.m, c2.c, ctx1.ctx, ctx1.n1p, cont.nc, d.t_types, d.v,
-           |         CASE WHEN ctx1.ctx IS NULL THEN 4 * (COALESCE(cont.nc, 0) + 1)
-           |              ELSE GREATEST(4 * COALESCE(c2.c, 0) - 3, 0) * (d.t_types + d.v)
-           |                   + 3 * ctx1.n1p * (COALESCE(cont.nc, 0) + 1) END AS kn_num,
-           |         CASE WHEN ctx1.ctx IS NULL THEN 4 * (d.t_types + d.v)
-           |              ELSE 4 * ctx1.ctx * (d.t_types + d.v) END AS kn_den,
-           |         CASE WHEN ctx1.ctx IS NULL THEN (COALESCE(cont.nc, 0) + 1) * 1000000
-           |              ELSE GREATEST(COALESCE(c2.c, 0) * 1000000
-           |                     - CASE WHEN c2.c IS NULL THEN 0
-           |                            WHEN c2.c = 1 THEN d.d1u
-           |                            WHEN c2.c = 2 THEN d.d2u
-           |                            ELSE d.d3u END, 0) * (d.t_types + d.v)
-           |                   + (d.d1u * ctx1.nb1 + d.d2u * ctx1.nb2 + d.d3u * ctx1.nb3)
-           |                     * (COALESCE(cont.nc, 0) + 1) END AS mkn_num,
-           |         CASE WHEN ctx1.ctx IS NULL THEN (d.t_types + d.v) * 1000000
-           |              ELSE 1000000 * ctx1.ctx * (d.t_types + d.v) END AS mkn_den
+           |         $knNumeratorsSql
            |  FROM tf LEFT JOIN ${p}c2 c2 USING (w1, w2) LEFT JOIN ${p}ctx1 ctx1 USING (w1)
            |          LEFT JOIN ${p}cont cont USING (w2) CROSS JOIN ${p}disc d
            |)""".stripMargin
