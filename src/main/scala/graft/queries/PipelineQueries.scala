@@ -5555,6 +5555,23 @@ object PipelineQueries {
            |WHERE p1.term = top.w1 AND p2.term = top.w2
            |GROUP BY 1""".stripMargin))
 
+  /** Each document's 40-token chunk start positions `starts`: every
+    * 20 tokens, plus a tail-aligned last window.
+    */
+  private def chunkStartsCtes: String =
+    s"""${toksCte(lower = false)},
+       |spans AS (
+       |  SELECT doc_id, t, len(t) AS n,
+       |         generate_series(1, GREATEST(len(t) - 39, 1), 20) AS s0
+       |  FROM toks WHERE len(t) > 0
+       |),
+       |st AS (
+       |  SELECT doc_id, t, n,
+       |         CASE WHEN s0[-1] + 39 < n THEN list_concat(s0, [n - 39]) ELSE s0 END
+       |           AS starts
+       |  FROM spans
+       |)""".stripMargin
+
   /** END-TO-END RAG retrieval prep: chunk the corpus (T11) → embed
     * every chunk ([[graft.operators.TextAnalysis.hashEmbedding]] — the documented
     * model STUB; the chunk/index/search plumbing is real) → exact
@@ -5581,18 +5598,7 @@ object PipelineQueries {
         .select(col("cid"), col("emb"))
       Similarity.bruteForceTopK(queries, corpus, "cid", "emb", k = 3)
     },
-    Some(s"""WITH ${toksCte(lower = false)},
-            |spans AS (
-            |  SELECT doc_id, t, len(t) AS n,
-            |         generate_series(1, GREATEST(len(t) - 39, 1), 20) AS s0
-            |  FROM toks WHERE len(t) > 0
-            |),
-            |st AS (
-            |  SELECT doc_id, t, n,
-            |         CASE WHEN s0[-1] + 39 < n THEN list_concat(s0, [n - 39]) ELSE s0 END
-            |           AS starts
-            |  FROM spans
-            |),
+    Some(s"""WITH $chunkStartsCtes,
             |chunks AS (
             |  SELECT doc_id * 1000 + i AS cid, doc_id,
             |         md5(array_to_string(t[starts[i]:starts[i] + 39], ' ')) AS h
@@ -5778,18 +5784,7 @@ object PipelineQueries {
     (s, dir) =>
       TextAnalysis.chunkDocs(Tables.documents(s, dir), "doc_id", "text",
         chunkTokens = 40, stride = 20),
-    Some(s"""WITH ${toksCte(lower = false)},
-           |spans AS (
-           |  SELECT doc_id, t, len(t) AS n,
-           |         generate_series(1, GREATEST(len(t) - 39, 1), 20) AS s0
-           |  FROM toks WHERE len(t) > 0
-           |),
-           |st AS (
-           |  SELECT doc_id, t, n,
-           |         CASE WHEN s0[-1] + 39 < n THEN list_concat(s0, [n - 39]) ELSE s0 END
-           |           AS starts
-           |  FROM spans
-           |)
+    Some(s"""WITH $chunkStartsCtes
            |SELECT doc_id, CAST(i AS INT) AS chunk_id,
            |       CAST(starts[i] AS INT) AS start_token,
            |       CAST(LEAST(40, n - starts[i] + 1) AS INT) AS n_tokens,
@@ -7309,18 +7304,7 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n_chunks"),
           sum(coalesce(col("__canon"), lit(0L))).cast("bigint").as("n_kept"))
     },
-    Some(s"""WITH ${toksCte(lower = false)},
-           |spans AS (
-           |  SELECT doc_id, t, len(t) AS n,
-           |         generate_series(1, GREATEST(len(t) - 39, 1), 20) AS s0
-           |  FROM toks WHERE len(t) > 0
-           |),
-           |st AS (
-           |  SELECT doc_id, t, n,
-           |         CASE WHEN s0[-1] + 39 < n THEN list_concat(s0, [n - 39]) ELSE s0 END
-           |           AS starts
-           |  FROM spans
-           |),
+    Some(s"""WITH $chunkStartsCtes,
            |chunks AS (
            |  SELECT doc_id, CAST(i AS INT) AS chunk_id,
            |         md5(array_to_string(t[starts[i]:starts[i] + 39], ' ')) AS fp
@@ -9841,23 +9825,7 @@ object PipelineQueries {
          |    ON a.cell = b.cell AND a.sub = b.sub AND a.vec_id < b.vec_id
          |  WHERE ROUND(${cosSql("a.v", "b.v")}, 6) >= 0.6
          |),
-         |${reachCtes("dup", "e2")},
-         |groups AS (
-         |  SELECT s AS id, least(s, MIN(t)) AS cluster_rep FROM reach GROUP BY s
-         |),
-         |outg AS (
-         |  SELECT g.id, a.cell, g.cluster_rep, a.sim_c
-         |  FROM groups g JOIN assign a ON g.id = a.vec_id
-         |),
-         |keepers AS (
-         |  SELECT cluster_rep, id AS keep_id FROM outg
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY cluster_rep ORDER BY sim_c ASC, id ASC) = 1
-         |),
-         |semout AS (
-         |  SELECT o.id, o.cell, o.cluster_rep, o.sim_c,
-         |         CAST(o.id = k.keep_id AS INT) AS keep
-         |  FROM outg o JOIN keepers k USING (cluster_rep)
-         |)
+         |$semKeepCtes
          |SELECT id, cell, cluster_rep, sim_c, keep FROM semout""".stripMargin
     })
 
@@ -9868,7 +9836,12 @@ object PipelineQueries {
     */
   private lazy val semDedupCtes: String =
     s"""${semDedupAssignCtes()},
-       |dup AS (""".stripMargin + semDedupTailCtes
+       |dup AS (
+       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+       |  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
+       |  WHERE ROUND(${cosSql("a.v", "b.v")}, 6) >= 0.6
+       |),
+       |$semKeepCtes""".stripMargin
 
   /** SemDeDup θ TUNING CURVE — D25's deployment table, the D24/N19
     * pattern (the paper sweeps exactly this knob; ε in its notation):
@@ -10064,32 +10037,28 @@ object PipelineQueries {
          |  ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) = 1
          |)""".stripMargin
 
-  /** [[semDedupCtes]]' pair/CC/keep tail (dup … semout), appended
-    * after the `dup AS (` opener built by the composer.
+  /** The SemDeDup keep rule over the within-cell pairs `dup`: the
+    * connected components `groups`, and per group the member nearest
+    * its centroid (`sim_c` asc, then id) kept in `semout`.
     */
-  private lazy val semDedupTailCtes: String =
-      s"""
-         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE ROUND(${cosSql("a.v", "b.v")}, 6) >= 0.6
-         |),
-         |${reachCtes("dup", "e2")},
-         |groups AS (
-         |  SELECT s AS id, least(s, MIN(t)) AS cluster_rep FROM reach GROUP BY s
-         |),
-         |outg AS (
-         |  SELECT g.id, a.cell, g.cluster_rep, a.sim_c
-         |  FROM groups g JOIN assign a ON g.id = a.vec_id
-         |),
-         |keepers AS (
-         |  SELECT cluster_rep, id AS keep_id FROM outg
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY cluster_rep ORDER BY sim_c ASC, id ASC) = 1
-         |),
-         |semout AS (
-         |  SELECT o.id, o.cell, o.cluster_rep, o.sim_c,
-         |         CAST(o.id = k.keep_id AS INT) AS keep
-         |  FROM outg o JOIN keepers k USING (cluster_rep)
-         |)""".stripMargin
+  private lazy val semKeepCtes: String =
+    s"""${reachCtes("dup", "e2")},
+       |groups AS (
+       |  SELECT s AS id, least(s, MIN(t)) AS cluster_rep FROM reach GROUP BY s
+       |),
+       |outg AS (
+       |  SELECT g.id, a.cell, g.cluster_rep, a.sim_c
+       |  FROM groups g JOIN assign a ON g.id = a.vec_id
+       |),
+       |keepers AS (
+       |  SELECT cluster_rep, id AS keep_id FROM outg
+       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY cluster_rep ORDER BY sim_c ASC, id ASC) = 1
+       |),
+       |semout AS (
+       |  SELECT o.id, o.cell, o.cluster_rep, o.sim_c,
+       |         CAST(o.id = k.keep_id AS INT) AS keep
+       |  FROM outg o JOIN keepers k USING (cluster_rep)
+       |)""".stripMargin
 
   private def ivfPqBody(emb: DataFrame, rerank: Boolean): DataFrame = {
     val queries = emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
