@@ -36,12 +36,10 @@ object GraftSession {
       // partition and the n-gram explode + broadcast-join feeding
       // every decontamination gate ran single-threaded (measured
       // round 17: 2.3 s of the pretrain composites' wall in one task;
-      // 64k floor → 32-way, ~0.1 s). Parameterized: at the 100 TB
-      // tier post-shuffle partitions are advisory-sized anyway and a
-      // larger floor (the default) is fine — set
-      // SPARK_GRAFT_AQE_MIN_PARTITION to taste cluster-side.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+      // 64k floor → 32-way, ~0.1 s). At the 100 TB tier post-shuffle
+      // partitions are advisory-sized anyway and a larger floor (the
+      // default) is fine.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // ObjectHashAggregate (collect_list/collect_set/percentile — the
       // a9 history family) falls back to sort-based aggregation after
       // 128 distinct keys per task. For the history workload that is

@@ -33,11 +33,4 @@ object TopK {
     ColumnBridge.column(
       new CollectTopK(ColumnBridge.expression(key), k, reverse = true, 0, 0)
         .toAggregateExpression())
-
-  /** The k LARGEST values of `key`, array sorted best-first. Same
-    * bounded-heap plan as [[smallestK]]. */
-  def largestK(key: Column, k: Int): Column =
-    ColumnBridge.column(
-      new CollectTopK(ColumnBridge.expression(key), k, reverse = false, 0, 0)
-        .toAggregateExpression())
 }

@@ -1175,6 +1175,36 @@ object Similarity {
     (split, hot, c)
   }
 
+  /** The probe half of the incremental embedding near-dup check, shared
+    * by the batch ([[nearDupsAgainstCorpusEmbed]]) and stream
+    * ([[graft.streaming.StreamingOps.embedNearDupStream]]) paths: the
+    * rows of `df` whose vector has at least `dim` entries, projected to
+    * `id_b`, `id_b_vec` and the `carry` columns, and those rows
+    * exploded to one per sign-LSH band key (`band`, `key`). The key
+    * rows keep every projected column but the vector, which rides
+    * along only with `vecOnKeys` (a stream cannot re-attach vectors
+    * by id the way the batch path does).
+    */
+  private[graft] def embedProbe(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      dim: Int,
+      nBands: Int,
+      bitsPerBand: Int,
+      carry: Seq[Column] = Nil,
+      vecOnKeys: Boolean = false): (DataFrame, DataFrame) = {
+    val probe = df
+      .select(Seq(col(idCol).as("id_b"), col(vecCol).as("id_b_vec")) ++ carry: _*)
+      .filter(col("id_b_vec").isNotNull && size(col("id_b_vec")) >= dim)
+    val kept = probe.columns.toSeq.filter(c => vecOnKeys || c != "id_b_vec").map(col)
+    val keys = probe
+      .select(kept :+
+        explode(VectorFunctions.bandSignKeys(col("id_b_vec"), dim, nBands, bitsPerBand)).as("bk"): _*)
+      .select(kept ++ Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
+    (probe, keys)
+  }
+
   def nearDupsAgainstCorpusEmbed(
       corpus: DataFrame,
       batch: DataFrame,
@@ -1185,16 +1215,9 @@ object Similarity {
       bitsPerBand: Int,
       minCosine: Double,
       maxBucket: Int = Dedup.LshMaxBucket): DataFrame = {
-    def proj(df: DataFrame, outId: String) = df
-      .select(col(idCol).as(outId), col(vecCol).as(s"${outId}_vec"))
-      .filter(col(s"${outId}_vec").isNotNull && size(col(s"${outId}_vec")) >= dim)
-    def keysOf(df: DataFrame, outId: String) = df
-      .select(col(outId),
-        explode(VectorFunctions.bandSignKeys(col(s"${outId}_vec"), dim, nBands, bitsPerBand)).as("bk"))
-      .select(col(outId), col("bk.band").as("band"), col("bk.key").as("key"))
-    val b = proj(batch, "id_b")
+    val (b, bKeys) = embedProbe(batch, idCol, vecCol, dim, nBands, bitsPerBand)
     val (ck, hot, c) = embedBandIndex(corpus, idCol, vecCol, dim, nBands, bitsPerBand, maxBucket)
-    val cand = Dedup.routeToChunks(keysOf(b, "id_b"), hot, "id_b")
+    val cand = Dedup.routeToChunks(bKeys, hot, "id_b")
       .join(ck, Seq("band", "key", "__sub"))
       .select(col("id_b"), col("id_c"))
       .distinct()

@@ -288,7 +288,8 @@ object TextAnalysis {
 
   /** mapPartitions KERNEL for [[charEntropy]] — the
     * [[charNgramCountsKernel]] posture applied to the entropy gate
-    * (round 17): the Column twin below MATERIALIZES one row per corpus
+    * (round 17): its Column twin (kept in EntropySpec as the parity
+    * reference) MATERIALIZES one row per corpus
     * character (explode → hash-agg probe per char — the same
     * per-char-position class the trained language-ID retired at 5.7×),
     * where the per-doc character distribution is ROW-LOCAL by
@@ -297,7 +298,7 @@ object TextAnalysis {
     * row — ZERO shuffle (the twin paid a (doc, char) exchange), zero
     * per-char rows.
     *
-    * Bit parity with the Column twin (EntropyKernelSpec pins it on
+    * Bit parity with the Column twin (EntropySpec pins it on
     * non-ASCII/surrogate/empty fixtures):
     *   - chars = CODE POINTS, matching `split(text, "")` (Java's empty
     *     regex advances by code point since JDK 8) with the `c != ""`
@@ -347,29 +348,6 @@ object TextAnalysis {
       }
     }(Encoders.product[(Long, Long, Long, Double)])
       .toDF("doc_id", "n_chars", "n_distinct_chars", "entropy")
-  }
-
-  /** The Column-expression twin [[charEntropyKernel]] is
-    * bit-parity-pinned against (kept as the oracle-shaped reference
-    * implementation; not on any hot path).
-    */
-  private[graft] def charEntropyColumns(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val cc = docs
-      .select(col(idCol).as("doc_id"),
-        explode(split(coalesce(col(textCol), lit("")), "")).as("c"))
-      .filter(col("c") =!= "")
-      .groupBy(col("doc_id"), col("c"))
-      .agg(count(lit(1)).as("nc"))
-    cc.groupBy(col("doc_id"))
-      .agg(
-        sum(col("nc")).cast("long").as("n_chars"),
-        count(lit(1)).as("n_distinct_chars"),
-        sum(col("nc") * round(log(col("nc")) * lit(1000000.0)).cast("long")).as("s_micro"))
-      .select(col("doc_id"), col("n_chars"), col("n_distinct_chars"),
-        ((col("n_chars") * round(log(col("n_chars")) * lit(1000000.0)).cast("long")
-          - col("s_micro")).cast("double") /
-          (col("n_chars") * lit(1000000L)).cast("double")).as("entropy"))
   }
 
   /** Deterministic STUB text embedding — the [[Multimodal.stubDecoder]]

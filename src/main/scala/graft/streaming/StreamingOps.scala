@@ -288,7 +288,8 @@ object StreamingOps {
     * [[graft.operators.Similarity.embedBandIndex]] (capped banded
     * sign-LSH keys + projected vectors — built ONCE from static
     * frames); each arriving vector explodes to its `nBands` band keys
-    * (stateless narrow), candidates come from a stream-static
+    * (stateless narrow, the batch path's `Similarity.embedProbe`,
+    * carrying `__ts` and the vector), candidates come from a stream-static
     * equi-join on (band, key), vectors rejoin by a second
     * stream-static join on `id_c` (the stream CARRIES its own vector —
     * a stream cannot rejoin itself the way the batch path rejoins
@@ -315,13 +316,8 @@ object StreamingOps {
     import graft.functions.VectorFunctions
     val (ck, hot, cvecs) = Similarity.embedBandIndex(
       corpus, idCol, vecCol, dim, nBands, bitsPerBand, maxBucket)
-    val keyed = vecs
-      .select(col(idCol).as("id_b"), col(tsCol).as("__ts"), col(vecCol).as("__vec"))
-      .filter(col("__vec").isNotNull && size(col("__vec")) >= dim)
-      .select(col("id_b"), col("__ts"), col("__vec"),
-        explode(VectorFunctions.bandSignKeys(col("__vec"), dim, nBands, bitsPerBand)).as("bk"))
-      .select(col("id_b"), col("__ts"), col("__vec"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
+    val (_, keyed) = Similarity.embedProbe(vecs, idCol, vecCol, dim, nBands, bitsPerBand,
+      carry = Seq(col(tsCol).as("__ts")), vecOnKeys = true)
     // Stream rows route to one chunk of a split hot bucket exactly as
     // the batch path does ([[graft.operators.Dedup.routeToChunks]] —
     // a stream-static broadcast probe, stateless narrow), so online
@@ -330,7 +326,7 @@ object StreamingOps {
       .join(ck, Seq("band", "key", "__sub"))
       .join(cvecs, Seq("id_c"))
       .select(col("id_b"), col("__ts"), col("id_c"),
-        round(VectorFunctions.cosineFast(col("__vec"), col("id_c_vec")), 6).as("cos"))
+        round(VectorFunctions.cosineFast(col("id_b_vec"), col("id_c_vec")), 6).as("cos"))
       .filter(col("cos").isNotNull && col("cos") >= minCosine)
       .withWatermark("__ts", watermark)
       .groupBy(window(col("__ts"), windowDur), col("id_b"), col("id_c"))

@@ -421,6 +421,29 @@ class EntropySpec extends AnyFunSuite {
     assert(!out.contains(4L))
   }
 
+  /** The Column-expression twin [[TextAnalysis.charEntropyKernel]] is
+    * bit-parity-pinned against: explode to characters, then a two-level
+    * (doc, char) → doc aggregate with ln rounded to micro-units.
+    */
+  private def charEntropyColumns(
+      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String) = {
+    val cc = docs
+      .select(col(idCol).as("doc_id"),
+        explode(split(coalesce(col(textCol), lit("")), "")).as("c"))
+      .filter(col("c") =!= "")
+      .groupBy(col("doc_id"), col("c"))
+      .agg(count(lit(1)).as("nc"))
+    cc.groupBy(col("doc_id"))
+      .agg(
+        sum(col("nc")).cast("long").as("n_chars"),
+        count(lit(1)).as("n_distinct_chars"),
+        sum(col("nc") * round(log(col("nc")) * lit(1000000.0)).cast("long")).as("s_micro"))
+      .select(col("doc_id"), col("n_chars"), col("n_distinct_chars"),
+        ((col("n_chars") * round(log(col("n_chars")) * lit(1000000.0)).cast("long")
+          - col("s_micro")).cast("double") /
+          (col("n_chars") * lit(1000000L)).cast("double")).as("entropy"))
+  }
+
   test("charEntropyKernel bit-parity with the Column twin, incl. surrogates and ln rounding") {
     // The kernel contract: same (doc_id, n_chars, n_distinct_chars,
     // entropy) rows as the explode -> two-level aggregate twin, chars
@@ -435,7 +458,7 @@ class EntropySpec extends AnyFunSuite {
       (3L, "the quick brown fox jumps over the lazy dog"),
       (4L, ""), (5L, null.asInstanceOf[String]),
       (6L, "x" * 1000 + "yz")).toDF("doc_id", "text")
-    val twin = TextAnalysis.charEntropyColumns(df, "doc_id", "text")
+    val twin = charEntropyColumns(df, "doc_id", "text")
       .as[(Long, Long, Long, Double)].collect().toSet
     val kernel = TextAnalysis.charEntropyKernel(df, "doc_id", "text")
       .as[(Long, Long, Long, Double)].collect().toSet
