@@ -117,7 +117,7 @@ object Bench {
       "wall_sec" -> f"$wallSec%.1f"))
 
   /** The last stdout line: counts, then the slowest values that fit in
-    * [[LineBudget]] bytes. Failures are a count, so a mass failure
+    * `LineBudget` bytes. Failures are a count, so a mass failure
     * cannot push the line past the budget.
     */
   def finalLine(s: Summary, sf: String, passes: Int, wallSec: Double): String = {

@@ -62,7 +62,7 @@ object VectorFunctions {
   /** Codegen'd cosine over `array<float>` columns — same semantics as
     * [[cosine]] (equivalence pinned by PlanSpec), ~order-of-magnitude
     * faster in the brute-force scoring loop. Backed by
-    * [[graft.plans.CosineSimilarityExpr]]; also exposed to SQL as
+    * `graft.plans.CosineSimilarityExpr`; also exposed to SQL as
     * `graft_cosine` via [[graft.plans.GraftExtensions]].
     */
   def cosineFast(a: Column, b: Column): Column = {

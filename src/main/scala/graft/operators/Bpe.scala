@@ -36,7 +36,7 @@ import org.apache.spark.sql.graft.CheckpointBlocks
   * 1-row TakeOrdered for the best pair (never a full sort — the
   * `kmeansInit` idiom), a broadcast of that row, and a NARROW
   * per-word merge fold (no shuffle). Each round's word table is
-  * checkpoint-cut ([[CheckpointBlocks]]) so round i never re-executes
+  * checkpoint-cut (`CheckpointBlocks`) so round i never re-executes
   * rounds 1..i-1 and the plan stays round-count-independent — the
   * [[Similarity.kmeansFit]] loop pattern; superseded rounds' blocks
   * are released eagerly. No collect anywhere: the selected pair stays
@@ -46,7 +46,7 @@ import org.apache.spark.sql.graft.CheckpointBlocks
   * rows, the only genuinely vocab-sized (hence broadcastable)
   * artifact — to each word: char-split, then replay the merges in
   * rank order with the same greedy pass training used
-  * ([[applyMerges]]). That is the real tokenizer serving contract:
+  * (`applyMerges`). That is the real tokenizer serving contract:
   * a word never seen in training still encodes (it just segments by
   * the merge table alone), where the round-11 shape — an inner join
   * against the trained word map — silently DROPPED out-of-vocabulary
@@ -291,7 +291,7 @@ object Bpe {
 
   /** Per-document TOKEN-ID SEQUENCE — the artifact a tokenizer
     * actually SERVES (counts are monitoring; models consume ids):
-    * each ascii word segments by merge replay ([[applyMerges]]), each
+    * each ascii word segments by merge replay (`applyMerges`), each
     * symbol maps to its [[vocab]] token id, and the ids concatenate in
     * (word position, symbol position) order. Symbols outside the
     * shipped vocabulary — possible only for OOV words whose replayed
@@ -303,7 +303,7 @@ object Bpe {
     * inside the driver comparator's scalar contract.
     *
     * Scale shape: the explode/distinct/join stage is
-    * [[symbolOccurrences]]'s batch shape (per-distinct-word fold,
+    * `symbolOccurrences`'s batch shape (per-distinct-word fold,
     * unhinted join-back); the vocab id join broadcasts the genuinely
     * vocab-sized table; the per-doc assembly is one object-hash
     * aggregate whose state is the document's own token list — the
@@ -451,7 +451,7 @@ object Bpe {
   /** UNK-free token-id serving ([[encodeIds]] with the byte-fallback
     * floor): segmentation and ordering are identical to [[encodeIds]];
     * the id resolution adds the per-symbol byte decomposition
-    * ([[byteFallbackIds]]), so sequences order by (word, symbol,
+    * (`byteFallbackIds`), so sequences order by (word, symbol,
     * piece) and n_tokens counts emitted PIECES (a fallen-back symbol
     * of c characters contributes c byte tokens — the GPT-2 accounting;
     * the two outputs agree wherever no fallback fires, BpeSpec-pinned).
@@ -482,7 +482,7 @@ object Bpe {
 
   /** Per-document BPE statistics after [[train]]: (doc_id, n_words,
     * n_bpe_tokens) — every ascii word of every document encoded by
-    * the trained MERGE TABLE (see [[symbolOccurrences]]; OOV words
+    * the trained MERGE TABLE (see `symbolOccurrences`; OOV words
     * segment by merge replay instead of being dropped), summing the
     * per-word symbol counts. Documents with no ascii tokens report
     * zeros.

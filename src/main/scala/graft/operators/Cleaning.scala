@@ -49,7 +49,7 @@ object Cleaning {
     cols.foldLeft(df)((d, c) =>
       d.withColumn(c, fmt.fold(expr(s"try_to_date(`$c`)"))(f => expr(s"try_to_date(`$c`, '$f')"))))
 
-  /** Excel serial-date coercion — the companion to [[Xlsx.read]]'s
+  /** Excel serial-date coercion — the companion to [[graft.sources.Xlsx.read]]'s
     * all-string contract ([[graft.sources.Xlsx]]): Excel stores dates
     * as day counts from its 1899-12-30 epoch (the famous off-by-one
     * from the nonexistent 1900-02-29 is baked into that origin), so a
@@ -177,8 +177,8 @@ object Cleaning {
     * `percentile_disc` cost; sketch fences via `percentile_approx`
     * the same way at the 100 TB tier — then one filtered scan with
     * the fences broadcast back. Null VALUES never pass the fence
-    * comparison and are dropped (pre-clean with [[fillZero]]/[[
-    * coerceNumeric]] first if they should survive); null GROUP KEYS
+    * comparison and are dropped (pre-clean with `fillZero`/`coerceNumeric`
+    * first if they should survive); null GROUP KEYS
     * are a real group — the fence join is null-safe (`<=>`), so
     * null-keyed inliers survive like any others.
     */
@@ -397,7 +397,7 @@ object Cleaning {
     * own small class) is the caller's drop-or-widen decision and is
     * exactly what re-running the audit surfaces. Implementation is
     * the IQR-fences shape: the class-size aggregate joins back
-    * null-safe on the quasi columns ([[joinGroupStats]] — a plain
+    * null-safe on the quasi columns (`joinGroupStats` — a plain
     * USING join would silently pass every null-keyed row
     * unsuppressed), then a per-row conditional projection; no
     * second pass, no window.

@@ -42,7 +42,7 @@ final case class CandPair(id_a: Long, id_b: Long, sh_a: Seq[Long], sh_b: Seq[Lon
   * Caching contract: the pairing operators persist their signature
   * intermediates (MEMORY_AND_DISK) while they run — each is read 2+
   * times by the candidate/verify joins — and RELEASE them before
-  * returning (see [[eagerRelease]]): the result is computed eagerly
+  * returning (see `eagerRelease`): the result is computed eagerly
   * into lineage-truncated block storage, and the internal caches die
   * with the call. Long-lived ingest sessions accumulate nothing;
   * checkpoint blocks free themselves when the returned frame is GC'd.
@@ -289,7 +289,7 @@ object Dedup {
   /** MinHash+LSH near-dup pairs with the JVM signature kernel and a
     * JVM set-intersection verify; candidate generation and the verify
     * re-attach remain declarative joins. See [[minhashPairs]] for the
-    * plan-shape notes and [[splitBuckets]] for the hot-bucket guard.
+    * plan-shape notes and `splitBuckets` for the hot-bucket guard.
     */
   def minhashPairsKernel(
       docs: DataFrame,
@@ -337,7 +337,7 @@ object Dedup {
     * wrapper hides it in an InMemoryRelation. Returns (internal
     * persist-marked caches, pairs).
     */
-  /** Default LSH bucket-size cap — see [[splitBuckets]]. Interpolated
+  /** Default LSH bucket-size cap — see `splitBuckets`. Interpolated
     * into the DuckDB oracle SQL (PipelineQueries.minhashOracle) so the
     * two engines apply the identical cut.
     */
@@ -477,7 +477,7 @@ object Dedup {
 
   /** (number of buckets over `maxBucket`, size of the largest bucket)
     * for a banded `(band, key)` frame — the measurement behind the
-    * opt-in [[splitBuckets]] logging, exposed so callers (and the unit
+    * opt-in `splitBuckets` logging, exposed so callers (and the unit
     * test) can audit what the cap would split without enabling the log.
     * One map-side-combinable aggregate; the grouped frame is bucket
     * cardinality, never doc cardinality.
@@ -557,7 +557,7 @@ object Dedup {
   /** The shingle-agnostic MinHash+LSH pairing pipeline: takes any
     * `(id, sh: array<string>)` frame (word shingles, char n-grams, …)
     * and returns verified near-dup pairs. See [[minhashPairs]] for the
-    * plan-shape notes. Eager — see [[eagerRelease]].
+    * plan-shape notes. Eager — see `eagerRelease`.
     */
   def pairsFromShingles(
       withShingles: DataFrame,
@@ -950,7 +950,7 @@ object Dedup {
     decontaminate(corpus, evalSet, idCol, textCol, Seq(shingleK), minShared)
       .select(col("doc_id"), col("eval_id"), col("n_shared"))
 
-  /** [[decontaminate]] at several shingle orders in ONE pass, as
+  /** `decontaminate` at several shingle orders in ONE pass, as
     * `(n_gram, doc_id, eval_id, n_shared)` pairs tagged with their
     * order. Each document is tokenized once; one explode emits the
     * distinct grams of every order, and the eval side, broadcast, join
@@ -1001,7 +1001,7 @@ object Dedup {
     * dedup never pays a corpus self-join, the candidate space scales
     * with |batch| (not |corpus|²), and the shuffle carries one bigint
     * signature + band key per (row × band) from each side. Eager — see
-    * [[eagerRelease]]. Filter `batch` down to
+    * `eagerRelease`. Filter `batch` down to
     * `batch.join(pairs.select("id_b"), ..., "left_anti")` to keep only
     * genuinely-new docs.
     */
@@ -1198,7 +1198,7 @@ object Dedup {
     * within-cell pair join, nothing corpus² ever materializes.
     * `maxCell > 0` additionally bounds any single DEGENERATE cell's
     * |cell|² term by rank-splitting over-cap cells into sub-cells —
-    * see [[semDedupScoredPairs]] for the split rule and its recall
+    * see `semDedupScoredPairs` for the split rule and its recall
     * contract, [[hotCellStats]] for the audit.
     */
   def semDedup(
@@ -1331,7 +1331,7 @@ object Dedup {
     * semantically duplicate something in the STANDING corpus, as
     * `(id_b, id_c, cos)` pairs at rounded-6dp cosine ≥ `minCosine`.
     * `centroids` is the frozen training artifact and `members` the
-    * offline-assigned corpus ([[semDedupMembers]] output or its
+    * offline-assigned corpus (`semDedupMembers` output or its
     * parquet round-trip) — arrival-time checking never re-trains and
     * never pays a corpus self-join: the batch assigns with one
     * broadcast argmax pass and candidates come from the cell
@@ -1339,7 +1339,7 @@ object Dedup {
     * candidate discipline as the offline pass, so online and offline
     * agree on where duplicates can hide; the streaming twin
     * [[graft.streaming.StreamingOps.semDedupStream]] runs the same
-    * [[semDedupCorpusPairs]] join. All-double
+    * `semDedupCorpusPairs` join. All-double
     * scoring (the trained-centroid exactDouble contract).
     */
   def semDedupAgainstCorpus(
@@ -1389,7 +1389,7 @@ object Dedup {
     * "merges deferred to the next full rebuild" posture, stated
     * rather than hidden.
     *
-    * Scale: the batch assigns once (cut inside [[semDedupMembers]] —
+    * Scale: the batch assigns once (cut inside `semDedupMembers` —
     * the pair join and the anti-join both read the same blocks);
     * candidates ride the cell equi-join at batch × cell-occupancy
     * cardinality; the anti-join is batch-sized. The corpus is never
@@ -1519,7 +1519,7 @@ object Dedup {
     * pair with jac ≥ threshold > 0 shares at least one shingle, so the
     * shingle-hash inverted-index self-join (posting lists over
     * `maxBucket` docs dropped — deliberately a DROP, unlike the
-    * [[splitBuckets]] production posture, because here the posting
+    * `splitBuckets` production posture, because here the posting
     * join only builds ground TRUTH and a hot shingle
     * that frequent carries no pair evidence a rarer shared shingle
     * doesn't also carry) is a superset of truth, then exact Jaccard

@@ -74,7 +74,7 @@ object Fuzzy {
     * variant keys — still linear in ROWS, never the all-pairs cross
     * join; the equi-join on the variant string is an ordinary hash
     * join; degenerate hot variants are rank-chunk split and routed
-    * ([[Dedup.splitBucketsWithRouting]] — same contract as the LSH
+    * (`Dedup.splitBucketsWithRouting` — same contract as the LSH
     * dedup family, and the ed2 double-deletion keys are shorter and
     * hence hotter, which is exactly what the cap bounds); the verify is one
     * codegen'd levenshtein per candidate; pairs dedup at match

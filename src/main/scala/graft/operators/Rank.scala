@@ -29,7 +29,7 @@ import org.apache.spark.sql.graft.CheckpointBlocks
   * Pregel-style shuffle) + ONE groupBy-sum on `dst` (map-side
   * combinable) + a broadcast of the 1-row dangling aggregate; the
   * node frame never cross-products anything. Each iteration is
-  * [[CheckpointBlocks.cut]] so the final plan is iteration-count-
+  * [[org.apache.spark.sql.graft.CheckpointBlocks.cut]] so the final plan is iteration-count-
   * independent (the PlanSpec lineage-cut contract) and no iteration
   * recomputes its predecessor.
   */

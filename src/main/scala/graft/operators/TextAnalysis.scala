@@ -874,7 +874,7 @@ object TextAnalysis {
     * one scored pass serves a whole pruning CURVE: filtering the
     * returned frame at `posting_rank <= p` for any p ≤ maxPostings is
     * bit-identical to pruning at p directly (the
-    * [[graft.operators.Dedup.semDedupScoredPairs]] shared-pass
+    * `graft.operators.Dedup.semDedupScoredPairs` shared-pass
     * contract). Pass `Int.MaxValue` to rank without pruning.
     *
     * Scale: [[bm25Index]] + one sort-based window partitioned BY TERM

@@ -25,7 +25,7 @@ import org.apache.spark.sql.graft.CheckpointBlocks
   *
   * EM: `emIters` rounds of hard (Viterbi) EM. E-step: segment each
   * distinct corpus word by the max-score segmentation under the
-  * current piece scores ([[viterbiSeg]] — an in-row DP, see below).
+  * current piece scores (`viterbiSeg` — an in-row DP, see below).
   * M-step: piece count = Σ word-freq × occurrences in the chosen
   * segmentations; score = ln(count / total) rounded to integer
   * MICRO-NATS (the [[TextAnalysis.unigramLogProb]] posture — round

@@ -205,7 +205,7 @@ object ParityQueries {
         |) WHERE dt_entrada IS NOT NULL
         |GROUP BY subgrupo, codigo_produto, cliente""".stripMargin)))
 
-  /** A9 bounded-memory variant ([[History.historicoCapped]]): history
+  /** A9 bounded-memory variant ([[graft.operators.History.historicoCapped]]): history
     * lists capped at the first 5 rows per group, true group size and
     * overflow count preserved, A8 argmax exact. The oracle replays the
     * cap with ROW_NUMBER/QUALIFY semantics.
@@ -445,7 +445,7 @@ object ParityQueries {
     * `quantile_disc` is already pinned by `a15_percentile_disc` on
     * this same column.
     */
-  /** Forward-fill ([[Cleaning.fillForward]], `pandas.ffill` per
+  /** Forward-fill ([[graft.operators.Cleaning.fillForward]], `pandas.ffill` per
     * group): carry each user's last known reading (`value`, nullified
     * on 'error' events — deterministic injected gaps, the PII-oracle
     * precedent) forward in (ts_us, event_id) order. The EXPLICIT
@@ -481,7 +481,7 @@ object ParityQueries {
            |  FROM events
            |)""".stripMargin))
 
-  /** Edit-distance-1 fuzzy join ([[Fuzzy.fuzzyPairs]]): part names
+  /** Edit-distance-1 fuzzy join ([[graft.operators.Fuzzy.fuzzyPairs]]): part names
     * matched against a deterministically TYPO'D copy (every third
     * part loses one character at an id-derived position — the
     * injection precedent of the PII oracle): each corrupted name must
@@ -555,13 +555,13 @@ object ParityQueries {
            |       CAST(levenshtein(name_l, name_r) AS INT) AS dist
            |FROM cand WHERE levenshtein(name_l, name_r) <= 1""".stripMargin))
 
-  /** Edit-distance-2 fuzzy join ([[Fuzzy.fuzzyPairs]] `maxEdit = 2`,
+  /** Edit-distance-2 fuzzy join ([[graft.operators.Fuzzy.fuzzyPairs]] `maxEdit = 2`,
     * round-12 verdict ask #7): the [[fuzzyNames]] fixture hardened to
     * DOUBLE corruption — partkey % 3 == 0 rows lose one character,
     * partkey % 3 == 1 rows lose TWO (a second id-derived deletion
     * applied to the once-deleted string), so re-linking the second
     * class is impossible for the ed1 join and REQUIRES the depth-2
-    * deletion neighborhoods ([[Fuzzy.deletionVariants2]] — complete
+    * deletion neighborhoods ([[graft.operators.Fuzzy.deletionVariants2]] — complete
     * for lev ≤ 2 by the alignment argument in its scaladoc,
     * PropertySpec-fuzzed). Same distinct-name posture and hot-key cap
     * as the ed1 query; the oracle replays the double corruption, the
@@ -825,7 +825,7 @@ object ParityQueries {
            |  AND l_extendedprice <= q3 + 1.5 * (q3 - q1)
            |GROUP BY 1""".stripMargin))
 
-  /** Median/MAD robust trim ([[Cleaning.madFilter]]): the robust
+  /** Median/MAD robust trim ([[graft.operators.Cleaning.madFilter]]): the robust
     * z-score twin of `c_iqr_trim` — same reporting shape (per-group
     * survivor count + value range) so the two trims are directly
     * comparable; the oracle replays median → |v−med| median → keep
@@ -904,7 +904,7 @@ object ParityQueries {
            |WHERE abs(l_extendedprice - med) <= 3.0 * mad
            |GROUP BY 1""".stripMargin))
 
-  /** Quantile binning ([[Cleaning.quantileBuckets]]): per-flag
+  /** Quantile binning ([[graft.operators.Cleaning.quantileBuckets]]): per-flag
     * quartile buckets of `l_extendedprice`, reported as per-bucket
     * counts + bucket value ranges (order-independent stats). The
     * oracle rebuilds the same by-value assignment from
@@ -1062,7 +1062,7 @@ object ParityQueries {
         |)""".stripMargin)))
 
   /** Key normalization + accent folding (SURVEY §7 hard-part 5): keys
-    * padded with whitespace still join after [[Cleaning.normalizeKeys]];
+    * padded with whitespace still join after [[graft.operators.Cleaning.normalizeKeys]];
     * accented names fold to ASCII identically in both engines.
     */
   val normalizeKeys = QueryDef(
@@ -1330,7 +1330,7 @@ object ParityQueries {
     * would also compute — the shape for dashboards that show several
     * independent breakdowns of one fact scan. Spark's DataFrame API
     * has no direct grouping-sets verb, so this goes through the SQL
-    * surface over a registered temp view ([[Views.sqlOn]]'s escape
+    * surface over a registered temp view ([[graft.operators.Views.sqlOn]]'s escape
     * hatch applied Spark-first); still ONE shuffle via the same
     * Expand strategy. Same `__TOTAL__` sentinel contract as A17/A18.
     */
@@ -1373,7 +1373,7 @@ object ParityQueries {
         |       CAST(SUM(CASE WHEN status_processo = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS O
         |FROM fact GROUP BY uf""".stripMargin)))
 
-  /** Pivot → melt round-trip ([[Views.melt]]): the status pivot
+  /** Pivot → melt round-trip ([[graft.operators.Views.melt]]): the status pivot
     * reshaped back to long form — one (uf, status, n) row per cell,
     * INCLUDING the zero-filled cells the pivot materialized (which a
     * direct group-by would omit; the oracle's UNION ALL over the pivot
@@ -1462,7 +1462,7 @@ object ParityQueries {
     * beside parquet (Spark ships the ORC reader/writer in core; a
     * warehouse migrating between the two needs both legs of the
     * bridge). Exercises the SAME year-partitioned sink
-    * ([[Sink.saveFactByYear]]) with `format = "orc"`, reads back
+    * ([[graft.sources.Sink.saveFactByYear]]) with `format = "orc"`, reads back
     * through the ORC scan, and aggregates typed columns (count +
     * rounded decimal sum) — the oracle is the direct SQL over the
     * source parquet, so any type or value corruption in the ORC
@@ -1487,7 +1487,7 @@ object ParityQueries {
         |FROM fact WHERE year(dt_entrada) = 1996
         |GROUP BY 1, 2""".stripMargin)))
 
-  /** Join-key skew audit ([[Skew.keyHistogram]]): top-20 heaviest
+  /** Join-key skew audit ([[graft.operators.Skew.keyHistogram]]): top-20 heaviest
     * fact join keys with deterministic tie-break — the number read
     * BEFORE deciding whether `j_salted_skew`'s salting is worth its
     * shuffle overhead; plans as TakeOrdered over the key aggregate,
@@ -1503,7 +1503,7 @@ object ParityQueries {
         |FROM fact GROUP BY 1
         |ORDER BY n_rows DESC, codigo_produto ASC LIMIT 20""".stripMargin)))
 
-  /** Salted-join semantics proof: [[Skew.saltedJoin]] must be
+  /** Salted-join semantics proof: [[graft.operators.Skew.saltedJoin]] must be
     * row-identical to the plain join it replaces — the oracle IS the
     * plain SQL join, so any salt-induced row loss/duplication fails
     * the compare. (The salt's value is load-spreading, which the
@@ -1525,7 +1525,7 @@ object ParityQueries {
         |  ON f.codigo_produto = d.codigo_produto
         |GROUP BY d.negocio""".stripMargin)))
 
-  /** Dynamic-SQL escape hatch ([[Views.sqlOn]] — the safe replacement
+  /** Dynamic-SQL escape hatch ([[graft.operators.Views.sqlOn]] — the safe replacement
     * for the reference's `exec()` of user-typed Python, MAC:1048-1058):
     * register the fact as a view, run user SQL against it. The oracle
     * runs the equivalent SQL directly, proving the round-trip through
@@ -1551,7 +1551,7 @@ object ParityQueries {
     s"${sys.props("java.io.tmpdir")}/$name/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
 
   /** S1 (csv leg): write a dimension as headered CSV via the sink,
-    * read it back through [[graft.sources.Load.load]]'s
+    * read it back through `graft.sources.Load.load`'s
     * extension-dispatch + schema inference, and prove the values
     * survived the text round-trip. Parquet S1 is exercised by every
     * other query; this row covers the reference's
@@ -1617,7 +1617,7 @@ object ParityQueries {
     },
     Some("SELECT c_custkey, c_name, c_acctbal FROM customer"))
 
-  /** S6b: bucketed co-located join ([[Sink.saveBucketed]]). Both join
+  /** S6b: bucketed co-located join ([[graft.sources.Sink.saveBucketed]]). Both join
     * sides are written bucketed by the join key with the same bucket
     * count, then joined via `spark.table` — the join itself runs with
     * NO shuffle on either side (pinned by PlanSpec's exchange-free

@@ -2131,7 +2131,7 @@ object PipelineQueries {
          |ORDER BY arm""".stripMargin
     })
 
-  /** Benchmark decontamination ([[graft.operators.Dedup.decontaminate]]): corpus docs
+  /** Benchmark decontamination (`graft.operators.Dedup.decontaminate`): corpus docs
     * (`doc_id % 10 <> 0`) sharing ≥ 5 distinct word 3-grams with any
     * eval-set doc (`doc_id % 10 = 0`) — the pretraining hygiene join.
     * At sf0.01 the result is exactly the planted near-dup pairs that
@@ -2186,7 +2186,7 @@ object PipelineQueries {
     * sourceReport no-Expand idiom).
     *
     * Scale: ONE pass for all four orders — each document is tokenized
-    * once and the tagged multi-order [[graft.operators.Dedup.decontaminate]] runs one
+    * once and the tagged multi-order `graft.operators.Dedup.decontaminate` runs one
     * gram explode, one eval-set broadcast join and one pair aggregate
     * keyed by `n_gram`; the pair frame is cut once and both aggregates
     * are pair-/doc-cardinality. The curve is left-joined onto the

@@ -38,7 +38,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Values land as STRINGS under the exact [[Xlsx]] contract (numerics
   * render integers without ".0", the same all-string posture;
-  * [[Xlsx.shapeSheet]] is shared outright, so header dedup, banner
+  * `Xlsx.shapeSheet` is shared outright, so header dedup, banner
   * handling, and blank-row drops are bit-identical across the two
   * formats). Date cells arrive as their raw serial number string —
   * [[graft.operators.Cleaning.excelSerialDate]] is the documented

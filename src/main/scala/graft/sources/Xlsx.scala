@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * DRIVER before parallelize — exactly like `pd.read_excel`, and
   * exactly right for what xlsx files ARE (hand-maintained
   * dimension/config sheets; the reference's is ~10k rows). The fact
-  * path at 100 TB is parquet/csv ([[Load.load]]); a >100 MB xlsx is
+  * path at 100 TB is parquet/csv (`Load.load`); a >100 MB xlsx is
   * refused with guidance rather than silently absorbing driver heap.
   */
 object Xlsx {

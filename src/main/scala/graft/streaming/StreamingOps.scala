@@ -20,7 +20,7 @@ import graft.operators.DocGrouping.ByWindow
   *
   * Serving entries over a frozen offline artifact (the scorers, the
   * scrubbers, the BPE encoders, BM25 / IVF search) are their batch
-  * operator's body under [[graft.operators.DocGrouping.ByWindow]]:
+  * operator's body under `graft.operators.DocGrouping.ByWindow`:
   * the same featurize / join / integer-sum code, grouped by
   * (event-time window, doc) under a watermark applied at the source.
   * One document's rows must therefore arrive within one `windowDur`
@@ -253,7 +253,7 @@ object StreamingOps {
   /** Multi-probe IVF ANN over a stream of queries against a static
     * indexed corpus — the online half of
     * [[graft.operators.Similarity.ivfTopKProbed]]. Each query picks its
-    * `nprobe` cells IN-ROW ([[graft.operators.Similarity.probeInRow]],
+    * `nprobe` cells IN-ROW (`graft.operators.Similarity.probeInRow`,
     * the batch k-heap's key, where the batch aggregate would be a
     * second stateful stage); search and rank are the batch stage.
     * Output: (`q_id`, `n_id`, `cos`), row-for-row the batch result.
@@ -285,7 +285,7 @@ object StreamingOps {
     * cos ≥ `minCosine`.
     *
     * Shape: the static half is the shared
-    * [[graft.operators.Similarity.embedBandIndex]] (capped banded
+    * `graft.operators.Similarity.embedBandIndex` (capped banded
     * sign-LSH keys + projected vectors — built ONCE from static
     * frames); each arriving vector explodes to its `nBands` band keys
     * (stateless narrow, the batch path's `Similarity.embedProbe`,
@@ -338,10 +338,10 @@ object StreamingOps {
     * twin of [[graft.operators.Dedup.semDedup]] (D25), the
     * centroid-routed sibling of [[embedNearDupStream]]. `centroids` are
     * the FROZEN kmeans artifact and `members` the offline-assigned
-    * corpus ([[graft.operators.Dedup.semDedupMembers]] output). Each
-    * arrival assigns in-row ([[graft.operators.Similarity.probeInRow]],
+    * corpus (`graft.operators.Dedup.semDedupMembers` output). Each
+    * arrival assigns in-row (`graft.operators.Similarity.probeInRow`,
     * all-double) and runs the batch
-    * [[graft.operators.Dedup.semDedupCorpusPairs]] cell join.
+    * `graft.operators.Dedup.semDedupCorpusPairs` cell join.
     *
     * Emits one row per (window, arrival) WITH a semantic dup:
     * (`window_start`, `id_b`, `cell`, `n_dups`, `best_id`, `best_cos` —
@@ -663,7 +663,7 @@ object StreamingOps {
     * (`transformWithState` + typed `ValueState`) — the SAME strict
     * min-cascade transition, so StreamingSpec can pin v1/v2 parity
     * directly. What the new API buys at scale: named typed state
-    * slots with per-state TTL ([[org.apache.spark.sql.streaming.TTLConfig]]
+    * slots with per-state TTL (`org.apache.spark.sql.streaming.TTLConfig`
     * — pass a retention to expire dormant users' funnel state, which
     * mapGroupsWithState can only emulate with manual timers), state
     * schema evolution, and the RocksDB provider contract (the v2 API
@@ -908,7 +908,7 @@ object StreamingOps {
     * (`bin` int, `n_ref` long) row per bin; `fences`: 1 row of ordered
     * `fences array<long>`, bin = count of fences strictly below the
     * value). Each bin's term is the batch artifact's
-    * [[graft.operators.Sampling.psiTermU]] (+1 per bin / +B per cohort
+    * `graft.operators.Sampling.psiTermU` (+1 per bin / +B per cohort
     * smoothing), folded over the BOUNDED reference bin domain so a bin
     * the window never saw still contributes (dropping it would
     * understate drift exactly when drift is worst). Two chained

@@ -45,7 +45,7 @@ import org.apache.spark.storage.StorageLevel
   * a checkpointed frame every round, and a long-lived session should
   * not hold round-count × frame-size blocks hostage to driver GC
   * timing. [[release]] walks the frame's analyzed plan for the
-  * [[LogicalRDD]] leaf a checkpoint compiles to and unpersists its
+  * `LogicalRDD` leaf a checkpoint compiles to and unpersists its
   * RDD directly (non-blocking).
   *
   * Only call it on frames whose blocks no further computation reads —
